@@ -11,12 +11,13 @@ reference implementation) as an idiomatic Spark pipeline:
   reference's page/column-chunk layout.
 - codec auto-selector (``selector.py``): sampled cardinality / run-rate / span
   cost model generalizing the reference's dictionary->PLAIN fallback rule.
-- Spark operators (``operators/``): vectorized ``applyInPandas`` encode/decode.
+- Spark operators (``operators/``): Arrow-native ``mapInArrow`` encode/decode.
 - job plans (``plans/``): repartition -> encode -> manifest pipeline with
   checkpoint/resume via manifest anti-join, skew salting.
 
-All heavy work happens inside Arrow-vectorized pandas UDFs; everything around
-them is declarative DataFrame API so Catalyst handles pruning/pushdown.
+All heavy work happens inside ``mapInArrow`` tasks that read and build Arrow
+buffers directly; everything around them is declarative DataFrame API so
+Catalyst handles pruning/pushdown.
 """
 
 __version__ = "0.1.0"

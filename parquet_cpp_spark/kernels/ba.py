@@ -77,17 +77,27 @@ def as_view(values) -> ByteArrayView:
     return values if isinstance(values, ByteArrayView) else from_list(values)
 
 
+def one_chunk(col):
+    """Arrow Array or ChunkedArray -> Array, without the copy
+    ``combine_chunks`` pays even for a single chunk (measured 11 ms per
+    6.4M-value list column). The shortcut only fires for an unsliced single
+    chunk, so the result is indistinguishable from ``combine_chunks`` for
+    every downstream consumer."""
+    import pyarrow as pa
+
+    if not isinstance(col, pa.ChunkedArray):
+        return col
+    if col.num_chunks == 1 and col.chunk(0).offset == 0:
+        return col.chunk(0)
+    return col.combine_chunks()
+
+
 def from_arrow(arr) -> ByteArrayView:
     """Arrow binary/string array -> dense view (zero-copy when the array is
     unsliced binary; otherwise one C-level normalization copy)."""
     import pyarrow as pa
 
-    if isinstance(arr, pa.ChunkedArray):
-        # single unsliced chunk: skip combine_chunks' unconditional copy
-        if arr.num_chunks == 1 and arr.chunk(0).offset == 0:
-            arr = arr.chunk(0)
-        else:
-            arr = arr.combine_chunks()
+    arr = one_chunk(arr)
     if arr.null_count:
         raise ValueError("from_arrow: nulls must be handled by the caller")
     if not pa.types.is_large_binary(arr.type):

@@ -51,14 +51,6 @@ def values_from_bits(bits: np.ndarray, bit_width: int,
     return by.view(dt).ravel().astype(out_dtype, copy=False)
 
 
-# Cache blocking: the bit-matrix intermediates are ~(8..32)x the input size;
-# slicing keeps them L2/L3-resident so RAM traffic stays ~= input + output.
-# (This sandbox is heavily memory-bandwidth-throttled; cache residency is
-# what makes the kernels scale across cores.) 65536 values * 32 bits = 256 KiB
-# bits + lane copies — well inside per-core L2.
-_BLOCK_VALUES = 1 << 16
-
-
 def pack_rows(vals: np.ndarray, bit_width: int) -> np.ndarray:
     """(k, m) uint64 values (< 2**bit_width, m*bit_width byte-aligned) ->
     (k, m*bit_width/8) uint8 LSB-first bitstream per row. Vectorized u64

@@ -212,23 +212,6 @@ def _tokenize(view: ba.ByteArrayView, lookup):
     return ba.ByteArrayView(tok_data, offsets), sid_o
 
 
-def _build_tables(symbols: list[bytes]):
-    """length -> {symbol bytes: code}, lengths tried longest-first (used by
-    the scalar trainer loop over the 16 KiB sample)."""
-    tables: dict[int, dict[bytes, int]] = {}
-    for code, sym in enumerate(symbols):
-        tables.setdefault(len(sym), {})[sym] = code
-    lengths = sorted(tables, reverse=True)
-    return [(L, tables[L]) for L in lengths]
-
-
-def _longest_match(s: bytes, i: int, ln: int, tables) -> int:
-    for L, tab in tables:
-        if s[i: i + L] in tab:
-            return L
-    return 0
-
-
 def _lookup_arrays(symbols: list[bytes]):
     """Per symbol length (desc): (L, sorted u64 keys, codes) for vectorized
     longest-match via searchsorted."""

@@ -29,9 +29,6 @@ import numpy as np
 from . import bitpack
 from .varint import decode_uvarint, encode_uvarint
 
-# Cap literal runs at the spec's practical group limit to keep headers small.
-_MAX_LITERAL_GROUPS = (1 << 31) - 1
-
 
 def _value_bytes(bit_width: int) -> int:
     return (bit_width + 7) // 8

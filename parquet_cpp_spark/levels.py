@@ -28,9 +28,6 @@ from __future__ import annotations
 
 import numpy as np
 
-MAX_DEF_LEVEL = 1
-MAX_REP_LEVEL = 1
-
 
 def levels_from_lengths(lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(rep_levels, def_levels) from per-row token counts.

@@ -1,1 +1,2 @@
-"""Spark operators: vectorized applyInPandas encode/decode of column chunks."""
+"""Spark operators: Arrow-native (``mapInArrow``) encode/decode of column
+chunks."""

@@ -1,190 +1,11 @@
-"""Encode operator: one ``applyInPandas`` group = one "row group".
+"""The grouped encode operator under its contract names.
 
-The reference's write path (``/root/reference/src/parquet/file_writer.cc:60-236``:
-RowGroupSerializer -> per-column ColumnWriter -> pages) maps to: a Spark
-partition (grouped by ``part_id``) -> per-column numpy kernel encode -> one
-output row per (partition, column) carrying the chunk blob + metadata, our
-``ColumnChunkMetaData`` analog (``metadata.h:90-117``).
-
-All value work is vectorized inside the pandas UDF; Spark supplies the
-parallelism the reference gets from its Arrow thread pool
-(``arrow/reader.cc:483-501``), except here it shards across executors.
+``encode_df`` is ``encode_arrow.encode_df_arrow`` (same positional
+signature): one repartition on ``part_col``, then whole partitions encode
+per ``mapInArrow`` task straight from Arrow buffers.
 """
 
-from __future__ import annotations
+from .encode_arrow import CHUNK_SCHEMA, TOKEN_TABLE_COLUMNS
+from .encode_arrow import encode_df_arrow as encode_df
 
-import hashlib
-
-import numpy as np
-import pandas as pd
-
-from .. import chunk as chunkmod
-from .. import selector
-
-# One row per (partition, column) — the lineage/metrics record.
-CHUNK_SCHEMA = (
-    "part_id bigint, col string, codec string, encodings array<string>, "
-    "n_rows bigint, n_values bigint, raw_bytes bigint, enc_bytes bigint, "
-    "null_count bigint, min_val string, max_val string, "
-    "distinct_count bigint, "
-    "checksum string, bloom binary, blob binary"
-)
-
-# Column specs for the north-rule input table.
-TOKEN_TABLE_COLUMNS = {
-    "doc_id": "byte_array",
-    "tokens": "list<int32>",
-    "n_tok": "int32",
-    "source": "byte_array",
-}
-
-
-_PANDAS_PATH_SPECS = ("list<int32>", "list<int32?>", "byte_array", "int32",
-                      "int64", "float", "double", "boolean")
-
-
-def _column_values(pdf: pd.DataFrame, col: str, phys: str):
-    """Extract (values, row_lengths, elem_valid) for the kernels,
-    vectorized (pandas -> Arrow once, then buffer reads)."""
-    if phys not in _PANDAS_PATH_SPECS:
-        raise ValueError(
-            f"spec {phys!r} is only supported by the Arrow encode path "
-            "(operators.encode_arrow / encode_df default); the pandas "
-            "path handles the token-table specs only")
-    if phys in ("list<int32>", "list<int32?>"):
-        import pyarrow as pa
-
-        from .encode_arrow import list_int32_values
-        arr = pa.Array.from_pandas(pdf[col], type=pa.list_(pa.int32()))
-        return list_int32_values(arr, nullable=phys.endswith("?>"))
-    if phys == "byte_array":
-        import pyarrow as pa
-
-        from ..kernels import ba
-        s = pdf[col]
-        as_bytes = len(s) and isinstance(s.iloc[0], (bytes, bytearray))
-        arr = pa.Array.from_pandas(
-            s, type=pa.binary() if as_bytes else pa.string())
-        return ba.from_arrow(arr), None, None
-    dt = {"int32": np.int32, "int64": np.int64, "float": np.float32,
-          "double": np.float64, "boolean": bool}[phys]
-    return pdf[col].to_numpy(dtype=dt, copy=False), None, None
-
-
-def make_encode_fn(columns: dict[str, str] | None = None,
-                   codec_overrides: dict[str, str] | None = None,
-                   dict_size_limit: int = 1 << 20,
-                   sort_key: str | None = "doc_id",
-                   bloom_columns: set[str] | frozenset[str] = frozenset(),
-                   props: "object | None" = None,
-                   page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE):
-    """Build the applyInPandas function. ``codec_overrides`` maps column name
-    to a codec name from ``chunk.CODEC_NAMES`` (the per-column-path encoding
-    override of ``WriterProperties``, ``properties.h:379-404``); unset columns
-    use the auto-selector. A ``properties.WriterProperties`` instance can
-    supply all knobs at once."""
-    compression = chunkmod.UNCOMPRESSED
-    allow_dictionary = True
-    data_page_version = 1
-    if props is not None:
-        codec_overrides = codec_overrides or props.codec_overrides
-        dict_size_limit = props.dictionary_pagesize_limit
-        sort_key = props.sort_key
-        bloom_columns = bloom_columns or props.bloom_columns
-        compression = props.compression_id
-        allow_dictionary = props.dictionary_enabled
-        page_size = getattr(props, "data_pagesize", page_size)
-        data_page_version = getattr(props, "data_page_version", 1)
-    columns = columns or TOKEN_TABLE_COLUMNS
-    overrides = {k: chunkmod.CODEC_IDS[v]
-                 for k, v in (codec_overrides or {}).items()}
-
-    def encode_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        part_id = int(key[0])
-        if sort_key is not None and sort_key in pdf.columns:
-            # Deterministic intra-partition order -> reproducible blobs and
-            # golden checksums across retries/speculative tasks.
-            pdf = pdf.sort_values(sort_key, kind="mergesort")
-        rows = []
-        for col, phys in columns.items():
-            values, row_lengths, elem_valid = _column_values(pdf, col, phys)
-            kernel_phys = "int32" if phys.startswith("list<int32") else phys
-            enc = selector.encode_best(
-                values, kernel_phys, row_lengths=row_lengths,
-                codec_override=overrides.get(col),
-                dict_size_limit=dict_size_limit,
-                compression=compression,
-                allow_dictionary=allow_dictionary,
-                page_size=page_size,
-                elem_valid=elem_valid,
-                data_page_version=data_page_version)
-            bloom_blob = None
-            if col in bloom_columns and phys == "byte_array":
-                # per-chunk split-block bloom for point-lookup pruning
-                # (reference: bloom_filter.h:119-240)
-                from ..kernels import bloom as bloom_mod
-                bf = bloom_mod.BlockSplitBloomFilter(
-                    bloom_mod.optimal_num_bytes(len(values), 0.01))
-                bf.insert_bytes(values)
-                bloom_blob = bf.serialize()
-            st = enc.stats
-            rows.append({
-                "part_id": part_id,
-                "col": col,
-                "codec": enc.codec_name,
-                "encodings": enc.encodings,
-                "n_rows": enc.n_rows,
-                "n_values": enc.n_values,
-                "raw_bytes": enc.raw_bytes,
-                "enc_bytes": enc.enc_bytes,
-                "null_count": st.null_count if st else 0,
-                "min_val": st.min_val if st else None,
-                "max_val": st.max_val if st else None,
-                "distinct_count": st.distinct_count if st else None,
-                "checksum": hashlib.sha256(enc.blob).hexdigest(),
-                "bloom": bloom_blob,
-                "blob": enc.blob,
-            })
-        out = pd.DataFrame(rows)
-        # Cross-column row-count consistency check, as the reference enforces
-        # per row group (file_writer.cc:129-140).
-        if len(set(out["n_rows"])) > 1:
-            raise ValueError(f"row-count mismatch across columns in part "
-                             f"{part_id}: {dict(zip(out['col'], out['n_rows']))}")
-        return out
-
-    return encode_group
-
-
-def encode_df(df, num_parts: int, part_col: str = "part_id",
-              columns: dict[str, str] | None = None,
-              codec_overrides: dict[str, str] | None = None,
-              dict_size_limit: int = 1 << 20,
-              sort_key: str | None = "doc_id",
-              bloom_columns: set[str] | frozenset[str] = frozenset(),
-              props: "object | None" = None,
-              page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE,
-              use_pandas: bool = False):
-    """DataFrame in (must already carry ``part_col``) -> chunk DataFrame.
-
-    One repartition on ``part_col`` is the engine's single shuffle;
-    partitioning strategy (explicit key, salting) is the caller's job
-    (see plans.encode_job). The default implementation is Arrow-native
-    (``encode_arrow.encode_df_arrow``: values straight from Arrow buffers,
-    whole partitions per task); ``use_pandas=True`` keeps the historical
-    applyInPandas operator (same blobs — both sort by ``sort_key`` and
-    extract values through Arrow)."""
-    if not use_pandas:
-        from .encode_arrow import encode_df_arrow
-        return encode_df_arrow(df, num_parts, part_col, columns,
-                               codec_overrides, dict_size_limit, sort_key,
-                               bloom_columns, props, page_size)
-    from ..shipping import ensure_shipped
-    ensure_shipped(df.sparkSession)
-    fn = make_encode_fn(columns, codec_overrides, dict_size_limit, sort_key,
-                        bloom_columns, props, page_size)
-    out = df.groupBy(part_col).applyInPandas(fn, schema=CHUNK_SCHEMA)
-    # each applyInPandas group (= one partition's whole chunk set) is
-    # produced by one task, so a pipelined decode needs no blob shuffle
-    out._pcs_colocated = True
-    return out
+__all__ = ["CHUNK_SCHEMA", "TOKEN_TABLE_COLUMNS", "encode_df"]

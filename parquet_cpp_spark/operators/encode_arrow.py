@@ -1,20 +1,23 @@
-"""Scan-local encode: ``mapInArrow`` over input splits — zero shuffle.
+"""The encode operator: Arrow batches -> chunk rows, one chunk per column.
 
-The reference encodes values in arrival order, one row group at a time
-(``/root/reference/src/parquet/file_writer.cc:60-143``); it never re-sorts or
-re-partitions. This operator is the Spark analog: each scan task's batches
-become one "row group" (chunk set), values are pulled straight out of the
-Arrow list buffers (offsets + values — no per-row Python, no pandas object
-churn), and there is NO shuffle: wall time is pure scan + encode.
+The reference's write path (``src/parquet/file_writer.cc:60-236``:
+RowGroupSerializer -> per-column ColumnWriter -> pages) maps to: one
+partition's Arrow table -> per-column numpy kernel encode -> one chunk row
+per (partition, column) carrying the blob and its metadata, our
+``ColumnChunkMetaData`` analog (``metadata.h:90-117``). Values are pulled
+straight out of the Arrow buffers (offsets + values — no per-row Python).
 
-Use this as the default encode path; use ``operators.encode`` (groupBy +
-applyInPandas) when downstream reads need co-location by an explicit key or
-when the input layout is skewed and must be rebalanced (plans.encode_job
-handles salting there).
+Two task shapes share ``make_arrow_encode_fn``'s ``encode_part``:
 
-part_id is content-derived (sha256 of the first doc_id + row count), so a
-re-run over the same input produces the same partition ids — the property
-the resume manifest needs.
+- ``encode_scan_local``: each scan task's batches become one "row group",
+  with NO shuffle. The reference likewise encodes values in arrival order
+  (``file_writer.cc:60-143``). part_id is content-derived (sha256 of the
+  first doc_id + row count), so a re-run over the same input produces the
+  same partition ids — the property the resume manifest needs.
+- ``encode_df_arrow``: one repartition on ``part_col`` (the engine's single
+  shuffle), then each partition a task holds is sorted by ``sort_key`` and
+  encoded — for co-location by an explicit key or to rebalance a skewed
+  layout (plans.encode_job handles salting there).
 """
 
 from __future__ import annotations
@@ -25,20 +28,24 @@ import numpy as np
 
 from .. import chunk as chunkmod
 from .. import selector
-from .encode import CHUNK_SCHEMA, TOKEN_TABLE_COLUMNS
+from ..kernels.ba import one_chunk
 
+# One row per (partition, column) — the lineage/metrics record.
+CHUNK_SCHEMA = (
+    "part_id bigint, col string, codec string, encodings array<string>, "
+    "n_rows bigint, n_values bigint, raw_bytes bigint, enc_bytes bigint, "
+    "null_count bigint, min_val string, max_val string, "
+    "distinct_count bigint, "
+    "checksum string, bloom binary, blob binary"
+)
 
-def one_chunk(col):
-    """ChunkedArray -> Array without the copy ``combine_chunks`` pays even
-    for a single chunk (measured 11 ms per 6.4M-value list column — pure
-    waste on every row group). The shortcut only fires for an unsliced
-    single chunk, so the result is indistinguishable from
-    ``combine_chunks`` for every downstream consumer."""
-    if col.num_chunks == 1:
-        c = col.chunk(0)
-        if c.offset == 0:
-            return c
-    return col.combine_chunks()
+# Column specs for the north-rule input table.
+TOKEN_TABLE_COLUMNS = {
+    "doc_id": "byte_array",
+    "tokens": "list<int32>",
+    "n_tok": "int32",
+    "source": "byte_array",
+}
 
 
 def list_int32_values(column, nullable: bool = False):
@@ -334,11 +341,15 @@ def make_arrow_encode_fn(columns: dict[str, str] | None = None,
                          dict_size_limit: int = 1 << 20,
                          props: "object | None" = None,
                          page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE):
+    """Build the scan-local ``mapInArrow`` task; its ``encode_part``
+    attribute encodes one partition's Arrow table. ``codec_overrides`` maps
+    column name to a codec name from ``chunk.CODEC_NAMES`` (the per-column
+    encoding override of ``WriterProperties``, ``properties.h:379-404``);
+    unset columns use the auto-selector. A ``properties.WriterProperties``
+    instance supplies all knobs at once: compression, dictionary on/off,
+    overrides, dictionary page limit, page size and page version."""
     import pyarrow as pa
 
-    # WriterProperties carries the same knobs here as on the applyInPandas
-    # path (operators.encode.make_encode_fn): compression, dictionary
-    # on/off, per-column overrides, dict page limit.
     compression = chunkmod.UNCOMPRESSED
     allow_dictionary = True
     data_page_version = 1
@@ -459,9 +470,8 @@ def make_grouped_arrow_encode_fn(columns: dict[str, str] | None = None,
                                  bloom_columns=frozenset()):
     """mapInArrow task for the explicit-partitioning pipeline: the input was
     repartitioned on part_id, so a task may hold several whole partitions;
-    each is sorted by ``sort_key`` (deterministic blobs across retries, like
-    the applyInPandas path) and encoded straight from Arrow buffers — no
-    pandas object churn on the list column."""
+    each is sorted by ``sort_key`` (deterministic blobs across retries) and
+    encoded straight from Arrow buffers."""
     import pyarrow as pa
 
     if props is not None:

@@ -1,15 +1,15 @@
 """The encode job: partitioning strategy, lineage manifest, checkpoint/resume.
 
-Pipeline (SURVEY §7 step 4-6): assign ``part_id`` -> groupBy(part_id) ->
-``applyInPandas`` encode -> chunk DataFrame + manifest. This is the engine's
-only shuffle; everything else is embarrassingly parallel.
+Pipeline (SURVEY §7 step 4-6): assign ``part_id`` -> repartition(part_id)
+-> ``mapInArrow`` encode (``operators.encode_arrow``) -> chunk DataFrame +
+manifest. This is the engine's only shuffle; everything else is
+embarrassingly parallel.
 
 Scale design (100 TB / 10^12 sequences):
 - ``part_id = pmod(xxhash64(doc_id), P)`` gives uniform, deterministic
   partitions regardless of input layout. P is chosen so one partition's
   token payload is ~``target_partition_bytes`` (default 256 MiB raw, well
-  under executor memory after the ~2-4x in-flight overhead of
-  applyInPandas).
+  under executor memory after the in-flight overhead of the encode task).
 - Skew: a hash of a high-cardinality key (doc_id) cannot skew by key
   frequency, only by payload variance (jumbo docs); ``salt_by_source``
   covers the alternative layout where the input arrives partitioned by the
@@ -28,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators import decode_arrow as decode_arrow_op
-from ..operators import encode as encode_op
+from ..operators import encode_arrow as encode_arrow_op
 
 DEFAULT_TARGET_PARTITION_BYTES = 256 << 20
 
@@ -167,10 +167,10 @@ def encode_pipeline(df: DataFrame, num_parts: int,
         page_size = chunkmod.DEFAULT_PAGE_SIZE
     if "part_id" not in df.columns:
         df = add_part_id(df, num_parts)
-    return encode_op.encode_df(df, num_parts, columns=columns,
-                               codec_overrides=codec_overrides,
-                               dict_size_limit=dict_size_limit,
-                               page_size=page_size)
+    return encode_arrow_op.encode_df_arrow(df, num_parts, columns=columns,
+                                           codec_overrides=codec_overrides,
+                                           dict_size_limit=dict_size_limit,
+                                           page_size=page_size)
 
 
 def decode_pipeline(chunks_df: DataFrame,
@@ -247,8 +247,8 @@ def run_checkpointed(spark, df: DataFrame, out_dir: str, num_parts: int,
 
     n_todo = todo_df.select("part_id").distinct().count()
     if n_todo:
-        chunks = encode_op.encode_df(todo_df, num_parts,
-                                     codec_overrides=codec_overrides)
+        chunks = encode_arrow_op.encode_df_arrow(
+            todo_df, num_parts, codec_overrides=codec_overrides)
         chunks.write.mode("append").partitionBy("part_id").parquet(chunks_path)
     if n_todo or orphan_ok is not None:
         # manifest rows for every chunk-complete partition not yet recorded:

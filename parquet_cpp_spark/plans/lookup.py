@@ -221,7 +221,7 @@ def point_lookup(chunks_df: DataFrame, doc_id: str) -> DataFrame:
     stats+bloom prune partitions; within a surviving partition, per-page
     min/max prune the doc_id pages; only the hit rows' pages of the other
     columns are decoded (decode_chunk_rows)."""
-    from ..operators.decode import DECODED_SCHEMA
+    from ..operators.decode_arrow import DECODED_SCHEMA
     from ..shipping import ensure_shipped
     ensure_shipped(chunks_df.sparkSession)
 
@@ -242,11 +242,7 @@ def point_lookup(chunks_df: DataFrame, doc_id: str) -> DataFrame:
         tbl = pa.Table.from_batches(batch_list)
         pids = tbl.column("part_id").to_numpy(zero_copy_only=False)
         cols = tbl.column("col").to_pylist()
-        blob_chunked = tbl.column("blob")
-        blob_col = (blob_chunked.chunk(0)
-                    if blob_chunked.num_chunks == 1
-                    and blob_chunked.chunk(0).offset == 0
-                    else blob_chunked.combine_chunks())
+        blob_col = ba.one_chunk(tbl.column("blob"))
         by_part: dict[int, dict] = {}
         for i, (pid, c) in enumerate(zip(pids.tolist(), cols)):
             by_part.setdefault(pid, {})[c] = \

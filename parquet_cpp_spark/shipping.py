@@ -2,7 +2,7 @@
 ``spark-submit --py-files`` (the north rule's deployment mode).
 
 Executor Python workers don't inherit the driver process's ``sys.path``
-patches, so any applyInPandas UDF that closes over engine code needs the
+patches, so any ``mapInArrow`` task that closes over engine code needs the
 package on the worker's import path. ``ensure_shipped`` zips the package
 once (content-addressed, cached) and registers it via ``addPyFile``.
 """
@@ -12,9 +12,11 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import threading
 import zipfile
 
 _SHIPPED_SESSIONS: set[int] = set()
+_SHIP_LOCK = threading.Lock()
 
 
 def _package_zip() -> str:
@@ -34,18 +36,26 @@ def _package_zip() -> str:
     out = os.path.join(tempfile.gettempdir(),
                        f"parquet_cpp_spark-{h.hexdigest()[:16]}.zip")
     if not os.path.exists(out):
-        tmp = out + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for n in names:
-                z.write(n, os.path.relpath(n, root))
-        os.replace(tmp, out)
+        # a unique temp name per writer: concurrent writers (threads or
+        # processes) each publish a complete zip, and the last rename wins
+        fd, tmp = tempfile.mkstemp(prefix=os.path.basename(out) + ".",
+                                   suffix=".tmp", dir=os.path.dirname(out))
+        try:
+            with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+                for n in names:
+                    z.write(n, os.path.relpath(n, root))
+            os.replace(tmp, out)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     return out
 
 
 def ensure_shipped(spark) -> None:
     """Idempotently attach the engine package to the session's executors."""
     key = id(spark.sparkContext)
-    if key in _SHIPPED_SESSIONS:
-        return
-    spark.sparkContext.addPyFile(_package_zip())
-    _SHIPPED_SESSIONS.add(key)
+    with _SHIP_LOCK:
+        if key in _SHIPPED_SESSIONS:
+            return
+        spark.sparkContext.addPyFile(_package_zip())
+        _SHIPPED_SESSIONS.add(key)

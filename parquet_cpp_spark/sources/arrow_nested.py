@@ -44,6 +44,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..kernels import ba
+
 _SYNTH = ("list", "element", "key_value")
 
 
@@ -67,16 +69,7 @@ class ArrowColumn:
     and the harvested utf8/temporal/decimal annotation keys."""
 
     def __init__(self, name: str, array, nullable: bool = False):
-        import pyarrow as pa
-
-        if isinstance(array, pa.ChunkedArray):
-            if array.num_chunks == 1 and array.chunk(0).offset == 0:
-                array = array.chunk(0)   # skip combine_chunks' copy
-            else:
-                array = array.combine_chunks()
-            if isinstance(array, pa.ChunkedArray):  # older pyarrow
-                array = array.chunk(0) if array.num_chunks \
-                    else pa.array([], type=array.type)
+        array = ba.one_chunk(array)
         self.name = name
         self._leaves: list = []
         self._schema: list = []     # ("group", rep, name, nchildren, conv)

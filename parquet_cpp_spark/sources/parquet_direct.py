@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from ..operators.encode import CHUNK_SCHEMA
+from ..operators.encode_arrow import CHUNK_SCHEMA
 
 
 def list_row_groups(path: str) -> list[tuple[str, int]]:
@@ -70,7 +70,7 @@ def encode_parquet_direct(spark, path: str,
                           props: "object | None" = None):
     """Encode a parquet token table without moving row data through the JVM.
 
-    Returns the chunk DataFrame (same schema as operators.encode)."""
+    Returns the chunk DataFrame (``CHUNK_SCHEMA``)."""
     from ..shipping import ensure_shipped
     ensure_shipped(spark)
 

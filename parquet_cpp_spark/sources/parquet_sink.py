@@ -183,6 +183,7 @@ def specs_from_arrow(tbl):
     import numpy as np
     import pyarrow as pa
 
+    from ..kernels import ba
     from . import parquet_writer as pw
 
     specs, utf8, annotations, decimals = [], set(), {}, {}
@@ -326,16 +327,7 @@ def specs_from_arrow(tbl):
             return (name, phys, vals, valid, phys == "byte_array")
 
     for name in tbl.column_names:
-        col = tbl.column(name)
-        if isinstance(col, pa.ChunkedArray):
-            # single unsliced chunk: skip combine_chunks' copy
-            if col.num_chunks == 1 and col.chunk(0).offset == 0:
-                col = col.chunk(0)
-            else:
-                col = col.combine_chunks()
-        if isinstance(col, pa.ChunkedArray):   # older pyarrow: 1-chunk CA
-            col = col.chunk(0) if col.num_chunks \
-                else pa.array([], type=col.type)
+        col = ba.one_chunk(tbl.column(name))
         nullable = tbl.schema.field(name).nullable
         snap = (set(utf8), dict(annotations), dict(decimals))
         try:

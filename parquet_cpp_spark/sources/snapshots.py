@@ -224,14 +224,6 @@ def commit_snapshot(out_dir: str, manifest_rows,
                        "version-claim losses")
 
 
-def snapshot_paths(out_dir: str, version: "int | None" = None) -> list[str]:
-    """Absolute data-file paths of one snapshot (root-relative entries
-    joined back onto ``out_dir``, so a moved/renamed dataset directory
-    still resolves)."""
-    snap = load_snapshot(out_dir, version)
-    return [os.path.join(out_dir, e["path"]) for e in snap["files"]]
-
-
 def read_snapshot(spark, out_dir: str, version: "int | None" = None,
                   apply_deletes: bool = True):
     """Plan a Spark scan over EXACTLY one snapshot's files — no

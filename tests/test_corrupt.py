@@ -168,3 +168,35 @@ def test_verify_checksums_requires_column():
     chunk_tbl = _token_chunk_table().drop_columns(["checksum"])
     with pytest.raises(ValueError, match="no checksum column"):
         list(_decode_table(chunk_tbl, verify_checksums=True))
+
+
+def test_list_offsets_overflow_raises():
+    """A list column past 2^31 elements in one partition cannot take int32
+    Arrow offsets: the decode must refuse it, not wrap the offsets."""
+    from parquet_cpp_spark.operators.decode_arrow import _offsets
+    assert _offsets(np.array([3, 0, 2])).to_pylist() == [0, 3, 3, 5]
+    with pytest.raises(ValueError, match="int32 list offsets"):
+        _offsets(np.array([1 << 30, 1 << 30], dtype=np.int64))
+
+
+def test_typed_decode_names_truncated_chunk():
+    """Every chunk decoder wraps a decode failure with the part and
+    column: a truncated tokens blob through ``decode_chunks_typed`` must
+    fail as ``corrupt chunk: part_id=.. col='tokens'``."""
+    pytest.importorskip("pyspark")
+    from parquet_cpp_spark.operators.decode_arrow import decode_chunks_typed
+    from parquet_cpp_spark.operators.encode_arrow import (
+        CHUNK_SCHEMA, TOKEN_TABLE_COLUMNS)
+    from parquet_cpp_spark.session import get_spark
+
+    rows = _token_chunk_table().to_pylist()
+    for r in rows:
+        if r["col"] == "tokens":
+            r["blob"] = r["blob"][: len(r["blob"]) // 2]
+    spark = get_spark(master="local[4]", app_name="pcs-corrupt",
+                      shuffle_partitions=4)
+    chunks = spark.createDataFrame(rows, CHUNK_SCHEMA)
+    with pytest.raises(Exception,
+                       match=r"ValueError: corrupt chunk: part_id=0 "
+                             r"col='tokens'"):
+        decode_chunks_typed(chunks, TOKEN_TABLE_COLUMNS).collect()

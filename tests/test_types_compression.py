@@ -127,25 +127,31 @@ def test_all_null_chunk():
     assert not dec.valid_mask.any()
 
 
+def _token_table(doc_ids, tokens, n_tok, source):
+    import pyarrow as pa
+    return pa.table({
+        "doc_id": pa.array(doc_ids, type=pa.string()),
+        "tokens": pa.array(tokens, type=pa.list_(pa.int32())),
+        "n_tok": pa.array(n_tok, type=pa.int32()),
+        "source": pa.array(source, type=pa.string()),
+    })
+
+
 def test_writer_properties_drive_operators():
     """WriterProperties flows through the encode operator (config parity
     with the reference's WriterProperties::Builder)."""
-    import pandas as pd
-    from parquet_cpp_spark.operators.encode import make_encode_fn
+    from parquet_cpp_spark.operators.encode_arrow import make_arrow_encode_fn
     from parquet_cpp_spark.properties import WriterProperties
 
     props = WriterProperties(codec_overrides={"tokens": "PLAIN"},
                              compression="GZIP", sort_key=None)
-    fn = make_encode_fn(props=props)
-    pdf = pd.DataFrame({
-        "doc_id": [f"d{i}" for i in range(50)],
-        "tokens": [list(range(i % 7)) for i in range(50)],
-        "n_tok": [i % 7 for i in range(50)],
-        "source": ["web"] * 50,
-    })
-    out = fn((0,), pdf)
+    fn = make_arrow_encode_fn(props=props)
+    tbl = _token_table([f"d{i}" for i in range(50)],
+                       [list(range(i % 7)) for i in range(50)],
+                       [i % 7 for i in range(50)], ["web"] * 50)
+    out = fn.encode_part(tbl, 0).to_pydict()
     assert dict(zip(out["col"], out["codec"]))["tokens"] == "PLAIN"
-    blob = bytes(out[out["col"] == "tokens"]["blob"].iloc[0])
+    blob = out["blob"][out["col"].index("tokens")]
     assert blob[7] == chunkmod.GZIP  # compression byte in the v2 header
     dec = chunkmod.decode_chunk(blob)
     assert dec.n_rows == 50
@@ -158,22 +164,18 @@ def test_writer_properties_drive_operators():
 
 def test_dictionary_disabled_property():
     """enable_dictionary(false) parity: the selector never proposes dict."""
-    import pandas as pd
-    from parquet_cpp_spark.operators.encode import make_encode_fn
+    from parquet_cpp_spark.operators.encode_arrow import make_arrow_encode_fn
     from parquet_cpp_spark.properties import WriterProperties
 
-    pdf = pd.DataFrame({
-        "doc_id": [f"d{i}" for i in range(2000)],
-        "tokens": [[i % 5] * 20 for i in range(2000)],  # dict would win
-        "n_tok": [20] * 2000,
-        "source": ["web"] * 2000,
-    })
-    fn = make_encode_fn(props=WriterProperties(dictionary_enabled=False,
-                                               sort_key=None))
-    out = fn((0,), pdf)
+    tbl = _token_table([f"d{i}" for i in range(2000)],
+                       [[i % 5] * 20 for i in range(2000)],  # dict would win
+                       [20] * 2000, ["web"] * 2000)
+    fn = make_arrow_encode_fn(props=WriterProperties(dictionary_enabled=False,
+                                                     sort_key=None))
+    out = fn.encode_part(tbl, 0).to_pydict()
     assert "RLE_DICTIONARY" not in set(out["codec"])
-    fn2 = make_encode_fn(props=WriterProperties(sort_key=None))
-    out2 = fn2((0,), pdf)
+    fn2 = make_arrow_encode_fn(props=WriterProperties(sort_key=None))
+    out2 = fn2.encode_part(tbl, 0).to_pydict()
     assert "RLE_DICTIONARY" in set(out2["codec"])  # default allows it
 
 
