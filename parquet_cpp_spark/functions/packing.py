@@ -39,7 +39,7 @@ def pack_sequences(tokens_df: DataFrame, seq_len: int,
     from ..shipping import ensure_shipped
     ensure_shipped(tokens_df.sparkSession)
 
-    def pack(pdf: pd.DataFrame):
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         order = pdf[order_col].astype(np.int64).to_numpy()
         idx = np.argsort(order, kind="stable")
         toks = pdf["tokens"].to_numpy()[idx]
@@ -113,7 +113,7 @@ def pack_documents(tokens_df: DataFrame, seq_len: int,
     from ..shipping import ensure_shipped
     ensure_shipped(tokens_df.sparkSession)
 
-    def plan(pdf: pd.DataFrame):
+    def plan(pdf: pd.DataFrame) -> pd.DataFrame:
         order = pdf[order_col].astype(np.int64).to_numpy()
         idx = np.argsort(order, kind="stable")
         doc = pdf[order_col].to_numpy()[idx]

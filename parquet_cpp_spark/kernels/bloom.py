@@ -8,8 +8,10 @@ by the high 32 bits; hash = murmur3_x64_128 (first 64 bits), as in
 [u32 num_bytes][u32 hash_id][u32 algorithm_id][bitset]
 (``bloom_filter.h:214-216``, ``bloom_filter.cc``).
 
-Insert/check over int64 key arrays are fully vectorized (numpy uint64
-wrapping arithmetic); arbitrary byte keys go through the scalar murmur3.
+Insert/check are fully vectorized (numpy uint64 wrapping arithmetic): int64
+keys hash as one lane; byte keys hash per distinct length as ``(n, L)``
+little-endian u64 word lanes (``murmur3_64_view``), bit-identical to the
+scalar ``murmur3_64_bytes``.
 """
 
 from __future__ import annotations
@@ -17,6 +19,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
+
+from . import ba
 
 # SALT constants from the parquet-format spec / reference bloom_filter.h:152
 SALT = np.array([0x47b6137b, 0x44974d91, 0x8824ad5b, 0xa2b7289d,
@@ -54,21 +58,8 @@ BLOOM_SEED = 1361930890
 def murmur3_64_int64(keys: np.ndarray, seed: int = BLOOM_SEED) -> np.ndarray:
     """murmur3_x64_128 (first 64 bits) of each int64 key's 8 LE bytes —
     vectorized. Matches the scalar path for len=8 inputs."""
-    with np.errstate(over="ignore"):
-        k1 = keys.astype(np.uint64)
-        k1 = k1 * _C1
-        k1 = _rotl64(k1, 31)
-        k1 = k1 * _C2
-        h1 = np.uint64(seed) ^ k1
-        h2 = np.full(len(keys), np.uint64(seed), dtype=np.uint64)
-        h1 = h1 ^ np.uint64(8)
-        h2 = h2 ^ np.uint64(8)
-        h1 = h1 + h2
-        h2 = h2 + h1
-        h1 = _fmix64(h1)
-        h2 = _fmix64(h2)
-        h1 = h1 + h2
-    return h1
+    words = np.asarray(keys).astype(np.uint64)[:, None]
+    return _murmur3_64_words(words, 8, seed)
 
 
 def murmur3_64_bytes(key: bytes, seed: int = BLOOM_SEED) -> int:
@@ -127,6 +118,70 @@ def murmur3_64_bytes(key: bytes, seed: int = BLOOM_SEED) -> int:
     return h1
 
 
+def _mix_k1(k1: np.ndarray) -> np.ndarray:
+    return _rotl64(k1 * _C1, 31) * _C2
+
+
+def _mix_k2(k2: np.ndarray) -> np.ndarray:
+    return _rotl64(k2 * _C2, 33) * _C1
+
+
+def _murmur3_64_words(words: np.ndarray, n: int, seed: int) -> np.ndarray:
+    """murmur3_x64_128 (first 64 bits) of rows of an ``(m, W)`` u64 word
+    matrix that holds keys of length ``n`` each, zero-padded to whole
+    words (the tail words then read exactly as the scalar loop's)."""
+    m = words.shape[0]
+    h1 = np.full(m, np.uint64(seed & _MASK), dtype=np.uint64)
+    h2 = h1.copy()
+    nblocks = n // 16
+    with np.errstate(over="ignore"):
+        for b in range(nblocks):
+            h1 ^= _mix_k1(words[:, 2 * b])
+            h1 = (_rotl64(h1, 27) + h2) * np.uint64(5) \
+                + np.uint64(0x52dce729)
+            h2 ^= _mix_k2(words[:, 2 * b + 1])
+            h2 = (_rotl64(h2, 31) + h1) * np.uint64(5) \
+                + np.uint64(0x38495ab5)
+        tail = n - nblocks * 16
+        if tail > 8:
+            h2 ^= _mix_k2(words[:, 2 * nblocks + 1])
+        if tail:
+            h1 ^= _mix_k1(words[:, 2 * nblocks])
+        h1 ^= np.uint64(n)
+        h2 ^= np.uint64(n)
+        h1 = h1 + h2
+        h2 = h2 + h1
+        h1 = _fmix64(h1)
+        h2 = _fmix64(h2)
+        h1 = h1 + h2
+    return h1
+
+
+def murmur3_64_view(keys, seed: int = BLOOM_SEED) -> np.ndarray:
+    """``murmur3_64_bytes`` of every key of a ``ByteArrayView`` (or list of
+    bytes), with no per-key Python: keys are grouped by length, and each
+    group of ``m`` keys of length ``L`` is gathered into an ``(m, L)`` byte
+    matrix, zero-padded to whole u64 words and hashed lane-wise."""
+    view = ba.as_view(keys)
+    lengths = view.lengths
+    out = np.empty(len(lengths), dtype=np.uint64)
+    if not len(lengths):
+        return out
+    starts = view.offsets[:-1]
+    uniq, inverse = np.unique(lengths, return_inverse=True)
+    for g, n in enumerate(uniq.tolist()):
+        sel = np.flatnonzero(inverse == g) if len(uniq) > 1 \
+            else np.arange(len(lengths))
+        mat = np.zeros((len(sel), max(8, -(-n // 8) * 8)), dtype=np.uint8)
+        if len(uniq) == 1:    # dense view, one length: rows are contiguous
+            mat[:, :n] = view.data.reshape(len(sel), n)
+        elif n:
+            mat[:, :n] = view.data[starts[sel][:, None]
+                                   + np.arange(n, dtype=np.int64)]
+        out[sel] = _murmur3_64_words(mat.view("<u8"), n, seed)
+    return out
+
+
 def optimal_num_bytes(ndv: int, fpp: float = 0.01) -> int:
     """OptimalNumOfBits (``bloom_filter.h:164-178``), rounded up to a power
     of two of whole blocks."""
@@ -173,13 +228,12 @@ class BlockSplitBloomFilter:
         return self.check_hashes(
             murmur3_64_int64(np.asarray(keys, dtype=np.int64)))
 
-    def insert_bytes(self, keys: list[bytes]) -> None:
-        self.insert_hashes(np.array([murmur3_64_bytes(k) for k in keys],
-                                    dtype=np.uint64))
+    def insert_bytes(self, keys) -> None:
+        """Insert a ``ByteArrayView`` (or list of bytes) of keys."""
+        self.insert_hashes(murmur3_64_view(keys))
 
-    def check_bytes(self, keys: list[bytes]) -> np.ndarray:
-        return self.check_hashes(np.array([murmur3_64_bytes(k) for k in keys],
-                                          dtype=np.uint64))
+    def check_bytes(self, keys) -> np.ndarray:
+        return self.check_hashes(murmur3_64_view(keys))
 
     # serialization: [u32 num_bytes][u32 hash=0 murmur3][u32 alg=0 block]
     # — the parquet-format bloom header layout, pinned bit-for-bit by the
@@ -199,9 +253,30 @@ class BlockSplitBloomFilter:
                 + bitset)
 
     @classmethod
-    def deserialize(cls, buf) -> "BlockSplitBloomFilter":
+    def deserialize(cls, buf, where: str = "") -> "BlockSplitBloomFilter":
+        """Parse a serialized filter. Blooms are read back from data files,
+        so the header is checked against the buffer before anything is
+        allocated; ``where`` (e.g. ``part_id=7``) names the source in the
+        ``ValueError``."""
         mv = memoryview(buf)
+        if mv.format != "B":
+            mv = mv.cast("B")
+        what = f"corrupt bloom{' ' + where if where else ''}"
+        if len(mv) < 12:
+            raise ValueError(f"{what}: {len(mv)}-byte buffer is shorter "
+                             "than the 12-byte header")
         num_bytes = int.from_bytes(mv[0:4], "little")
+        hash_id = int.from_bytes(mv[4:8], "little")
+        alg_id = int.from_bytes(mv[8:12], "little")
+        if hash_id or alg_id:
+            raise ValueError(f"{what}: hash id {hash_id} / algorithm id "
+                             f"{alg_id}, expected 0 / 0")
+        if num_bytes < MIN_BYTES or num_bytes & (num_bytes - 1):
+            raise ValueError(f"{what}: num_bytes {num_bytes} is not a "
+                             f"power of two >= {MIN_BYTES}")
+        if len(mv) != 12 + num_bytes:
+            raise ValueError(f"{what}: header declares {num_bytes} bitset "
+                             f"bytes, buffer holds {len(mv) - 12}")
         bf = cls.__new__(cls)
         bf.words = np.frombuffer(mv[12: 12 + num_bytes],
                                  dtype=np.uint32).copy()

@@ -263,14 +263,44 @@ def _emit_super(mins: np.ndarray, widths: np.ndarray, minis: np.ndarray,
     return outb.tobytes()
 
 
+# Largest block a stream may declare: 256x the 128-value blocks parquet-mr,
+# Arrow and this module write, and a bound on how many values a few bytes
+# of all-zero-width blocks can claim.
+MAX_BLOCK_SIZE = 1 << 15
+
+
+def _check_header(block_size: int, miniblocks: int, n: int,
+                  remaining: int) -> None:
+    """O(1) header bound, before anything is allocated: the geometry the
+    spec allows (a block is a multiple of 128 values, a miniblock a multiple
+    of 32), and enough bytes left for every block's min-delta varint and
+    width bytes (``1 + miniblocks`` bytes at least per block)."""
+    if not 0 < block_size <= MAX_BLOCK_SIZE or block_size % 128:
+        raise ValueError(f"corrupt delta header: block_size {block_size} "
+                         f"is not a multiple of 128 in [128, "
+                         f"{MAX_BLOCK_SIZE}]")
+    if miniblocks == 0 or block_size % miniblocks \
+            or (block_size // miniblocks) % 32:
+        raise ValueError(f"corrupt delta header: {miniblocks} miniblocks "
+                         f"per {block_size}-value block")
+    n_blocks = -(-(n - 1) // block_size) if n > 1 else 0
+    need = n_blocks * (1 + miniblocks)
+    if need > remaining:
+        raise ValueError(f"corrupt delta header: {n} values need at least "
+                         f"{need} bytes of blocks, {remaining} remain")
+
+
 def decode(buf, pos: int = 0, out_dtype=np.int64) -> tuple[np.ndarray, int]:
     mv = memoryview(buf) if not isinstance(buf, memoryview) else buf
-    block_size, pos = decode_uvarint(mv, pos)
-    miniblocks, pos = decode_uvarint(mv, pos)
-    n, pos = decode_uvarint(mv, pos)
-    first, pos = decode_zigzag_varint(mv, pos)
-    if block_size % miniblocks:
-        raise ValueError("corrupt delta header: block_size % miniblocks != 0")
+    try:
+        block_size, pos = decode_uvarint(mv, pos)
+        miniblocks, pos = decode_uvarint(mv, pos)
+        n, pos = decode_uvarint(mv, pos)
+        first, pos = decode_zigzag_varint(mv, pos)
+    except IndexError:
+        raise ValueError(f"corrupt delta header: truncated at byte {pos} "
+                         f"of {len(mv)}") from None
+    _check_header(block_size, miniblocks, n, len(mv) - pos)
     mini_size = block_size // miniblocks
     # Narrow-lane reconstruction: for 4-byte outputs every step (unpacked
     # adj + min_delta, prefix sum, + first) is exact MOD 2^32, and the true
@@ -305,29 +335,35 @@ def decode(buf, pos: int = 0, out_dtype=np.int64) -> tuple[np.ndarray, int]:
     # so the width-byte position) is recovered vectorized afterwards from
     # the continuation bits — one list append + int box per block instead
     # of two
-    if fast4:
-        for _ in range(n_blocks - 1):
-            hap(pos)
-            while bs[pos] >= 0x80:
+    try:
+        if fast4:
+            for _ in range(n_blocks - 1):
+                hap(pos)
+                while bs[pos] >= 0x80:
+                    pos += 1
+                pos += 5 + ((bs[pos + 1] + bs[pos + 2] + bs[pos + 3]
+                             + bs[pos + 4]) << 2)
+        else:
+            for _ in range(n_blocks - 1):
+                hap(pos)
+                while bs[pos] >= 0x80:
+                    pos += 1
                 pos += 1
-            pos += 5 + ((bs[pos + 1] + bs[pos + 2] + bs[pos + 3]
-                         + bs[pos + 4]) << 2)
-    else:
-        for _ in range(n_blocks - 1):
-            hap(pos)
-            while bs[pos] >= 0x80:
-                pos += 1
+                pos += mb + sum(bs[pos: pos + mb]) * mini_bytes
+        # final block: unused trailing widths read as zero (they may hold
+        # anything in a foreign stream; ours writes 0)
+        hap(pos)
+        while bs[pos] >= 0x80:
             pos += 1
-            pos += mb + sum(bs[pos: pos + mb]) * mini_bytes
-    # final block: unused trailing widths read as zero (they may hold
-    # anything in a foreign stream; ours writes 0)
-    hap(pos)
-    while bs[pos] >= 0x80:
         pos += 1
-    pos += 1
-    rem = nd - (n_blocks - 1) * block_size
-    n_used = min(mb, (rem + mini_size - 1) // mini_size)
-    pos += mb + sum(bs[pos: pos + n_used]) * mini_bytes
+        rem = nd - (n_blocks - 1) * block_size
+        n_used = min(mb, (rem + mini_size - 1) // mini_size)
+        pos += mb + sum(bs[pos: pos + n_used]) * mini_bytes
+    except IndexError:
+        pos = len(bs) + 1
+    if pos > len(bs):
+        raise ValueError(f"corrupt delta stream: {n} values run past "
+                         f"the {len(bs)}-byte buffer")
     hdr_pos = np.array(hdr_l, dtype=np.int64)
 
     buf_u8 = np.frombuffer(mv, dtype=np.uint8, count=min(len(mv), pos + 16))

@@ -29,6 +29,7 @@ import numpy as np
 from .. import chunk as chunkmod
 from .. import selector
 from ..kernels.ba import one_chunk
+from ..properties import DEFAULT_BLOOM_COLUMNS
 
 # One row per (partition, column) — the lineage/metrics record.
 CHUNK_SCHEMA = (
@@ -340,16 +341,22 @@ def make_arrow_encode_fn(columns: dict[str, str] | None = None,
                          codec_overrides: dict[str, str] | None = None,
                          dict_size_limit: int = 1 << 20,
                          props: "object | None" = None,
-                         page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE):
+                         page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE,
+                         bloom_columns=None):
     """Build the scan-local ``mapInArrow`` task; its ``encode_part``
     attribute encodes one partition's Arrow table. ``codec_overrides`` maps
     column name to a codec name from ``chunk.CODEC_NAMES`` (the per-column
     encoding override of ``WriterProperties``, ``properties.h:379-404``);
     unset columns use the auto-selector. A ``properties.WriterProperties``
     instance supplies all knobs at once: compression, dictionary on/off,
-    overrides, dictionary page limit, page size and page version."""
+    overrides, dictionary page limit, page size, page version and bloom
+    columns. ``bloom_columns`` (when given) wins over ``props``; with
+    neither, the ``WriterProperties`` default applies."""
     import pyarrow as pa
 
+    if bloom_columns is None:
+        bloom_columns = getattr(props, "bloom_columns",
+                                DEFAULT_BLOOM_COLUMNS)
     compression = chunkmod.UNCOMPRESSED
     allow_dictionary = True
     data_page_version = 1
@@ -375,8 +382,7 @@ def make_arrow_encode_fn(columns: dict[str, str] | None = None,
 
     leaves = expand_column_specs(columns)
 
-    def encode_part(tbl, part_id: int,
-                    bloom_columns: "set | frozenset" = frozenset()):
+    def encode_part(tbl, part_id: int):
         """One partition's Arrow table -> one chunk-row RecordBatch (one
         chunk per LEAF column; struct leaves carry dotted-path names)."""
         rows = {k: [] for k in out_schema.names}
@@ -467,7 +473,7 @@ def make_grouped_arrow_encode_fn(columns: dict[str, str] | None = None,
                                  page_size: int | None =
                                  chunkmod.DEFAULT_PAGE_SIZE,
                                  sort_key: str | None = "doc_id",
-                                 bloom_columns=frozenset()):
+                                 bloom_columns=None):
     """mapInArrow task for the explicit-partitioning pipeline: the input was
     repartitioned on part_id, so a task may hold several whole partitions;
     each is sorted by ``sort_key`` (deterministic blobs across retries) and
@@ -476,9 +482,8 @@ def make_grouped_arrow_encode_fn(columns: dict[str, str] | None = None,
 
     if props is not None:
         sort_key = props.sort_key
-        bloom_columns = bloom_columns or props.bloom_columns
     base = make_arrow_encode_fn(columns, codec_overrides, dict_size_limit,
-                                props, page_size)
+                                props, page_size, bloom_columns)
 
     def task(batches):
         batch_list = list(batches)
@@ -504,8 +509,7 @@ def make_grouped_arrow_encode_fn(columns: dict[str, str] | None = None,
         starts = np.concatenate(([0], bounds))
         ends = np.concatenate((bounds, [len(pids_np)]))
         for s, e in zip(starts.tolist(), ends.tolist()):
-            yield base.encode_part(tbl.slice(s, e - s), int(pids_np[s]),
-                                   bloom_columns)
+            yield base.encode_part(tbl.slice(s, e - s), int(pids_np[s]))
 
     return task
 
@@ -515,7 +519,7 @@ def encode_df_arrow(df, num_parts: int, part_col: str = "part_id",
                     codec_overrides: dict[str, str] | None = None,
                     dict_size_limit: int = 1 << 20,
                     sort_key: str | None = "doc_id",
-                    bloom_columns=frozenset(),
+                    bloom_columns=None,
                     props: "object | None" = None,
                     page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE):
     """Arrow-native grouped encode: one repartition on ``part_col`` (the

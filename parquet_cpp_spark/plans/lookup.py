@@ -3,44 +3,55 @@
 The reference emits filter-support metadata (min/max statistics
 ``statistics.h:34-82``, split-block blooms ``bloom_filter.h:119-240``) so
 scanners can skip chunks; Catalyst does the same with parquet footers. Here
-the chunk DataFrame *is* the metadata table: a lookup first prunes on the
-stats columns (plain Catalyst filters over the tiny metadata projection),
-then drops the surviving blooms into a pandas UDF check, and only decodes
-the partitions that may contain the key. At 100 TB this is the difference
-between decoding everything and decoding a handful of chunks.
+the chunk DataFrame *is* the metadata table, and pruning runs on the driver:
+a lookup collects the tiny ``(part_id, bloom)`` projection of the key
+column's chunk rows whose ``[min_val, max_val]`` holds the key (a JVM-only
+read that never touches ``blob``), checks those blooms in-process
+(``may_contain``), and launches ONE Python job over the surviving parts
+only -- a literal-``False`` filter, zero tasks, when none survive. Every
+encode path writes a doc_id bloom by default
+(``properties.DEFAULT_BLOOM_COLUMNS``). Within a surviving part, per-page
+min/max skip doc_id pages and only the hit rows' pages of the other columns
+are decoded (``_find_rows``, ``chunk.decode_chunk_rows``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
 
+def may_contain(rows, keys) -> list[int]:
+    """part_ids of ``(part_id, bloom)`` rows whose split-block bloom may
+    hold at least one of ``keys`` (bytes); a row without a bloom cannot be
+    pruned and is kept. The one bloom check behind ``point_lookup`` and
+    ``prune_parts_predicate``; a corrupt bloom raises ``ValueError`` naming
+    its part."""
+    from ..kernels.bloom import BlockSplitBloomFilter, murmur3_64_view
 
-def prune_partitions(chunks_df: DataFrame, column: str, key: str) -> DataFrame:
-    """part_ids whose `column` chunk may contain `key` (stats + bloom)."""
-    meta = (chunks_df.filter(F.col("col") == column)
-            .select("part_id", "min_val", "max_val", "bloom"))
-    in_range = meta.filter(
-        (F.col("min_val").isNull()) |
-        ((F.col("min_val") <= key) & (F.col("max_val") >= key)))
+    hashes = murmur3_64_view(list(keys))
+    keep = []
+    for pid, bloom in rows:
+        if bloom is None or BlockSplitBloomFilter.deserialize(
+                bloom, f"part_id={pid}").check_hashes(hashes).any():
+            keep.append(pid)
+    return keep
 
-    @F.pandas_udf(T.BooleanType())
-    def bloom_may_contain(bloom: pd.Series) -> pd.Series:
-        from ..kernels import bloom as bloom_mod
-        kb = key.encode("utf-8")
-        out = []
-        for b in bloom:
-            if b is None:
-                out.append(True)  # no bloom -> cannot prune
-            else:
-                bf = bloom_mod.BlockSplitBloomFilter.deserialize(bytes(b))
-                out.append(bool(bf.check_bytes([kb])[0]))
-        return pd.Series(out)
 
-    return in_range.filter(bloom_may_contain(F.col("bloom"))) \
-        .select("part_id")
+def _part_filter(parts: list[int]) -> Column:
+    """``part_id IN parts``; a literal ``False`` when nothing survives, so
+    the plan runs zero tasks."""
+    return F.col("part_id").isin(parts) if parts else F.lit(False)
+
+
+def prune_partitions(chunks_df: DataFrame, column: str, key: str) \
+        -> list[int]:
+    """part_ids whose ``column`` chunk may contain ``key``: the Catalyst
+    stats filter picks the candidate rows, the driver checks their blooms."""
+    rows = (chunks_df.filter(F.col("col") == column)
+            .filter(F.col("min_val").isNull()
+                    | ((F.col("min_val") <= key) & (F.col("max_val") >= key)))
+            .select("part_id", "bloom").collect())
+    return sorted(may_contain(rows, [key.encode("utf-8")]))
 
 
 def _find_rows(blob, key: bytes):
@@ -82,8 +93,8 @@ def prune_parts_predicate(chunks_df: DataFrame, predicate) -> DataFrame:
     chunk DataFrame's OWN stats columns (min_val/max_val/null_count)
     with plain Catalyst filters over the tiny metadata projection — no
     blob is touched — plus a bloom layer for string ``==``/``in`` terms
-    on bloom-carrying chunks (the same per-chunk split-block blooms
-    ``point_lookup`` consults).
+    on bloom-carrying chunks: the stats survivors' blooms are collected
+    and checked on the driver by ``may_contain``, as ``point_lookup`` does.
     Numeric values compare via a double cast of the canonical stat
     strings; string values compare lexicographically (matching
     compute_stats). A chunk with NULL stats is kept (can't prune);
@@ -161,23 +172,11 @@ def prune_parts_predicate(chunks_df: DataFrame, predicate) -> DataFrame:
                 and "bloom" in chunks_df.columns:
             # bloom layer for string equality: keep only partitions
             # whose chunk bloom may contain SOME candidate (no bloom ->
-            # cannot prune); same per-chunk blooms point_lookup uses
+            # cannot prune); the same driver-side check point_lookup uses
             keys = [x.encode() if isinstance(x, str) else bytes(x)
                     for x in vals]
-
-            @F.pandas_udf(T.BooleanType())
-            def _may_contain(bloom: pd.Series) -> pd.Series:
-                from ..kernels import bloom as bloom_mod
-                out = []
-                for b in bloom:
-                    if b is None:
-                        out.append(True)
-                    else:
-                        bf = bloom_mod.BlockSplitBloomFilter.deserialize(
-                            bytes(b))
-                        out.append(bool(bf.check_bytes(keys).any()))
-                return pd.Series(out)
-            kept = kept.filter(_may_contain(F.col("bloom")))
+            rows = kept.select("part_id", "bloom").collect()
+            kept = kept.filter(_part_filter(may_contain(rows, keys)))
         kept = kept.select("part_id")
         parts = kept if parts is None else parts.join(kept, "part_id")
     if parts is None:
@@ -218,15 +217,16 @@ def selective_decode(chunks_df: DataFrame, predicate,
 
 def point_lookup(chunks_df: DataFrame, doc_id: str) -> DataFrame:
     """Return the rows matching ``doc_id``, decoding as little as possible:
-    stats+bloom prune partitions; within a surviving partition, per-page
-    min/max prune the doc_id pages; only the hit rows' pages of the other
-    columns are decoded (decode_chunk_rows)."""
+    the driver prunes parts on stats + bloom (``prune_partitions``), one
+    ``mapInArrow`` job reads only the survivors' chunk rows; within a part,
+    per-page min/max prune the doc_id pages and only the hit rows' pages of
+    the other columns are decoded (decode_chunk_rows)."""
     from ..operators.decode_arrow import DECODED_SCHEMA
     from ..shipping import ensure_shipped
     ensure_shipped(chunks_df.sparkSession)
 
     parts = prune_partitions(chunks_df, "doc_id", doc_id)
-    pruned = chunks_df.join(F.broadcast(parts), "part_id")
+    pruned = chunks_df.filter(_part_filter(parts))
     key = doc_id.encode("utf-8")
 
     def task(batches):

@@ -17,6 +17,10 @@ from . import chunk as chunkmod
 DEFAULT_DICT_PAGE_LIMIT = 1 << 20   # properties.h:83
 DEFAULT_DATA_PAGESIZE = 1 << 20     # properties.h:81
 DEFAULT_TARGET_PARTITION_BYTES = 256 << 20
+# every encode path writes a per-chunk split-block bloom for these columns
+# (into the chunk row's ``bloom`` column, so blob bytes do not move): the
+# point lookup prunes on them before it decodes anything
+DEFAULT_BLOOM_COLUMNS = frozenset({"doc_id"})
 
 
 @dataclass
@@ -32,7 +36,7 @@ class WriterProperties:
     # data page layout version: V1 compresses the assembled page; V2 keeps
     # levels outside the compressed block (properties.h:363-377)
     format_version: str = "V1"
-    bloom_columns: frozenset[str] = frozenset()
+    bloom_columns: frozenset[str] = DEFAULT_BLOOM_COLUMNS
     sort_key: str | None = "doc_id"
     target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES
 

@@ -24,8 +24,8 @@ def get_spark(master: str | None = None, app_name: str = "parquet_cpp_spark",
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Arrow-vectorized UDF transfer (the pandas UDFs of functions/ and
-        # the bloom checks); row-at-a-time transfer would defeat the design.
+        # Arrow-vectorized UDF transfer (the pandas UDFs of functions/);
+        # row-at-a-time transfer would defeat the design.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Bound Arrow record batches so jumbo token rows can't blow a batch
         # (Arrow 2 GiB record-batch limit; SURVEY §7 hard part (e)).

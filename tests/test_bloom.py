@@ -4,7 +4,7 @@
 
 import numpy as np
 
-from parquet_cpp_spark.kernels import bloom
+from parquet_cpp_spark.kernels import ba, bloom
 
 RNG = np.random.default_rng(42)
 
@@ -42,6 +42,35 @@ def test_string_keys():
     assert bf.check_bytes(keys).all()
     absent = [f"other-{i}".encode() for i in range(5000)]
     assert bf.check_bytes(absent).mean() < 0.02
+
+
+def test_vectorized_bytes_hash_matches_scalar():
+    """The byte-key hash is vectorized (keys grouped by length, hashed as
+    u64 word lanes) and must equal the scalar murmur3 bit for bit: lengths
+    0-64 cover whole 16-byte blocks, tails of 1-8 bytes (k1 only) and
+    9-15 bytes (k1 and k2), mixed in one view in random order."""
+    rng = np.random.default_rng(7)
+    keys = [rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+            for n in range(65) for _ in range(4)]
+    keys = [keys[i] for i in rng.permutation(len(keys))]
+    scalar = np.array([bloom.murmur3_64_bytes(k) for k in keys],
+                      dtype=np.uint64)
+    np.testing.assert_array_equal(bloom.murmur3_64_view(keys), scalar)
+    np.testing.assert_array_equal(
+        bloom.murmur3_64_view(ba.from_list(keys)), scalar)
+    for n in (0, 7, 8, 9, 16, 24, 32, 33):      # one length: contiguous rows
+        same = [k for k in keys if len(k) == n]
+        np.testing.assert_array_equal(
+            bloom.murmur3_64_view(same, seed=0),
+            [bloom.murmur3_64_bytes(k, seed=0) for k in same])
+    assert len(bloom.murmur3_64_view([])) == 0
+    # insert_bytes/check_bytes hash through it: same bitset as the scalar
+    bf = bloom.BlockSplitBloomFilter(1024)
+    bf.insert_bytes(ba.from_list(keys))
+    ref = bloom.BlockSplitBloomFilter(1024)
+    ref.insert_hashes(scalar)
+    np.testing.assert_array_equal(bf.words, ref.words)
+    assert bf.check_bytes(keys).all()
 
 
 def test_serialize_roundtrip():

@@ -200,3 +200,85 @@ def test_typed_decode_names_truncated_chunk():
                        match=r"ValueError: corrupt chunk: part_id=0 "
                              r"col='tokens'"):
         decode_chunks_typed(chunks, TOKEN_TABLE_COLUMNS).collect()
+
+
+def _bloom_blob(num_bytes=64, hash_id=0, alg_id=0, bitset=None):
+    bitset = bytes(num_bytes) if bitset is None else bitset
+    return (num_bytes.to_bytes(4, "little") + hash_id.to_bytes(4, "little")
+            + alg_id.to_bytes(4, "little") + bitset)
+
+
+def test_corrupt_bloom_raises_naming_part():
+    """Blooms are deserialized on the driver from chunk rows read off
+    storage: a header that disagrees with its buffer must raise a
+    ValueError naming the part, not index past the bitset later."""
+    pytest.importorskip("pyspark")
+    from parquet_cpp_spark.kernels.bloom import BlockSplitBloomFilter
+    from parquet_cpp_spark.plans.lookup import may_contain
+
+    good = BlockSplitBloomFilter(64)
+    good.insert_bytes([b"k"])
+    blob = good.serialize()
+    assert may_contain([(7, blob), (8, None)], [b"k"]) == [7, 8]
+    assert may_contain([(7, _bloom_blob())], [b"k"]) == []
+    bad = {
+        "truncated": blob[:-1],
+        "trailing bytes": blob + b"\0",
+        "header only": blob[:12],
+        "short header": blob[:5],
+        "num_bytes not a power of two": _bloom_blob(48),
+        "num_bytes below 32": _bloom_blob(16),
+        "hash id": _bloom_blob(hash_id=1),
+        "algorithm id": _bloom_blob(alg_id=2),
+        "huge num_bytes": _bloom_blob(1 << 31, bitset=bytes(64)),
+    }
+    for what, buf in bad.items():
+        with pytest.raises(ValueError, match="corrupt bloom part_id=7"):
+            may_contain([(7, buf)], [b"k"])
+        with pytest.raises(ValueError, match="corrupt bloom"):
+            BlockSplitBloomFilter.deserialize(buf)
+
+
+def _delta_header(block_size, miniblocks, n, first=0):
+    from parquet_cpp_spark.kernels import varint
+    return (varint.encode_uvarint(block_size)
+            + varint.encode_uvarint(miniblocks) + varint.encode_uvarint(n)
+            + varint.encode_zigzag_varint(first))
+
+
+def test_delta_header_bounds():
+    """DELTA_BINARY_PACKED checks its header before it allocates: a
+    25-byte stream that claims 2^34 values (128 GiB of int64), the
+    geometries the spec forbids (zero miniblocks used to divide by zero)
+    and truncated streams raise ValueError; valid streams decode
+    unchanged."""
+    from parquet_cpp_spark.kernels import delta
+
+    bomb = _delta_header(128, 4, 1 << 34)
+    bomb += bytes(25 - len(bomb))
+    assert len(bomb) == 25
+    with pytest.raises(ValueError, match="corrupt delta header"):
+        delta.decode(bomb)
+    for block_size, miniblocks in [(128, 0), (0, 4), (0, 0), (100, 4),
+                                   (128, 8), (1 << 40, 4)]:
+        buf = _delta_header(block_size, miniblocks, 1000) + bytes(64)
+        with pytest.raises(ValueError, match="corrupt delta header"):
+            delta.decode(buf)
+    vals = np.arange(1000, dtype=np.int64) * 3
+    enc = delta.encode(vals)
+    out, pos = delta.decode(enc)
+    assert pos == len(enc) and np.array_equal(out, vals)
+    # 999 deltas are 8 blocks of >= 5 bytes each: one byte short
+    truncated = _delta_header(128, 4, 1000) + bytes(8 * 5 - 1)
+    with pytest.raises(ValueError, match="corrupt delta header"):
+        delta.decode(truncated)
+    for n in (0, 1, 2, 129, 257):
+        vals = np.random.default_rng(n).integers(-1 << 40, 1 << 40, n)
+        out, _ = delta.decode(delta.encode(vals) + b"tail")
+        assert np.array_equal(out, vals)
+    # every truncation of a valid stream is a ValueError, never an
+    # IndexError or silently short output
+    enc = delta.encode(np.random.default_rng(3).integers(0, 1 << 20, 300))
+    for cut in range(len(enc)):
+        with pytest.raises(ValueError, match="corrupt delta"):
+            delta.decode(enc[:cut])

@@ -54,15 +54,78 @@ def test_chunk_metadata_query_prunes_blob(spark, tmp_path):
     assert meta.count() > 0
 
 
-def test_point_lookup_uses_broadcast(spark):
+def test_point_lookup_prunes_on_driver(spark, tmp_path):
+    """Stats + bloom pruning runs on the driver: the lookup plan reads the
+    surviving parts through a part_id filter, with no Python pruning stage
+    and no exchange; when no part survives, the filter is a literal False
+    and the single mapInArrow runs over an empty relation (zero tasks)."""
     from parquet_cpp_spark.operators import encode as encode_op
     from parquet_cpp_spark.plans import lookup
     from parquet_cpp_spark.sources import tokens as T
     src = T.tokens_from_documents(spark, SF_DIR, 8)
-    chunks = encode_op.encode_df(src, 8, bloom_columns={"doc_id"})
-    parts = lookup.prune_partitions(chunks, "doc_id", "42")
-    pruned = chunks.join(F.broadcast(parts), "part_id")
-    assert "Broadcast" in _plan(pruned)
+    path = str(tmp_path / "chunks")
+    encode_op.encode_df(src, 8).write.parquet(path)   # default doc_id bloom
+    chunks = spark.read.parquet(path)
+    key = src.select("doc_id").first().doc_id
+    parts = lookup.prune_partitions(chunks, "doc_id", key)
+    n_parts = chunks.select("part_id").distinct().count()
+    assert 1 <= len(parts) < n_parts
+    hit = lookup.point_lookup(chunks, key)
+    plan = _plan(hit)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Filter" in plan and all(str(p) in plan for p in parts), plan
+    for stage in ("EvalPython", "Exchange", "Broadcast"):
+        assert stage not in plan, plan
+    assert [r.doc_id for r in hit.collect()] == [key]
+    miss = lookup.point_lookup(chunks, key + "zz")
+    plan = _plan(miss)
+    assert "LocalTableScan <empty>" in plan, plan
+    assert miss._jdf.queryExecution().toRdd().getNumPartitions() == 0
+    assert miss.count() == 0
+
+
+def test_encode_paths_write_doc_id_bloom(spark, tmp_path):
+    """Every encode path takes its bloom columns from WriterProperties
+    (default {"doc_id"}): the direct, scan-local and grouped paths write a
+    doc_id bloom holding every doc_id of the part, and honour
+    ``props.bloom_columns`` -- the direct and scan-local paths used to
+    drop it and write NULL blooms."""
+    from parquet_cpp_spark import chunk as chunkmod
+    from parquet_cpp_spark.kernels.bloom import BlockSplitBloomFilter
+    from parquet_cpp_spark.operators.encode_arrow import (encode_df_arrow,
+                                                          encode_scan_local)
+    from parquet_cpp_spark.plans.encode_job import add_part_id
+    from parquet_cpp_spark.properties import WriterProperties
+    from parquet_cpp_spark.sources import tokens as T
+    from parquet_cpp_spark.sources.parquet_direct import encode_parquet_direct
+
+    src = T.tokens_from_documents(spark, SF_DIR, 4) \
+        .select("doc_id", "tokens", "n_tok", "source")
+    path = str(tmp_path / "tokens.parquet")
+    src.coalesce(2).write.parquet(path)
+    keyed = add_part_id(src, 4)
+    ids = {r.doc_id.encode() for r in src.select("doc_id").collect()}
+    on = WriterProperties(bloom_columns=frozenset({"doc_id"}))
+    off = WriterProperties(bloom_columns=frozenset())
+    for name, make in [
+            ("direct", lambda p: encode_parquet_direct(spark, path, props=p)),
+            ("scan_local", lambda p: encode_scan_local(src, props=p)),
+            ("grouped", lambda p: encode_df_arrow(keyed, 4, props=p))]:
+        for props in (None, on):
+            rows = make(props).select("col", "bloom", "blob").collect()
+            blooms = [r.bloom for r in rows if r.col == "doc_id"]
+            assert blooms and all(b is not None for b in blooms), name
+            assert all(r.bloom is None for r in rows if r.col != "doc_id")
+            found = set()
+            for r in rows:
+                if r.col == "doc_id":
+                    vals = list(chunkmod.decode_chunk(r.blob).values)
+                    bf = BlockSplitBloomFilter.deserialize(r.bloom)
+                    assert bf.check_bytes(vals).all(), name
+                    found.update(vals)
+            assert found == ids, name
+        rows = make(off).select("bloom").collect()
+        assert all(r.bloom is None for r in rows), name
 
 
 def test_similarity_broadcasts_probes(spark):
