@@ -345,25 +345,49 @@ def encode(values) -> bytes:
             + payload)
 
 
+def _corrupt(what: str) -> ValueError:
+    return ValueError(f"corrupt FSST stream: {what}")
+
+
 def decode_view(buf, pos: int = 0) -> tuple[ba.ByteArrayView, int]:
+    # every count the header declares is checked against the bytes that
+    # remain before anything is allocated from it
     mv = memoryview(buf) if not isinstance(buf, memoryview) else buf
+    end = len(mv)
+    if pos >= end:
+        raise _corrupt("no symbol table")
     n_symbols = mv[pos]
     pos += 1
     symbols: list[bytes] = []
     for _ in range(n_symbols):
-        sl = mv[pos]
+        sl = mv[pos] if pos < end else 0
+        if not 1 <= sl <= MAX_SYMBOL_LEN or pos + 1 + sl > end:
+            raise _corrupt("symbol table overruns the buffer")
         pos += 1
         symbols.append(bytes(mv[pos: pos + sl]))
         pos += sl
+    if pos + 8 > end:
+        raise _corrupt("header overruns the buffer")
     n_strings = int.from_bytes(mv[pos: pos + 4], "little")
     pos += 4
     lens_blob_len = int.from_bytes(mv[pos: pos + 4], "little")
     pos += 4
+    if lens_blob_len > end - pos:
+        raise _corrupt(f"length block of {lens_blob_len} bytes, "
+                       f"{end - pos} left")
     enc_lens, _ = delta.decode(mv[pos: pos + lens_blob_len])
     enc_lens = enc_lens.astype(np.int64, copy=False)
     pos += lens_blob_len
+    if len(enc_lens) != n_strings:
+        raise _corrupt(f"{n_strings} strings declared, "
+                       f"{len(enc_lens)} lengths stored")
 
+    if n_strings and enc_lens.min() < 0:
+        raise _corrupt("negative encoded length")
     total_enc = int(enc_lens.sum())
+    if total_enc > end - pos:
+        raise _corrupt(f"{total_enc} encoded bytes declared, "
+                       f"{end - pos} left")
     enc = np.frombuffer(mv, dtype=np.uint8, count=total_enc, offset=pos)
     end_pos = pos + total_enc
 

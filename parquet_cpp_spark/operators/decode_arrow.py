@@ -298,9 +298,9 @@ def decode_chunks_arrow(chunks_df, part_col: str = "part_id",
 
 def decode_parquet_direct(spark, chunks_path: str, slices_per_core: int = 2,
                           verify_checksums: bool = False):
-    """Scale-shaped decode of chunk files on disk: the JVM shuffles only
-    file-path descriptors; each task pyarrow-reads whole chunk files and
-    decodes the parts it finds — the decode mirror of
+    """Scale-shaped decode of chunk files on disk: the JVM generates only
+    file-path descriptors (``task_source``); each task pyarrow-reads whole
+    chunk files and decodes the parts it finds — the decode mirror of
     ``sources.parquet_direct`` (reference column-chunk-granular reads,
     ``file_reader.cc:63-135``). Whole files per task keep every part's
     chunk set colocated by construction (each part is written by exactly
@@ -309,6 +309,7 @@ def decode_parquet_direct(spark, chunks_path: str, slices_per_core: int = 2,
     import os
 
     from ..shipping import ensure_shipped
+    from ..sources.parquet_direct import task_source
     ensure_shipped(spark)
 
     files = []
@@ -319,17 +320,12 @@ def decode_parquet_direct(spark, chunks_path: str, slices_per_core: int = 2,
         raise ValueError(f"no chunk files under {chunks_path}")
     cores = spark.sparkContext.defaultParallelism
     n_parts = min(len(files), max(1, cores * slices_per_core))
-    # parallelize with explicit slices (no shuffle stage; see
-    # sources.parquet_direct) — whole files per task either way.
-    # Deliberately NOT amortized like the encode descriptors: decode tasks
-    # stream the whole reconstructed table back through Arrow (seconds of
-    # IO-coupled work each), so straggler smoothing beats the ~15 ms/task
-    # dispatch cost — A/B in the bench's fresh-write context measured
-    # 128 tasks consistently faster than 32 (6.7 vs 10.5, 5.3 vs 6.7,
-    # 4.8 vs 5.3 s across three interleaved trials)
-    files_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(f,) for f in files], n_parts),
-        "file string")
+    # whole files per task, NOT amortized like plan_slices: a decode task
+    # streams a whole table back through Arrow, so straggler smoothing
+    # beats dispatch cost (128 tasks beat 32 in three interleaved A/Bs:
+    # 6.7 vs 10.5, 5.3 vs 6.7, 4.8 vs 5.3 s)
+    files_df = task_source(spark, [(f,) for f in files], n_parts,
+                           "file string")
 
     def task(batches):
         import re

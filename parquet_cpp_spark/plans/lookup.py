@@ -298,6 +298,7 @@ def point_lookup_parquet(spark, dataset_dir: str, column: str, key):
     import os
 
     from ..shipping import ensure_shipped
+    from ..sources.parquet_direct import task_source
     ensure_shipped(spark)
 
     schema = ("file string, row_index bigint, pages_decoded int, "
@@ -357,9 +358,9 @@ def point_lookup_parquet(spark, dataset_dir: str, column: str, key):
         # dir exists but holds no committed files (sink not yet run, or
         # only .inprogress temps): an empty result, not a crash
         return spark.createDataFrame([], schema)
-    files_df = spark.createDataFrame([(f,) for f in files],
-                                     "file string") \
-        .repartition(min(len(files), spark.sparkContext.defaultParallelism))
+    n_parts = min(len(files), spark.sparkContext.defaultParallelism)
+    files_df = task_source(spark, [(f,) for f in files], n_parts,
+                           "file string")
 
     def task(batches):
         import pyarrow as pa

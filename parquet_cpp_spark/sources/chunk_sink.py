@@ -42,15 +42,13 @@ def encode_parquet_direct_sink(spark, path: str, out_dir: str,
     ensure_shipped(spark)
 
     from ..operators.encode_arrow import make_arrow_encode_fn
-    from .parquet_direct import list_row_groups
+    from .parquet_direct import list_row_groups, task_source
 
     os.makedirs(out_dir, exist_ok=True)
     splits = list_row_groups(path)
     cores = spark.sparkContext.defaultParallelism
     n_parts = min(len(splits), max(1, cores * slices_per_core))
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "file string, rg int")
+    splits_df = task_source(spark, splits, n_parts, "file string, rg int")
 
     encode_fn = make_arrow_encode_fn(columns, codec_overrides,
                                      dict_size_limit, props)

@@ -1,11 +1,12 @@
-"""Direct-parquet encode source: Spark parallelizes over row-group
-descriptors; each task pyarrow-reads its own row group and encodes it.
+"""Direct-parquet encode source: Spark runs one task per slice of
+row-group descriptors; each task pyarrow-reads its own row groups and
+encodes them.
 
 Rationale: the default scan path decodes parquet in the JVM, serializes the
 decoded rows over Arrow IPC to the Python worker, which re-materializes them
 — on a memory-bandwidth-bound host that doubles the traffic of the entire
 job for no benefit, because the encode kernels live in Python anyway. Here
-the JVM only shuffles tiny (path, row_group) descriptor rows; the token
+the JVM only generates tiny (path, row_group) descriptor rows; the token
 payload is read once, in the worker, straight from the (page-cached) parquet
 file. This is the same division of labor as the reference's
 column-chunk-granular reads (``/root/reference/src/parquet/file_reader.cc:63-135``)
@@ -17,6 +18,7 @@ manifest's anti-join works over this source too.
 
 from __future__ import annotations
 
+import json
 import os
 
 from ..operators.encode_arrow import CHUNK_SCHEMA
@@ -40,10 +42,11 @@ def list_row_groups(path: str) -> list[tuple[str, int]]:
     return out
 
 
-# Python tasks are not free: each mapInArrow task costs ~8-15 ms of
-# JVM<->worker round-trip on this host (measured: a 128-task descriptor
-# no-op runs 1.9-2.6 s at local[32] while the identical JVM-only job runs
-# 0.19 s), and task launch is largely serialized. Slices therefore AMORTIZE:
+# Python tasks are not free: over ``task_source`` each mapInArrow task adds
+# ~25 ms of wall time at local[4] on a 4-core host (measured: a no-op job
+# over 4/16/64 slices of 8 descriptors runs 0.21/0.50/1.73 s, medians of
+# 7; a ``parallelize`` source pays ~50 ms: 0.28/0.84/3.34 s), and task
+# launch is largely serialized. Slices therefore AMORTIZE:
 # a slice should carry at least this many input units before extra slices
 # (beyond one per core) pay for themselves. Scale-adaptive, not a local[32]
 # constant: with many units per core (a real cluster's file counts) the cap
@@ -60,6 +63,28 @@ def plan_slices(n_units: int, cores: int, slices_per_core: int) -> int:
     leg from ~4 to 7-11 s) and leaves single-wave straggler exposure."""
     amortized = max(n_units // MIN_UNITS_PER_SLICE, 2 * cores)
     return max(1, min(n_units, cores * slices_per_core, amortized))
+
+
+def task_source(spark, descriptors, n_parts: int, ddl: str):
+    """``descriptors`` (tuples laid out as ``ddl``) as a JVM-only DataFrame
+    (``Generate inline <- Range``: no Python RDD, no exchange) whose
+    partition ``i`` holds ``descriptors[i*n//n_parts:(i+1)*n//n_parts]``,
+    in order (contiguous: a task's row groups of one file share one footer
+    parse and the page cache). Each slice is one JSON string of arrays in a
+    folded literal array; a task parses only its own, casting to ``ddl``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    n = len(descriptors)
+    slices = [json.dumps(descriptors[i * n // n_parts:(i + 1) * n // n_parts],
+                         separators=(",", ":")) for i in range(n_parts)]
+    rows = F.from_json(F.element_at(F.array(*map(F.lit, slices)),
+                                    F.col("id").cast("int") + 1),
+                       "array<array<string>>")
+    fields = StructType.fromDDL(ddl).fields
+    return spark.range(0, n_parts, 1, n_parts).select(F.inline(F.transform(
+        rows, lambda r: F.struct(*[r[j].cast(f.dataType).alias(f.name)
+                                   for j, f in enumerate(fields)]))))
 
 
 def encode_parquet_direct(spark, path: str,
@@ -79,13 +104,7 @@ def encode_parquet_direct(spark, path: str,
     splits = list_row_groups(path)
     cores = spark.sparkContext.defaultParallelism
     n_parts = plan_slices(len(splits), cores, slices_per_core)
-    # parallelize with explicit slice count instead of repartition: no
-    # shuffle stage (one less stage barrier per job), and contiguous row
-    # groups stay on one task — better page-cache locality. Chunk contents
-    # are identical either way (one chunk set per row group).
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "file string, rg int")
+    splits_df = task_source(spark, splits, n_parts, "file string, rg int")
 
     encode_fn = make_arrow_encode_fn(columns, codec_overrides,
                                      dict_size_limit, props)

@@ -900,16 +900,14 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
     per (file, row_group), so resume trusts that the SOURCE split is
     unchanged; truncated or foreign files re-encode."""
     from ..shipping import ensure_shipped
-    from .parquet_direct import list_row_groups
+    from .parquet_direct import list_row_groups, task_source
     ensure_shipped(spark)
 
     os.makedirs(out_dir, exist_ok=True)
     splits = list_row_groups(src_path)
     cores = spark.sparkContext.defaultParallelism
     n_parts = max(1, min(len(splits), cores * slices_per_core))
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "file string, rg int")
+    splits_df = task_source(spark, splits, n_parts, "file string, rg int")
     delta_cols = frozenset(delta_columns)
     bloom_cols = frozenset(bloom_filter_columns)
 

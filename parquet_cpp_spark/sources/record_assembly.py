@@ -1063,9 +1063,9 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
 
     Scale shape: the split unit is the ROW GROUP, like the JVM reader —
     the driver plans splits from footer-only metadata (``footer_meta``,
-    no data I/O), ships (path, rg) pairs via ``parallelize`` with an
-    explicit slice count (no shuffle stage), and each task mmaps its
-    file and faults in only its own chunks' byte ranges. Only split
+    no data I/O), hands (path, rg) pairs to ``task_source`` with an
+    explicit slice count (JVM-only, no shuffle stage), and each task mmaps
+    its file and faults in only its own chunks' byte ranges. Only split
     tuples cross the JVM going out; Arrow record batches come back
     through the mapInArrow channel. ``columns`` prunes untouched column
     chunks at the byte level (never decompressed). Mirrors the
@@ -1128,6 +1128,7 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
     import os as _os
 
     from ..shipping import ensure_shipped
+    from .parquet_direct import task_source
     ensure_shipped(spark)
 
     use_snapshot = (
@@ -1418,9 +1419,8 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         return _post(spark.createDataFrame([], sschema))
     cores = spark.sparkContext.defaultParallelism
     n_parts = min(len(splits), max(1, cores * 2))
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "path string, rg int, n_rg int, miss string, ren string")
+    splits_df = task_source(spark, splits, n_parts, "path string, rg int, "
+                            "n_rg int, miss string, ren string")
 
     def task(batches):
         import pyarrow as pa

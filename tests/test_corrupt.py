@@ -282,3 +282,53 @@ def test_delta_header_bounds():
     for cut in range(len(enc)):
         with pytest.raises(ValueError, match="corrupt delta"):
             delta.decode(enc[:cut])
+
+
+_FSST_BOUNDS_CHILD = r"""
+import resource
+resource.setrlimit(resource.RLIMIT_AS, (2 << 30, 2 << 30))
+
+import pytest
+
+from parquet_cpp_spark.kernels import fsst
+
+values = [b"hello world", b"hello there", b"", b"abc\xff"] * 10
+enc = fsst.encode(values)
+out, pos = fsst.decode(enc)
+assert pos == len(enc) and out == values
+p = 1                       # end of the symbol table
+for _ in range(enc[0]):
+    p += 1 + enc[p]
+# n_strings claims 2^32 - 16: 32 GiB of offsets before the check
+bomb = enc[:p] + (2**32 - 16).to_bytes(4, "little") + enc[p + 4:]
+bad = {"n_strings bomb": bomb,
+       "truncated symbol table": bytes([3, 2, 65, 66, 8]),
+       "zero-length symbol": bytes([1, 0]) + enc[p:],
+       "9-byte symbol": bytes([1, 9]) + b"x" * 9 + enc[p:]}
+bad.update({f"cut at {cut}": enc[:cut] for cut in range(len(enc))})
+for what, buf in bad.items():
+    with pytest.raises(ValueError, match="corrupt FSST"):
+        fsst.decode_view(buf)
+# a stream inside a larger buffer still decodes from its offset
+out, pos = fsst.decode(b"xyz" + enc + b"tail", 3)
+assert pos == 3 + len(enc) and out == values
+"""
+
+
+def test_fsst_header_bounds():
+    """FSST checks its header before it allocates: a stream whose string
+    count claims 2^32 - 16 (32 GiB of offsets), a truncated symbol table,
+    out-of-range symbol lengths and every truncation of a valid stream
+    raise ValueError. Runs in a child process under a 2 GiB address-space
+    limit, so a check that fires after the allocation fails the test."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, OPENBLAS_NUM_THREADS="1",
+               OMP_NUM_THREADS="1")
+    res = subprocess.run([sys.executable, "-c", _FSST_BOUNDS_CHILD],
+                         env=env, capture_output=True, text=True,
+                         timeout=120)
+    assert res.returncode == 0, res.stderr[-3000:]

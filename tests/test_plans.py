@@ -136,9 +136,10 @@ def test_similarity_broadcasts_probes(spark):
 
 
 def test_direct_source_shuffles_only_descriptors(spark):
-    """The direct source must never move row data through an exchange.
-    Since the parallelize-with-slices change it moves NOTHING through one:
-    descriptors are sliced at creation, so the plan is exchange-free."""
+    """The direct source must never move row data through an exchange, and
+    it moves nothing through one: ``task_source`` generates each task's
+    slice of descriptors inside its own ``Range`` partition, so the plan
+    is exchange-free."""
     from parquet_cpp_spark.sources.parquet_direct import encode_parquet_direct
     chunks = encode_parquet_direct(
         spark, os.path.join(SF_DIR, "documents.parquet"),
