@@ -952,9 +952,11 @@ def _encode_chunk_paged(values, phys: str, codec: int, *,
     # chunk-global narrow-lane check for DELTA pages: every page's span is
     # within the chunk's, so one min/max pass here replaces one per page
     # (two extra full-column passes per chunk). Span >= 2^31 keeps None so
-    # individual pages can still qualify. Bytes identical either way.
+    # individual pages can still qualify. A one-page chunk skips it:
+    # delta.encode makes the same check on that page. Bytes identical
+    # either way.
     delta_narrow = None
-    if codec == DELTA_BINARY_PACKED and n_values and values.dtype in (
+    if codec == DELTA_BINARY_PACKED and len(vbounds) > 2 and values.dtype in (
             np.dtype(np.int32), np.dtype(np.uint32),
             np.dtype(np.int16), np.dtype(np.uint16)):
         if int(values.max()) - int(values.min()) < (1 << 31):

@@ -146,6 +146,13 @@ def decode(enc: "DictEncoded | tuple", phys: str, *, dict_blob=None,
 
     bw = indices_blob[0]
     codes, _ = rle.decode(indices_blob, n_dict_values, bw, 1)
+    # a bit width too narrow to reach num_entries proves every index in
+    # range; otherwise one max pass finds an index the gather would fault on
+    if (1 << bw) > num_entries and len(codes):
+        top = int(codes.max())
+        if top >= num_entries:
+            raise ValueError(f"corrupt dictionary indices: index {top} "
+                             f"past {num_entries} entries")
 
     if phys == "byte_array":
         head = ba.take(uniques, codes)  # fused vectorized gather

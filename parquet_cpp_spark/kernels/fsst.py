@@ -434,6 +434,9 @@ def decode_view(buf, pos: int = 0) -> tuple[ba.ByteArrayView, int]:
         esc = np.concatenate(tok_esc)
         lit = np.concatenate(tok_lit)
         rnd = np.concatenate(tok_round)
+        if np.any(~esc & (code >= n_symbols)):
+            # a code past the table would read a zero-length symbol
+            raise _corrupt(f"symbol code past the {n_symbols}-symbol table")
         # per-string token order without sorting (see encode): a string is
         # active in consecutive rounds from 0
         ntok = np.bincount(sid, minlength=n_strings)

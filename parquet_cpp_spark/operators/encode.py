@@ -1,8 +1,9 @@
 """The grouped encode operator under its contract names.
 
 ``encode_df`` is ``encode_arrow.encode_df_arrow`` (same positional
-signature): one repartition on ``part_col``, then whole partitions encode
-per ``mapInArrow`` task straight from Arrow buffers.
+signature): rows go to the task whose index is their ``part_col`` (modulo
+the part count), then whole partitions encode per ``mapInArrow`` task
+straight from Arrow buffers.
 """
 
 from .encode_arrow import CHUNK_SCHEMA, TOKEN_TABLE_COLUMNS

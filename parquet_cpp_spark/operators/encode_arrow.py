@@ -14,10 +14,11 @@ Two task shapes share ``make_arrow_encode_fn``'s ``encode_part``:
   (``file_writer.cc:60-143``). part_id is content-derived (sha256 of the
   first doc_id + row count), so a re-run over the same input produces the
   same partition ids — the property the resume manifest needs.
-- ``encode_df_arrow``: one repartition on ``part_col`` (the engine's single
-  shuffle), then each partition a task holds is sorted by ``sort_key`` and
-  encoded — for co-location by an explicit key or to rebalance a skewed
-  layout (plans.encode_job handles salting there).
+- ``encode_df_arrow``: the engine's single shuffle sends each row to the
+  task whose index is ``pmod(part_col, num_parts)``, so a task holds one
+  whole part (or none) when part ids are dense; it is sorted by
+  ``sort_key`` and encoded — for co-location by an explicit key or to
+  rebalance a skewed layout (plans.encode_job handles salting there).
 """
 
 from __future__ import annotations
@@ -475,7 +476,8 @@ def make_grouped_arrow_encode_fn(columns: dict[str, str] | None = None,
                                  sort_key: str | None = "doc_id",
                                  bloom_columns=None):
     """mapInArrow task for the explicit-partitioning pipeline: the input was
-    repartitioned on part_id, so a task may hold several whole partitions;
+    routed by part_id, so a task holds whole partitions (one when ids are
+    dense, several when sparse ids such as salted hashes share a residue);
     each is sorted by ``sort_key`` (deterministic blobs across retries) and
     encoded straight from Arrow buffers."""
     import pyarrow as pa
@@ -522,14 +524,19 @@ def encode_df_arrow(df, num_parts: int, part_col: str = "part_id",
                     bloom_columns=None,
                     props: "object | None" = None,
                     page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE):
-    """Arrow-native grouped encode: one repartition on ``part_col`` (the
-    engine's single shuffle), then whole partitions encode per task."""
+    """Arrow-native grouped encode: the engine's single shuffle sends each
+    row to task ``pmod(part_col, num_parts)``, so dense ids
+    (``encode_job.add_part_id``) put part ``i`` alone in task ``i``; a hash
+    repartition would pile parts into one task while others stay empty."""
+    from pyspark.sql import functions as F
+
     from ..shipping import ensure_shipped
     ensure_shipped(df.sparkSession)
     fn = make_grouped_arrow_encode_fn(columns, codec_overrides,
                                       dict_size_limit, props, page_size,
                                       sort_key, bloom_columns)
-    out = df.repartition(num_parts, part_col).mapInArrow(
+    target = F.pmod(F.col(part_col), F.lit(num_parts)).cast("int")
+    out = df.repartitionById(num_parts, target).mapInArrow(
         fn, schema=CHUNK_SCHEMA)
     out._pcs_colocated = True  # whole partitions per task
     return out

@@ -1,21 +1,24 @@
 """The encode job: partitioning strategy, lineage manifest, checkpoint/resume.
 
-Pipeline (SURVEY §7 step 4-6): assign ``part_id`` -> repartition(part_id)
--> ``mapInArrow`` encode (``operators.encode_arrow``) -> chunk DataFrame +
-manifest. This is the engine's only shuffle; everything else is
-embarrassingly parallel.
+Pipeline (SURVEY §7 step 4-6): assign ``part_id`` -> route each row to the
+task whose index is its part id (``repartitionById``) -> ``mapInArrow``
+encode (``operators.encode_arrow``) -> chunk DataFrame + manifest. This is
+the engine's only shuffle; everything else is embarrassingly parallel.
 
 Scale design (100 TB / 10^12 sequences):
 - ``part_id = pmod(xxhash64(doc_id), P)`` gives uniform, deterministic
   partitions regardless of input layout. P is chosen so one partition's
   token payload is ~``target_partition_bytes`` (default 256 MiB raw, well
   under executor memory after the in-flight overhead of the encode task).
-- Skew: a hash of a high-cardinality key (doc_id) cannot skew by key
-  frequency, only by payload variance (jumbo docs); ``salt_by_source``
-  covers the alternative layout where the input arrives partitioned by the
+- Skew: dense ids put exactly part ``i`` in task ``i`` (a hash exchange
+  would hash them again and pile parts together), and a hash of a
+  high-cardinality key (doc_id) cannot skew by key frequency, only by
+  payload variance (jumbo docs). ``add_salted_part_id`` covers the
+  alternative layout where the input arrives partitioned by the
   Zipf-skewed ``source`` column — the hot source is split across
   ``pmod(xxhash64(doc_id), spread)`` sub-keys (explicit salting per the
-  north rule) while tiny sources coalesce.
+  north rule) while tiny sources coalesce; its 64-bit ids share tasks by
+  ``pmod(id, P)``, as under a hash exchange.
 - Resume: the manifest (one row per completed partition, written atomically
   *after* its chunks) is anti-joined against the partition domain on rerun,
   so a killed job redoes only missing partitions (FIXTURES F5).

@@ -332,3 +332,43 @@ def test_fsst_header_bounds():
                          env=env, capture_output=True, text=True,
                          timeout=120)
     assert res.returncode == 0, res.stderr[-3000:]
+
+
+def test_fsst_code_past_symbol_table():
+    """A non-escape code at or past the symbol count raises instead of
+    decoding as an empty symbol."""
+    from parquet_cpp_spark.kernels import delta, fsst
+
+    enc = bytearray(fsst.encode([b"hello world"]))
+    p = 1                       # end of the symbol table
+    for _ in range(enc[0]):
+        p += 1 + enc[p]
+    lens_len = int.from_bytes(enc[p + 4: p + 8], "little")
+    payload = p + 8 + lens_len
+    lens, _ = delta.decode(bytes(enc[p + 8: payload]))
+    assert payload + int(lens.sum()) == len(enc)
+    assert enc[0] < 200 and enc[payload] != fsst.ESCAPE
+    enc[payload] = 200
+    with pytest.raises(ValueError, match="corrupt FSST stream: symbol code"):
+        fsst.decode_view(bytes(enc))
+
+
+@pytest.mark.parametrize("phys,values", [
+    ("byte_array", [b"ab", b"cd", b"ef", b"ab"]),
+    ("int32", np.array([7, 8, 9, 7], dtype=np.int32))])
+def test_dictionary_index_out_of_range(phys, values):
+    """An index at or past the dictionary's entry count raises ValueError
+    for both physical types, not the gather's own index error."""
+    import dataclasses
+
+    from parquet_cpp_spark.kernels import dictionary, rle
+
+    enc = dictionary.encode(values, phys)
+    assert enc.num_entries == 3 and enc.indices_blob[0] == 2
+    out = dictionary.decode(enc, phys)
+    assert list(ba.to_list(out) if phys == "byte_array" else out) == \
+        list(values)
+    bad = dataclasses.replace(enc, indices_blob=bytes([2]) + rle.encode(
+        np.array([0, 1, 3, 0]), 2))
+    with pytest.raises(ValueError, match="corrupt dictionary indices"):
+        dictionary.decode(bad, phys)

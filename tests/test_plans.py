@@ -148,6 +148,38 @@ def test_direct_source_shuffles_only_descriptors(spark):
     assert "Exchange" not in plan, plan
 
 
+@pytest.mark.parametrize("num_parts", [4, 16])
+def test_shuffled_encode_routes_by_part_id(spark, tmp_path, num_parts):
+    """The shuffled encode sends each row to the task whose index is its
+    part id: the exchange passes the id through instead of hashing it
+    again, every output partition holds exactly the part equal to its
+    index, the write leaves one chunk file per part, and the whole
+    pipeline runs as two jobs (AQE's map stage, then the write)."""
+    from parquet_cpp_spark.plans.encode_job import encode_pipeline
+    from parquet_cpp_spark.sources.tokens import synthesize_tokens_parquet
+
+    src = synthesize_tokens_parquet(str(tmp_path / "tok.parquet"), 2000, 3)
+    chunks = encode_pipeline(spark.read.parquet(src), num_parts)
+    assert "shufflepartitionidpassthrough" in _plan(chunks)
+    held = {}
+    for r in chunks.select(F.spark_partition_id().alias("task"),
+                           "part_id").distinct().collect():
+        held.setdefault(r.task, set()).add(r.part_id)
+    assert held == {i: {i} for i in range(num_parts)}
+
+    out = str(tmp_path / "chunks")
+    sc = spark.sparkContext
+    group = f"shuffled-encode-{num_parts}"
+    sc.setJobGroup(group, group)
+    try:
+        chunks.write.parquet(out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert len([f for f in os.listdir(out)
+                if f.endswith(".parquet")]) == num_parts
+
+
 def test_minhash_signatures_zero_shuffle(spark):
     """MinHash signatures are row-local array expressions: the plan must
     contain NO Exchange (the old explode+groupBy shuffled O(words) rows)."""
