@@ -80,8 +80,9 @@ PHYS_IDS = {v: k for k, v in PHYS_NAMES.items()}
 
 # Block compression codecs, orthogonal to encodings
 # (/root/reference/src/parquet/types.h:112-114; page compress
-# column_writer.cc:196-212). GZIP here = raw deflate via zlib; SNAPPY /
-# LZ4 / ZSTD are used when their Python modules are importable.
+# column_writer.cc:196-212). GZIP here is a zlib container (RFC 1950
+# header + deflate + Adler-32), not raw deflate and not a gzip member;
+# SNAPPY / BROTLI / LZ4 / ZSTD are pyarrow's bundled C++ codecs.
 UNCOMPRESSED, SNAPPY, GZIP, LZO, BROTLI, LZ4, ZSTD = range(7)
 COMPRESSION_NAMES = {UNCOMPRESSED: "UNCOMPRESSED", SNAPPY: "SNAPPY",
                      GZIP: "GZIP", BROTLI: "BROTLI", LZ4: "LZ4",
@@ -234,72 +235,106 @@ def compute_stats(values, phys: str) -> ChunkStats:
     return ChunkStats(str(arr.min()), str(arr.max()), 0)
 
 
-def _encode_int_payload(values: np.ndarray, codec: int, phys: str,
-                        dict_size_limit: int,
-                        delta_narrow: "bool | None" = None
-                        ) -> tuple[bytes, list[str], bool, dict]:
-    """Returns (sections, encodings, fallback, extras). ``delta_narrow``:
-    chunk-global narrow-lane hint for DELTA (see delta.encode)."""
+# The codecs each physical type takes (the reference's per-type
+# Encoder<DType>/Decoder<DType> instantiations, encoding.h:41-148). Both
+# _encode_payload and _decode_payload check it first.
+_FIXED_CODECS = (PLAIN, RLE, DELTA_BINARY_PACKED, RLE_DICTIONARY)
+_CODECS_FOR = {
+    "int32": _FIXED_CODECS, "int64": _FIXED_CODECS,
+    "uint32": _FIXED_CODECS, "uint64": _FIXED_CODECS,
+    "float": (PLAIN, RLE_DICTIONARY), "double": (PLAIN, RLE_DICTIONARY),
+    "flba": (PLAIN, RLE_DICTIONARY),
+    "boolean": (PLAIN, RLE),
+    "byte_array": (PLAIN, DELTA_LENGTH_BYTE_ARRAY, DELTA_BYTE_ARRAY, FSST,
+                   RLE_DICTIONARY),
+}
+
+# numpy dtype of each fixed-width physical type's decoded values
+_NP_DTYPES = {"int32": np.dtype(np.int32), "int64": np.dtype(np.int64),
+              "uint32": np.dtype(np.uint32), "uint64": np.dtype(np.uint64),
+              "float": np.dtype(np.float32), "double": np.dtype(np.float64)}
+
+
+def _check_codec(phys: str, codec: int) -> None:
+    if codec in _CODECS_FOR.get(phys, ()):
+        return
+    if phys == "boolean" and codec in (RLE_DICTIONARY, PLAIN_DICTIONARY):
+        # parity with the reference: dictionary-of-boolean is rejected
+        # (encoding-test.cc:304-309; ColumnWriter::Make skips dict for
+        # BOOLEAN, column_writer.cc:551-590)
+        raise ValueError("dictionary encoding not supported for boolean")
+    raise ValueError(f"codec {CODEC_NAMES.get(codec, codec)} unsupported "
+                     f"for {phys}")
+
+
+def _dict_encodings(fallback: bool) -> list[str]:
+    return (["PLAIN_DICTIONARY", "PLAIN", "RLE"] if fallback
+            else ["PLAIN_DICTIONARY", "RLE"])
+
+
+def _encode_payload(values, phys: str, codec: int, dict_size_limit: int,
+                    type_length: int = 0, delta_narrow: "bool | None" = None
+                    ) -> tuple[bytes, list[str], bool, "int | None"]:
+    """Value sections of one chunk or page -> (sections, encodings,
+    fallback, dictionary entry count or None). ``values`` arrive
+    normalized: a ByteArrayView for byte_array, a list of bytes (or an
+    (n, type_length) uint8 matrix) for flba, an ndarray otherwise.
+    ``delta_narrow``: chunk-global narrow-lane hint for DELTA (see
+    delta.encode)."""
+    _check_codec(phys, codec)
+    head = b""
+    if phys == "flba":
+        if not type_length and values:
+            type_length = len(values[0])
+        head = type_length.to_bytes(4, "little")
+    if codec == RLE_DICTIONARY:
+        enc = dictionary.encode(values, "byte_array" if phys == "flba"
+                                else phys, dict_size_limit)
+        secs = (_sec(enc.dict_blob) + enc.n_dict_values.to_bytes(4, "little")
+                + _sec(enc.indices_blob))
+        if enc.fallback:
+            secs += enc.n_plain_values.to_bytes(4, "little")
+            secs += _sec(enc.plain_blob)
+        return (head + secs, _dict_encodings(enc.fallback), enc.fallback,
+                enc.num_entries)
     if codec == PLAIN:
-        return _sec(plain.encode_fixed(values, phys)), ["PLAIN"], False, {}
-    if codec == DELTA_BINARY_PACKED:
+        if phys == "byte_array":
+            payload = plain.encode_byte_array(values)
+        elif phys == "flba":
+            payload = plain.encode_flba(values, type_length)
+        elif phys == "boolean":
+            payload = plain.encode_boolean(values)
+        else:
+            payload = plain.encode_fixed(values, phys)
+    elif codec == RLE:
+        if phys == "boolean":
+            bw, values = 1, values.astype(np.uint8)
+        else:
+            mx = int(values.max()) if len(values) else 0
+            mn = int(values.min()) if len(values) else 0
+            if phys == "uint64" and mx >= 1 << 63:
+                raise ValueError("RLE direct coding unsupported for uint64 "
+                                 "values >= 2^63 (use DELTA/DICT/PLAIN)")
+            if mn < 0:
+                raise ValueError("RLE direct coding requires non-negative "
+                                 "values")
+            bw = max(1, bitpack.width_for_max(mx))
+        payload = bytes([bw]) + rle.encode(values, bw)
+    elif codec == DELTA_BINARY_PACKED:
         if phys == "uint64":
             # values >= 2^63 don't fit int64 delta arithmetic directly;
             # the int64 VIEW carries the same bit pattern and mod-2^64
             # delta/cumsum reconstructs it exactly (decode re-views)
             values = np.ascontiguousarray(values, dtype=np.uint64) \
                 .view(np.int64)
-        return _sec(delta.encode(values, narrow=delta_narrow)), \
-            ["DELTA_BINARY_PACKED"], False, {}
-    if codec == RLE:
-        mx = int(values.max()) if len(values) else 0
-        mn = int(values.min()) if len(values) else 0
-        if phys == "uint64" and mx >= 1 << 63:
-            raise ValueError("RLE direct coding unsupported for uint64 "
-                             "values >= 2^63 (use DELTA/DICT/PLAIN)")
-        if mn < 0:
-            raise ValueError("RLE direct coding requires non-negative values")
-        bw = max(1, bitpack.width_for_max(mx))
-        payload = bytes([bw]) + rle.encode(values, bw)
-        return _sec(payload), ["RLE"], False, {}
-    if codec == RLE_DICTIONARY:
-        enc = dictionary.encode(values, phys, dict_size_limit)
-        secs = _sec(enc.dict_blob) + enc.n_dict_values.to_bytes(4, "little")
-        secs += _sec(enc.indices_blob)
-        encodings = ["PLAIN_DICTIONARY", "RLE"]
-        if enc.fallback:
-            secs += enc.n_plain_values.to_bytes(4, "little")
-            secs += _sec(enc.plain_blob)
-            encodings = ["PLAIN_DICTIONARY", "PLAIN", "RLE"]
-        return secs, encodings, enc.fallback, {"num_entries": enc.num_entries}
-    raise ValueError(f"codec {codec} unsupported for {phys}")
-
-
-def _encode_bytes_payload(values: list[bytes], codec: int,
-                          dict_size_limit: int) \
-        -> tuple[bytes, list[str], bool, dict]:
-    if codec == PLAIN:
-        return _sec(plain.encode_byte_array(values)), ["PLAIN"], False, {}
-    if codec == DELTA_LENGTH_BYTE_ARRAY:
-        return _sec(bytearray_codecs.encode_delta_length(values)), \
-            ["DELTA_LENGTH_BYTE_ARRAY"], False, {}
-    if codec == DELTA_BYTE_ARRAY:
-        return _sec(bytearray_codecs.encode_delta_byte_array(values)), \
-            ["DELTA_BYTE_ARRAY"], False, {}
-    if codec == FSST:
-        return _sec(fsst.encode(values)), ["FSST"], False, {}
-    if codec == RLE_DICTIONARY:
-        enc = dictionary.encode(values, "byte_array", dict_size_limit)
-        secs = _sec(enc.dict_blob) + enc.n_dict_values.to_bytes(4, "little")
-        secs += _sec(enc.indices_blob)
-        encodings = ["PLAIN_DICTIONARY", "RLE"]
-        if enc.fallback:
-            secs += enc.n_plain_values.to_bytes(4, "little")
-            secs += _sec(enc.plain_blob)
-            encodings = ["PLAIN_DICTIONARY", "PLAIN", "RLE"]
-        return secs, encodings, enc.fallback, \
-            {"num_entries": enc.num_entries}
-    raise ValueError(f"codec {codec} unsupported for byte_array")
+        payload = delta.encode(values, narrow=delta_narrow)
+    elif codec == DELTA_LENGTH_BYTE_ARRAY:
+        payload = bytearray_codecs.encode_delta_length(values)
+    elif codec == DELTA_BYTE_ARRAY:
+        payload = bytearray_codecs.encode_delta_byte_array(values)
+    else:
+        payload = fsst.encode(values)
+    return head + _sec(payload), [CODEC_NAMES[codec]], False, None
 
 
 def build_levels_sections(row_lengths: np.ndarray) -> tuple[bytes, int]:
@@ -336,8 +371,7 @@ def _values_raw_bytes(values, phys: str) -> int:
     if phys == "byte_array":
         v = ba.as_view(values)
         return v.total_bytes + 4 * len(v)
-    itemsize = 4 if phys in ("int32", "uint32", "float") else 8
-    return itemsize * len(values)
+    return _NP_DTYPES[phys].itemsize * len(values)
 
 
 def _parse_phys(phys: str) -> tuple[str, int]:
@@ -346,67 +380,6 @@ def _parse_phys(phys: str) -> tuple[str, int]:
         _, _, ln = phys.partition(":")
         return "flba", int(ln or 0)
     return phys, 0
-
-
-def _encode_boolean_payload(values: np.ndarray, codec: int) -> tuple[bytes, list[str]]:
-    if codec == PLAIN:
-        return _sec(plain.encode_boolean(values)), ["PLAIN"]
-    if codec == RLE:
-        payload = bytes([1]) + rle.encode(values.astype(np.uint8), 1)
-        return _sec(payload), ["RLE"]
-    if codec in (RLE_DICTIONARY, PLAIN_DICTIONARY):
-        # parity with the reference: dictionary-of-boolean is rejected
-        # (encoding-test.cc:304-309; ColumnWriter::Make skips dict for
-        # BOOLEAN, column_writer.cc:551-590)
-        raise ValueError("dictionary encoding not supported for boolean")
-    raise ValueError(f"codec {codec} unsupported for boolean")
-
-
-def _decode_boolean_payload(mv, pos: int, codec: int, n_values: int):
-    pos += 4  # section length prefix
-    if codec == PLAIN:
-        values, _ = plain.decode_boolean(mv, n_values, pos)
-        return values
-    if codec == RLE:
-        bw = mv[pos]
-        vals, _ = rle.decode(mv, n_values, bw, pos + 1, out_dtype=np.uint8)
-        return vals.astype(bool)
-    raise ValueError(f"codec {codec} unsupported for boolean")
-
-
-def _encode_flba_payload(values: list[bytes], codec: int, type_length: int,
-                         dict_size_limit: int) -> tuple[bytes, list[str], bool]:
-    if not type_length and values:
-        type_length = len(values[0])
-    tl = type_length.to_bytes(4, "little")
-    if codec == PLAIN:
-        return tl + _sec(plain.encode_flba(values, type_length)), \
-            ["PLAIN"], False
-    if codec == RLE_DICTIONARY:
-        enc = dictionary.encode(values, "byte_array", dict_size_limit)
-        secs = tl + _sec(enc.dict_blob) + enc.n_dict_values.to_bytes(4, "little")
-        secs += _sec(enc.indices_blob)
-        encodings = ["PLAIN_DICTIONARY", "RLE"]
-        if enc.fallback:
-            secs += enc.n_plain_values.to_bytes(4, "little")
-            secs += _sec(enc.plain_blob)
-            encodings = ["PLAIN_DICTIONARY", "PLAIN", "RLE"]
-        return secs, encodings, enc.fallback
-    raise ValueError(f"codec {codec} unsupported for flba")
-
-
-def _decode_flba_payload(mv, pos: int, codec: int, n_values: int,
-                         fallback: bool = False):
-    type_length = int.from_bytes(mv[pos: pos + 4], "little")
-    pos += 4
-    if codec == PLAIN:
-        pos += 4  # section length prefix
-        values, _ = plain.decode_flba(mv, n_values, type_length, pos)
-        return values
-    if codec == RLE_DICTIONARY:
-        return ba.to_list(_decode_bytes_payload(mv, pos, codec, n_values,
-                                                fallback))
-    raise ValueError(f"codec {codec} unsupported for flba")
 
 
 def encode_chunk(values, phys: str, codec: int, *,
@@ -442,6 +415,7 @@ def encode_chunk(values, phys: str, codec: int, *,
     deep = elem_valid is not None or inner_lengths is not None
     has_levels = row_lengths is not None and not deep
     phys, type_length = _parse_phys(phys)
+    _check_codec(phys, codec)
     null_count = 0
     if phys == "byte_array":
         values = ba.as_view(values)
@@ -475,9 +449,9 @@ def encode_chunk(values, phys: str, codec: int, *,
     if (page_size and valid_mask is None and not deep
             and phys in ("int32", "int64", "uint32", "uint64",
                          "byte_array")
-            and raw > page_size and codec in _PAGEABLE):
+            and raw > page_size):
         return _encode_chunk_paged(
-            values, phys, codec, row_lengths=row_lengths,
+            values, phys, codec, n_values, raw, row_lengths=row_lengths,
             dict_size_limit=dict_size_limit, with_stats=with_stats,
             compression=compression, page_size=page_size,
             data_page_version=data_page_version)
@@ -518,19 +492,8 @@ def encode_chunk(values, phys: str, codec: int, *,
         encodings.append("RLE")
         raw += 4 * len(rep)  # rep + def int16 pairs, reference raw form
 
-    _extras: dict = {}
-    if phys == "byte_array":
-        secs, encs, fallback, _extras = _encode_bytes_payload(
-            values, codec, dict_size_limit)
-    elif phys == "flba":
-        secs, encs, fallback = _encode_flba_payload(values, codec,
-                                                    type_length,
-                                                    dict_size_limit)
-    elif phys == "boolean":
-        secs, encs = _encode_boolean_payload(values, codec)
-    else:
-        secs, encs, fallback, _extras = _encode_int_payload(
-            values, codec, phys, dict_size_limit)
+    secs, encs, fallback, num_entries = _encode_payload(
+        values, phys, codec, dict_size_limit, type_length)
     sections += secs
     encodings.extend(e for e in encs if e not in encodings)
 
@@ -549,9 +512,9 @@ def encode_chunk(values, phys: str, codec: int, *,
     stats = compute_stats(values, phys) if with_stats else None
     if stats is not None:
         stats.null_count = null_count
-        if not fallback and "num_entries" in _extras:
+        if not fallback and num_entries is not None:
             # dict build without fallback saw every value: exact cardinality
-            stats.distinct_count = int(_extras["num_entries"])
+            stats.distinct_count = int(num_entries)
     return EncodedChunk(codec, PHYS_IDS[phys], n_rows, n_values, raw,
                         header + sections, encodings, stats)
 
@@ -579,7 +542,7 @@ def decode_chunk(blob) -> DecodedChunk:
         raise ValueError("bad chunk magic")
     version, codec, phys_id = mv[4], mv[5], mv[6]
     if version == VERSION_PAGED:
-        return _decode_chunk_paged(mv)
+        return _decode_pages(mv)
     if version == VERSION:
         compression, flags = mv[7], mv[8]
         n_rows = int.from_bytes(mv[9:13], "little")
@@ -628,111 +591,101 @@ def decode_chunk(blob) -> DecodedChunk:
             row_lengths, valid_mask = \
                 levels_mod.nullable_from_levels(rep, deflev)
 
-    fallback = bool(flags & FLAG_FALLBACK)
-    if phys == "byte_array":
-        values = _decode_bytes_payload(mv, pos, codec, n_values, fallback)
-    elif phys == "flba":
-        values = _decode_flba_payload(mv, pos, codec, n_values, fallback)
-    elif phys == "boolean":
-        values = _decode_boolean_payload(mv, pos, codec, n_values)
-    else:
-        values = _decode_int_payload(mv, pos, codec, phys, n_values, fallback)
+    values = _decode_payload(mv, pos, phys, codec, n_values,
+                             bool(flags & FLAG_FALLBACK))
     return DecodedChunk(values, row_lengths, codec, phys_id, n_rows,
                         n_values, valid_mask, inner_lengths)
 
 
-def _decode_int_payload(mv, pos: int, codec: int, phys: str, n_values: int,
-                        fallback: bool = False):
-    sec_len = int.from_bytes(mv[pos: pos + 4], "little")
+def _u32(mv, pos: int) -> int:
+    return int.from_bytes(mv[pos: pos + 4], "little")
+
+
+def _count_error(n_values: int, held: int) -> ValueError:
+    return ValueError(f"corrupt chunk: header declares {n_values} values, "
+                      f"payload holds {held}")
+
+
+def _decode_payload(mv, pos: int, phys: str, codec: int, n_values: int,
+                    fallback: bool = False):
+    """Inverse of :func:`_encode_payload`: the value sections at ``pos`` ->
+    a ByteArrayView for byte_array, a list of bytes for flba, an ndarray
+    otherwise. Raises ValueError unless exactly ``n_values`` come out."""
+    _check_codec(phys, codec)
+    type_length = 0
+    if phys == "flba":
+        type_length = _u32(mv, pos)
+        pos += 4
+    sec_len = _u32(mv, pos)
     pos += 4
-    if codec == PLAIN:
-        values, _ = plain.decode_fixed(mv, n_values, phys, pos)
-        return values
-    if codec == DELTA_BINARY_PACKED:
+    if codec == RLE_DICTIONARY:
+        values = _decode_dict_sections(mv, pos, sec_len, phys, fallback)
+        if phys == "flba":
+            values = ba.to_list(values)
+    elif codec == PLAIN:
+        # bound the count by the section before any per-value work
+        bits = (1 if phys == "boolean" else 32 if phys == "byte_array"
+                else 8 * type_length if phys == "flba"
+                else 8 * _NP_DTYPES[phys].itemsize)
+        room = 8 * min(sec_len, len(mv) - pos)
+        if n_values * bits > room:
+            raise _count_error(n_values, room // max(bits, 1))
+        if phys == "byte_array":
+            values, _ = plain.decode_byte_array_view(mv, n_values, pos)
+        elif phys == "flba":
+            values, _ = plain.decode_flba(mv, n_values, type_length, pos)
+        elif phys == "boolean":
+            values, _ = plain.decode_boolean(mv, n_values, pos)
+        else:
+            values, _ = plain.decode_fixed(mv, n_values, phys, pos)
+    elif codec == RLE:
+        dt = np.uint8 if phys == "boolean" else _NP_DTYPES[phys]
+        values, _ = rle.decode(mv, n_values, mv[pos], pos + 1, out_dtype=dt)
+        if phys == "boolean":
+            values = values.astype(bool)
+    elif codec == DELTA_BINARY_PACKED:
         # uint64 deltas ride the int64 bit pattern (mod-2^64 arithmetic);
         # astype int64 -> uint64 wraps back to the exact original values
-        dt = {"int32": np.int32, "uint32": np.uint32,
-              "uint64": np.uint64}.get(phys, np.int64)
-        values, _ = delta.decode(mv[pos: pos + sec_len], out_dtype=dt)
-        return values
-    if codec == RLE:
-        bw = mv[pos]
-        dt = {"int32": np.int32, "uint32": np.uint32,
-              "uint64": np.uint64}.get(phys, np.int64)
-        values, _ = rle.decode(mv, n_values, bw, pos + 1, out_dtype=dt)
-        return values
-    if codec == RLE_DICTIONARY:
-        dict_blob = bytes(mv[pos: pos + sec_len])
-        pos += sec_len
-        n_dict_values = int.from_bytes(mv[pos: pos + 4], "little")
-        pos += 4
-        idx_len = int.from_bytes(mv[pos: pos + 4], "little")
-        pos += 4
-        indices_blob = bytes(mv[pos: pos + idx_len])
-        pos += idx_len
-        n_plain = 0
-        plain_blob = b""
-        if fallback:
-            n_plain = int.from_bytes(mv[pos: pos + 4], "little")
-            pos += 4
-            pl_len = int.from_bytes(mv[pos: pos + 4], "little")
-            pos += 4
-            plain_blob = bytes(mv[pos: pos + pl_len])
-        # dictionary entry count: the dict blob is PLAIN fixed-width
-        itemsize = 4 if phys in ("int32", "uint32", "float") else 8
-        num_entries = len(dict_blob) // itemsize
-        vals = dictionary.decode(
-            None, phys, dict_blob=dict_blob, indices_blob=indices_blob,
-            num_entries=num_entries, n_dict_values=n_dict_values,
-            plain_blob=plain_blob, n_plain_values=n_plain)
-        dt = {"int32": np.int32, "int64": np.int64,
-              "uint32": np.uint32, "uint64": np.uint64,
-              "float": np.float32, "double": np.float64}[phys]
-        return np.asarray(vals).astype(dt, copy=False)
-    raise ValueError(f"codec {codec} unsupported for {phys}")
-
-
-def _decode_bytes_payload(mv, pos: int, codec: int, n_values: int,
-                          fallback: bool = False):
-    """byte_array payload -> ba.ByteArrayView (columnar; consumers convert
-    to Arrow zero-copy or to list[bytes] at the boundary)."""
-    sec_len = int.from_bytes(mv[pos: pos + 4], "little")
-    pos += 4
-    if codec == PLAIN:
-        values, _ = plain.decode_byte_array_view(mv, n_values, pos)
-        return values
-    if codec == DELTA_LENGTH_BYTE_ARRAY:
+        values, _ = delta.decode(mv[pos: pos + sec_len],
+                                 out_dtype=_NP_DTYPES[phys])
+    elif codec == DELTA_LENGTH_BYTE_ARRAY:
         values, _ = bytearray_codecs.decode_delta_length_view(mv, pos)
-        return values
-    if codec == DELTA_BYTE_ARRAY:
+    elif codec == DELTA_BYTE_ARRAY:
         values, _ = bytearray_codecs.decode_delta_byte_array_view(mv, pos)
-        return values
-    if codec == FSST:
+    else:
         values, _ = fsst.decode_view(mv, pos)
-        return values
-    if codec == RLE_DICTIONARY:
-        dict_blob = bytes(mv[pos: pos + sec_len])
-        pos += sec_len
-        n_dict_values = int.from_bytes(mv[pos: pos + 4], "little")
-        pos += 4
-        idx_len = int.from_bytes(mv[pos: pos + 4], "little")
-        pos += 4
-        indices_blob = bytes(mv[pos: pos + idx_len])
-        pos += idx_len
-        n_plain = 0
-        plain_blob = b""
-        if fallback:
-            n_plain = int.from_bytes(mv[pos: pos + 4], "little")
-            pos += 4
-            pl_len = int.from_bytes(mv[pos: pos + 4], "little")
-            pos += 4
-            plain_blob = bytes(mv[pos: pos + pl_len])
+    if len(values) != n_values:
+        raise _count_error(n_values, len(values))
+    return values
+
+
+def _decode_dict_sections(mv, pos: int, dict_len: int, phys: str,
+                          fallback: bool):
+    """[dict][u32 n_dict_values][u32 len + indices]
+    ([u32 n_plain_values][u32 len + plain] if fallback) -> values, with
+    ``pos`` just past the dict section's length; flba dictionaries are
+    byte_array ones."""
+    dict_phys = "byte_array" if phys == "flba" else phys
+    dict_blob = mv[pos: pos + dict_len]
+    pos += dict_len
+    n_dict_values = _u32(mv, pos)
+    idx_len = _u32(mv, pos + 4)
+    indices_blob = mv[pos + 8: pos + 8 + idx_len]
+    pos += 8 + idx_len
+    n_plain = 0
+    plain_blob = b""
+    if fallback:
+        n_plain = _u32(mv, pos)
+        pl_len = _u32(mv, pos + 4)
+        plain_blob = mv[pos + 8: pos + 8 + pl_len]
+    if dict_phys == "byte_array":
         num_entries = _count_byte_array_entries(dict_blob)
-        return dictionary.decode(
-            None, "byte_array", dict_blob=dict_blob, indices_blob=indices_blob,
-            num_entries=num_entries, n_dict_values=n_dict_values,
-            plain_blob=plain_blob, n_plain_values=n_plain)
-    raise ValueError(f"codec {codec} unsupported for byte_array")
+    else:
+        num_entries = len(dict_blob) // _NP_DTYPES[phys].itemsize
+    return dictionary.decode(
+        None, dict_phys, dict_blob=dict_blob, indices_blob=indices_blob,
+        num_entries=num_entries, n_dict_values=n_dict_values,
+        plain_blob=plain_blob, n_plain_values=n_plain)
 
 
 def _count_byte_array_entries(blob: bytes) -> int:
@@ -773,10 +726,6 @@ def _count_byte_array_entries(blob: bytes) -> int:
 # (column_reader.h:268-281): decode_chunk_rows / page_index decode only the
 # pages a row range or point predicate needs.
 
-_PAGEABLE = {PLAIN, RLE, DELTA_BINARY_PACKED, RLE_DICTIONARY,
-             DELTA_LENGTH_BYTE_ARRAY, DELTA_BYTE_ARRAY, FSST}
-
-
 _RATIO_SAMPLE_VALUES = 1 << 16
 
 
@@ -796,7 +745,7 @@ def _encoded_ratio(values, phys: str, codec: int,
         raw = sample.total_bytes + 4 * len(sample)
     else:
         sample = values[start: start + _RATIO_SAMPLE_VALUES]
-        raw = sample.dtype.itemsize * len(sample)
+        raw = sample.nbytes
     enc = encode_chunk(sample, phys, codec, with_stats=False,
                        dict_size_limit=dict_size_limit, page_size=None)
     return min(1.5, max(0.02, enc.enc_bytes / max(1, raw)))
@@ -813,7 +762,7 @@ def _page_value_bounds(values, phys: str, page_size: int,
         # array (an n-sized arange is pure DRAM traffic for a result a
         # division already knows). bound_k = ceil(k*eff/item), identical
         # to the searchsorted over the old cumulative array.
-        item = 4 if phys in ("int32", "uint32", "float") else 8
+        item = _NP_DTYPES[phys].itemsize
         total = n * item
         n_pages = max(1, (total + eff - 1) // eff)
         marks = np.arange(1, n_pages, dtype=np.int64) * eff
@@ -874,38 +823,14 @@ def _page_stats_bytes(values, phys: str, lo: int, hi: int) -> bytes:
             + mx.to_bytes(8, "little", signed=signed))
 
 
-def _page_payload(values, phys: str, page_codec: int, lo: int, hi: int,
-                  dict_codes=None, dict_bw: int = 0,
-                  delta_narrow: "bool | None" = None) -> bytes:
-    """Value payload sections for one page (uncompressed form, no levels)."""
-    if page_codec == RLE_DICTIONARY:
-        payload = bytes([dict_bw]) + rle.encode(dict_codes[lo: hi], dict_bw)
-        return _sec(payload)
-    if phys == "byte_array":
-        seg = ba.slice_rows(values, lo, hi)
-        secs, _encs, _fb, _x = _encode_bytes_payload(seg, page_codec,
-                                                     1 << 62)
-    else:
-        seg = values[lo: hi]
-        secs, _encs, _fb, _x = _encode_int_payload(
-            seg, page_codec, phys, 1 << 62, delta_narrow=delta_narrow)
-    return secs
-
-
-def _encode_chunk_paged(values, phys: str, codec: int, *,
-                        row_lengths=None, dict_size_limit: int,
+def _encode_chunk_paged(values, phys: str, codec: int, n_values: int,
+                        raw: int, *, row_lengths=None, dict_size_limit: int,
                         with_stats: bool, compression: int,
                         page_size: int,
                         data_page_version: int = 1) -> EncodedChunk:
+    """``values``, ``n_values`` and ``raw`` arrive as encode_chunk
+    normalized them."""
     has_levels = row_lengths is not None
-    if phys == "byte_array":
-        values = ba.as_view(values)
-        n_values = len(values)
-        raw = values.total_bytes + 4 * n_values
-    else:
-        values = np.ascontiguousarray(values)
-        n_values = len(values)
-        raw = values.dtype.itemsize * n_values
     n_rows = len(row_lengths) if has_levels else n_values
 
     # chunk-global dictionary (single dict page, like the reference)
@@ -916,8 +841,7 @@ def _encode_chunk_paged(values, phys: str, codec: int, *,
     split = n_values
     encodings: list[str] = []
     if codec == RLE_DICTIONARY:
-        enc = dictionary.encode(values, phys if phys != "byte_array"
-                                else "byte_array", dict_size_limit)
+        enc = dictionary.encode(values, phys, dict_size_limit)
         dict_codes = enc.codes
         split = enc.n_dict_values
         fallback = enc.fallback
@@ -925,9 +849,7 @@ def _encode_chunk_paged(values, phys: str, codec: int, *,
         dict_section = (_sec(enc.dict_blob)
                         + enc.num_entries.to_bytes(4, "little")
                         + bytes([dict_bw]))
-        encodings = ["PLAIN_DICTIONARY", "RLE"]
-        if fallback:
-            encodings = ["PLAIN_DICTIONARY", "PLAIN", "RLE"]
+        encodings = _dict_encodings(fallback)
 
     ratio = _encoded_ratio(values, phys, codec, dict_size_limit)
     vbounds = _page_value_bounds(values, phys, page_size, ratio)
@@ -976,9 +898,14 @@ def _encode_chunk_paged(values, phys: str, codec: int, *,
             levels_b = build_levels_sections(row_lengths[rlo: rhi])[0]
             levels_raw += 2 * int(np.maximum(row_lengths[rlo: rhi],
                                              1).sum())
-        payload_b = _page_payload(values, phys, page_codec, lo, hi,
-                                  dict_codes, dict_bw,
-                                  delta_narrow=delta_narrow)
+        if page_codec == RLE_DICTIONARY:
+            payload_b = _sec(bytes([dict_bw])
+                             + rle.encode(dict_codes[lo: hi], dict_bw))
+        else:
+            seg = ba.slice_rows(values, lo, hi) if phys == "byte_array" \
+                else values[lo: hi]
+            payload_b = _encode_payload(seg, phys, page_codec, 1 << 62,
+                                        delta_narrow=delta_narrow)[0]
         v2 = data_page_version == 2
         if compression != UNCOMPRESSED:
             # DataPageV2 keeps levels readable outside the compressed
@@ -1027,17 +954,13 @@ def _parse_paged_header(mv):
     n_pages = int.from_bytes(mv[21:25], "little")
     pos = 25
     dict_view = None
-    num_entries = 0
-    dict_bw = 0
     if codec == RLE_DICTIONARY:
         dlen = int.from_bytes(mv[pos: pos + 4], "little")
         pos += 4
         dict_blob = mv[pos: pos + dlen]
         pos += dlen
         num_entries = int.from_bytes(mv[pos: pos + 4], "little")
-        pos += 4
-        dict_bw = mv[pos]
-        pos += 1
+        pos += 5  # num_entries, bit width (each page carries its own)
         phys = PHYS_NAMES[phys_id]
         if phys == "byte_array":
             dict_view, _ = plain.decode_byte_array_view(dict_blob,
@@ -1045,7 +968,7 @@ def _parse_paged_header(mv):
         else:
             dict_view, _ = plain.decode_fixed(dict_blob, num_entries, phys)
     return (codec, phys_id, compression, flags, n_rows, n_values, n_pages,
-            pos, dict_view, dict_bw)
+            pos, dict_view)
 
 
 def _iter_pages(mv, n_pages: int, pos: int):
@@ -1090,9 +1013,9 @@ def _parse_page_levels(body, pos: int):
     return levels_mod.lengths_from_bit1_streams(body, n_slots, pos)
 
 
-def _decode_page_body(body, phys: str, page_codec: int, p_rows: int,
-                      p_vals: int, compression: int, has_levels: bool,
-                      dict_view, dict_bw: int, page_flags: int = 0):
+def _decode_page_body(body, phys: str, page_codec: int, p_vals: int,
+                      compression: int, has_levels: bool, dict_view,
+                      page_flags: int = 0):
     row_lengths = None
     pos = 0
     if page_flags & 1:
@@ -1109,44 +1032,61 @@ def _decode_page_body(body, phys: str, page_codec: int, p_rows: int,
         if has_levels:
             row_lengths, pos = _parse_page_levels(body, 0)
     if page_codec == RLE_DICTIONARY:
-        pos += 4  # section length prefix
-        bw = body[pos]
-        codes, _ = rle.decode(body, p_vals, bw, pos + 1)
-        if phys == "byte_array":
-            vals = ba.take(dict_view, codes)
-        else:
-            vals = np.asarray(dict_view)[codes]
-    elif phys == "byte_array":
-        vals = _decode_bytes_payload(body, pos, page_codec, p_vals)
+        # past the section length prefix: the page's bit width and codes
+        vals = dictionary.gather(dict_view, body, p_vals, pos + 4)
     else:
-        vals = _decode_int_payload(body, pos, page_codec, phys, p_vals)
+        vals = _decode_payload(body, pos, phys, page_codec, p_vals)
     return vals, row_lengths
 
 
-def _decode_chunk_paged(mv) -> DecodedChunk:
+def _decode_pages(mv, row_start: int = 0,
+                  row_stop: "int | None" = None) -> DecodedChunk:
+    """The one page loop of a v3 chunk: decodes the pages that intersect
+    [row_start, row_stop) (every page when ``row_stop`` is None) and trims
+    them to that range. A range covering every page needs no trim."""
     (codec, phys_id, compression, flags, n_rows, n_values, n_pages, pos,
-     dict_view, dict_bw) = _parse_paged_header(mv)
+     dict_view) = _parse_paged_header(mv)
     phys = PHYS_NAMES[phys_id]
     has_levels = bool(flags & FLAG_HAS_LEVELS)
     vals_parts = []
     len_parts = []
-    for p_rows, p_vals, p_codec, p_flags, stats_, body in \
+    row = 0
+    first_row = None
+    for p_rows, p_vals, p_codec, p_flags, _stats, body in \
             _iter_pages(mv, n_pages, pos):
-        vals, rl = _decode_page_body(body, phys, p_codec, p_rows, p_vals,
+        lo, row = row, row + p_rows
+        if row <= row_start or (row_stop is not None and lo >= row_stop):
+            continue
+        if first_row is None:
+            first_row = lo
+        vals, rl = _decode_page_body(body, phys, p_codec, p_vals,
                                      compression, has_levels, dict_view,
-                                     dict_bw, p_flags)
+                                     p_flags)
         vals_parts.append(vals)
         if rl is not None:
             len_parts.append(rl)
-    if phys == "byte_array":
-        out = vals_parts[0]
-        for v in vals_parts[1:]:
-            out = ba.concat(out, v)
-    else:
-        out = np.concatenate(vals_parts) if vals_parts else \
+    if not vals_parts:
+        empty = ba.from_list([]) if phys == "byte_array" else \
             np.array([], dtype=np.int64)
+        return DecodedChunk(empty, np.zeros(0, dtype=np.int64)
+                            if has_levels else None,
+                            codec, phys_id, 0, 0)
+    out = ba.concat(*vals_parts) if phys == "byte_array" else \
+        np.concatenate(vals_parts)
     row_lengths = np.concatenate(len_parts) if len_parts else None
-    return DecodedChunk(out, row_lengths, codec, phys_id, n_rows, n_values)
+    if first_row == 0 and row_start <= 0 and (row_stop is None
+                                              or row_stop >= row):
+        if len(out) != n_values or row != n_rows:
+            raise ValueError(f"corrupt chunk: header declares {n_rows} rows"
+                             f" / {n_values} values, pages hold {row} / "
+                             f"{len(out)}")
+        return DecodedChunk(out, row_lengths, codec, phys_id, n_rows,
+                            n_values)
+    dec = DecodedChunk(out, row_lengths, codec, phys_id,
+                       int(row_lengths.shape[0]) if row_lengths is not None
+                       else len(out),
+                       len(out))
+    return _trim_decoded(dec, row_start - first_row, row_stop - first_row)
 
 
 def page_index(blob) -> list[dict]:
@@ -1158,7 +1098,7 @@ def page_index(blob) -> list[dict]:
     if bytes(mv[:4]) != MAGIC or mv[4] != VERSION_PAGED:
         raise ValueError("page_index requires a v3 paged chunk")
     (codec, phys_id, compression, flags, n_rows, n_values, n_pages, pos,
-     _dv, _bw) = _parse_paged_header(mv)
+     _dv) = _parse_paged_header(mv)
     out = []
     row = 0
     for p_rows, p_vals, p_codec, _pf, stats, _body in _iter_pages(mv, n_pages,
@@ -1183,46 +1123,7 @@ def decode_chunk_rows(blob, row_start: int, row_stop: int) -> DecodedChunk:
     if mv[4] != VERSION_PAGED:
         dec = decode_chunk(mv)
         return _trim_decoded(dec, row_start, row_stop)
-    (codec, phys_id, compression, flags, n_rows, n_values, n_pages, pos,
-     dict_view, dict_bw) = _parse_paged_header(mv)
-    phys = PHYS_NAMES[phys_id]
-    has_levels = bool(flags & FLAG_HAS_LEVELS)
-    vals_parts = []
-    len_parts = []
-    row = 0
-    first_row = None
-    for p_rows, p_vals, p_codec, p_flags, _stats, body in \
-            _iter_pages(mv, n_pages, pos):
-        lo, hi = row, row + p_rows
-        row = hi
-        if hi <= row_start or lo >= row_stop:
-            continue
-        if first_row is None:
-            first_row = lo
-        vals, rl = _decode_page_body(body, phys, p_codec, p_rows, p_vals,
-                                     compression, has_levels, dict_view,
-                                     dict_bw, p_flags)
-        vals_parts.append(vals)
-        if rl is not None:
-            len_parts.append(rl)
-    if not vals_parts:
-        empty = ba.from_list([]) if phys == "byte_array" else \
-            np.array([], dtype=np.int64)
-        return DecodedChunk(empty, np.zeros(0, dtype=np.int64)
-                            if has_levels else None,
-                            codec, phys_id, 0, 0)
-    if phys == "byte_array":
-        out = vals_parts[0]
-        for v in vals_parts[1:]:
-            out = ba.concat(out, v)
-    else:
-        out = np.concatenate(vals_parts)
-    row_lengths = np.concatenate(len_parts) if len_parts else None
-    dec = DecodedChunk(out, row_lengths, codec, phys_id,
-                       int(row_lengths.shape[0]) if row_lengths is not None
-                       else len(out),
-                       len(out))
-    return _trim_decoded(dec, row_start - first_row, row_stop - first_row)
+    return _decode_pages(mv, row_start, row_stop)
 
 
 def _trim_decoded(dec: DecodedChunk, row_start: int,

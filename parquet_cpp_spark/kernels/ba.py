@@ -145,14 +145,20 @@ def take(view: ByteArrayView, indices: np.ndarray) -> ByteArrayView:
                                                    type=pa.int64())))
 
 
-def concat(a: ByteArrayView, b: ByteArrayView) -> ByteArrayView:
-    if len(b) == 0:
-        return a
-    if len(a) == 0:
-        return b
-    data = np.concatenate([a.data, b.data])
-    offsets = np.concatenate([a.offsets, b.offsets[1:] + a.offsets[-1]])
-    return ByteArrayView(data, offsets)
+def concat(*views: ByteArrayView) -> ByteArrayView:
+    """The views' values in order: one data concatenate plus one pass
+    writing each view's offsets shifted by the bytes before it."""
+    views = [v for v in views if len(v)]
+    if len(views) <= 1:
+        return views[0] if views else from_list([])
+    offsets = np.empty(sum(len(v) for v in views) + 1, dtype=np.int64)
+    offsets[0] = 0
+    row = base = 0
+    for v in views:
+        np.add(v.offsets[1:], base, out=offsets[row + 1: row + 1 + len(v)])
+        row += len(v)
+        base += v.total_bytes
+    return ByteArrayView(np.concatenate([v.data for v in views]), offsets)
 
 
 def slice_rows(view: ByteArrayView, start: int, stop: int) -> ByteArrayView:

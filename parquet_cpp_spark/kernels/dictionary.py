@@ -144,24 +144,33 @@ def decode(enc: "DictEncoded | tuple", phys: str, *, dict_blob=None,
     else:
         uniques, _ = plain.decode_fixed(dict_blob, num_entries, phys)
 
-    bw = indices_blob[0]
-    codes, _ = rle.decode(indices_blob, n_dict_values, bw, 1)
-    # a bit width too narrow to reach num_entries proves every index in
-    # range; otherwise one max pass finds an index the gather would fault on
+    head = gather(uniques, indices_blob, n_dict_values)
+    if phys == "byte_array":
+        if n_plain_values:
+            tail, _ = plain.decode_byte_array_view(plain_blob, n_plain_values)
+            head = ba.concat(head, tail)
+        return head
+    if n_plain_values:
+        tail, _ = plain.decode_fixed(plain_blob, n_plain_values, phys)
+        head = np.concatenate([head, tail])
+    return head
+
+
+def gather(uniques, indices, n_values: int, pos: int = 0):
+    """``[u8 bit_width][RLE-hybrid codes]`` at ``pos`` -> uniques[codes]:
+    an ndarray, or a ByteArrayView when ``uniques`` is one (the fused
+    gather, encoding-internal.h:351)."""
+    bw = indices[pos]
+    codes, _ = rle.decode(indices, n_values, bw, pos + 1)
+    # a bit width too narrow to reach the entry count proves every index
+    # in range; otherwise one max pass finds an index the gather would
+    # fault on
+    num_entries = len(uniques)
     if (1 << bw) > num_entries and len(codes):
         top = int(codes.max())
         if top >= num_entries:
             raise ValueError(f"corrupt dictionary indices: index {top} "
                              f"past {num_entries} entries")
-
-    if phys == "byte_array":
-        head = ba.take(uniques, codes)  # fused vectorized gather
-        if n_plain_values:
-            tail, _ = plain.decode_byte_array_view(plain_blob, n_plain_values)
-            head = ba.concat(head, tail)
-        return head
-    head = np.asarray(uniques)[codes]
-    if n_plain_values:
-        tail, _ = plain.decode_fixed(plain_blob, n_plain_values, phys)
-        head = np.concatenate([head, tail])
-    return head
+    if isinstance(uniques, ba.ByteArrayView):
+        return ba.take(uniques, codes)
+    return np.asarray(uniques)[codes]

@@ -87,6 +87,9 @@ def decode_byte_array_view(buf, n_values: int, pos: int = 0):
         return ba.ByteArrayView(np.array([], dtype=np.uint8),
                                 np.zeros(1, dtype=np.int64)), pos
     a = np.frombuffer(buf, dtype=np.uint8)
+    if 4 * n_values > len(a) - pos:   # before the n-sized allocation
+        raise ValueError(f"corrupt PLAIN byte_array: {n_values} values "
+                         f"need more than the {len(a) - pos} bytes left")
     mv = buf if isinstance(buf, (bytes, memoryview)) else memoryview(buf)
     starts = np.empty(n_values + 1, dtype=np.int64)
     p = pos
@@ -94,6 +97,9 @@ def decode_byte_array_view(buf, n_values: int, pos: int = 0):
     for i in range(n_values):
         starts[i] = p
         p += 4 + fb(mv[p: p + 4], "little")
+    if p > len(a):
+        raise ValueError(f"corrupt PLAIN byte_array: {n_values} values run "
+                         f"past the {len(a)}-byte buffer")
     starts[n_values] = p
     records = pa.LargeBinaryArray.from_buffers(
         pa.large_binary(), n_values,

@@ -234,46 +234,52 @@ def decode(buf, n_values: int, bit_width: int, pos: int = 0,
     lit_counts: list[int] = []
     idx = 0
     single_byte_val = vbytes == 1
-    while idx < n_values:
-        # inlined ULEB128 (a function call per run adds up on run-dense
-        # level streams)
-        header = mv[pos]
-        pos += 1
-        if header >= 0x80:
-            header &= 0x7F
-            sh = 7
-            while True:
-                b = mv[pos]
-                pos += 1
-                header |= (b & 0x7F) << sh
-                if b < 0x80:
-                    break
-                sh += 7
-        if header & 1:
-            cnt = (header >> 1) * 8
-            nb = (cnt * bit_width + 7) // 8
-            take = cnt if cnt <= n_values - idx else n_values - idx
-            seg_kind.append(1)
-            seg_take.append(take)
-            lit_slices.append(mv[pos: pos + nb])
-            lit_counts.append(cnt)
-            pos += nb
-        else:
-            cnt = header >> 1
-            if cnt == 0:
-                raise ValueError("corrupt RLE stream: zero-length run")
-            if single_byte_val:
-                val = mv[pos]
-                pos += 1
+    try:
+        while idx < n_values:
+            # inlined ULEB128 (a function call per run adds up on run-dense
+            # level streams)
+            header = mv[pos]
+            pos += 1
+            if header >= 0x80:
+                header &= 0x7F
+                sh = 7
+                while True:
+                    b = mv[pos]
+                    pos += 1
+                    header |= (b & 0x7F) << sh
+                    if b < 0x80:
+                        break
+                    sh += 7
+            if header & 1:
+                cnt = (header >> 1) * 8
+                nb = (cnt * bit_width + 7) // 8
+                take = cnt if cnt <= n_values - idx else n_values - idx
+                seg_kind.append(1)
+                seg_take.append(take)
+                lit_slices.append(mv[pos: pos + nb])
+                lit_counts.append(cnt)
+                pos += nb
             else:
-                val = from_bytes(mv[pos: pos + vbytes], "little")
-                pos += vbytes
-            take = cnt if cnt <= n_values - idx else n_values - idx
-            seg_kind.append(0)
-            seg_take.append(take)
-            rle_vals.append(val)
-            rle_takes.append(take)
-        idx += take
+                cnt = header >> 1
+                if cnt == 0:
+                    raise ValueError("corrupt RLE stream: zero-length run")
+                if single_byte_val:
+                    val = mv[pos]
+                    pos += 1
+                else:
+                    if pos + vbytes > len(mv):
+                        raise IndexError   # a cut run value
+                    val = from_bytes(mv[pos: pos + vbytes], "little")
+                    pos += vbytes
+                take = cnt if cnt <= n_values - idx else n_values - idx
+                seg_kind.append(0)
+                seg_take.append(take)
+                rle_vals.append(val)
+                rle_takes.append(take)
+            idx += take
+    except IndexError:
+        raise ValueError(f"corrupt RLE stream: ends after {idx} of "
+                         f"{n_values} values") from None
 
     # fast paths: pure-RLE and pure-literal streams skip the interleave
     if not lit_slices:

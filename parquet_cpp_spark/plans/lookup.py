@@ -77,9 +77,7 @@ def _find_rows(blob, key: bytes):
             hits.extend(p["row_start"] + int(i) for i in eq.to_pylist())
         return hits
     dec = chunkmod.decode_chunk(mv)
-    vals = dec.values if isinstance(dec.values, ba.ByteArrayView) \
-        else ba.from_list(list(dec.values))
-    eq = pc.indices_nonzero(pc.equal(ba.to_arrow(vals), key))
+    eq = pc.indices_nonzero(pc.equal(ba.to_arrow(dec.values), key))
     return [int(i) for i in eq.to_pylist()]
 
 

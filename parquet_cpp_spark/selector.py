@@ -297,8 +297,8 @@ def encode_best(values, phys: str, *, row_lengths=None,
     # Chunks that will take the paged path rebuild levels per page slice and
     # never read a whole-chunk levels stream — building one here (an RLE
     # pass over every row) would be pure waste. The paged predicate mirrors
-    # chunk.encode_chunk's exactly; every auto-selected codec is in
-    # chunk._PAGEABLE, so the pick can't change which branch runs.
+    # chunk.encode_chunk's exactly; every codec an integer type takes
+    # pages, so the pick can't change which branch runs.
     will_page = (has_levels and page_size and valid_mask is None
                  and phys in ("int32", "int64", "uint32", "uint64")
                  and chunkmod._values_raw_bytes(values, phys) > page_size)

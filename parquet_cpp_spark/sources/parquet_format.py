@@ -340,22 +340,7 @@ def _concat(parts: list):
     if len(parts) == 1:
         return parts[0]
     if isinstance(parts[0], ba.ByteArrayView):
-        # buffer-level concat: one data concatenate + shifted offsets —
-        # never materializes per-value Python bytes (the old to_list/
-        # from_list round-trip was a real cost at 10^5 strings per chunk)
-        data = np.concatenate([p.data for p in parts])
-        n = sum(len(p) for p in parts)
-        offs = np.zeros(n + 1, dtype=np.int64)
-        row = 0
-        acc = 0
-        for p in parts:
-            k = len(p)
-            offs[row + 1: row + k + 1] = p.offsets[1:]
-            if acc:
-                offs[row + 1: row + k + 1] += acc
-            row += k
-            acc += int(p.offsets[-1])
-        return ba.ByteArrayView(data, offs)
+        return ba.concat(*parts)
     if isinstance(parts[0], list):
         return [v for p in parts for v in p]
     return np.concatenate(parts)

@@ -211,9 +211,7 @@ def _chunk_stats(dense, phys: str, null_count: int) -> "list | None":
         # untrustworthy stats; so do we: null_count only
         return fields
     if phys == "byte_array":
-        view = ba.as_view(dense) if not isinstance(dense, ba.ByteArrayView) \
-            else dense
-        mn, mx = ba.minmax(view)
+        mn, mx = ba.minmax(ba.as_view(dense))
     elif phys == "boolean":
         arr = np.asarray(dense, dtype=bool)
         mn, mx = bool(arr.min()), bool(arr.max())
@@ -304,9 +302,7 @@ def _offset_index_fields(pages) -> list:
 
 def _slice_dense(dense, phys: str, lo: int, hi: int):
     if phys == "byte_array":
-        view = dense if isinstance(dense, ba.ByteArrayView) \
-            else ba.as_view(dense)
-        return ba.slice_rows(view, lo, hi)
+        return ba.slice_rows(ba.as_view(dense), lo, hi)
     return dense[lo:hi]
 
 
@@ -531,8 +527,7 @@ def _dense_scalar(values, idx, phys: str, name: str):
     """Extract dense values: ``values`` (slot-aligned when ``idx`` is
     given) -> the non-null value stream in page-payload form."""
     if phys == "byte_array":
-        view = values if isinstance(values, ba.ByteArrayView) \
-            else ba.as_view(values)
+        view = ba.as_view(values)
         return view if idx is None else ba.take(view, idx)
     if _is_fixed_bytes(phys):
         width = _phys_id(phys)[1]
@@ -575,11 +570,7 @@ def _scalar_leaf(path: list, phys: str, values, present, deflv,
     else:
         present = np.asarray(present, dtype=bool)
         n_rows = len(present)
-        if phys == "byte_array" and isinstance(values, ba.ByteArrayView):
-            n_vals = len(values)
-        else:
-            n_vals = len(values)
-        if n_vals != n_rows:
+        if len(values) != n_rows:
             raise ValueError(f"column {name}: values must be slot-aligned "
                              "(one per row, nulls included) when a "
                              "validity mask is given")
@@ -1153,9 +1144,7 @@ def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
         elif _is_fixed_bytes(c.phys):
             pmin = pmax = NAN_POISONED   # untrustworthy ordering: no index
         elif c.phys == "byte_array":
-            view = pg_dense if isinstance(pg_dense, ba.ByteArrayView) \
-                else ba.as_view(pg_dense)
-            pmin, pmax = ba.minmax(view)
+            pmin, pmax = ba.minmax(ba.as_view(pg_dense))
         else:
             arr = np.asarray(pg_dense)
             if c.phys in ("float", "double") and bool(np.isnan(arr).any()):

@@ -372,3 +372,68 @@ def test_dictionary_index_out_of_range(phys, values):
         np.array([0, 1, 3, 0]), 2))
     with pytest.raises(ValueError, match="corrupt dictionary indices"):
         dictionary.decode(bad, phys)
+
+
+_COUNT_CHILD = r"""
+import resource
+resource.setrlimit(resource.RLIMIT_AS, (2 << 30, 2 << 30))
+
+import numpy as np
+import pytest
+
+from parquet_cpp_spark import chunk as C
+
+keys = np.arange(300) % 23
+cases = [("int32", C.PLAIN), ("int32", C.RLE),
+         ("int32", C.DELTA_BINARY_PACKED), ("int32", C.RLE_DICTIONARY),
+         ("boolean", C.RLE), ("byte_array", C.PLAIN),
+         ("byte_array", C.DELTA_LENGTH_BYTE_ARRAY),
+         ("byte_array", C.DELTA_BYTE_ARRAY), ("byte_array", C.RLE_DICTIONARY),
+         ("boolean", C.PLAIN), ("double", C.PLAIN), ("flba:4", C.PLAIN),
+         ("flba:4", C.RLE_DICTIONARY), ("byte_array", C.FSST)]
+values = {"int32": keys.astype(np.int32), "boolean": keys % 2 == 1,
+          "double": keys * 0.5,
+          "byte_array": [f"value-{k}".encode() for k in keys],
+          "flba:4": [f"{k:04d}".encode() for k in keys]}
+for phys, codec in cases:
+    blob = C.encode_chunk(values[phys], phys, codec).blob
+    assert blob[4] == C.VERSION
+    for n in (2 * len(keys), 2**32 - 1):
+        bad = blob[:13] + n.to_bytes(4, "little") + blob[17:]
+        with pytest.raises(ValueError, match="corrupt"):
+            C.decode_chunk(bad)
+# multi-page chunks: the dictionary page's entry count, below the indices
+# the pages hold and at 2^32 - 1
+for phys in ("int32", "byte_array"):
+    vals = values[phys] * 40 if phys == "byte_array" else \
+        np.tile(values[phys], 40)
+    blob = bytearray(C.encode_chunk(vals, phys, C.RLE_DICTIONARY,
+                                    page_size=4096).blob)
+    assert blob[4] == C.VERSION_PAGED
+    at = 29 + int.from_bytes(blob[25:29], "little")  # past len + dict page
+    for n in (10, 2**32 - 1):
+        blob[at: at + 4] = n.to_bytes(4, "little")
+        with pytest.raises(ValueError):
+            C.decode_chunk(bytes(blob))
+"""
+
+
+def test_inflated_value_count_is_value_error():
+    """A chunk header whose value count is twice the payload's, or 2^32 - 1,
+    raises ValueError for every codec: no value-count mismatch comes out
+    silently, no IndexError from the RLE stream, no 32 GiB byte_array
+    PLAIN allocation. So does a multi-page chunk whose dictionary page
+    claims fewer entries than its indices reach, or 2^32 - 1. Runs in a
+    child process under a 2 GiB address-space limit, so a check that
+    fires after the allocation fails the test."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, OPENBLAS_NUM_THREADS="1",
+               OMP_NUM_THREADS="1")
+    res = subprocess.run([sys.executable, "-c", _COUNT_CHILD],
+                         env=env, capture_output=True, text=True,
+                         timeout=120)
+    assert res.returncode == 0, res.stderr[-3000:]

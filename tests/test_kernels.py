@@ -118,6 +118,18 @@ def test_rle_tail_cases():
     np.testing.assert_array_equal(out, vals)
 
 
+def test_rle_truncated_stream_raises():
+    """A stream that ends before its declared count, with a run header or
+    a multi-byte run value cut, is a ValueError, not an IndexError or a
+    wrong value."""
+    vals = np.array([1000] * 50 + [7] * 30, dtype=np.int64)
+    enc = rle.encode(vals, 10)
+    np.testing.assert_array_equal(rle.decode(enc, 80, 10)[0], vals)
+    for cut in range(len(enc)):
+        with pytest.raises(ValueError, match="corrupt RLE stream"):
+            rle.decode(enc[:cut], 80, 10)
+
+
 # ---------- PLAIN ----------
 @pytest.mark.parametrize("phys,dtype", [("int32", np.int32), ("int64", np.int64),
                                         ("float", np.float32), ("double", np.float64)])

@@ -33,6 +33,57 @@ def test_boolean_dictionary_rejected():
                               chunkmod.RLE_DICTIONARY)
 
 
+_FIXED_CODECS = (chunkmod.PLAIN, chunkmod.RLE, chunkmod.DELTA_BINARY_PACKED,
+                 chunkmod.RLE_DICTIONARY)
+CODECS_FOR = {
+    "int32": _FIXED_CODECS, "int64": _FIXED_CODECS,
+    "uint32": _FIXED_CODECS, "uint64": _FIXED_CODECS,
+    "float": (chunkmod.PLAIN, chunkmod.RLE_DICTIONARY),
+    "double": (chunkmod.PLAIN, chunkmod.RLE_DICTIONARY),
+    "flba:4": (chunkmod.PLAIN, chunkmod.RLE_DICTIONARY),
+    "boolean": (chunkmod.PLAIN, chunkmod.RLE),
+    "byte_array": (chunkmod.PLAIN, chunkmod.DELTA_LENGTH_BYTE_ARRAY,
+                   chunkmod.DELTA_BYTE_ARRAY, chunkmod.FSST,
+                   chunkmod.RLE_DICTIONARY),
+}
+
+
+def _typed_values(phys, n=2000):
+    keys = np.arange(n) % 37
+    if phys == "boolean":
+        return keys % 2 == 1
+    if phys == "byte_array":
+        return [f"v{k}".encode() for k in keys]
+    if phys.startswith("flba"):
+        return [f"{k:04d}".encode() for k in keys]
+    return keys.astype({"float": np.float32, "double": np.float64}
+                       .get(phys, phys))
+
+
+@pytest.mark.parametrize("phys", sorted(CODECS_FOR))
+def test_codecs_outside_table_rejected(phys):
+    """A codec a physical type cannot take is a ValueError on encode and on
+    decode. Doubles under RLE used to encode to a blob that decoded to
+    other values, and under DELTA_BINARY_PACKED raised numpy's
+    UFuncTypeError."""
+    vals = _typed_values(phys)
+    outside = [c for c in chunkmod.CODEC_NAMES if c not in CODECS_FOR[phys]]
+    plain_blob = bytearray(chunkmod.encode_chunk(vals, phys,
+                                                 chunkmod.PLAIN).blob)
+    for codec in outside:
+        with pytest.raises(ValueError, match="unsupported|not supported"):
+            chunkmod.encode_chunk(vals, phys, codec)
+        with pytest.raises(ValueError, match="unsupported|not supported"):
+            selector.encode_best(vals, phys, codec_override=codec)
+        plain_blob[5] = codec      # the header's codec byte
+        with pytest.raises(ValueError, match="unsupported|not supported"):
+            chunkmod.decode_chunk(bytes(plain_blob))
+    for codec in CODECS_FOR[phys]:
+        enc = chunkmod.encode_chunk(vals, phys, codec)
+        got = chunkmod.decode_chunk(enc.blob).values
+        assert list(got) == list(vals), chunkmod.CODEC_NAMES[codec]
+
+
 @pytest.mark.parametrize("phys,dtype", [("float", np.float32),
                                         ("double", np.float64)])
 def test_float_roundtrip(phys, dtype):
