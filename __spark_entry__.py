@@ -1140,7 +1140,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # fresh dir: stale files from an earlier run with different data
         # or partitioning would read back as duplicate rows
         shutil.rmtree(out, ignore_errors=True)
-        emit_parquet_dataset(df, out, encodings="auto").collect()
+        emit_parquet_dataset(df, out).collect()
         return _digest(spark.read.parquet(out))
     q["pq_sink_dataset"] = pq_sink_dataset
 
@@ -1168,7 +1168,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = os.path.join(tempfile.gettempdir(),
                            f"pcs_{os.getuid()}_snapshot_ds")
         shutil.rmtree(out, ignore_errors=True)
-        man = emit_parquet_dataset(df, out, encodings="auto").collect()
+        man = emit_parquet_dataset(df, out).collect()
         snapmod.commit_snapshot(out, man)
         # uncommitted decoy: same schema, garbage content
         (df.limit(7)
@@ -1202,7 +1202,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = os.path.join(tempfile.gettempdir(),
                            f"pcs_{os.getuid()}_engine_scan")
         shutil.rmtree(out, ignore_errors=True)
-        emit_parquet_dataset(df, out, encodings="auto").collect()
+        emit_parquet_dataset(df, out).collect()
         return _digest(read_parquet_dataset(spark, out))
     q["pq_engine_scan"] = pq_engine_scan
 
@@ -1231,7 +1231,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = os.path.join(tempfile.gettempdir(),
                            f"pcs_{os.getuid()}_scan_pushdown")
         shutil.rmtree(out, ignore_errors=True)
-        emit_parquet_dataset(df, out, encodings="auto",
+        emit_parquet_dataset(df, out,
                              bloom_filter_columns={"source"}).collect()
         return _digest(read_parquet_dataset(
             spark, out, predicate=[("n_tok", ">=", 20),
@@ -1264,8 +1264,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = os.path.join(tempfile.gettempdir(),
                            f"pcs_{os.getuid()}_partitioned")
         shutil.rmtree(out, ignore_errors=True)
-        emit_parquet_dataset(df, out, encodings="auto",
-                             partition_by=["source"]).collect()
+        emit_parquet_dataset(df, out, partition_by=["source"]).collect()
         return _digest(read_parquet_dataset(
             spark, out, predicate=[("source", "in", ["src3", "src7"]),
                                    ("n_tok", ">=", 50)]))
@@ -1330,7 +1329,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = os.path.join(tempfile.gettempdir(),
                            f"pcs_{os.getuid()}_dedup_deletes")
         shutil.rmtree(out, ignore_errors=True)
-        man = emit_parquet_dataset(df, out, encodings="auto").collect()
+        man = emit_parquet_dataset(df, out).collect()
         snap.commit_snapshot(out, man)
         kill = df.filter("CAST(doc_id AS BIGINT) % 7 = 0") \
             .select("doc_id")
@@ -1360,7 +1359,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = os.path.join(tempfile.gettempdir(),
                            f"pcs_{os.getuid()}_rename_evo")
         shutil.rmtree(out, ignore_errors=True)
-        man = emit_parquet_dataset(df, out, encodings="auto").collect()
+        man = emit_parquet_dataset(df, out).collect()
         snap.commit_snapshot(out, man)
         snap.rename_column(out, "source", "origin")
         uni = read_parquet_dataset(spark, out)
@@ -1621,8 +1620,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         })
         out = os.path.join(tempfile.gettempdir(),
                            f"pcs_{os.getuid()}_{tag}_{n}.parquet")
-        _write_one_file(tbl, out + ".tmp", out, 200, 64, "zstd",
-                        frozenset(), "auto", 1)
+        _write_one_file(tbl, out + ".tmp", out, 200, 64, "zstd", 1)
         return out
 
     def pq_writer_any_depth(spark: SparkSession, sf: str) -> DataFrame:

@@ -678,25 +678,13 @@ def _decode_dict_sections(mv, pos: int, dict_len: int, phys: str,
         n_plain = _u32(mv, pos)
         pl_len = _u32(mv, pos + 4)
         plain_blob = mv[pos + 8: pos + 8 + pl_len]
-    if dict_phys == "byte_array":
-        num_entries = _count_byte_array_entries(dict_blob)
-    else:
-        num_entries = len(dict_blob) // _NP_DTYPES[phys].itemsize
+    # a byte_array dictionary's entry count is where its walk ends
+    num_entries = None if dict_phys == "byte_array" else \
+        len(dict_blob) // _NP_DTYPES[phys].itemsize
     return dictionary.decode(
         None, dict_phys, dict_blob=dict_blob, indices_blob=indices_blob,
         num_entries=num_entries, n_dict_values=n_dict_values,
         plain_blob=plain_blob, n_plain_values=n_plain)
-
-
-def _count_byte_array_entries(blob: bytes) -> int:
-    n = 0
-    pos = 0
-    total = len(blob)
-    while pos < total:
-        ln = int.from_bytes(blob[pos: pos + 4], "little")
-        pos += 4 + ln
-        n += 1
-    return n
 
 
 # ---------------------------------------------------------------------------

@@ -239,7 +239,7 @@ def cmd_scan(args) -> None:
         # co-locate each partition value's rows so the layout gets one
         # file per (value, task) instead of values x tasks fan-out
         df = df.repartition(*part_by)
-    manifest = emit_parquet_dataset(df, args.out, encodings="auto",
+    manifest = emit_parquet_dataset(df, args.out,
                                     partition_by=part_by).collect()
     rows = sum(r.n_rows for r in manifest)
     out = {"files": len(manifest), "rows": int(rows), "out": args.out}
@@ -308,7 +308,6 @@ def cmd_compact(args) -> None:
                  .sortWithinPartitions(*sort_cols))
     man = emit_parquet_dataset(out, args.dir,
                                name_prefix="compact-",
-                               encodings="auto",
                                partition_by=part_by).collect()
     # parent pins the snapshot this rewrite was planned FROM: a commit
     # racing in between (append, kill list) fails the compaction loudly

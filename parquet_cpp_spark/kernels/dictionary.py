@@ -133,7 +133,8 @@ def decode(enc: "DictEncoded | tuple", phys: str, *, dict_blob=None,
 
     Mirrors ``DictionaryDecoder``: PLAIN-decode the dictionary, read the
     bit_width byte, RLE-decode indices, gather
-    (``encoding-internal.h:322-434``, fused gather at ``:351``)."""
+    (``encoding-internal.h:322-434``, fused gather at ``:351``). A
+    byte_array ``num_entries=None`` takes every entry in ``dict_blob``."""
     if isinstance(enc, DictEncoded):
         dict_blob, indices_blob = enc.dict_blob, enc.indices_blob
         num_entries, n_dict_values = enc.num_entries, enc.n_dict_values

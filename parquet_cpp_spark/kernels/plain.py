@@ -73,37 +73,50 @@ def encode_byte_array(values) -> bytes:
     return joined.buffers()[2].to_pybytes()[: view.total_bytes + 4 * n]
 
 
-def decode_byte_array_view(buf, n_values: int, pos: int = 0):
-    """-> (ba.ByteArrayView, end_pos). The length-prefix walk is an
-    inherently sequential scan (p += 4 + len(p)) kept as a minimal
-    int.from_bytes loop; stripping the 4-byte prefixes is one Arrow C pass
-    (binary_slice over record spans [start_i, start_{i+1})."""
+def decode_byte_array_view(buf, n_values: "int | None", pos: int = 0):
+    """-> (ba.ByteArrayView, end_pos). ``n_values=None`` decodes every
+    value up to the end of ``buf`` (a dictionary section stores no entry
+    count), so the count comes from this one walk. The length-prefix
+    walk is an inherently sequential scan (p += 4 + len(p)) kept as a
+    minimal int.from_bytes loop; stripping the 4-byte prefixes is one
+    Arrow C pass (binary_slice over record spans [start_i, start_{i+1})."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from . import ba
 
+    a = np.frombuffer(buf, dtype=np.uint8)
+    end = len(a)
+    if n_values is not None and 4 * n_values > end - pos:
+        # before the n-sized allocation
+        raise ValueError(f"corrupt PLAIN byte_array: {n_values} values "
+                         f"need more than the {end - pos} bytes left")
+    mv = buf if isinstance(buf, (bytes, memoryview)) else memoryview(buf)
+    p = pos
+    fb = int.from_bytes
+    if n_values is None:
+        # every value takes at least its 4-byte prefix
+        starts = np.empty((end - pos) // 4 + 2, dtype=np.int64)
+        n_values = 0
+        while p < end:
+            starts[n_values] = p
+            p += 4 + fb(mv[p: p + 4], "little")
+            n_values += 1
+    else:
+        starts = np.empty(n_values + 1, dtype=np.int64)
+        for i in range(n_values):
+            starts[i] = p
+            p += 4 + fb(mv[p: p + 4], "little")
+    if p > end:
+        raise ValueError(f"corrupt PLAIN byte_array: {n_values} values run "
+                         f"past the {end}-byte buffer")
     if n_values == 0:
         return ba.ByteArrayView(np.array([], dtype=np.uint8),
                                 np.zeros(1, dtype=np.int64)), pos
-    a = np.frombuffer(buf, dtype=np.uint8)
-    if 4 * n_values > len(a) - pos:   # before the n-sized allocation
-        raise ValueError(f"corrupt PLAIN byte_array: {n_values} values "
-                         f"need more than the {len(a) - pos} bytes left")
-    mv = buf if isinstance(buf, (bytes, memoryview)) else memoryview(buf)
-    starts = np.empty(n_values + 1, dtype=np.int64)
-    p = pos
-    fb = int.from_bytes
-    for i in range(n_values):
-        starts[i] = p
-        p += 4 + fb(mv[p: p + 4], "little")
-    if p > len(a):
-        raise ValueError(f"corrupt PLAIN byte_array: {n_values} values run "
-                         f"past the {len(a)}-byte buffer")
     starts[n_values] = p
     records = pa.LargeBinaryArray.from_buffers(
         pa.large_binary(), n_values,
-        [None, pa.py_buffer(starts), pa.py_buffer(a)])
+        [None, pa.py_buffer(starts[:n_values + 1]), pa.py_buffer(a)])
     payload = pc.binary_slice(records, 4, 1 << 40)
     return ba.from_arrow(payload), p
 

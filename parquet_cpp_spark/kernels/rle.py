@@ -366,10 +366,15 @@ def bit1_zero_positions(buf, n_values: int, pos: int, end: int) -> np.ndarray:
     headers wider than 4 bytes (runs >= 2^27 values; never produced for
     in-memory chunks)."""
     mv = memoryview(buf) if not isinstance(buf, memoryview) else buf
+    if n_values == 0:
+        return np.zeros(0, dtype=np.int64)
+    if end > len(mv):
+        raise ValueError(f"corrupt RLE stream: {end - pos} bytes declared, "
+                         f"{len(mv) - pos} left")
     b = np.frombuffer(mv, dtype=np.uint8, count=end)
     span = end - pos
-    if span <= 0 or n_values == 0:
-        return np.zeros(0, dtype=np.int64)
+    if span <= 0:
+        raise ValueError(f"corrupt RLE stream: empty for {n_values} values")
     # 4-byte LEB128 windows at every offset of the stream region
     pad = np.zeros(4, dtype=np.uint8)
     r = np.concatenate([b[pos:end], pad])
@@ -413,11 +418,19 @@ def bit1_zero_positions(buf, n_values: int, pos: int, end: int) -> np.ndarray:
     s_vals = np.where(s_lit, s_cnt * 8, s_cnt)       # values per run
     cum = np.zeros(len(starts) + 1, dtype=np.int64)
     np.cumsum(s_vals, out=cum[1:])
+    if cum[-1] < n_values:
+        raise ValueError(f"corrupt RLE stream: ends after {cum[-1]} of "
+                         f"{n_values} values")
     # runs past n_values would mean the byte length prefix and the value
     # count disagree; keep only runs that begin before n_values
     live = cum[:-1] < n_values
     starts, s_lit, s_cnt, s_hdrlen = (starts[live], s_lit[live],
                                       s_cnt[live], s_hdrlen[live])
+    # every kept run's header and payload (one value byte, or cnt literal
+    # bytes) must lie inside [pos, end): the jump table clips at end
+    if (starts[-1] + s_hdrlen[-1] + (s_cnt[-1] if s_lit[-1] else 1)) > end:
+        raise ValueError(f"corrupt RLE stream: a run overruns the "
+                         f"{span}-byte stream")
     dst0 = cum[:-1][live]
     take = np.minimum(np.where(s_lit, s_cnt * 8, s_cnt), n_values - dst0)
 

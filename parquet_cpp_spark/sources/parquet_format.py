@@ -387,9 +387,6 @@ def _decode_data_page_at(mv: memoryview, pos: int, leaf: LeafColumn,
             else:
                 deflev, _ = rle.decode(body, n_slots, bw, rep_len,
                                        out_dtype=np.int8)
-            n_present = int((deflev == leaf.max_def).sum())
-        else:
-            n_present = n_slots
         vcodec = chunk.codec if dp.get(7, True) else 0
         lvl_len = rep_len + def_len
         body = _decompress_page(body[lvl_len:], vcodec,
@@ -411,9 +408,18 @@ def _decode_data_page_at(mv: memoryview, pos: int, leaf: LeafColumn,
             bw = max(1, int(leaf.max_def).bit_length())
             deflev, p = rle.decode_length_prefixed(body, n_slots, bw, p,
                                                    out_dtype=np.int8)
-            n_present = int((deflev == leaf.max_def).sum())
-        else:
-            n_present = n_slots
+    for what, lev, top in (("repetition", replev, leaf.max_rep),
+                           ("definition", deflev, leaf.max_def)):
+        # a width that can express nothing above max_level bounds the
+        # levels itself; otherwise one max pass per page, before a
+        # level past the max can shrink the value count
+        if lev is not None and top < (1 << int(top).bit_length()) - 1 \
+                and len(lev) and int(lev.max()) > top:
+            raise ValueError(f"column {leaf.name!r}, page at byte {pos}: "
+                             f"{what} level {int(lev.max())} above the "
+                             f"maximum {top}")
+    n_present = n_slots if deflev is None \
+        else int((deflev == leaf.max_def).sum())
     if encoding == ENC_PLAIN:
         vals = _decode_plain(body, n_present, leaf.phys, p)
     elif encoding == ENC_DELTA_BP:

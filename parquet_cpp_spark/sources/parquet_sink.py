@@ -28,10 +28,17 @@ rep/def levels with strings extracted zero-copy from the Arrow buffers.
 Any DEEPER nesting (lists/structs/maps stacked to arbitrary depth) falls
 back to the general vectorized rep/def walker
 (``arrow_nested.ArrowColumn``); only leaf types neither path supports
-fail loudly. ``encodings='auto'`` applies the engine's
-codec selector per column per file; ``resume=True`` rebuilds manifest
-rows for already-committed files from their footer metadata instead of
-re-encoding (checkpoint resume for the parquet output).
+fail loudly.
+
+Every file's encodings come from the engine's codec selector, per column
+per file (``auto_encodings``): a low-cardinality leaf gets dictionary
+pages, a token stream that DELTA_BINARY_PACKED encodes smaller gets
+delta pages and never builds a dictionary. The reference writer instead
+dictionary-encodes every int32/int64/byte_array leaf
+(``properties.h:83``); the sink has no such mode. ``resume=True``
+rebuilds manifest rows for already-committed files from their footer
+metadata instead of re-encoding (checkpoint resume for the parquet
+output).
 """
 
 from __future__ import annotations
@@ -153,10 +160,6 @@ def _repeated_parts(col, name: str, nullable: bool = False):
     return lengths, valid, int(offsets[0]), int(offsets[-1])
 
 
-# default dictionary choice per phys (overridden by encodings='auto')
-_DICT_DEFAULT = ("int32", "int64", "byte_array")
-
-
 def specs_from_arrow(tbl):
     """Arrow table -> (specs, utf8 keys, temporal annotations, decimals).
 
@@ -179,7 +182,8 @@ def specs_from_arrow(tbl):
     don't cover (3-deep lists, nesting inside list<struct> elements,
     nested map values, ...) fall back to ``arrow_nested.ArrowColumn``,
     the general vectorized walker; genuinely unsupported leaf types
-    (ns/s timestamps, arbitrary extension types) still fail loudly."""
+    (ns/s timestamps, arbitrary extension types) still fail loudly.
+    Specs carry no dictionary choice: ``auto_encodings`` sets it."""
     import numpy as np
     import pyarrow as pa
 
@@ -215,7 +219,6 @@ def specs_from_arrow(tbl):
                     utf8.add(name)
                 return pw.NestedListColumn(
                     name, ephys, evals, lengths, ilengths,
-                    use_dictionary=ephys in _DICT_DEFAULT,
                     valid=valid, inner_valid=ivalid,
                     element_valid=evalid)
             elif pa.types.is_struct(ctyp):
@@ -231,8 +234,7 @@ def specs_from_arrow(tbl):
                         nullable=fld.nullable)
                     if futf8:
                         utf8.add(f"{name}.{fld.name}")
-                    fields.append((fld.name, fphys, fvals, fvalid,
-                                   fphys in _DICT_DEFAULT))
+                    fields.append((fld.name, fphys, fvals, fvalid))
                 return pw.ListStructColumn(
                     name, fields, lengths, valid=valid,
                     element_valid=evalid)
@@ -244,7 +246,6 @@ def specs_from_arrow(tbl):
                     utf8.add(name)
                 return pw.ListColumn(
                     name, ephys, evals, lengths,
-                    use_dictionary=ephys in _DICT_DEFAULT,
                     valid=valid, element_valid=evalid)
         elif pa.types.is_struct(typ):
             def _struct_spec(scol, dotted, s_null):
@@ -285,7 +286,6 @@ def specs_from_arrow(tbl):
                             utf8.add(fdotted)
                         fields.append((fld.name, pw.ListColumn(
                             fld.name, fphys, fvals, flengths,
-                            use_dictionary=fphys in _DICT_DEFAULT,
                             valid=flvalid, element_valid=fevalid)))
                         continue
                     fphys, fvals, fvalid, futf8 = _leaf_parts(
@@ -293,8 +293,7 @@ def specs_from_arrow(tbl):
                         nullable=fld.nullable)
                     if futf8:
                         utf8.add(fdotted)
-                    fields.append((fld.name, fphys, fvals, fvalid,
-                                   fphys in _DICT_DEFAULT))
+                    fields.append((fld.name, fphys, fvals, fvalid))
                 return pw.StructColumn(dotted.rsplit(".", 1)[-1], fields,
                                        valid=svalid)
             return _struct_spec(col, name, nullable)
@@ -316,15 +315,13 @@ def specs_from_arrow(tbl):
                 utf8.add(f"{name}.value")
             return pw.MapColumn(
                 name, kphys, kvals, vphys, vvals, lengths,
-                valid=valid, value_valid=vvalid,
-                key_use_dictionary=kphys in _DICT_DEFAULT,
-                value_use_dictionary=vphys in _DICT_DEFAULT)
+                valid=valid, value_valid=vvalid)
         else:
             phys, vals, valid, is_utf8 = _leaf_parts(
                 col, name, annotations, decimals, nullable=nullable)
             if is_utf8:
                 utf8.add(name)
-            return (name, phys, vals, valid, phys == "byte_array")
+            return (name, phys, vals, valid)
 
     for name in tbl.column_names:
         col = ba.one_chunk(tbl.column(name))
@@ -669,21 +666,19 @@ def file_stats_json(meta) -> "str | None":
 
 
 def _write_one_file(tbl, tmp: str, dest: str, row_group_rows, page_rows,
-                    compression, delta_columns, encodings,
-                    data_page_version, bloom_filter_columns=frozenset(),
+                    compression, data_page_version,
+                    bloom_filter_columns=frozenset(),
                     field_ids: "dict | None" = None):
     """Write one Arrow table as one engine PAR1 file (dot-prefixed temp +
-    atomic rename) and return its manifest tuple."""
+    atomic rename), encodings picked by ``auto_encodings``, and return
+    its manifest tuple."""
     import hashlib
 
     import numpy as np
 
     from . import parquet_writer as pw
     specs, utf8, annotations, decimals = specs_from_arrow(tbl)
-    d_cols = frozenset(delta_columns)
-    ba_delta: dict = {}
-    if encodings == "auto":
-        specs, d_cols, ba_delta = auto_encodings(specs)
+    specs, d_cols, ba_delta = auto_encodings(specs)
 
     def _struct_values(sc) -> int:
         n = 0
@@ -719,8 +714,7 @@ def _write_one_file(tbl, tmp: str, dest: str, row_group_rows, page_rows,
     # with DIFFERENT parameters and re-encode instead of trusting stale
     # files
     params = _params_tag(row_group_rows, page_rows, compression,
-                         delta_columns, encodings, data_page_version,
-                         bloom_filter_columns)
+                         data_page_version, bloom_filter_columns)
     pw.write_file(tmp, specs, tbl.num_rows,
                   row_group_rows=row_group_rows, page_rows=page_rows,
                   compression=compression, utf8_columns=utf8,
@@ -751,12 +745,13 @@ def _write_one_file(tbl, tmp: str, dest: str, row_group_rows, page_rows,
     return (dest, tbl.num_rows, n_values, len(data), sha, enc_tag, stats)
 
 
-def _params_tag(row_group_rows, page_rows, compression, delta_columns,
-                encodings, data_page_version,
+def _params_tag(row_group_rows, page_rows, compression, data_page_version,
                 bloom_filter_columns=frozenset()) -> str:
+    # "d=;e=auto" marks selector-encoded files: older selector files
+    # carry the same tag and stay resumable, while files of the former
+    # dictionary-everywhere default (e=default) re-encode
     tag = (f"rg={row_group_rows};pg={page_rows};c={compression};"
-           f"d={','.join(sorted(delta_columns))};e={encodings};"
-           f"v={data_page_version}")
+           f"d=;e=auto;v={data_page_version}")
     if bloom_filter_columns:
         # appended only when set: files written before blooms existed
         # keep their tag and stay resumable
@@ -797,8 +792,6 @@ def emit_parquet_dataset(df, out_dir: str,
                          row_group_rows: "int | None" = None,
                          page_rows: "int | None" = 2048,
                          compression: "str | None" = "zstd",
-                         delta_columns: "frozenset | set" = frozenset(),
-                         encodings: str = "default",
                          data_page_version: int = 1,
                          bloom_filter_columns: "frozenset | set"
                          = frozenset(),
@@ -814,7 +807,11 @@ def emit_parquet_dataset(df, out_dir: str,
     nondeterministic; the streaming sink does both) — or a retried task
     can emit the same rows in a different order under a different name,
     duplicating data. Returns the manifest DataFrame (lazy: files are
-    written when the manifest is consumed).
+    written when the manifest is consumed). Identical bytes also need the
+    same writer: a version whose encoder choices differ (the selector
+    replaced dictionary-everywhere pages as the only mode) writes the
+    same rows under another name, so drain or commit in-flight batches
+    before upgrading.
 
     ``partition_by``: ICEBERG-style partitioned layout — each task splits
     its rows by the distinct values of these columns and writes one file
@@ -855,8 +852,7 @@ def emit_parquet_dataset(df, out_dir: str,
                    f"{_attempt_tag()}.inprogress")
             dest = os.path.join(d, name_prefix + "part-{sha}.parquet")
             row = _write_one_file(sub, tmp, dest, row_group_rows,
-                                  page_rows, compression, delta_columns,
-                                  encodings, data_page_version,
+                                  page_rows, compression, data_page_version,
                                   frozenset(bloom_filter_columns),
                                   field_ids)
             yield _manifest_batch(row)
@@ -868,8 +864,6 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
                           row_group_rows: "int | None" = None,
                           page_rows: "int | None" = 2048,
                           compression: "str | None" = "zstd",
-                          delta_columns: "frozenset | set" = frozenset(),
-                          encodings: str = "default",
                           data_page_version: int = 1,
                           resume: bool = False,
                           slices_per_core: int = 4,
@@ -885,11 +879,10 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
     files) then ``os.replace`` — a retried task overwrites with identical
     bytes. The manifest checksum is the sha256 of the final file.
 
-    ``encodings='auto'`` runs the engine's codec auto-selector per column
-    per file (mapped onto parquet's encoding surface via
-    ``auto_encodings``) instead of the defaults (dict for strings/lists,
-    plus explicit ``delta_columns``); the manifest's ``encodings`` column
-    records each file's choices.
+    Each file's encodings come from the engine's codec auto-selector,
+    per column per file, mapped onto parquet's encoding surface via
+    ``auto_encodings``; the manifest's ``encodings`` column records each
+    file's choices.
 
     ``resume=True`` is the checkpoint-resume mode (the manifest
     anti-join's analog for the parquet output): a split whose destination
@@ -898,7 +891,10 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
     footer (``pcs.n_values`` / ``pcs.encodings`` key_value_metadata) and
     a re-hash of the bytes on disk, no re-encode. Names are source-tagged
     per (file, row_group), so resume trusts that the SOURCE split is
-    unchanged; truncated or foreign files re-encode."""
+    unchanged; truncated or foreign files re-encode, and so do files
+    written with other knobs, including the dictionary-everywhere pages
+    the sink wrote before the selector was its only mode
+    (``e=default`` in ``pcs.params``)."""
     from ..shipping import ensure_shipped
     from .parquet_direct import list_row_groups, task_source
     ensure_shipped(spark)
@@ -908,7 +904,6 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
     cores = spark.sparkContext.defaultParallelism
     n_parts = max(1, min(len(splits), cores * slices_per_core))
     splits_df = task_source(spark, splits, n_parts, "file string, rg int")
-    delta_cols = frozenset(delta_columns)
     bloom_cols = frozenset(bloom_filter_columns)
 
     def task(batches):
@@ -931,8 +926,7 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
                     # the pcs.params check and re-encodes
                     row = _manifest_from_existing(
                         dest, _params_tag(row_group_rows, page_rows,
-                                          compression, delta_cols,
-                                          encodings, data_page_version,
+                                          compression, data_page_version,
                                           bloom_cols))
                     if row is not None:
                         yield _manifest_batch(row)
@@ -944,8 +938,8 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
                         out_dir,
                         f".part-{tag}-{_attempt_tag()}.inprogress"),
                     dest,
-                    row_group_rows, page_rows, compression, delta_cols,
-                    encodings, data_page_version, bloom_cols)
+                    row_group_rows, page_rows, compression,
+                    data_page_version, bloom_cols)
                 yield _manifest_batch(row)
 
     return splits_df.mapInArrow(task, schema=MANIFEST_SCHEMA)

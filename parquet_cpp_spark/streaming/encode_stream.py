@@ -79,8 +79,13 @@ def start_parquet_emit_stream(spark: SparkSession, input_dir: str,
     manifest is written with dynamic partition overwrite on batch_id, so
     a batch replayed after a crash between manifest write and checkpoint
     commit REPLACES its own manifest rows instead of appending
-    duplicates. The output dir is a plain parquet dataset Spark/DuckDB
-    scan directly, growing one micro-batch at a time.
+    duplicates. The replay guarantee holds for one writer version: a
+    batch written but not committed before an upgrade that changes the
+    encoder's choices (the sink's dictionary-everywhere pages gave way
+    to the codec selector) replays under new names, next to the files of
+    its first run, so drain the stream before upgrading. The output dir
+    is a plain parquet dataset Spark/DuckDB scan directly, growing one
+    micro-batch at a time.
 
     ``snapshot=True`` additionally commits each micro-batch's manifest
     rows to the dataset's snapshot log (``sources/snapshots.py``) —

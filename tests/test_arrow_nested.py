@@ -212,7 +212,7 @@ def test_sink_fallback_dispatch():
 
 
 def test_auto_encodings_on_walker_leaves(tmp_path):
-    """encodings='auto' runs the selector per walker leaf: a
+    """The sink runs the selector per walker leaf: a
     low-cardinality int leaf flips to dictionary, a high-entropy one
     stays PLAIN; the manifest tag reports the dotted leaf names."""
     import pyarrow as pa
@@ -234,8 +234,7 @@ def test_auto_encodings_on_walker_leaves(tmp_path):
     # and the file still round-trips with the chosen encodings
     tmp = str(tmp_path / ".t")
     dest = str(tmp_path / "f.parquet")
-    row = sink._write_one_file(tbl, tmp, dest, 500, 100, "zstd",
-                               frozenset(), "auto", 1)
+    row = sink._write_one_file(tbl, tmp, dest, 500, 100, "zstd", 1)
     import pyarrow.parquet as pq
     assert pq.read_table(dest).column("c").to_pylist() == data
     assert row[2] == 2 * n   # two leaves, one value slot per row each
@@ -344,8 +343,7 @@ def test_distributed_sink_deep_nesting(spark, tmp_path):
     src = str(tmp_path / "src.parquet")
     pq.write_table(tbl, src, row_group_size=100)
     out = str(tmp_path / "out")
-    man = man_rows = write_parquet_dataset(spark, src, out,
-                                           encodings="auto").collect()
+    man = man_rows = write_parquet_dataset(spark, src, out).collect()
     assert len(man_rows) == 4
     back = spark.read.parquet(out).orderBy("id").collect()
     exp_deep = [None if d is None else d for d in deep]

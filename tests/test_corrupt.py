@@ -284,6 +284,23 @@ def test_delta_header_bounds():
             delta.decode(enc[:cut])
 
 
+def _run_limited(child: str) -> None:
+    """Run ``child`` in a fresh interpreter; it sets its own 2 GiB
+    address-space limit, so a check that fires after a large allocation
+    fails it."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, OPENBLAS_NUM_THREADS="1",
+               OMP_NUM_THREADS="1")
+    res = subprocess.run([sys.executable, "-c", child],
+                         env=env, capture_output=True, text=True,
+                         timeout=120)
+    assert res.returncode == 0, res.stderr[-3000:]
+
+
 _FSST_BOUNDS_CHILD = r"""
 import resource
 resource.setrlimit(resource.RLIMIT_AS, (2 << 30, 2 << 30))
@@ -321,17 +338,7 @@ def test_fsst_header_bounds():
     out-of-range symbol lengths and every truncation of a valid stream
     raise ValueError. Runs in a child process under a 2 GiB address-space
     limit, so a check that fires after the allocation fails the test."""
-    import os
-    import subprocess
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, PYTHONPATH=root, OPENBLAS_NUM_THREADS="1",
-               OMP_NUM_THREADS="1")
-    res = subprocess.run([sys.executable, "-c", _FSST_BOUNDS_CHILD],
-                         env=env, capture_output=True, text=True,
-                         timeout=120)
-    assert res.returncode == 0, res.stderr[-3000:]
+    _run_limited(_FSST_BOUNDS_CHILD)
 
 
 def test_fsst_code_past_symbol_table():
@@ -426,14 +433,123 @@ def test_inflated_value_count_is_value_error():
     claims fewer entries than its indices reach, or 2^32 - 1. Runs in a
     child process under a 2 GiB address-space limit, so a check that
     fires after the allocation fails the test."""
-    import os
-    import subprocess
-    import sys
+    _run_limited(_COUNT_CHILD)
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, PYTHONPATH=root, OPENBLAS_NUM_THREADS="1",
-               OMP_NUM_THREADS="1")
-    res = subprocess.run([sys.executable, "-c", _COUNT_CHILD],
-                         env=env, capture_output=True, text=True,
-                         timeout=120)
-    assert res.returncode == 0, res.stderr[-3000:]
+
+_BIT1_CUT_CHILD = r"""
+import resource
+resource.setrlimit(resource.RLIMIT_AS, (2 << 30, 2 << 30))
+
+import numpy as np
+import pytest
+
+from parquet_cpp_spark.kernels import rle
+
+rng = np.random.default_rng(11)
+streams = []
+for p_empty, avg in ((0.0, 40), (0.3, 3), (0.9, 2), (0.02, 200)):
+    lengths = rng.integers(1, 2 * avg, 300)
+    lengths[rng.random(300) < p_empty] = 0
+    slots = np.maximum(lengths, 1)
+    starts = np.cumsum(slots) - slots
+    rep = np.ones(int(slots.sum()), dtype=np.int64)
+    rep[starts] = 0
+    deflev = np.ones_like(rep)
+    deflev[starts[lengths == 0]] = 0
+    streams += [rep, deflev]
+streams.append((rng.random(5000) < 0.5).astype(np.int64))    # literal runs
+for lv in streams:
+    n = len(lv)
+    s = rle.encode_length_prefixed(lv, 1)
+    got, end = rle.decode_length_prefixed(s, n, 1)
+    assert end == len(s) and np.array_equal(got, lv)
+    payload = s[4:]
+    for k in range(len(s)):
+        # the buffer cut under an intact length prefix
+        with pytest.raises(ValueError, match="corrupt RLE"):
+            rle.decode_length_prefixed(s[:k], n, 1)
+        # a length prefix that agrees with the cut
+        if k >= 4:
+            cut = (k - 4).to_bytes(4, "little") + s[4:k]
+            with pytest.raises(ValueError, match="corrupt RLE"):
+                rle.decode_length_prefixed(cut, n, 1)
+    for k in range(len(payload)):
+        # V2 layout: the stream's bound is [pos, end), bytes follow it
+        with pytest.raises(ValueError, match="corrupt RLE"):
+            rle.decode_bit1(payload, n, 0, k)
+"""
+
+
+def test_bit1_level_stream_truncation():
+    """Every truncation of a valid bit-width-1 rep or def level stream
+    raises ValueError from the vectorized bit-1 path: the buffer cut
+    under its length prefix, a prefix that agrees with the cut, and a
+    V2-style [pos, end) bound inside a longer buffer. The kept runs must
+    cover the value count inside the stream, never index past it. Runs
+    under a 2 GiB address-space limit."""
+    _run_limited(_BIT1_CUT_CHILD)
+
+
+@pytest.mark.parametrize("encoding", ["plain", "dict", "delta", "dba"])
+def test_def_level_above_max_raises(tmp_path, encoding):
+    """A def level above the leaf's max_def (here 3 under max_def 2,
+    which a 2-bit width can carry) is rejected by pyarrow as malformed
+    and by the engine's page decoder with a ValueError naming the
+    column and page, whatever the page's value encoding: the check runs
+    on the levels, before the value count they imply is decoded."""
+    import pyarrow.parquet as pq
+
+    from parquet_cpp_spark.sources import parquet_format as pf
+    from parquet_cpp_spark.sources import parquet_writer as pw
+    from parquet_cpp_spark.sources.record_assembly import assemble_file
+
+    path = str(tmp_path / "s.parquet")
+    n = 50
+    vals = ba.from_list([b"k%03d" % i for i in range(n)]) \
+        if encoding == "dba" else np.arange(n, dtype=np.int32)
+    phys = "byte_array" if encoding == "dba" else "int32"
+    st = pw.StructColumn("st", [("a", phys, vals, np.ones(n, bool),
+                                 encoding == "dict")],
+                         valid=np.ones(n, bool))
+    pw.write_file(path, [st], n,
+                  delta_columns={"st.a"} if encoding == "delta" else (),
+                  delta_byte_array_columns={"st.a"}
+                  if encoding == "dba" else ())
+    data = bytearray(open(path, "rb").read())
+    meta = pf.read_footer(memoryview(bytes(data)))
+    assert meta.leaves[0].max_def == 2
+    chunk = meta.row_groups[0][0]
+    rd = pf._Compact(memoryview(bytes(data)), chunk.data_page_offset)
+    rd.struct()
+    # uncompressed V1 body: u32 len, then one RLE run (header 50 << 1,
+    # value byte 2) of def levels
+    body = rd.pos
+    assert bytes(data[body: body + 6]) == bytes([2, 0, 0, 0, 100, 2])
+    data[body + 5] = 3
+    with open(path, "wb") as fh:
+        fh.write(data)
+    with pytest.raises(Exception, match="Malformed levels"):
+        pq.read_table(path)
+    with pytest.raises(ValueError, match=r"column 'st.a', page at byte "
+                       rf"{chunk.data_page_offset}: definition level 3"):
+        assemble_file(path)
+
+
+def test_byte_array_dictionary_section_overrun():
+    """A one-page chunk's byte_array dictionary stores no entry count:
+    the decode walks the section to its end. A last length that runs
+    past the section raises ValueError; the intact blob decodes to the
+    same values."""
+    from parquet_cpp_spark.kernels import plain
+
+    vals = [f"entry-{i % 40}".encode() for i in range(400)]
+    blob = bytearray(chunkmod.encode_chunk(ba.from_list(vals), "byte_array",
+                                           chunkmod.RLE_DICTIONARY,
+                                           page_size=None).blob)
+    assert ba.to_list(chunkmod.decode_chunk(bytes(blob)).values) == vals
+    section = plain.encode_byte_array(list(dict.fromkeys(vals)))
+    at = bytes(blob).index(section) + len(section) - 4 - len(vals[39])
+    assert int.from_bytes(blob[at: at + 4], "little") == len(vals[39])
+    blob[at: at + 4] = (len(vals[39]) + 1).to_bytes(4, "little")
+    with pytest.raises(ValueError, match="run past"):
+        chunkmod.decode_chunk(bytes(blob))

@@ -50,7 +50,7 @@ def test_full_curation_pipeline(spark, tmp_path, capsys):
     # 1. partitioned ingest + snapshot
     man = emit_parquet_dataset(
         src.repartition(4, "source").sortWithinPartitions("doc_id"),
-        out, encodings="auto", partition_by=["source"]).collect()
+        out, partition_by=["source"]).collect()
     v1 = snap.commit_snapshot(out, man)["version"]
     assert v1 == 1
 

@@ -38,7 +38,7 @@ def dataset(spark, tmp_path):
     out = str(tmp_path / "ds")
     man = emit_parquet_dataset(
         src.repartition(4, "doc_id").sortWithinPartitions("doc_id"),
-        out, encodings="auto").collect()
+        out).collect()
     snap.commit_snapshot(out, man)
     kill = src.filter("CAST(doc_id AS BIGINT) % 7 = 0").select("doc_id")
     return out, src, kill

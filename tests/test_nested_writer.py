@@ -536,8 +536,7 @@ def test_sink_nested_dataset(tmp_path, spark):
                        .cast("int"))))
           .drop("id"))
     out = str(tmp_path / "nested_out")
-    man = emit_parquet_dataset(df.repartition(3), out,
-                               encodings="auto").collect()
+    man = emit_parquet_dataset(df.repartition(3), out).collect()
     assert len(man) == 3
     assert all("meta.bucket=" in r.encodings and "scores.key=" in
                r.encodings for r in man)
@@ -582,8 +581,7 @@ def test_sink_temporal_decimal_in_nested(tmp_path, spark):
                    "times": "timestamp_ntz_ms"}
     assert dec == {"meta.amt": (9, 2)}
     path = str(tmp_path / "td.parquet")
-    _write_one_file(tbl, path + ".tmp", path, 100, 50, None,
-                    frozenset(), "auto", 1)
+    _write_one_file(tbl, path + ".tmp", path, 100, 50, None, 1)
     rows = sorted(spark.read.parquet(path).collect(),
                   key=lambda r: r.id)
     assert rows[0].meta.d == dt.date(2024, 1, 1)
@@ -607,8 +605,7 @@ def test_sink_temporal_decimal_in_nested(tmp_path, spark):
                                     None, []],
                                    pa.list_(pa.decimal128(9, 2)))})
     path2 = str(tmp_path / "ldec.parquet")
-    _write_one_file(tbl2, path2 + ".tmp", path2, 100, 50, None,
-                    frozenset(), "auto", 1)
+    _write_one_file(tbl2, path2 + ".tmp", path2, 100, 50, None, 1)
     assert _duck(path2, "select x from '{p}' order by id") == \
         [([Decimal("1.00"), Decimal("-2.25")],), (None,), ([],)]
 
@@ -648,8 +645,7 @@ def test_sink_deep_nested_dataset(tmp_path, spark):
                   F.when(F.col("id") % 2 == 0, F.col("id") % 17)
                    .cast("int").alias("n"))).alias("q"))))
     out = str(tmp_path / "deep_out")
-    man = emit_parquet_dataset(df.repartition(2), out,
-                               encodings="auto").collect()
+    man = emit_parquet_dataset(df.repartition(2), out).collect()
     assert len(man) == 2
     assert all("meta.q.score=" in r.encodings and "grams=" in r.encodings
                and "spans.w=" in r.encodings and "prof.tags=" in r.encodings

@@ -43,8 +43,7 @@ def test_distributed_parquet_emission_roundtrip(spark, tmp_path):
     src_path = synthesize_tokens_parquet(
         str(tmp_path / "tok.parquet"), 3000, 11, row_group_size=500)
     out = str(tmp_path / "pqout")
-    man = write_parquet_dataset(spark, src_path, out,
-                                delta_columns={"n_tok"}).collect()
+    man = write_parquet_dataset(spark, src_path, out).collect()
     assert len(man) == 6                      # one file per source row group
     files = sorted(r.file for r in man)
     assert files == sorted(os.path.join(out, f) for f in os.listdir(out))
@@ -173,8 +172,7 @@ def test_sink_on_sf001_documents_tokens(spark, tmp_path):
     srcp = str(tmp_path / "src")
     src.repartition(4).write.parquet(srcp)
     out = str(tmp_path / "pqout")
-    man = write_parquet_dataset(spark, srcp, out,
-                                delta_columns={"n_tok"}).collect()
+    man = write_parquet_dataset(spark, srcp, out).collect()
     assert len(man) == len(os.listdir(out)) and len(man) >= 4
     a = _csum(spark.read.parquet(srcp))
     b = _csum(spark.read.parquet(out))
@@ -185,7 +183,7 @@ def test_sink_on_sf001_documents_tokens(spark, tmp_path):
 
 
 def test_sink_auto_encodings(spark, tmp_path):
-    """encodings='auto' runs the engine's codec selector per column per
+    """The sink runs the engine's codec selector per column per
     file and maps it onto parquet's surface: the synthetic token table
     gets dict for tokens/source (selector: RLE_DICTIONARY) and delta or
     dict for n_tok — recorded in the manifest's encodings column — and
@@ -196,8 +194,7 @@ def test_sink_auto_encodings(spark, tmp_path):
     src_path = synthesize_tokens_parquet(
         str(tmp_path / "tok.parquet"), 1000, 19, row_group_size=500)
     out = str(tmp_path / "pqout")
-    man = write_parquet_dataset(spark, src_path, out,
-                                encodings="auto").collect()
+    man = write_parquet_dataset(spark, src_path, out).collect()
     assert len(man) == 2
     for r in man:
         enc = dict(kv.split("=") for kv in r.encodings.split(","))
@@ -213,7 +210,7 @@ def test_sink_auto_encodings(spark, tmp_path):
 
 
 def test_sink_auto_picks_byte_array_delta(spark, tmp_path):
-    """encodings='auto' must not fall back to PLAIN when FSST (which
+    """The selector must not fall back to PLAIN when FSST (which
     parquet can't express) wins the size estimate: the selector ranks
     only parquet-expressible codecs for the sink, so prefix-heavy string
     leaves — flat AND nested — get DELTA_BYTE_ARRAY pages, and the file
@@ -236,8 +233,7 @@ def test_sink_auto_picks_byte_array_delta(spark, tmp_path):
     src = str(tmp_path / "src.parquet")
     pq.write_table(tbl, src)
     out = str(tmp_path / "out")
-    man = sink.write_parquet_dataset(spark, src, out,
-                                     encodings="auto").collect()
+    man = sink.write_parquet_dataset(spark, src, out).collect()
     enc = dict(kv.split("=") for kv in man[0].encodings.split(","))
     assert enc["doc_id"] == "dba"
     assert enc["meta.path"] == "dba"
@@ -387,7 +383,7 @@ def test_sink_resume_skips_committed_files(spark, tmp_path):
         str(tmp_path / "tok.parquet"), 2000, 7, row_group_size=500)
     out = str(tmp_path / "pqout")
     m1 = sorted(map(tuple, write_parquet_dataset(
-        spark, src_path, out, encodings="auto").collect()))
+        spark, src_path, out).collect()))
     mtimes = {f: os.path.getmtime(os.path.join(out, f))
               for f in os.listdir(out)}
     # truncate one committed file -> resume must re-encode exactly it
@@ -397,7 +393,7 @@ def test_sink_resume_skips_committed_files(spark, tmp_path):
     open(vpath, "wb").write(data[: len(data) // 2])
 
     m2 = sorted(map(tuple, write_parquet_dataset(
-        spark, src_path, out, encodings="auto", resume=True).collect()))
+        spark, src_path, out, resume=True).collect()))
     assert m2 == m1                     # manifest identical incl. checksums
     for f, t in mtimes.items():
         if f == victim:
@@ -515,3 +511,54 @@ def test_sink_decimal_columns(spark, tmp_path):
         ctx.prec = 60            # python Decimal's default 28 would round
         assert s9 == sum(x for x in d9 if x is not None)
         assert s38 == sum(x for x in d38 if x is not None)
+
+
+
+def test_sink_selector_files_read_everywhere(spark, tmp_path):
+    """Both sink entry points run the codec selector: delta pages for the
+    token stream and doc_id, the same manifest encodings from each. The
+    files read equal to the source through pyarrow, DuckDB, Spark's JVM
+    reader and the engine's assemble_file, and their pcs.params carry
+    the "d=;e=auto" tag that files written by the selector always have,
+    so those stay resumable."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_cpp_spark.sources import parquet_format as pf
+    from parquet_cpp_spark.sources.parquet_sink import (emit_parquet_dataset,
+                                                        write_parquet_dataset)
+    from parquet_cpp_spark.sources.record_assembly import assemble_file
+    from parquet_cpp_spark.sources.tokens import synthesize_tokens_parquet
+
+    src = synthesize_tokens_parquet(str(tmp_path / "tok.parquet"), 2000, 13,
+                                    row_group_size=500)
+    out, em = str(tmp_path / "ds"), str(tmp_path / "em")
+    ds_rows = write_parquet_dataset(spark, src, out).collect()
+    em_rows = emit_parquet_dataset(
+        spark.read.parquet(src).repartition(2, "doc_id")
+        .sortWithinPartitions("doc_id"), em).collect()
+    assert len(ds_rows) == 4 and len(em_rows) == 2
+    for r in ds_rows + em_rows:
+        tags = dict(kv.split("=") for kv in r.encodings.split(","))
+        assert tags["tokens"] == "delta" and tags["doc_id"] == "dba", \
+            r.encodings
+        with open(r.file, "rb") as fh:
+            kv = pf.read_footer(memoryview(fh.read())).key_value_metadata
+        assert kv["pcs.params"] == "rg=None;pg=2048;c=zstd;d=;e=auto;v=1"
+
+    want = pq.read_table(src).sort_by("doc_id")
+    assert pq.read_table(out).sort_by("doc_id").equals(want)
+    own = pa.concat_tables([assemble_file(r.file) for r in ds_rows])
+    assert own.select(want.column_names).sort_by("doc_id").equals(want)
+    duck = duckdb.connect().execute(
+        f"SELECT doc_id, tokens, n_tok, source FROM "
+        f"read_parquet('{out}/*.parquet') ORDER BY doc_id").arrow()
+    assert duck.column("tokens").to_pylist() == \
+        want.column("tokens").to_pylist()
+    assert duck.column("doc_id").to_pylist() == \
+        want.column("doc_id").to_pylist()
+    a = _csum(spark.read.parquet(src))
+    for d in (out, em):
+        b = _csum(spark.read.parquet(d))
+        assert (a.s, a.n) == (b.s, b.n) == (a.s, 2000)

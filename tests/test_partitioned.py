@@ -41,8 +41,7 @@ def dataset(spark, tmp_path_factory):
     df = (src.select("doc_id", "tokens", "n_tok", "source")
           .repartition(4, "source").sortWithinPartitions("doc_id"))
     out = str(tmp_path_factory.mktemp("part") / "ds")
-    man = emit_parquet_dataset(df, out, encodings="auto",
-                               partition_by=["source"]).collect()
+    man = emit_parquet_dataset(df, out, partition_by=["source"]).collect()
     return out, df, man
 
 

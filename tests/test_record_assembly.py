@@ -70,8 +70,7 @@ def test_engine_written_kitchen_sink(tmp_path):
     from parquet_cpp_spark.sources.parquet_sink import _write_one_file
     tbl = _kitchen_sink()
     path = str(tmp_path / "ks.parquet")
-    _write_one_file(tbl, path + ".tmp", path, 2, 2, "zstd",
-                    frozenset(), "auto", 1)
+    _write_one_file(tbl, path + ".tmp", path, 2, 2, "zstd", 1)
     _assert_equal(tbl, assemble_file(path))
 
 
@@ -91,8 +90,7 @@ def test_fuzz_engine_roundtrip(tmp_path, seed):
             [_random_value(rng, typ, 3) for _ in range(n)], type=typ)
     tbl = pa.table(cols)
     path = str(tmp_path / "fz.parquet")
-    _write_one_file(tbl, path + ".tmp", path, 17, 5, "snappy",
-                    frozenset(), "auto", 1)
+    _write_one_file(tbl, path + ".tmp", path, 17, 5, "snappy", 1)
     _assert_equal(tbl, assemble_file(path))
 
 
@@ -265,8 +263,7 @@ def test_fuzz_depth4_engine_roundtrip(tmp_path, seed):
             [_random_value(rng, typ, 4) for _ in range(n)], type=typ)
     tbl = pa.table(cols)
     path = str(tmp_path / "fz4.parquet")
-    _write_one_file(tbl, path + ".tmp", path, 13, 4, "zstd",
-                    frozenset(), "auto", 1)
+    _write_one_file(tbl, path + ".tmp", path, 13, 4, "zstd", 1)
     _assert_equal(tbl, assemble_file(path))
     # and row-group-restricted assembly re-concatenates to the whole
     import pyarrow as _pa
@@ -325,7 +322,7 @@ def test_read_parquet_dataset_predicate_pushdown(tmp_path, spark):
           .drop("id")
           .repartitionByRange(4, "n_tok")
           .sortWithinPartitions("n_tok"))
-    emit_parquet_dataset(df, out, encodings="auto",
+    emit_parquet_dataset(df, out,
                          bloom_filter_columns={"doc_id"}).collect()
     jvm = spark.read.parquet(out)
 

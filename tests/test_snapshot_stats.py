@@ -40,7 +40,7 @@ def dataset(spark, tmp_path_factory):
           .repartitionByRange(4, "n_tok", "doc_id")
           .sortWithinPartitions("n_tok", "doc_id"))
     out = str(tmp_path_factory.mktemp("snapstats") / "ds")
-    man = emit_parquet_dataset(df, out, encodings="auto").collect()
+    man = emit_parquet_dataset(df, out).collect()
     ver = snap.commit_snapshot(out, man)["version"]
     return out, df, man, ver
 

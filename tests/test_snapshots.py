@@ -28,8 +28,7 @@ def _write_file(out_dir: str, name: str, lo: int, hi: int) -> tuple:
     tbl = pa.table({"id": pa.array(range(lo, hi), pa.int64())})
     dest = os.path.join(out_dir, name)
     return sink._write_one_file(tbl, dest + ".inprogress", dest,
-                                None, None, None, frozenset(),
-                                "default", 1)
+                                None, None, None, 1)
 
 
 def test_commit_read_isolation_and_diff(spark, tmp_path):
@@ -264,8 +263,7 @@ def test_sink_manifest_rows_commit_end_to_end(spark, tmp_path):
     src = synthesize_tokens_parquet(str(tmp_path / "tok.parquet"),
                                     800, 31, row_group_size=400)
     out = str(tmp_path / "ds")
-    man = write_parquet_dataset(spark, src, out,
-                                encodings="auto").collect()
+    man = write_parquet_dataset(spark, src, out).collect()
     doc = snap.commit_snapshot(out, man)
     assert doc["total_files"] == len(man) == 2
     assert doc["total_rows"] == 800

@@ -43,7 +43,7 @@ def main() -> None:
     man = emit_parquet_dataset(
         src.repartitionByRange(600, "n_tok", "doc_id")
            .sortWithinPartitions("n_tok", "doc_id"),
-        out, encodings="auto").collect()
+        out).collect()
     snap.commit_snapshot(out, man)
 
     pred = [("n_tok", ">=", 950)]

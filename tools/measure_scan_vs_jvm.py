@@ -3,7 +3,7 @@ JVM parquet reader.
 
 The read-side counterpart of measure_sink_vs_jvm: write the cached
 2M-row (~512M-token) bench table once as ENGINE parquet
-(`write_parquet_dataset`, encodings='auto', uncompressed pages), then
+(`write_parquet_dataset`, uncompressed pages), then
 time (a) `record_assembly.read_parquet_dataset` — executors assemble
 Arrow batches from rep/def levels, no JVM reader, no pyarrow.parquet —
 and (b) `spark.read.parquet` on the SAME directory, both draining
@@ -43,8 +43,7 @@ def main() -> None:
     out = os.path.join(REPO, "data", "scan_vs_jvm_ds")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
-    write_parquet_dataset(spark, path, out, compression=None,
-                          encodings="auto").count()
+    write_parquet_dataset(spark, path, out, compression=None).count()
 
     def drain_full(df) -> int:
         # hash every column so Catalyst cannot prune the JVM scan:
@@ -113,8 +112,7 @@ def main() -> None:
         spark.read.parquet(path)
         .repartitionByRange(32, "n_tok", "doc_id")
         .sortWithinPartitions("n_tok", "doc_id"),
-        clus, compression=None, encodings="auto",
-        row_group_rows=8192).collect()
+        clus, compression=None, row_group_rows=8192).collect()
     thr = int(spark.read.parquet(path).agg(
         F.percentile_approx("n_tok", 0.99).alias("q")).collect()[0].q)
     pred = [("n_tok", ">=", thr)]

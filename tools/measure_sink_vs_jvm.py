@@ -2,10 +2,9 @@
 
 The only same-workload comparison available against a production writer:
 encode the cached 2M-row (~512M-token) bench table into (a) a directory
-of ENGINE-written parquet files (`write_parquet_dataset`,
-encodings='auto' — executors run the codec selector and the engine's own
-kernels per file) and (b) Spark's built-in JVM parquet writer on the
-same DataFrame, both uncompressed-page configurations, best-of-2 after a
+of ENGINE-written parquet files (`write_parquet_dataset`: executors
+run the codec selector and the engine's own kernels per file) and
+(b) Spark's built-in JVM parquet writer on the same DataFrame, both uncompressed-page configurations, best-of-2 after a
 warm run. Prints one JSON line and records it into BENCH_local.json
 under "sink_vs_jvm" (SCALE.md round-6/7 measurement).
 
@@ -51,8 +50,8 @@ def main() -> None:
         shutil.rmtree(out_engine, ignore_errors=True)
         os.makedirs(out_engine, exist_ok=True)
         t0 = time.perf_counter()
-        write_parquet_dataset(spark, path, out_engine, compression=None,
-                              encodings="auto").count()
+        write_parquet_dataset(spark, path, out_engine,
+                              compression=None).count()
         return time.perf_counter() - t0
 
     def jvm_run() -> float:
