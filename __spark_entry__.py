@@ -1440,8 +1440,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         i17 = (ids % 17).astype(np.int32)
 
         # grams: list<list<int32>> — null row / 1-2 inner lists / null
-        # inner list (every def class the NestedListColumn spec has,
-        # minus element nulls which pytest covers)
+        # inner list (every def class a two-deep list has, minus element
+        # nulls which pytest covers)
         gvalid = ids % 5 != 0
         two = gvalid & (ids % 3 != 0)
         g_outer = np.where(gvalid, np.where(ids % 3 != 0, 2, 1), 0)
@@ -1559,7 +1559,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _write_any_depth_file(sf: str, tag: str) -> str:
         """Build the any-depth nested table (deterministic from
         ``documents`` doc_ids) and write it as ONE engine PAR1 file via
-        the sink's walker fallback; returns the file path. Shared by
+        the sink's rep/def walker; returns the file path. Shared by
         pq_writer_any_depth (Spark JVM read-back) and pq_read_assembly
         (engine record-assembly read-back)."""
         import tempfile
@@ -1624,10 +1624,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return out
 
     def pq_writer_any_depth(spark: SparkSession, sf: str) -> DataFrame:
-        """ANY-depth nesting through the sink's GENERAL walker fallback
-        (r7, third wave): three column shapes the specialized fast paths
-        reject — list<list<list<int32>>> (3-deep), map<string,
-        list<int32>> (nested map value, incl. a NULL value), and
+        """ANY-depth nesting through the sink's rep/def walker: three
+        column shapes deeper than the numpy spec classes express —
+        list<list<list<int32>>> (3-deep), map<string, list<int32>>
+        (nested map value, incl. a NULL value), and
         list<struct<a:int32, t:list<string>>> (a list inside a
         list<struct> element) — go through ``specs_from_arrow`` →
         ``arrow_nested.ArrowColumn`` (the vectorized analog of the

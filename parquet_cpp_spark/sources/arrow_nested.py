@@ -1,43 +1,39 @@
-"""Arbitrary-depth Arrow columns for the PAR1 writer: the general
-rep/def level builder.
+"""Arrow columns for the PAR1 writer: the one rep/def level builder.
 
-The specialized spec classes in ``parquet_writer`` (ListColumn,
-StructColumn, MapColumn, NestedListColumn, ListStructColumn) cover the
-common shapes with hand-derived level schemes; this module is the
-GENERAL path — one recursive, fully vectorized walker that turns a
-pyarrow array of ANY supported nesting (lists / structs / maps stacked
-to any depth, nulls at every level) into the writer's ``_Leaf`` model
-(dense values + precomputed rep/def level streams + row offset maps)
-plus the matching thrift schema-tree elements.
+Every column the writer takes from Arrow goes through ``ArrowColumn``:
+one recursive, fully vectorized walker that turns a pyarrow array of any
+supported nesting (lists / structs / maps stacked to any depth, nulls at
+every level, flat columns as the depth-0 case) into the writer's
+``_Leaf`` model (dense values + precomputed rep/def level streams + row
+offset maps) plus the matching thrift schema-tree elements. The sink
+hands it each Arrow column (``parquet_sink.specs_from_arrow``), and the
+writer's numpy spec classes (``parquet_writer.ListColumn`` and friends)
+build an Arrow array and hand that to it.
 
 This is the reference's recursive Arrow path builder re-expressed in
-numpy: ``/root/reference/src/parquet/arrow/path_internal.cc`` walks
-each column's type tree maintaining per-node repetition/definition
-context and emits one leaf stream per primitive node;
-``arrow/schema.cc`` mirrors the same walk for the SchemaElement tree.
-Identical level semantics, different execution strategy — instead of
-per-value state machines we carry whole-column slot arrays
-(``slot_idx`` / ``rep_first`` / ``defl``) down the recursion and expand
-them with ``np.repeat``/cumsum at each repeated node, so the cost per
-level is O(slots) vectorized work with no per-row Python.
+numpy: ``arrow/path_internal.cc`` walks each column's type tree
+maintaining per-node repetition/definition context and emits one leaf
+stream per primitive node; ``arrow/schema.cc`` mirrors the same walk for
+the SchemaElement tree. Identical level semantics, different execution
+strategy — instead of per-value state machines we carry whole-column
+slot arrays (``slot_idx`` / ``rep_first`` / ``defl``) down the recursion
+and expand them with ``np.repeat``/cumsum at each repeated node, so the
+cost per level is O(slots) vectorized work with no per-row Python.
 
-Level scheme (parquet-format logical rules, the same accounting the
-specialized classes use): every OPTIONAL node on a path adds one def
-level, every REPEATED node adds one def level and one rep level; a
-slot that terminates at a node (null value, null/empty list, null
-struct ancestor) emits one marker slot at every leaf below it carrying
-the def level accumulated to the cut point. A node is emitted OPTIONAL
-iff the Arrow FIELD is nullable OR the batch contains nulls at it —
-schema-driven, so sibling partitions of one dataset (with and without
-observed nulls) write the SAME parquet schema; an all-present OPTIONAL
-node costs one RLE run of def levels, not a schema divergence.
+Level scheme (parquet-format logical rules): every OPTIONAL node on a
+path adds one def level, every REPEATED node adds one def level and one
+rep level; a slot that terminates at a node (null value, null/empty
+list, null struct ancestor) emits one marker slot at every leaf below it
+carrying the def level accumulated to the cut point. A node is emitted
+OPTIONAL iff the Arrow FIELD is nullable OR the batch contains nulls at
+it — schema-driven, so sibling partitions of one dataset (with and
+without observed nulls) write the SAME parquet schema; an all-present
+OPTIONAL node costs one RLE run of def levels, not a schema divergence.
 
-``ArrowColumn`` plugs into ``write_file`` through three duck-typed
-hooks (``pcs_leaves`` / ``pcs_schema`` / ``pcs_annotations``) so the
-writer keeps zero imports of this module; ``parquet_sink`` falls back
-to it for any column shape its specialized fast paths don't express
-(3-deep lists, nesting inside list<struct> elements, map values that
-are themselves lists/structs/maps, list<decimal>, ...).
+``ArrowColumn`` plugs into ``write_file`` through three duck-typed hooks
+(``pcs_leaves`` / ``pcs_schema`` / ``pcs_annotations``). Leaves start
+without dictionary pages; the caller (a spec's ``use_dictionary`` flags,
+or the sink's codec selector) sets each leaf's flag.
 """
 
 from __future__ import annotations
@@ -48,18 +44,94 @@ from ..kernels import ba
 
 _SYNTH = ("list", "element", "key_value")
 
+_FLAT_PHYS = {"int32": "int32", "int64": "int64", "float": "float",
+              "double": "double", "bool": "boolean"}
 
-def _elem_indices(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """Concatenated ``arange(starts[i], starts[i]+lengths[i])`` without a
-    Python loop: repeat each start, add a per-group ramp."""
-    total = int(lengths.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    rep_starts = np.repeat(starts, lengths)
-    cum = np.zeros(len(lengths), dtype=np.int64)
-    np.cumsum(lengths[:-1], out=cum[1:])
-    ramp = np.arange(total, dtype=np.int64) - np.repeat(cum, lengths)
-    return rep_starts + ramp
+
+def _idx_dtype(bound: int):
+    """Narrowest index dtype holding values up to ``bound``: int32 halves
+    the slot arrays of a 6.4M-element list column."""
+    return np.int32 if bound < 2**31 - 1 else np.int64
+
+
+def _valid_mask(col, nullable: bool):
+    """Validity mask for one node: observed nulls, else an ALL-TRUE mask
+    when the Arrow FIELD says nullable. Parquet repetition must follow
+    the SCHEMA, not the data — otherwise two partitions of one dataset
+    write different file schemas (REQUIRED in the null-free partition,
+    OPTIONAL in the rest) and every schema-checked reader of the
+    directory fails. Matches Spark's own parquet writer (nullable Spark
+    field -> OPTIONAL always)."""
+    if col.null_count:
+        return ~np.asarray(col.is_null())
+    return np.ones(len(col), dtype=bool) if nullable else None
+
+
+def _scalar_parts(col, name: str, nullable: bool = False):
+    """Arrow scalar array -> (phys, slot-aligned values, valid, is_utf8).
+
+    Strings/binary become a ``ba.ByteArrayView`` straight from the Arrow
+    offsets/values buffers (``ba.from_arrow`` — no per-row Python, the
+    ``encode_arrow`` hot-path shape), numerics a numpy view; nulls are
+    masked via ``valid`` with slots filled by a typed zero (the writer
+    drops them by mask). ``nullable`` (the Arrow FIELD's flag) forces an
+    OPTIONAL mask even when this batch happens to contain no nulls."""
+    import pyarrow as pa
+
+    typ = col.type
+    if pa.types.is_string(typ) or pa.types.is_large_string(typ) \
+            or pa.types.is_binary(typ) or pa.types.is_large_binary(typ):
+        utf8 = not (pa.types.is_binary(typ) or pa.types.is_large_binary(typ))
+        valid = _valid_mask(col, nullable)
+        if col.null_count:
+            col = col.fill_null("" if utf8 else b"")
+        return "byte_array", ba.from_arrow(col), valid, utf8
+    if str(typ) in _FLAT_PHYS:
+        valid = _valid_mask(col, nullable)
+        if col.null_count:
+            col = col.fill_null(False if str(typ) == "bool" else 0)
+        return (_FLAT_PHYS[str(typ)], col.to_numpy(zero_copy_only=False),
+                valid, False)
+    raise ValueError(f"column {name}: arrow type {typ} out of "
+                     "parquet_sink scope")
+
+
+def _leaf_parts(col, name: str, annotations: dict, decimals: dict,
+                nullable: bool = False):
+    """``_scalar_parts`` plus temporal/decimal handling at any leaf
+    position: date32/timestamp store as annotated ints keyed by the
+    dotted leaf name ``name`` (tz-aware timestamps are UTC instants,
+    tz-naive ones stay NTZ); decimal128 becomes minimal-width big-endian
+    FLBA (the reference's DecimalSize coercion,
+    ``arrow/writer.cc:572-604``) with ``decimals[name] = (p, s)``."""
+    import pyarrow as pa
+
+    typ = col.type
+    if pa.types.is_decimal128(typ):
+        from ..logical import decimal_flba_from_arrow
+        valid = _valid_mask(col, nullable)
+        mat, precision, scale = decimal_flba_from_arrow(col)
+        decimals[name] = (precision, scale)
+        return f"flba:{mat.shape[1]}", mat, valid, False
+    if pa.types.is_date32(typ) or pa.types.is_timestamp(typ):
+        if pa.types.is_date32(typ):
+            phys, ann = "int32", "date"
+            col = col.cast(pa.int32())
+        else:
+            unit = typ.unit
+            if unit not in ("ms", "us"):
+                raise ValueError(f"column {name}: timestamp[{unit}] "
+                                 "out of scope (ms/us only)")
+            phys = "int64"
+            ann = f"timestamp_{unit}" if typ.tz is not None \
+                else f"timestamp_ntz_{unit}"
+            col = col.cast(pa.timestamp(unit)).cast(pa.int64())
+        annotations[name] = ann
+        valid = _valid_mask(col, nullable)
+        if col.null_count:
+            col = col.fill_null(0)
+        return phys, col.to_numpy(zero_copy_only=False), valid, False
+    return _scalar_parts(col, name, nullable=nullable)
 
 
 class ArrowColumn:
@@ -71,6 +143,8 @@ class ArrowColumn:
     def __init__(self, name: str, array, nullable: bool = False):
         array = ba.one_chunk(array)
         self.name = name
+        self.array = array
+        self.nullable = nullable
         self._leaves: list = []
         self._schema: list = []     # ("group", rep, name, nchildren, conv)
         #                           | ("leaf", leaf_obj, rep, name, ann_key)
@@ -79,7 +153,7 @@ class ArrowColumn:
         self._decimals: dict = {}
         self._n_values = 0   # value slots across leaves (manifest metric)
         n = len(array)
-        slot_idx = np.arange(n, dtype=np.int64)
+        slot_idx = np.arange(n, dtype=_idx_dtype(n))
         rep_first = np.zeros(n, dtype=np.int8)
         defl = np.zeros(n, dtype=np.int8)
         self._walk(array, [name], slot_idx, rep_first, defl, 0, 0,
@@ -94,9 +168,10 @@ class ArrowColumn:
 
     def pcs_n_values(self) -> int:
         """Manifest n_values contribution: slots that reach each leaf's
-        value node (present-or-null values; ancestor-cut markers excluded)
-        — the same accounting the specialized sink specs report (rows for
-        flat/struct leaves, element counts under repeated nodes)."""
+        value node, summed over leaves — present or null values, without
+        the markers of null or empty lists and of null ancestors. A field
+        under a struct's null rows therefore counts only the live rows,
+        and a list<struct> field only the non-null struct elements."""
         return self._n_values
 
     def pcs_schema(self, leaf_el) -> list:
@@ -187,20 +262,17 @@ class ArrowColumn:
                          slot_idx, rep_first, defl, rep_level):
         """Shared list/map slot expansion. Returns (child slot_idx,
         child rep_first, child defl) — one child slot per element of
-        live non-empty slots, one marker slot for everything else (old
-        markers, null lists, empty lists)."""
+        live non-empty slots, one marker slot (index -1) for everything
+        else (old markers, null lists, empty lists)."""
         n_slots = len(slot_idx)
         lengths = np.zeros(n_slots, dtype=np.int64)
-        lr = (off[real_idx + 1] - off[real_idx]) if len(real_idx) else \
-            np.empty(0, dtype=np.int64)
-        if optional:
-            # a null slot's extent (normally 0) is skipped, not written
-            lr = np.where(v, lr, 0)
-        lengths[real_mask] = lr
-        live = np.zeros(n_slots, dtype=bool)
-        live[real_mask] = v if optional else True
-        nonempty = live & (lengths > 0)
-        counts = np.where(nonempty, lengths, 1)
+        if len(real_idx):
+            lr = off[real_idx + 1] - off[real_idx]
+            if optional:
+                lr[~v] = 0     # a null slot's extent is skipped, not written
+            lengths[real_mask] = lr
+        nonempty = lengths > 0
+        counts = np.maximum(lengths, 1)
         starts = np.zeros(n_slots, dtype=np.int64)
         np.cumsum(counts[:-1], out=starts[1:])
         total = int(counts.sum())
@@ -209,20 +281,21 @@ class ArrowColumn:
         # per-slot def for expansion: old marker -> unchanged final def;
         # null list -> defl; empty list -> defl+opt; non-empty children
         # inherit defl+opt+1 as their ancestor def
-        slot_def = defl.copy()
+        slot_def = defl + nonempty
         if optional:
-            add = np.zeros(n_slots, dtype=np.int8)
-            add[real_mask] = v.astype(np.int8)
-            slot_def = slot_def + add
-        slot_def = slot_def + nonempty.astype(np.int8)
+            slot_def[real_mask] += v
         c_defl = np.repeat(slot_def, counts)
-        c_slot = np.full(total, -1, dtype=np.int64)
-        ne = np.flatnonzero(nonempty)
-        if len(ne):
-            ne_len = lengths[ne]
-            elem_idx = _elem_indices(off[slot_idx[ne]], ne_len)
-            pos = _elem_indices(starts[ne], ne_len)
-            c_slot[pos] = elem_idx
+        # child slot k of slot s is element off[slot_idx[s]] + k: a ramp
+        # of ones restarted at each slot's first position, summed in place
+        first = np.zeros(n_slots, dtype=np.int64)
+        first[nonempty] = off[slot_idx[nonempty]]
+        c_slot = np.ones(total, dtype=_idx_dtype(max(total, int(off[-1]))))
+        if n_slots:
+            jump = first.copy()
+            jump[1:] -= first[:-1] + counts[:-1] - 1
+            c_slot[starts] = jump
+            np.add.accumulate(c_slot, out=c_slot)
+            c_slot[starts[~nonempty]] = -1
         return c_slot, c_rep, c_defl
 
     def _walk_list(self, arr, path, slot_idx, rep_first, defl,
@@ -258,75 +331,71 @@ class ArrowColumn:
                    c_slot, c_rep, c_defl, rep_level + 1,
                    def_level + opt + 1, False)
         self._walk(arr.items, path + ["key_value", "value"],
-                   c_slot, c_rep.copy(), c_defl, rep_level + 1,
+                   c_slot, c_rep, c_defl, rep_level + 1,
                    def_level + opt + 1, arr.type.item_field.nullable)
 
     def _walk_leaf(self, arr, path, slot_idx, rep_first, defl,
                    rep_level, def_level, nullable=False):
         import pyarrow as pa
 
-        from . import parquet_sink as sink
         from . import parquet_writer as pw
 
         ann_key = ".".join(p for p in path if p not in _SYNTH)
         real_mask = slot_idx >= 0
-        real_idx = slot_idx[real_mask]
-        self._n_values += int(real_mask.sum())
         n_slots = len(slot_idx)
-        contiguous = len(real_idx) == len(arr) and \
-            (len(real_idx) == 0 or
-             (real_idx[0] == 0 and real_idx[-1] == len(arr) - 1 and
+        n_real = int(np.count_nonzero(real_mask))
+        self._n_values += n_real
+        real_idx = slot_idx if n_real == n_slots else slot_idx[real_mask]
+        contiguous = n_real == len(arr) and \
+            (n_real == 0 or
+             (real_idx[0] == 0 and real_idx[-1] == n_real - 1 and
               bool((np.diff(real_idx) == 1).all())))
-        real_arr = arr if contiguous else \
-            arr.take(pa.array(real_idx, pa.int64()))
-        phys, vals, valid_mask, is_utf8 = sink._leaf_parts(
+        real_arr = arr if contiguous else arr.take(pa.array(real_idx))
+        phys, vals, valid, is_utf8 = _leaf_parts(
             real_arr, ann_key, self._annotations, self._decimals,
             nullable=nullable)
         if is_utf8:
             self._utf8.add(ann_key)
-        optional = valid_mask is not None
+        optional = valid is not None
         max_def = def_level + (1 if optional else 0)
         max_rep = rep_level
-        dense = pw._dense_scalar(
-            vals, np.flatnonzero(valid_mask) if optional else None,
-            phys, ann_key)
+        # has: the slots that carry a dense value
+        if optional and not valid.all():
+            if n_real == n_slots:
+                has = valid
+            else:
+                has = real_mask.copy()
+                has[real_mask] = valid
+            dense = pw._dense_scalar(vals, np.flatnonzero(valid), phys,
+                                     ann_key)
+        else:
+            has = real_mask
+            dense = pw._dense_scalar(vals, None, phys, ann_key)
         # def levels: markers keep their cut def; live slots add 1 iff
         # the leaf is optional and the value is present
+        d = None
         if max_def:
-            d = defl.copy()
-            if optional:
-                add = np.zeros(n_slots, dtype=np.int8)
-                add[real_mask] = valid_mask.astype(np.int8)
-                d = d + add
-        else:
-            d = None
+            d = defl + has if optional else defl
         if max_rep:
-            row_starts = np.flatnonzero(rep_first == 0).astype(np.int64)
+            row_starts = np.flatnonzero(rep_first == 0)
             n_rows = len(row_starts)
             lvl_ofs = np.empty(n_rows + 1, dtype=np.int64)
             lvl_ofs[:n_rows] = row_starts
             lvl_ofs[n_rows] = n_slots
-            has = np.zeros(n_slots, dtype=np.int64)
-            has[real_mask] = valid_mask if optional else 1
-            cum = np.zeros(n_slots + 1, dtype=np.int64)
-            np.cumsum(has, out=cum[1:])
-            dense_ofs = cum[lvl_ofs]
+            # dense values before a row = its level slots minus the
+            # valueless slots (markers, nulls) before it
+            gaps = np.flatnonzero(~has)
+            dense_ofs = lvl_ofs - np.searchsorted(gaps, lvl_ofs)
             rep = rep_first
         else:
             n_rows = n_slots
-            lvl_ofs = None
-            rep = None
-            if optional or not real_mask.all():
-                has = np.zeros(n_slots, dtype=np.int64)
-                has[real_mask] = valid_mask if optional else 1
+            lvl_ofs = rep = None
+            dense_ofs = None
+            if n_real != n_slots or has is not real_mask:
                 dense_ofs = np.zeros(n_slots + 1, dtype=np.int64)
                 np.cumsum(has, out=dense_ofs[1:])
-            else:
-                dense_ofs = None
         leaf = pw._Leaf(path, phys, dense, n_rows=n_rows,
-                        use_dictionary=phys == "byte_array",
-                        max_rep=max_rep, max_def=max_def,
-                        rep=rep if max_rep else None, deflv=d,
+                        max_rep=max_rep, max_def=max_def, rep=rep, deflv=d,
                         lvl_ofs=lvl_ofs, dense_ofs=dense_ofs)
         self._leaves.append(leaf)
         self._schema.append(("leaf", leaf, 1 if optional else 0,

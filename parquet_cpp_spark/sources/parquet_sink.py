@@ -19,16 +19,13 @@ the encoded payload never transits the JVM, and file names are
 content+source tagged so task retries overwrite with identical bytes
 instead of duplicating.
 
-Column mapping is derived from the Arrow schema — flat
-int32/int64/float/double/bool/string/binary leaves (nullable supported),
-date32 / timestamp[ms|us] (stored as annotated ints),
-``list<scalar>`` columns (OPTIONAL slots and nullable elements included),
-structs of scalar fields, and ``map<scalar, scalar>`` columns — all via
-rep/def levels with strings extracted zero-copy from the Arrow buffers.
-Any DEEPER nesting (lists/structs/maps stacked to arbitrary depth) falls
-back to the general vectorized rep/def walker
-(``arrow_nested.ArrowColumn``); only leaf types neither path supports
-fail loudly.
+Column mapping is derived from the Arrow schema: every column goes
+through the one vectorized rep/def walker (``arrow_nested.ArrowColumn``)
+— flat int32/int64/float/double/bool/string/binary leaves, date32 /
+timestamp[ms|us] (stored as annotated ints), decimal128 (FLBA), and
+lists / structs / maps stacked to any depth with nulls at every level,
+strings extracted zero-copy from the Arrow buffers. Leaf types it does
+not support fail loudly.
 
 Every file's encodings come from the engine's codec selector, per column
 per file (``auto_encodings``): a low-cardinality leaf gets dictionary
@@ -49,467 +46,86 @@ MANIFEST_SCHEMA = ("file string, n_rows bigint, n_values bigint, "
                    "bytes bigint, checksum string, encodings string, "
                    "stats string")
 
-_FLAT_PHYS = {"int32": "int32", "int64": "int64", "float": "float",
-              "double": "double", "bool": "boolean"}
-
-
-def _valid_mask(col, nullable: bool):
-    """Validity mask for one node: observed nulls, else an ALL-TRUE mask
-    when the Arrow FIELD says nullable. Parquet repetition must follow
-    the SCHEMA, not the data — otherwise two partitions of one dataset
-    write different file schemas (REQUIRED in the null-free partition,
-    OPTIONAL in the rest) and every schema-checked reader of the
-    directory fails. Matches Spark's own parquet writer (nullable Spark
-    field -> OPTIONAL always)."""
-    import numpy as np
-    if col.null_count:
-        return ~np.asarray(col.is_null())
-    return np.ones(len(col), dtype=bool) if nullable else None
-
-
-def _scalar_parts(col, name: str, nullable: bool = False):
-    """Arrow scalar array -> (phys, slot-aligned values, valid, is_utf8).
-
-    The vectorized extraction shared by flat columns, struct fields, list
-    elements and map keys/values: strings/binary become a
-    ``ba.ByteArrayView`` straight from the Arrow offsets/values buffers
-    (``ba.from_arrow`` — no per-row Python, the ``encode_arrow`` hot-path
-    shape), numerics a numpy view; nulls are masked via ``valid`` with
-    slots filled by a typed zero (the writer drops them by mask).
-    ``nullable`` (the Arrow FIELD's flag) forces an OPTIONAL mask even
-    when this batch happens to contain no nulls."""
-    import pyarrow as pa
-
-    from ..kernels import ba
-
-    typ = col.type
-    if pa.types.is_string(typ) or pa.types.is_large_string(typ) \
-            or pa.types.is_binary(typ) or pa.types.is_large_binary(typ):
-        utf8 = not (pa.types.is_binary(typ) or pa.types.is_large_binary(typ))
-        valid = _valid_mask(col, nullable)
-        if col.null_count:
-            col = col.fill_null("" if utf8 else b"")
-        return "byte_array", ba.from_arrow(col), valid, utf8
-    if str(typ) in _FLAT_PHYS:
-        valid = _valid_mask(col, nullable)
-        if col.null_count:
-            col = col.fill_null(False if str(typ) == "bool" else 0)
-        return (_FLAT_PHYS[str(typ)], col.to_numpy(zero_copy_only=False),
-                valid, False)
-    raise ValueError(f"column {name}: arrow type {typ} out of "
-                     "parquet_sink scope")
-
-
-def _leaf_parts(col, name: str, annotations: dict, decimals: dict,
-                allow_flba: bool = True, nullable: bool = False):
-    """``_scalar_parts`` plus temporal/decimal handling for ANY leaf
-    position (flat columns, struct fields at any depth, list/map
-    elements): date32/timestamp store as annotated ints keyed by the
-    dotted leaf name ``name`` (NTZ-aware, same rules as flat columns);
-    decimal128 becomes minimal-width BE FLBA when the leaf shape allows
-    it (``allow_flba=False`` under REPEATED leaves — the writer fails
-    loudly on list<FLBA>, so the error surfaces at spec parse)."""
-    import numpy as np
-    import pyarrow as pa
-
-    typ = col.type
-    if pa.types.is_decimal128(typ):
-        if not allow_flba:
-            raise ValueError(f"column {name}: decimal under a repeated "
-                             "leaf is out of writer scope (list<FLBA>)")
-        from ..logical import decimal_flba_from_arrow
-        valid = _valid_mask(col, nullable)
-        mat, precision, scale = decimal_flba_from_arrow(col)
-        decimals[name] = (precision, scale)
-        return f"flba:{mat.shape[1]}", mat, valid, False
-    if pa.types.is_date32(typ) or pa.types.is_timestamp(typ):
-        if pa.types.is_date32(typ):
-            phys, ann = "int32", "date"
-            col = col.cast(pa.int32())
-        else:
-            unit = typ.unit
-            if unit not in ("ms", "us"):
-                raise ValueError(f"column {name}: timestamp[{unit}] "
-                                 "out of scope (ms/us only)")
-            phys = "int64"
-            # tz-aware arrow timestamps are UTC instants; tz-NAIVE ones
-            # must stay NTZ (see specs_from_arrow docstring)
-            ann = f"timestamp_{unit}" if typ.tz is not None \
-                else f"timestamp_ntz_{unit}"
-            col = col.cast(pa.timestamp(unit)).cast(pa.int64())
-        annotations[name] = ann
-        valid = _valid_mask(col, nullable)
-        if col.null_count:
-            col = col.fill_null(0)
-        return phys, col.to_numpy(zero_copy_only=False), valid, False
-    return _scalar_parts(col, name, nullable=nullable)
-
-
-def _repeated_parts(col, name: str, nullable: bool = False):
-    """Arrow list/map array -> (lengths, valid, element range) with the
-    null-slot contract enforced: a null slot must have a zero extent (the
-    Arrow layout every Spark/pyarrow producer emits)."""
-    import numpy as np
-
-    offsets = np.asarray(col.offsets)
-    lengths = np.diff(offsets).astype(np.int64)
-    valid = _valid_mask(col, nullable)
-    if col.null_count and lengths[~valid].any():
-        raise ValueError(f"column {name}: null list slot with a "
-                         "non-empty extent is out of sink scope")
-    return lengths, valid, int(offsets[0]), int(offsets[-1])
-
-
 def specs_from_arrow(tbl):
     """Arrow table -> (specs, utf8 keys, temporal annotations, decimals).
 
     The bridge between ``mapInArrow`` batches and ``parquet_writer``:
-    list columns become ``ListColumn`` (offsets -> lengths, flattened
-    values; OPTIONAL slots and nullable elements carried as masks),
-    ``list<list<scalar>>`` becomes ``NestedListColumn``,
-    ``list<struct<scalars>>`` becomes ``ListStructColumn``, structs
-    become ``StructColumn`` (struct-in-struct recursively; list fields
-    as nested ``ListColumn`` specs with elements under null ancestors
-    dropped), maps become ``MapColumn``, nullable flat columns carry
-    their validity mask, strings get the UTF8 annotation (dotted keys —
-    ``s.f``, ``m.key`` — for nested leaves), date32/timestamp leaves AT
-    ANY POSITION store as annotated int32/int64 (DATE / TIMESTAMP
-    converted types, NTZ-aware), decimal128 leaves store as big-endian
-    FLBA at the minimal width for their precision (the reference's
-    DecimalSize coercion, ``arrow/writer.cc:572-604``) with
-    ``decimals[key] = (p, s)`` — decimals only outside repeated leaves
-    on the fast paths (no list<FLBA>). Shapes the specialized paths
-    don't cover (3-deep lists, nesting inside list<struct> elements,
-    nested map values, ...) fall back to ``arrow_nested.ArrowColumn``,
-    the general vectorized walker; genuinely unsupported leaf types
-    (ns/s timestamps, arbitrary extension types) still fail loudly.
-    Specs carry no dictionary choice: ``auto_encodings`` sets it."""
-    import numpy as np
-    import pyarrow as pa
+    every column becomes ``arrow_nested.ArrowColumn(name, col,
+    nullable)``, the one rep/def walker, whatever its nesting (flat,
+    lists, structs, maps, stacked to any depth, nulls at every level).
+    Its leaves carry their values zero-copy from the Arrow buffers.
+    Strings get the UTF8 annotation (dotted keys — ``s.f``, ``m.key`` —
+    for nested leaves), date32/timestamp leaves store as annotated
+    int32/int64 (DATE / TIMESTAMP, NTZ-aware) and decimal128 leaves as
+    minimal-width big-endian FLBA with ``decimals[key] = (p, s)``; the
+    walker harvests these keys and ``write_file`` merges them, so the
+    returned sets are a summary. Unsupported leaf types (ns/s
+    timestamps, durations, extension types) raise ``ValueError``. Leaves
+    carry no dictionary choice: ``auto_encodings`` sets it."""
+    from .arrow_nested import ArrowColumn
 
-    from ..kernels import ba
-    from . import parquet_writer as pw
-
-    specs, utf8, annotations, decimals = [], set(), {}, {}
-
-    def _spec(col, name, nullable):
-        """Specialized fast-path spec for one column (``nullable`` = the
-        Arrow FIELD's flag; child nullability comes from the child
-        fields, so partitions with and without observed nulls emit the
-        SAME parquet schema). Raises ValueError on shapes these paths
-        don't express — the caller falls back to the general rep/def
-        walker (``arrow_nested.ArrowColumn``)."""
-        typ = col.type
-        if pa.types.is_list(typ) or pa.types.is_large_list(typ):
-            lengths, valid, lo, hi = _repeated_parts(col, name, nullable)
-            child = col.values.slice(lo, hi - lo)
-            ctyp = child.type
-            e_null = typ.value_field.nullable
-            if pa.types.is_list(ctyp) or pa.types.is_large_list(ctyp):
-                # list<list<scalar>> -> NestedListColumn (max_rep = 2);
-                # a third list level is out of writer scope
-                ilengths, ivalid, ilo, ihi = _repeated_parts(
-                    child, f"{name}.element", e_null)
-                elems = child.values.slice(ilo, ihi - ilo)
-                ephys, evals, evalid, eutf8 = _leaf_parts(
-                    elems, name, annotations, decimals,
-                    allow_flba=False,
-                    nullable=ctyp.value_field.nullable)
-                if eutf8:
-                    utf8.add(name)
-                return pw.NestedListColumn(
-                    name, ephys, evals, lengths, ilengths,
-                    valid=valid, inner_valid=ivalid,
-                    element_valid=evalid)
-            elif pa.types.is_struct(ctyp):
-                # list<struct<scalars>> -> ListStructColumn: one REPEATED
-                # leaf per field, values/masks per element slot
-                evalid = _valid_mask(child, e_null)
-                fields = []
-                for i in range(ctyp.num_fields):
-                    fld = ctyp.field(i)
-                    fphys, fvals, fvalid, futf8 = _leaf_parts(
-                        child.field(i), f"{name}.{fld.name}",
-                        annotations, decimals, allow_flba=False,
-                        nullable=fld.nullable)
-                    if futf8:
-                        utf8.add(f"{name}.{fld.name}")
-                    fields.append((fld.name, fphys, fvals, fvalid))
-                return pw.ListStructColumn(
-                    name, fields, lengths, valid=valid,
-                    element_valid=evalid)
-            else:
-                ephys, evals, evalid, eutf8 = _leaf_parts(
-                    child, name, annotations, decimals,
-                    allow_flba=False, nullable=e_null)
-                if eutf8:
-                    utf8.add(name)
-                return pw.ListColumn(
-                    name, ephys, evals, lengths,
-                    valid=valid, element_valid=evalid)
-        elif pa.types.is_struct(typ):
-            def _struct_spec(scol, dotted, s_null):
-                svalid = _valid_mask(scol, s_null)
-                fields = []
-                styp = scol.type
-                for i in range(styp.num_fields):
-                    fld = styp.field(i)
-                    fcol = scol.field(i)
-                    fdotted = f"{dotted}.{fld.name}"
-                    if pa.types.is_struct(fld.type):
-                        # struct-in-struct: recursive group node; field
-                        # arrays stay top-level-row aligned in Arrow
-                        fields.append((fld.name,
-                                       _struct_spec(fcol, fdotted,
-                                                    fld.nullable)))
-                        continue
-                    if pa.types.is_list(fld.type) or \
-                            pa.types.is_large_list(fld.type):
-                        # list<scalar> inside a struct: lengths stay
-                        # row-aligned; elements under a null struct row
-                        # are dropped (the writer requires length 0
-                        # below a null ancestor)
-                        flengths, flvalid, flo, fhi = _repeated_parts(
-                            fcol, fdotted, fld.nullable)
-                        fchild = fcol.values.slice(flo, fhi - flo)
-                        if svalid is not None and \
-                                flengths[~svalid].any():
-                            keep = np.repeat(svalid, flengths)
-                            fchild = fchild.filter(
-                                pa.array(keep, pa.bool_()))
-                            flengths = np.where(svalid, flengths, 0)
-                        fphys, fvals, fevalid, futf8 = _leaf_parts(
-                            fchild, fdotted, annotations, decimals,
-                            allow_flba=False,
-                            nullable=fld.type.value_field.nullable)
-                        if futf8:
-                            utf8.add(fdotted)
-                        fields.append((fld.name, pw.ListColumn(
-                            fld.name, fphys, fvals, flengths,
-                            valid=flvalid, element_valid=fevalid)))
-                        continue
-                    fphys, fvals, fvalid, futf8 = _leaf_parts(
-                        fcol, fdotted, annotations, decimals,
-                        nullable=fld.nullable)
-                    if futf8:
-                        utf8.add(fdotted)
-                    fields.append((fld.name, fphys, fvals, fvalid))
-                return pw.StructColumn(dotted.rsplit(".", 1)[-1], fields,
-                                       valid=svalid)
-            return _struct_spec(col, name, nullable)
-        elif pa.types.is_map(typ):
-            lengths, valid, lo, hi = _repeated_parts(col, name, nullable)
-            keys = col.keys.slice(lo, hi - lo)
-            items = col.items.slice(lo, hi - lo)
-            if keys.null_count:
-                raise ValueError(f"column {name}: parquet map keys cannot "
-                                 "be null")
-            kphys, kvals, _kvalid, kutf8 = _scalar_parts(keys,
-                                                         f"{name}.key")
-            vphys, vvals, vvalid, vutf8 = _leaf_parts(
-                items, f"{name}.value", annotations, decimals,
-                allow_flba=False, nullable=typ.item_field.nullable)
-            if kutf8:
-                utf8.add(f"{name}.key")
-            if vutf8:
-                utf8.add(f"{name}.value")
-            return pw.MapColumn(
-                name, kphys, kvals, vphys, vvals, lengths,
-                valid=valid, value_valid=vvalid)
-        else:
-            phys, vals, valid, is_utf8 = _leaf_parts(
-                col, name, annotations, decimals, nullable=nullable)
-            if is_utf8:
-                utf8.add(name)
-            return (name, phys, vals, valid)
-
-    for name in tbl.column_names:
-        col = ba.one_chunk(tbl.column(name))
-        nullable = tbl.schema.field(name).nullable
-        snap = (set(utf8), dict(annotations), dict(decimals))
-        try:
-            specs.append(_spec(col, name, nullable))
-        except ValueError:
-            # shape (or layout contract) outside the specialized fast
-            # paths — deeper nesting, nested list<struct> elements,
-            # nested map values, null list slots with extents: hand the
-            # whole column to the general rep/def walker, which harvests
-            # its own annotation keys (write_file merges them). Roll
-            # back any half-recorded keys from the failed attempt first;
-            # a column NO path supports re-raises from the walker.
-            from .arrow_nested import ArrowColumn
-            utf8.clear()
-            utf8.update(snap[0])
-            annotations.clear()
-            annotations.update(snap[1])
-            decimals.clear()
-            decimals.update(snap[2])
-            specs.append(ArrowColumn(name, col, nullable=nullable))
+    specs = [ArrowColumn(name, tbl.column(name),
+                         tbl.schema.field(name).nullable)
+             for name in tbl.column_names]
+    utf8, annotations, decimals = set(), {}, {}
+    for s in specs:
+        s_utf8, s_ann, s_dec = s.pcs_annotations()
+        utf8 |= s_utf8
+        annotations.update(s_ann)
+        decimals.update(s_dec)
     return specs, utf8, annotations, decimals
 
 
 def auto_encodings(specs) -> tuple:
-    """Run the engine's codec auto-selector over extracted specs and map
-    its per-chunk choice onto the parquet writer's encoding surface:
-    RLE / RLE_DICTIONARY -> dictionary pages, DELTA_BINARY_PACKED ->
-    delta pages, DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY -> the
-    matching byte-array delta pages; the one choice parquet can't
-    express (FSST) -> PLAIN (the dict fallback still guards accidental
-    dictionary blowups). Returns (new_specs, delta_columns, ba_delta)
-    where ``ba_delta`` maps dotted leaf name -> 'delta_length' |
-    'delta_byte_array' — the same decision the chunk format makes, one
-    per column per file, so each output file is independently optimal
-    like each chunk is."""
+    """Run the engine's codec auto-selector over each walker leaf's dense
+    (null-free) value stream and map its per-chunk choice onto the
+    parquet writer's encoding surface: RLE / RLE_DICTIONARY -> the
+    leaf's dictionary flag, DELTA_BINARY_PACKED -> delta pages,
+    DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY -> the matching byte-array
+    delta pages; the one choice parquet can't express (FSST) -> PLAIN
+    (the dict fallback still guards accidental dictionary blowups);
+    float/boolean leaves keep PLAIN. Flags are set on the leaves in
+    place. Returns (specs, delta_columns, ba_delta) where ``ba_delta``
+    maps dotted leaf name -> 'delta_length' | 'delta_byte_array' — the
+    same decision the chunk format makes, one per column per file, so
+    each output file is independently optimal like each chunk is."""
     import numpy as np
 
     from .. import chunk as chunkmod, selector
-    from . import parquet_writer as pw
-    from ..kernels import ba
 
-    def _dense(phys, vals, valid):
-        if valid is None:
-            return vals
-        idx = np.flatnonzero(np.asarray(valid, dtype=bool))
-        if phys == "byte_array":
-            return ba.take(ba.as_view(vals), idx)
-        return np.asarray(vals)[idx]
-
-    def _choose(dotted_name, phys, vals, valid):
-        """(use_dict, delta) for one leaf; None when the selector has no
-        say (floats/bools keep their default encodings)."""
-        if phys in ("int32", "int64"):
-            codec = selector.select_int_codec(
-                np.asarray(_dense(phys, vals, valid)), phys)
-            if codec == chunkmod.DELTA_BINARY_PACKED:
-                delta_cols.add(dotted_name)
-            return codec in (chunkmod.RLE, chunkmod.RLE_DICTIONARY)
-        if phys == "byte_array":
-            codec = selector.select_bytes_codec(_dense(phys, vals, valid),
-                                                parquet_expressible=True)
-            if codec == chunkmod.DELTA_LENGTH_BYTE_ARRAY:
-                ba_delta[dotted_name] = "delta_length"
-            elif codec == chunkmod.DELTA_BYTE_ARRAY:
-                ba_delta[dotted_name] = "delta_byte_array"
-            return codec == chunkmod.RLE_DICTIONARY
-        return None
-
-    out, delta_cols, ba_delta = [], set(), {}
+    delta_cols, ba_delta = set(), {}
     for s in specs:
-        if hasattr(s, "pcs_leaves"):
-            # general-walker column: run the selector over each leaf's
-            # dense (null-free) value stream and flip the leaf's own
-            # dictionary flag in place — the walker owns its leaves
-            for leaf in s.pcs_leaves():
-                pick = _choose(leaf.name, leaf.phys, leaf.dense, None)
-                if pick is not None:
-                    leaf.use_dictionary = bool(pick)
-            out.append(s)
-        elif isinstance(s, pw.ListColumn):
-            pick = _choose(s.name, s.phys, s.values, s.element_valid)
-            out.append(pw.ListColumn(
-                s.name, s.phys, s.values, s.lengths,
-                use_dictionary=bool(pick), valid=s.valid,
-                element_valid=s.element_valid))
-        elif isinstance(s, pw.NestedListColumn):
-            pick = _choose(s.name, s.phys, s.values, s.element_valid)
-            out.append(pw.NestedListColumn(
-                s.name, s.phys, s.values, s.outer_lengths,
-                s.inner_lengths, use_dictionary=bool(pick),
-                valid=s.valid, inner_valid=s.inner_valid,
-                element_valid=s.element_valid))
-        elif isinstance(s, pw.StructColumn):
-            def _choose_struct(sc, dotted):
-                fields = []
-                for f in sc.fields:
-                    if pw._is_nested_struct_field(f):
-                        fields.append((f[0], _choose_struct(
-                            f[1], f"{dotted}.{f[0]}")))
-                        continue
-                    if pw._is_list_field(f):
-                        lc = f[1]
-                        pick = _choose(f"{dotted}.{f[0]}", lc.phys,
-                                       lc.values, lc.element_valid)
-                        fields.append((f[0], pw.ListColumn(
-                            lc.name, lc.phys, lc.values, lc.lengths,
-                            use_dictionary=bool(pick), valid=lc.valid,
-                            element_valid=lc.element_valid)))
-                        continue
-                    fname, phys, vals = f[0], f[1], f[2]
-                    fvalid = f[3] if len(f) > 3 else None
-                    pick = _choose(f"{dotted}.{fname}", phys, vals, fvalid)
-                    fields.append((fname, phys, vals, fvalid, bool(pick)))
-                return pw.StructColumn(sc.name, fields, valid=sc.valid)
-            out.append(_choose_struct(s, s.name))
-        elif isinstance(s, pw.ListStructColumn):
-            fields = []
-            for f in s.fields:
-                fname, phys, vals = f[0], f[1], f[2]
-                fvalid = f[3] if len(f) > 3 else None
-                pick = _choose(f"{s.name}.{fname}", phys, vals, fvalid)
-                fields.append((fname, phys, vals, fvalid, bool(pick)))
-            out.append(pw.ListStructColumn(
-                s.name, fields, s.lengths, valid=s.valid,
-                element_valid=s.element_valid))
-        elif isinstance(s, pw.MapColumn):
-            kpick = _choose(f"{s.name}.key", s.key_phys, s.keys, None)
-            vpick = _choose(f"{s.name}.value", s.value_phys, s.values,
-                            s.value_valid)
-            out.append(pw.MapColumn(
-                s.name, s.key_phys, s.keys, s.value_phys, s.values,
-                s.lengths, valid=s.valid, value_valid=s.value_valid,
-                key_use_dictionary=bool(kpick),
-                value_use_dictionary=bool(vpick)))
-        else:
-            name, phys, vals = s[0], s[1], s[2]
-            valid = s[3] if len(s) > 3 else None
-            pick = _choose(name, phys, vals, valid)
-            if pick is None:
-                out.append((name, phys, vals, valid))
-            else:
-                out.append((name, phys, vals, valid, pick))
-    return out, frozenset(delta_cols), ba_delta
+        for leaf in s.pcs_leaves():
+            if leaf.phys in ("int32", "int64"):
+                codec = selector.select_int_codec(np.asarray(leaf.dense),
+                                                  leaf.phys)
+                if codec == chunkmod.DELTA_BINARY_PACKED:
+                    delta_cols.add(leaf.name)
+                leaf.use_dictionary = codec in (chunkmod.RLE,
+                                                chunkmod.RLE_DICTIONARY)
+            elif leaf.phys == "byte_array":
+                codec = selector.select_bytes_codec(
+                    leaf.dense, parquet_expressible=True)
+                if codec == chunkmod.DELTA_LENGTH_BYTE_ARRAY:
+                    ba_delta[leaf.name] = "delta_length"
+                elif codec == chunkmod.DELTA_BYTE_ARRAY:
+                    ba_delta[leaf.name] = "delta_byte_array"
+                leaf.use_dictionary = codec == chunkmod.RLE_DICTIONARY
+    return list(specs), frozenset(delta_cols), ba_delta
 
 
 def _encodings_tag(specs, delta_cols, ba_delta=None) -> str:
-    """Human/manifest-readable per-column encoding summary."""
-    from . import parquet_writer as pw
-    leaves = []
-
-    def _struct_leaves(prefix, sc):
-        for f in sc.fields:
-            if pw._is_nested_struct_field(f):
-                _struct_leaves(f"{prefix}.{f[0]}", f[1])
-            elif pw._is_list_field(f):
-                leaves.append((f"{prefix}.{f[0]}", f[1].use_dictionary))
-            else:
-                leaves.append((f"{prefix}.{f[0]}",
-                               bool(f[4]) if len(f) > 4 else False))
-
-    for s in specs:
-        if hasattr(s, "pcs_leaves"):
-            leaves += [(leaf.name, leaf.use_dictionary)
-                       for leaf in s.pcs_leaves()]
-        elif isinstance(s, (pw.ListColumn, pw.NestedListColumn)):
-            leaves.append((s.name, s.use_dictionary))
-        elif isinstance(s, pw.ListStructColumn):
-            leaves += [(f"{s.name}.{f[0]}",
-                        bool(f[4]) if len(f) > 4 else False)
-                       for f in s.fields]
-        elif isinstance(s, pw.StructColumn):
-            _struct_leaves(s.name, s)
-        elif isinstance(s, pw.MapColumn):
-            leaves += [(f"{s.name}.key", s.key_use_dictionary),
-                       (f"{s.name}.value", s.value_use_dictionary)]
-        else:
-            leaves.append((s[0], bool(s[4]) if len(s) > 4 else False))
+    """Human/manifest-readable per-leaf encoding summary."""
     parts = []
     ba_delta = ba_delta or {}
-    for name, use_dict in leaves:
-        enc = ("delta" if name in delta_cols
-               else "dlba" if ba_delta.get(name) == "delta_length"
-               else "dba" if ba_delta.get(name) == "delta_byte_array"
-               else "dict" if use_dict else "plain")
-        parts.append(f"{name}={enc}")
+    for s in specs:
+        for leaf in s.pcs_leaves():
+            name = leaf.name
+            enc = ("delta" if name in delta_cols
+                   else "dlba" if ba_delta.get(name) == "delta_length"
+                   else "dba" if ba_delta.get(name) == "delta_byte_array"
+                   else "dict" if leaf.use_dictionary else "plain")
+            parts.append(f"{name}={enc}")
     return ",".join(parts)
 
 
@@ -674,39 +290,9 @@ def _write_one_file(tbl, tmp: str, dest: str, row_group_rows, page_rows,
     its manifest tuple."""
     import hashlib
 
-    import numpy as np
-
     from . import parquet_writer as pw
-    specs, utf8, annotations, decimals = specs_from_arrow(tbl)
-    specs, d_cols, ba_delta = auto_encodings(specs)
-
-    def _struct_values(sc) -> int:
-        n = 0
-        for f in sc.fields:
-            if pw._is_nested_struct_field(f):
-                n += _struct_values(f[1])
-            elif pw._is_list_field(f):
-                n += int(np.asarray(f[1].lengths).sum())
-            else:
-                n += tbl.num_rows
-        return n
-
-    def _spec_values(s) -> int:
-        if hasattr(s, "pcs_n_values"):
-            return s.pcs_n_values()
-        if isinstance(s, pw.ListColumn):
-            return int(np.asarray(s.lengths).sum())
-        if isinstance(s, pw.NestedListColumn):
-            return int(np.asarray(s.inner_lengths).sum())
-        if isinstance(s, pw.ListStructColumn):
-            return int(np.asarray(s.lengths).sum()) * len(s.fields)
-        if isinstance(s, pw.MapColumn):
-            return 2 * int(np.asarray(s.lengths).sum())
-        if isinstance(s, pw.StructColumn):
-            return _struct_values(s)
-        return tbl.num_rows
-
-    n_values = sum(_spec_values(s) for s in specs)
+    specs, d_cols, ba_delta = auto_encodings(specs_from_arrow(tbl)[0])
+    n_values = sum(s.pcs_n_values() for s in specs)
     enc_tag = _encodings_tag(specs, d_cols, ba_delta)
     # manifest fields ride in the footer's key_value_metadata so a
     # resumed job can rebuild its manifest row WITHOUT re-encoding;
@@ -717,14 +303,12 @@ def _write_one_file(tbl, tmp: str, dest: str, row_group_rows, page_rows,
                          data_page_version, bloom_filter_columns)
     pw.write_file(tmp, specs, tbl.num_rows,
                   row_group_rows=row_group_rows, page_rows=page_rows,
-                  compression=compression, utf8_columns=utf8,
-                  delta_columns=d_cols,
+                  compression=compression, delta_columns=d_cols,
                   delta_length_columns={n for n, k in ba_delta.items()
                                         if k == "delta_length"},
                   delta_byte_array_columns={n for n, k in ba_delta.items()
                                             if k == "delta_byte_array"},
                   data_page_version=data_page_version,
-                  annotations=annotations, decimal_columns=decimals,
                   bloom_filter_columns=frozenset(bloom_filter_columns),
                   field_ids=field_ids,
                   key_value_metadata={"pcs.n_values": str(n_values),

@@ -9,19 +9,25 @@ parquet-format spec; the thrift compact protocol is implemented here from
 that spec, symmetric with the reader in ``parquet_format._Compact``.
 
 Scope (interop parity-plus — the production sink is the chunk/manifest
-dataset, SURVEY §1.1): flat REQUIRED/OPTIONAL leaves plus REQUIRED
-``list<element>`` columns via rep/def levels (3-level encoding,
-``ListColumn``; rep levels delimit rows as in ``column_writer.cc:616-629``
-— this is how the engine emits its own headline ``tokens array<int32>``
-column as real parquet), PLAIN or dictionary encoding (PLAIN dict page +
-PLAIN_DICTIONARY data pages, the format-1.0 pairing) or
-DELTA_BINARY_PACKED, multiple row groups, multiple data pages per chunk,
-SNAPPY/GZIP/ZSTD page compression, and chunk-level min/max/null_count
-statistics (``column_writer.cc`` EncodedStatistics analog). Fails loudly
-on anything out of scope. Page payloads come from the engine's own
-kernels (``plain``, ``rle``, ``dictionary``) — the same code path the
-chunk blobs use, so a pyarrow read-back of this file cross-checks those
-kernels against a second, independent implementation.
+dataset, SURVEY §1.1): columns come in two spec kinds. A flat tuple is
+one REQUIRED/OPTIONAL leaf (the only path for FLBA/INT96). Every nested
+column — lists, structs and maps stacked to any depth, nulls at every
+level — is an ``arrow_nested.ArrowColumn``, the one rep/def walker (the
+reference's ``arrow/path_internal.cc`` walk, vectorized); the numpy spec
+classes ``ListColumn``, ``NestedListColumn``, ``StructColumn``,
+``MapColumn`` and ``ListStructColumn`` build an Arrow array and hand it
+to it (rep levels delimit rows as in ``column_writer.cc:616-629`` — this
+is how the engine emits its own headline ``tokens array<int32>`` column
+as real parquet). Encodings: PLAIN or dictionary (PLAIN dict page +
+PLAIN_DICTIONARY data pages, the format-1.0 pairing, with the PLAIN
+fallback), DELTA_BINARY_PACKED and the byte-array deltas; multiple row
+groups, multiple data pages per chunk, page compression, chunk-level
+min/max/null_count statistics (``column_writer.cc`` EncodedStatistics
+analog), PageIndex and footer blooms. Fails loudly on anything out of
+scope. Page payloads come from the engine's own kernels (``plain``,
+``rle``, ``dictionary``, ``delta``) — the same code path the chunk blobs
+use, so a pyarrow read-back of this file cross-checks those kernels
+against a second, independent implementation.
 """
 
 from __future__ import annotations
@@ -29,7 +35,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..kernels import ba, bytearray_codecs, delta, dictionary, plain, rle
-from ..levels import _real_slot_positions, levels_from_nested_lengths
+from .arrow_nested import _SYNTH, ArrowColumn
 
 MAGIC = b"PAR1"
 
@@ -332,132 +338,6 @@ def _coerce_dense(dense, phys: str, name: str):
     return out
 
 
-class ListColumn:
-    """Spec for a ``list<element>`` column (3-level encoding,
-    ``schema.h:43-77``): ``values`` are the flattened elements, ``lengths``
-    the per-row element counts; rep 0 delimits a record like the
-    reference's REPEATED leaves (``column_writer.cc:616-629``; levels from
-    offsets mirror ``arrow/writer.cc:71-262``).
-
-    ``valid`` (per-ROW mask) makes the list itself OPTIONAL: a null slot
-    is one level position with def 0, an empty list def 1, elements def 2
-    — the ``column_writer-test.cc:387-460`` OPTIONAL-REPEATED shape. Null
-    rows must carry length 0. ``element_valid`` (one bool per SLOT) makes
-    elements OPTIONAL; ``values`` are then SLOT-aligned (entries at null
-    slots ignored) and each null element costs one more def level."""
-
-    def __init__(self, name: str, phys: str, values, lengths,
-                 use_dictionary: bool = False, valid=None,
-                 element_valid=None):
-        self.name = name
-        self.phys = phys
-        self.values = values
-        self.lengths = lengths
-        self.use_dictionary = use_dictionary
-        self.valid = valid
-        self.element_valid = element_valid
-
-
-class NestedListColumn:
-    """Spec for a ``list<list<element>>`` column (max_rep = 2 — the
-    chunk format's list-of-list shape, now in the PAR1 writer; levels
-    mirror the reference's recursive list walker,
-    ``arrow/writer.cc:71-262``, two LIST annotations deep).
-
-    ``outer_lengths[i]``: inner lists in row i; ``inner_lengths``: element
-    counts per inner list (flattened, ``outer_lengths.sum()`` entries);
-    ``values``: flattened element slots (``inner_lengths.sum()``).
-    ``valid`` (per row) / ``inner_valid`` (per inner list) /
-    ``element_valid`` (per element slot) make each layer OPTIONAL — every
-    optional layer adds one def level (max_def up to 5). Null slots at
-    any layer must carry zero extent."""
-
-    def __init__(self, name: str, phys: str, values, outer_lengths,
-                 inner_lengths, use_dictionary: bool = False, valid=None,
-                 inner_valid=None, element_valid=None):
-        self.name = name
-        self.phys = phys
-        self.values = values
-        self.outer_lengths = outer_lengths
-        self.inner_lengths = inner_lengths
-        self.use_dictionary = use_dictionary
-        self.valid = valid
-        self.inner_valid = inner_valid
-        self.element_valid = element_valid
-
-
-class StructColumn:
-    """Spec for a ``struct<...>`` column (``schema.h:106-303`` group
-    nodes; struct round-trips ``arrow/arrow-reader-writer-test.cc:595+``).
-
-    ``fields``: flat leaf tuples ``(fname, phys, values[, fvalid[,
-    use_dictionary]])`` — each becomes one leaf chunk with path
-    ``name.fname`` — or nested ``(fname, StructColumn)`` pairs
-    (struct-in-struct at any depth; the inner spec's ``name`` is ignored,
-    its values/masks stay TOP-LEVEL-row aligned, entries under a null
-    ancestor ignored). ``valid`` makes the struct OPTIONAL: a struct-null
-    row contributes def 0 to every leaf below it; each optional ancestor
-    adds one def level. Fields may be nested ``StructColumn``s or
-    ``(fname, ListColumn)`` pairs (lists inside structs). Annotations
-    (utf8/decimal/temporal) are keyed by the dotted path ``name.fname``
-    (full path for nested)."""
-
-    def __init__(self, name: str, fields: list, valid=None):
-        self.name = name
-        self.fields = list(fields)
-        self.valid = valid
-
-
-class MapColumn:
-    """Spec for a ``map<key, value>`` column (MAP converted type; 3-level
-    ``key_value`` group, ``schema.h:43-77`` / ``arrow/schema.cc`` map
-    path). Two parallel REPEATED leaves share one ``lengths`` array:
-    ``keys`` (REQUIRED — parquet map keys cannot be null) and ``values``
-    (OPTIONAL when ``value_valid`` is given, slot-aligned like
-    ``ListColumn.element_valid``). ``valid`` makes the map itself
-    OPTIONAL (null map vs empty map, like ListColumn). Annotation keys:
-    ``name.key`` / ``name.value``."""
-
-    def __init__(self, name: str, key_phys: str, keys, value_phys: str,
-                 values, lengths, valid=None, value_valid=None,
-                 key_use_dictionary: bool = False,
-                 value_use_dictionary: bool = False):
-        self.name = name
-        self.key_phys = key_phys
-        self.keys = keys
-        self.value_phys = value_phys
-        self.values = values
-        self.lengths = lengths
-        self.valid = valid
-        self.value_valid = value_valid
-        self.key_use_dictionary = key_use_dictionary
-        self.value_use_dictionary = value_use_dictionary
-
-
-class ListStructColumn:
-    """Spec for a ``list<struct<scalar fields>>`` column (max_rep 1): one
-    REPEATED leaf per struct field, all sharing one ``lengths`` array —
-    the MapColumn two-parallel-leaves pattern generalized to N fields
-    (reference: the recursive group walker ``arrow/writer.cc:305-932``
-    emits exactly this leaf set for list-of-struct).
-
-    ``fields``: flat leaf tuples ``(fname, phys, values[, fvalid[,
-    use_dictionary]])`` with values/fvalid PER ELEMENT SLOT
-    (``lengths.sum()`` entries). ``element_valid`` (per slot) makes the
-    struct element group OPTIONAL (a null struct inside the list — its
-    field values at those slots are ignored); ``valid`` (per row) makes
-    the list itself OPTIONAL. Deeper nesting inside the element is out
-    of writer scope. Annotation keys: ``name.fname``."""
-
-    def __init__(self, name: str, fields: list, lengths, valid=None,
-                 element_valid=None):
-        self.name = name
-        self.fields = list(fields)
-        self.lengths = lengths
-        self.valid = valid
-        self.element_valid = element_valid
-
-
 class _Leaf:
     """One schema LEAF in page-writable form: dense (non-null) values plus
     precomputed repetition/definition levels and the row->slot / row->dense
@@ -473,8 +353,7 @@ class _Leaf:
                  max_def: int = 0, rep=None, deflv=None,
                  lvl_ofs=None, dense_ofs=None):
         self.path = list(path)
-        self.name = ".".join(p for p in self.path
-                             if p not in ("list", "element", "key_value"))
+        self.name = ".".join(p for p in self.path if p not in _SYNTH)
         self.phys = phys
         self.dense = dense
         self.n_rows = n_rows
@@ -552,427 +431,258 @@ def _dense_scalar(values, idx, phys: str, name: str):
     return _coerce_dense(arr if idx is None else arr[idx], phys, name)
 
 
-def _scalar_leaf(path: list, phys: str, values, present, deflv,
-                 max_def: int, use_dictionary: bool) -> _Leaf:
-    """Non-repeated leaf (one level slot per row): flat columns and struct
-    fields. ``present``: bool mask of rows carrying a dense value (None =
-    all); ``deflv``: per-row def levels (None when max_def == 0)."""
-    name = ".".join(path)
+def _scalar_leaf(name: str, phys: str, values, valid,
+                 use_dictionary: bool) -> _Leaf:
+    """Flat REQUIRED/OPTIONAL leaf (one level slot per row); ``valid``:
+    bool mask of rows carrying a value (None = REQUIRED)."""
     _phys_id(phys)  # validates
     if _is_fixed_bytes(phys) and use_dictionary:
         raise ValueError(f"column {name}: dictionary encoding is out of "
                          "scope for FLBA/INT96 (PLAIN only, like the "
                          "reference's fixed-width pages)")
-    if present is None:
-        n_rows = len(values)
-        dense = _dense_scalar(values, None, phys, name)
-        dense_ofs = None
-    else:
-        present = np.asarray(present, dtype=bool)
-        n_rows = len(present)
-        if len(values) != n_rows:
-            raise ValueError(f"column {name}: values must be slot-aligned "
-                             "(one per row, nulls included) when a "
-                             "validity mask is given")
-        dense = _dense_scalar(values, np.flatnonzero(present), phys, name)
-        dense_ofs = np.zeros(n_rows + 1, dtype=np.int64)
-        np.cumsum(present, out=dense_ofs[1:])
-    if deflv is not None:
-        deflv = np.ascontiguousarray(deflv, dtype=np.int8)
-    return _Leaf(path, phys, dense, n_rows=n_rows,
-                 use_dictionary=use_dictionary, max_def=max_def,
-                 deflv=deflv, dense_ofs=dense_ofs)
-
-
-def _list_leaf(path: list, phys: str, values, lengths, list_valid,
-               elem_valid, use_dictionary: bool, anc_masks=()) -> _Leaf:
-    """REPEATED leaf (list element / map key / map value / list inside a
-    struct). def scheme with A = len(anc_masks) optional struct
-    ancestors: ancestor cut at depth a -> a, null list slot -> A (0
-    without ancestors; only with ``list_valid``), empty list -> ``opt``
-    (= A + opt_l), null element -> ``opt``+1 (only with ``elem_valid``),
-    present value -> max_def. Rows under a null ancestor must carry
-    length 0."""
-    name = ".".join(path)
-    _phys_id(phys)
-    if _is_fixed_bytes(phys):
-        raise ValueError(f"column {name}: list<FLBA/INT96> out of "
-                         "writer scope")
-    lengths = np.ascontiguousarray(lengths, dtype=np.int64)
-    if (lengths < 0).any():
-        raise ValueError(f"column {name}: negative list length")
-    n_rows = len(lengths)
-    A = len(anc_masks)
-    anc_def = None
-    if A:
-        # def contribution of optional struct ancestors, outermost first
-        anc_ok = np.ones(n_rows, dtype=bool)
-        anc_def = np.zeros(n_rows, dtype=np.int8)
-        for m in anc_masks:
-            anc_ok &= np.asarray(m, dtype=bool)
-            anc_def += anc_ok
-        if lengths[~anc_ok].any():
-            raise ValueError(f"column {name}: rows under a null struct "
-                             "ancestor must have length 0")
-    opt = A
-    if list_valid is not None:
-        list_valid = np.asarray(list_valid, dtype=bool)
-        if len(list_valid) != n_rows:
-            raise ValueError(f"column {name}: valid mask length mismatch")
-        if lengths[~list_valid].any():
-            raise ValueError(f"column {name}: null list slots must have "
-                             "length 0")
-        opt += 1
-    n_elem_slots = int(lengths.sum())
-    max_def = opt + 1 + (1 if elem_valid is not None else 0)
-    if elem_valid is not None:
-        elem_valid = np.asarray(elem_valid, dtype=bool)
-        if len(elem_valid) != n_elem_slots:
-            raise ValueError(f"column {name}: element_valid must have one "
-                             f"entry per slot ({n_elem_slots})")
-    n_vals = len(values) if phys == "byte_array" else len(np.asarray(values))
-    if n_vals != n_elem_slots:
-        raise ValueError(f"column {name}: {n_vals} elements but lengths "
-                         f"sum to {n_elem_slots}")
-    # levels: one slot per element, plus one marker slot per empty/null row
-    slots = np.maximum(lengths, 1)
-    total = int(slots.sum())
-    rep = np.ones(total, dtype=np.int8)
-    starts = np.zeros(n_rows, dtype=np.int64)
-    np.cumsum(slots[:-1], out=starts[1:])
-    rep[starts] = 0
-    d = np.full(total, max_def, dtype=np.int8)
-    if elem_valid is not None and not elem_valid.all():
-        real = _real_slot_positions(lengths, slots, starts)
-        d[real[~elem_valid]] = opt + 1
-    empty = lengths == 0
-    if empty.any():
-        marks = starts[empty]
-        d[marks] = opt
-        if list_valid is not None:
-            d[marks[~list_valid[empty]]] = A
-        if anc_def is not None:
-            cut = ~anc_ok[empty]
-            d[marks[cut]] = anc_def[empty][cut]
-    lvl_ofs = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(slots, out=lvl_ofs[1:])
-    elem_cum = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(lengths, out=elem_cum[1:])
-    if elem_valid is None:
-        dense = _dense_scalar(values, None, phys, name)
-        dense_ofs = elem_cum
-    else:
-        dense = _dense_scalar(values, np.flatnonzero(elem_valid),
-                              phys, name)
-        vcum = np.zeros(n_elem_slots + 1, dtype=np.int64)
-        np.cumsum(elem_valid, out=vcum[1:])
-        dense_ofs = vcum[elem_cum]
-    return _Leaf(path, phys, dense, n_rows=n_rows,
-                 use_dictionary=use_dictionary, max_rep=1, max_def=max_def,
-                 rep=rep, deflv=d, lvl_ofs=lvl_ofs, dense_ofs=dense_ofs)
-
-
-def _list_struct_field_leaf(path: list, phys: str, values, lengths,
-                            list_valid, struct_valid, field_valid,
-                            use_dictionary: bool) -> _Leaf:
-    """One field of a ``list<struct<...>>`` column as a REPEATED leaf.
-    def scheme: null list slot -> 0 (with ``list_valid``), empty list ->
-    opt_l, null struct element -> opt_l+1 (with ``struct_valid``, per
-    element slot), struct present but field null -> opt_l+1+opt_s (with
-    ``field_valid``), value -> max_def. Field values at null-struct
-    slots are ignored (excluded from the dense stream)."""
-    name = ".".join(path)
-    _phys_id(phys)
-    if _is_fixed_bytes(phys):
-        raise ValueError(f"column {name}: list<FLBA/INT96> out of "
-                         "writer scope")
-    lengths = np.ascontiguousarray(lengths, dtype=np.int64)
-    if (lengths < 0).any():
-        raise ValueError(f"column {name}: negative list length")
-    n_rows = len(lengths)
-    opt_l = 0
-    if list_valid is not None:
-        list_valid = np.asarray(list_valid, dtype=bool)
-        if len(list_valid) != n_rows:
-            raise ValueError(f"column {name}: valid mask length mismatch")
-        if lengths[~list_valid].any():
-            raise ValueError(f"column {name}: null list slots must have "
-                             "length 0")
-        opt_l = 1
-    n_elem_slots = int(lengths.sum())
-    opt_s = opt_f = 0
-    if struct_valid is not None:
-        struct_valid = np.asarray(struct_valid, dtype=bool)
-        if len(struct_valid) != n_elem_slots:
-            raise ValueError(f"column {name}: element_valid must have "
-                             f"one entry per slot ({n_elem_slots})")
-        opt_s = 1
-    if field_valid is not None:
-        field_valid = np.asarray(field_valid, dtype=bool)
-        if len(field_valid) != n_elem_slots:
-            raise ValueError(f"column {name}: field valid mask must have "
-                             f"one entry per slot ({n_elem_slots})")
-        opt_f = 1
-    n_vals = len(values) if phys == "byte_array" else len(np.asarray(values))
-    if n_vals != n_elem_slots:
-        raise ValueError(f"column {name}: {n_vals} elements but lengths "
-                         f"sum to {n_elem_slots}")
-    max_def = opt_l + 1 + opt_s + opt_f
-    slots = np.maximum(lengths, 1)
-    total = int(slots.sum())
-    rep = np.ones(total, dtype=np.int8)
-    starts = np.zeros(n_rows, dtype=np.int64)
-    np.cumsum(slots[:-1], out=starts[1:])
-    rep[starts] = 0
-    d = np.full(total, max_def, dtype=np.int8)
-    real = None
-    if (opt_s and not struct_valid.all()) or \
-            (opt_f and not field_valid.all()):
-        real = _real_slot_positions(lengths, slots, starts)
-    # field-null first, struct-null second: a null struct overrides its
-    # fields' masks (their values at those slots are meaningless)
-    if opt_f and real is not None:
-        d[real[~field_valid]] = opt_l + 1 + opt_s
-    if opt_s and real is not None:
-        d[real[~struct_valid]] = opt_l + 1
-    empty = lengths == 0
-    if empty.any():
-        marks = starts[empty]
-        d[marks] = opt_l
-        if opt_l:
-            d[marks[~list_valid[empty]]] = 0
-    lvl_ofs = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(slots, out=lvl_ofs[1:])
-    elem_cum = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(lengths, out=elem_cum[1:])
-    present = None
-    if opt_s:
-        present = struct_valid.copy()
-        if opt_f:
-            present &= field_valid
-    elif opt_f:
-        present = field_valid
-    if present is None:
-        dense = _dense_scalar(values, None, phys, name)
-        dense_ofs = elem_cum
-    else:
-        dense = _dense_scalar(values, np.flatnonzero(present), phys, name)
-        vcum = np.zeros(n_elem_slots + 1, dtype=np.int64)
-        np.cumsum(present, out=vcum[1:])
-        dense_ofs = vcum[elem_cum]
-    return _Leaf(path, phys, dense, n_rows=n_rows,
-                 use_dictionary=use_dictionary, max_rep=1, max_def=max_def,
-                 rep=rep, deflv=d, lvl_ofs=lvl_ofs, dense_ofs=dense_ofs)
-
-
-def _nested_list_leaf(path: list, phys: str, values, outer_lengths,
-                      inner_lengths, valid, inner_valid, elem_valid,
-                      use_dictionary: bool) -> _Leaf:
-    """list<list<element>> leaf: max_rep = 2. def scheme (each optional
-    layer adds a level): null outer slot -> 0, empty outer -> opt_o,
-    null inner slot -> opt_o+1, empty inner -> opt_o+1+opt_i, null
-    element -> opt_o+1+opt_i+1, value -> max_def."""
-    name = ".".join(path)
-    _phys_id(phys)
-    if _is_fixed_bytes(phys):
-        raise ValueError(f"column {name}: list<FLBA/INT96> out of "
-                         "writer scope")
-    outer = np.ascontiguousarray(outer_lengths, dtype=np.int64)
-    inner = np.ascontiguousarray(inner_lengths, dtype=np.int64)
-    if (outer < 0).any() or (inner < 0).any():
-        raise ValueError(f"column {name}: negative list length")
-    if int(outer.sum()) != len(inner):
-        raise ValueError(f"column {name}: outer_lengths sum "
-                         f"{int(outer.sum())} != {len(inner)} inner lists")
-    n_rows = len(outer)
-    opt_o = opt_i = opt_e = 0
-    if valid is not None:
-        valid = np.asarray(valid, dtype=bool)
-        if outer[~valid].any():
-            raise ValueError(f"column {name}: null outer slots must have "
-                             "length 0")
-        opt_o = 1
-    if inner_valid is not None:
-        inner_valid = np.asarray(inner_valid, dtype=bool)
-        if len(inner_valid) != len(inner):
-            raise ValueError(f"column {name}: inner_valid must have one "
-                             f"entry per inner list ({len(inner)})")
-        if inner[~inner_valid].any():
-            raise ValueError(f"column {name}: null inner slots must have "
-                             "length 0")
-        opt_i = 1
-    n_elem_slots = int(inner.sum())
-    if elem_valid is not None:
-        elem_valid = np.asarray(elem_valid, dtype=bool)
-        if len(elem_valid) != n_elem_slots:
-            raise ValueError(f"column {name}: element_valid must have one "
-                             f"entry per slot ({n_elem_slots})")
-        opt_e = 1
-    n_vals = len(values) if phys == "byte_array" else len(np.asarray(values))
-    if n_vals != n_elem_slots:
-        raise ValueError(f"column {name}: {n_vals} elements but "
-                         f"inner_lengths sum to {n_elem_slots}")
-    max_def = opt_o + opt_i + opt_e + 2
-
-    # base levels for the required/required shape (levels.py list-of-list
-    # contract: base def 0 = outer marker, 1 = inner marker, 2 = value),
-    # then remap each disjoint slot class onto the optional-aware scheme
-    rep, base = levels_from_nested_lengths(outer, inner)
-    d = np.empty(len(base), dtype=np.int8)
-    vpos = base == 2                       # element slots, element order
-    if opt_e:
-        d[vpos] = np.where(elem_valid, max_def, opt_o + opt_i + 2)
-    else:
-        d[vpos] = max_def
-    ipos = np.flatnonzero(base == 1)       # empty-inner markers, in order
-    if len(ipos):
-        empty_inner = np.flatnonzero(inner == 0)
-        if opt_i:
-            d[ipos] = np.where(inner_valid[empty_inner],
-                               opt_o + 1 + opt_i, opt_o + 1)
-        else:
-            d[ipos] = opt_o + 1
-    opos = np.flatnonzero(base == 0)       # empty-outer markers, row order
-    if len(opos):
-        if opt_o:
-            d[opos] = np.where(valid[outer == 0], opt_o, 0)
-        else:
-            d[opos] = 0
-
-    # row -> level slot / dense value offset maps
-    inner_slots = np.maximum(inner, 1)
-    row_of_inner = np.repeat(np.arange(n_rows, dtype=np.int64), outer)
-    row_slots = np.zeros(n_rows, dtype=np.int64)
-    np.add.at(row_slots, row_of_inner, inner_slots)
-    row_slots[outer == 0] = 1
-    lvl_ofs = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(row_slots, out=lvl_ofs[1:])
-    row_elems = np.zeros(n_rows, dtype=np.int64)
-    np.add.at(row_elems, row_of_inner, inner)
-    elem_cum = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(row_elems, out=elem_cum[1:])
-    if elem_valid is None:
-        dense = _dense_scalar(values, None, phys, name)
-        dense_ofs = elem_cum
-    else:
-        dense = _dense_scalar(values, np.flatnonzero(elem_valid),
-                              phys, name)
-        vcum = np.zeros(n_elem_slots + 1, dtype=np.int64)
-        np.cumsum(elem_valid, out=vcum[1:])
-        dense_ofs = vcum[elem_cum]
-    return _Leaf(path, phys, dense, n_rows=n_rows,
-                 use_dictionary=use_dictionary, max_rep=2, max_def=max_def,
-                 rep=rep, deflv=d, lvl_ofs=lvl_ofs, dense_ofs=dense_ofs)
-
-
-def _is_nested_struct_field(f) -> bool:
-    return len(f) == 2 and isinstance(f[1], StructColumn)
-
-
-def _is_list_field(f) -> bool:
-    return len(f) == 2 and isinstance(f[1], ListColumn)
-
-
-def _struct_leaves(path: list, anc_masks: list, fields: list) -> list:
-    """Recursive struct flattening (struct-in-struct at any depth):
-    ``anc_masks`` holds one per-row bool mask per OPTIONAL ancestor group,
-    outermost first. A leaf's def level per row counts how many leading
-    ancestors (then the field itself) are defined — the
-    ``SchemaDescriptor`` def accumulation, ``schema.h:106-303``."""
-    if not fields:
-        raise ValueError(f"struct column {'.'.join(path)}: no fields")
-    leaves = []
-    for f in fields:
-        if _is_nested_struct_field(f):
-            sub = f[1]
-            masks = anc_masks + ([np.asarray(sub.valid, dtype=bool)]
-                                 if sub.valid is not None else [])
-            leaves += _struct_leaves(path + [f[0]], masks, sub.fields)
-            continue
-        if _is_list_field(f):
-            # list<scalar> inside a struct: REPEATED leaf whose def
-            # levels start below the optional struct ancestors (the
-            # inner ListColumn's name is ignored; lengths/valid stay
-            # top-level-row aligned)
-            lc = f[1]
-            leaves.append(_list_leaf(
-                path + [f[0], "list", "element"], lc.phys, lc.values,
-                lc.lengths, lc.valid, lc.element_valid,
-                lc.use_dictionary, anc_masks=anc_masks))
-            continue
-        fname, phys, values = f[0], f[1], f[2]
-        fvalid = f[3] if len(f) > 3 and f[3] is not None else None
-        use_dict = bool(f[4]) if len(f) > 4 else False
-        masks = anc_masks + ([np.asarray(fvalid, dtype=bool)]
-                             if fvalid is not None else [])
-        if not masks:
-            leaves.append(_scalar_leaf(path + [fname], phys, values,
-                                       None, None, 0, use_dict))
-            continue
-        defined = np.ones(len(masks[0]), dtype=bool)
-        deflv = np.zeros(len(masks[0]), dtype=np.int8)
-        for m in masks:
-            defined &= m
-            deflv += defined
-        leaves.append(_scalar_leaf(path + [fname], phys, values, defined,
-                                   deflv, len(masks), use_dict))
-    return leaves
+    if valid is None:
+        return _Leaf([name], phys, _dense_scalar(values, None, phys, name),
+                     n_rows=len(values), use_dictionary=use_dictionary)
+    valid = np.asarray(valid, dtype=bool)
+    n_rows = len(valid)
+    if len(values) != n_rows:
+        raise ValueError(f"column {name}: values must be slot-aligned "
+                         "(one per row, nulls included) when a "
+                         "validity mask is given")
+    dense = _dense_scalar(values, np.flatnonzero(valid), phys, name)
+    dense_ofs = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(valid, out=dense_ofs[1:])
+    return _Leaf([name], phys, dense, n_rows=n_rows,
+                 use_dictionary=use_dictionary, max_def=1,
+                 deflv=valid.astype(np.int8), dense_ofs=dense_ofs)
 
 
 def _leaves_of(spec) -> list:
-    """Top-level column spec -> its leaf chunks in schema DFS order."""
+    """Top-level column spec -> its leaf chunks in schema DFS order: a
+    walker spec (``pcs_leaves``) owns its leaves; a flat tuple
+    ``(name, phys, values[, valid[, use_dictionary]])`` is one leaf."""
     if hasattr(spec, "pcs_leaves"):
-        # general-walker spec (sources.arrow_nested.ArrowColumn or any
-        # duck-typed equivalent): the spec owns its leaf construction
         return spec.pcs_leaves()
-    if isinstance(spec, ListColumn):
-        return [_list_leaf([spec.name, "list", "element"], spec.phys,
-                           spec.values, spec.lengths, spec.valid,
-                           spec.element_valid, spec.use_dictionary)]
-    if isinstance(spec, NestedListColumn):
-        return [_nested_list_leaf(
-            [spec.name, "list", "element", "list", "element"], spec.phys,
-            spec.values, spec.outer_lengths, spec.inner_lengths,
-            spec.valid, spec.inner_valid, spec.element_valid,
-            spec.use_dictionary)]
-    if isinstance(spec, StructColumn):
-        anc = [] if spec.valid is None \
-            else [np.asarray(spec.valid, dtype=bool)]
-        return _struct_leaves([spec.name], anc, spec.fields)
-    if isinstance(spec, ListStructColumn):
-        if not spec.fields:
-            raise ValueError(f"column {spec.name}: no struct fields")
-        leaves = []
-        for f in spec.fields:
-            if len(f) == 2:
-                raise ValueError(f"column {spec.name}.{f[0]}: nesting "
-                                 "inside a list<struct> element is out "
-                                 "of writer scope")
-            fvalid = f[3] if len(f) > 3 and f[3] is not None else None
-            use_dict = bool(f[4]) if len(f) > 4 else False
-            leaves.append(_list_struct_field_leaf(
-                [spec.name, "list", "element", f[0]], f[1], f[2],
-                spec.lengths, spec.valid, spec.element_valid, fvalid,
-                use_dict))
-        return leaves
-    if isinstance(spec, MapColumn):
-        return [
-            _list_leaf([spec.name, "key_value", "key"], spec.key_phys,
-                       spec.keys, spec.lengths, spec.valid, None,
-                       spec.key_use_dictionary),
-            _list_leaf([spec.name, "key_value", "value"], spec.value_phys,
-                       spec.values, spec.lengths, spec.valid,
-                       spec.value_valid, spec.value_use_dictionary)]
-    # flat leaf tuple: (name, phys, values[, valid[, use_dictionary]])
     name, phys, values = spec[0], spec[1], spec[2]
-    valid = spec[3] if len(spec) > 3 and spec[3] is not None else None
+    valid = spec[3] if len(spec) > 3 else None
     use_dict = bool(spec[4]) if len(spec) > 4 else False
-    if valid is None:
-        return [_scalar_leaf([name], phys, values, None, None, 0,
-                             use_dict)]
-    valid = np.asarray(valid, dtype=bool)
-    return [_scalar_leaf([name], phys, values, valid,
-                         valid.astype(np.int8), 1, use_dict)]
+    return [_scalar_leaf(name, phys, values, valid, use_dict)]
+
+
+# -- numpy column specs -----------------------------------------------------
+# The five spec classes below take numpy lengths/masks/values, build the
+# equivalent Arrow array and hand it to the one rep/def walker
+# (``arrow_nested.ArrowColumn``): a field is nullable exactly where a mask
+# is given, and each leaf gets the dictionary flag the spec names.
+
+_ARROW_NUMERIC = {"int32": "int32", "int64": "int64", "float": "float32",
+                  "double": "float64"}
+
+
+def _arrow(name: str, typ, n: int, valid, buffers: list, children=None):
+    """Arrow array of ``typ`` over ``buffers`` (after the validity
+    bitmap, built from the bool mask ``valid``; None = no nulls)."""
+    import pyarrow as pa
+
+    bits = None
+    if valid is not None:
+        valid = np.asarray(valid, dtype=bool)
+        if len(valid) != n:
+            raise ValueError(f"column {name}: validity mask has "
+                             f"{len(valid)} entries, expected {n}")
+        bits = pa.py_buffer(np.packbits(valid, bitorder="little"))
+    arr = pa.Array.from_buffers(typ, n, [bits, *buffers], children=children)
+    arr.validate()
+    return arr
+
+
+def _leaf_array(name: str, phys: str, values, valid):
+    """Slot-aligned leaf values (entries at null slots ignored) -> Arrow."""
+    import pyarrow as pa
+
+    _phys_id(phys)
+    if phys == "byte_array":
+        base = ba.to_arrow(ba.as_view(values))
+    elif phys == "boolean":
+        base = pa.array(np.asarray(values, dtype=bool))
+    elif phys in _ARROW_NUMERIC:
+        base = pa.array(_coerce_dense(values, phys, name),
+                        type=_ARROW_NUMERIC[phys])
+    else:
+        raise ValueError(f"column {name}: {phys} values are written as "
+                         "flat columns only")
+    return _arrow(name, base.type, len(base), valid, base.buffers()[1:])
+
+
+def _offsets(name: str, lengths, valid, n_child: int) -> np.ndarray:
+    """Checked int64 list offsets for per-row ``lengths`` over ``n_child``
+    elements; null rows (``valid`` False) must carry length 0."""
+    lengths = np.ascontiguousarray(lengths, dtype=np.int64)
+    if (lengths < 0).any():
+        raise ValueError(f"column {name}: negative list length")
+    if valid is not None and lengths[~np.asarray(valid, dtype=bool)].any():
+        raise ValueError(f"column {name}: null list slots must have "
+                         "length 0")
+    off = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=off[1:])
+    if off[-1] != n_child:
+        raise ValueError(f"column {name}: {n_child} elements but "
+                         f"lengths sum to {int(off[-1])}")
+    return off
+
+
+def _list_array(name: str, lengths, valid, child, child_nullable: bool):
+    """Arrow list array of per-row ``lengths`` over ``child``."""
+    import pyarrow as pa
+
+    off = _offsets(name, lengths, valid, len(child))
+    typ = pa.large_list(pa.field("element", child.type,
+                                 nullable=child_nullable))
+    return _arrow(name, typ, len(off) - 1, valid, [pa.py_buffer(off)],
+                  [child])
+
+
+def _struct_array(name: str, fields: list, valid):
+    """(Arrow struct array, per-leaf dictionary flags in DFS order) for
+    ``fields``: ``(fname, phys, values[, fvalid[, use_dictionary]])``
+    tuples or ``(fname, spec)`` pairs nesting another spec column."""
+    import pyarrow as pa
+
+    if not fields:
+        raise ValueError(f"struct column {name}: no fields")
+    children, arrow_fields, flags = [], [], []
+    for f in fields:
+        if len(f) == 2 and isinstance(f[1], ArrowColumn):
+            child, nullable = f[1].array, f[1].nullable
+            flags += [leaf.use_dictionary for leaf in f[1].pcs_leaves()]
+        else:
+            fvalid = f[3] if len(f) > 3 else None
+            child = _leaf_array(f"{name}.{f[0]}", f[1], f[2], fvalid)
+            nullable = fvalid is not None
+            flags.append(bool(f[4]) if len(f) > 4 else False)
+        children.append(child)
+        arrow_fields.append(pa.field(f[0], child.type, nullable=nullable))
+    return (_arrow(name, pa.struct(arrow_fields), len(children[0]), valid,
+                   [], children), flags)
+
+
+class _SpecColumn(ArrowColumn):
+    """An ``ArrowColumn`` built from numpy parts, with the spec's
+    dictionary flag applied to each leaf."""
+
+    def __init__(self, name: str, array, nullable: bool, flags: list):
+        super().__init__(name, array, nullable)
+        for leaf, flag in zip(self._leaves, flags):
+            leaf.use_dictionary = bool(flag)
+
+
+class ListColumn(_SpecColumn):
+    """Spec for a ``list<element>`` column (3-level encoding,
+    ``schema.h:43-77``): ``values`` are the flattened elements, ``lengths``
+    the per-row element counts; rep 0 delimits a record like the
+    reference's REPEATED leaves (``column_writer.cc:616-629``).
+
+    ``valid`` (per-ROW mask) makes the list itself OPTIONAL: a null slot
+    is one level position with def 0, an empty list def 1, elements def 2
+    — the ``column_writer-test.cc:387-460`` OPTIONAL-REPEATED shape. Null
+    rows must carry length 0. ``element_valid`` (one bool per SLOT) makes
+    elements OPTIONAL; ``values`` are then SLOT-aligned (entries at null
+    slots ignored) and each null element costs one more def level."""
+
+    def __init__(self, name: str, phys: str, values, lengths,
+                 use_dictionary: bool = False, valid=None,
+                 element_valid=None):
+        child = _leaf_array(name, phys, values, element_valid)
+        super().__init__(name, _list_array(name, lengths, valid, child,
+                                           element_valid is not None),
+                         valid is not None, [use_dictionary])
+
+
+class NestedListColumn(_SpecColumn):
+    """Spec for a ``list<list<element>>`` column (max_rep = 2, two LIST
+    annotations deep).
+
+    ``outer_lengths[i]``: inner lists in row i; ``inner_lengths``: element
+    counts per inner list (flattened, ``outer_lengths.sum()`` entries);
+    ``values``: flattened element slots (``inner_lengths.sum()``).
+    ``valid`` (per row) / ``inner_valid`` (per inner list) /
+    ``element_valid`` (per element slot) make each layer OPTIONAL — every
+    optional layer adds one def level (max_def up to 5). Null slots at
+    any layer must carry zero extent."""
+
+    def __init__(self, name: str, phys: str, values, outer_lengths,
+                 inner_lengths, use_dictionary: bool = False, valid=None,
+                 inner_valid=None, element_valid=None):
+        child = _leaf_array(name, phys, values, element_valid)
+        inner = _list_array(f"{name}.element", inner_lengths, inner_valid,
+                            child, element_valid is not None)
+        super().__init__(name, _list_array(name, outer_lengths, valid, inner,
+                                           inner_valid is not None),
+                         valid is not None, [use_dictionary])
+
+
+class StructColumn(_SpecColumn):
+    """Spec for a ``struct<...>`` column (``schema.h:106-303`` group
+    nodes).
+
+    ``fields``: flat leaf tuples ``(fname, phys, values[, fvalid[,
+    use_dictionary]])`` — each becomes one leaf chunk with path
+    ``name.fname`` — or ``(fname, spec)`` pairs nesting another spec
+    column such as a ``StructColumn`` or ``ListColumn`` (the inner spec's
+    ``name`` is ignored; its values/masks stay TOP-LEVEL-row aligned,
+    entries under a null ancestor ignored). ``valid`` makes the struct
+    OPTIONAL: a struct-null row contributes def 0 to every leaf below
+    it; each optional ancestor adds one def level. Annotations (utf8/
+    decimal/temporal) are keyed by the dotted path ``name.fname``. FLBA
+    and INT96 fields are out of scope (flat columns only)."""
+
+    def __init__(self, name: str, fields: list, valid=None):
+        arr, flags = _struct_array(name, list(fields), valid)
+        super().__init__(name, arr, valid is not None, flags)
+
+
+class MapColumn(_SpecColumn):
+    """Spec for a ``map<key, value>`` column (MAP converted type; 3-level
+    ``key_value`` group, ``schema.h:43-77``). Two parallel REPEATED leaves
+    share one ``lengths`` array: ``keys`` (REQUIRED — parquet map keys
+    cannot be null) and ``values`` (OPTIONAL when ``value_valid`` is
+    given, slot-aligned like ``ListColumn.element_valid``). ``valid``
+    makes the map itself OPTIONAL (null map vs empty map, like
+    ListColumn). Annotation keys: ``name.key`` / ``name.value``."""
+
+    def __init__(self, name: str, key_phys: str, keys, value_phys: str,
+                 values, lengths, valid=None, value_valid=None,
+                 key_use_dictionary: bool = False,
+                 value_use_dictionary: bool = False):
+        import pyarrow as pa
+
+        entries, _flags = _struct_array(
+            name, [("key", key_phys, keys),
+                   ("value", value_phys, values, value_valid)], None)
+        off = _offsets(name, lengths, valid, len(entries))
+        typ = pa.map_(entries.type.field(0), entries.type.field(1))
+        arr = _arrow(name, typ, len(off) - 1, valid,
+                     [pa.py_buffer(off.astype(np.int32))], [entries])
+        super().__init__(name, arr, valid is not None,
+                         [key_use_dictionary, value_use_dictionary])
+
+
+class ListStructColumn(_SpecColumn):
+    """Spec for a ``list<struct<...>>`` column: one REPEATED leaf per
+    struct field, all sharing one ``lengths`` array.
+
+    ``fields``: as ``StructColumn.fields``, with values/masks PER ELEMENT
+    SLOT (``lengths.sum()`` entries). ``element_valid`` (per slot) makes
+    the struct element OPTIONAL (a null struct inside the list — its
+    field values at those slots are ignored); ``valid`` (per row) makes
+    the list itself OPTIONAL. Annotation keys: ``name.fname``."""
+
+    def __init__(self, name: str, fields: list, lengths, valid=None,
+                 element_valid=None):
+        elem, flags = _struct_array(name, list(fields), element_valid)
+        super().__init__(name, _list_array(name, lengths, valid, elem,
+                                           element_valid is not None),
+                         valid is not None, flags)
 
 
 def _bit_width(max_level: int) -> int:
@@ -1179,7 +889,7 @@ def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
     return [chunk_start, total_comp, cmd, pages]
 
 
-def write_file(path: str, columns: list[tuple], num_rows: int,
+def write_file(path: str, columns: list, num_rows: int,
                created_by: str = "parquet_cpp_spark",
                row_group_rows: "int | None" = None,
                page_rows: "int | None" = None,
@@ -1201,7 +911,7 @@ def write_file(path: str, columns: list[tuple], num_rows: int,
                = frozenset(),
                bloom_fpp: float = 0.01,
                field_ids: "dict[str, int] | None" = None) -> None:
-    """Write flat columns as a readable PAR1 file.
+    """Write columns as a readable PAR1 file.
 
     ``field_ids``: optional TOP-LEVEL column name -> parquet field_id
     (SchemaElement field 9 — the id Iceberg-family table formats track
@@ -1209,12 +919,15 @@ def write_file(path: str, columns: list[tuple], num_rows: int,
     ``PARQUET:field_id`` field metadata). Emitted on the column's
     top-level schema element only.
 
-    ``columns``: (name, phys, values[, valid[, use_dictionary]]) tuples.
-    ``values`` are slot-aligned when ``valid`` is given (entries at null
-    slots are ignored); byte_array values may be list[bytes] or a
-    ``ba.ByteArrayView``. ``row_group_rows``/``page_rows`` split the file
-    into multiple row groups / data pages; ``compression`` is one of
-    None/'snappy'/'gzip'/'zstd' (page-body compression, V1 layout).
+    ``columns``: flat ``(name, phys, values[, valid[, use_dictionary]])``
+    tuples — ``values`` slot-aligned when ``valid`` is given (entries at
+    null slots ignored), byte_array values as list[bytes] or a
+    ``ba.ByteArrayView`` — and walker specs (``arrow_nested.ArrowColumn``
+    and the numpy spec classes built on it), which bring their own
+    leaves, schema subtree and annotation keys. ``row_group_rows``/
+    ``page_rows`` split the file into multiple row groups / data pages;
+    ``compression`` is one of None/'snappy'/'gzip'/'zstd' (page-body
+    compression, V1 layout).
     byte_array columns named in ``utf8_columns`` carry the UTF8 converted
     type, so schema-strict readers (Spark's JVM reader) surface them as
     strings instead of raw binary. int32/int64 columns named in
@@ -1266,7 +979,7 @@ def write_file(path: str, columns: list[tuple], num_rows: int,
     cols: list[_Leaf] = []
     for s in spec_list:
         if hasattr(s, "pcs_annotations"):
-            # general-walker specs harvest utf8/temporal/decimal keys at
+            # walker specs harvest utf8/temporal/decimal keys at
             # construction; merge them so callers need not re-plumb them
             s_utf8, s_ann, s_dec = s.pcs_annotations()
             utf8_columns |= s_utf8
@@ -1451,92 +1164,12 @@ def write_file(path: str, columns: list[tuple], num_rows: int,
         top_elements.append(
             (len(schema), s[0] if isinstance(s, tuple) else s.name))
         if hasattr(s, "pcs_schema"):
-            # general-walker spec: it emits its own schema subtree (group
+            # walker spec: it emits its own schema subtree (group
             # skeletons + leaves through _leaf_el for the annotations)
             schema.extend(s.pcs_schema(_leaf_el))
-        elif isinstance(s, ListColumn):
-            # standard 3-level list shape (schema.h:43-77): a group
-            # annotated LIST, one REPEATED middle group, the leaf.
-            # Spark/pyarrow/DuckDB all read this as array<element>.
-            outer_rep = 1 if s.valid is not None else 0
-            elem_rep = 1 if s.element_valid is not None else 0
-            schema.append([(3, _I32, outer_rep), (4, _BINARY, s.name),
-                           (5, _I32, 1), (6, _I32, 3)])  # ConvertedType LIST
-            schema.append([(3, _I32, 2), (4, _BINARY, "list"),
-                           (5, _I32, 1)])                # REPEATED group
-            schema.append(_leaf_el(s.phys, elem_rep, "element", s.name))
-        elif isinstance(s, NestedListColumn):
-            # two LIST annotations deep: group(LIST) > repeated list >
-            # group element(LIST) > repeated list > leaf element
-            outer_rep = 1 if s.valid is not None else 0
-            inner_rep = 1 if s.inner_valid is not None else 0
-            elem_rep = 1 if s.element_valid is not None else 0
-            schema.append([(3, _I32, outer_rep), (4, _BINARY, s.name),
-                           (5, _I32, 1), (6, _I32, 3)])  # ConvertedType LIST
-            schema.append([(3, _I32, 2), (4, _BINARY, "list"),
-                           (5, _I32, 1)])
-            schema.append([(3, _I32, inner_rep), (4, _BINARY, "element"),
-                           (5, _I32, 1), (6, _I32, 3)])  # inner LIST group
-            schema.append([(3, _I32, 2), (4, _BINARY, "list"),
-                           (5, _I32, 1)])
-            schema.append(_leaf_el(s.phys, elem_rep, "element", s.name))
-        elif isinstance(s, StructColumn):
-            def _emit_struct(sc: StructColumn, gname: str, dotted: str):
-                rep = 1 if sc.valid is not None else 0
-                schema.append([(3, _I32, rep), (4, _BINARY, gname),
-                               (5, _I32, len(sc.fields))])  # group node
-                for f in sc.fields:
-                    if _is_nested_struct_field(f):
-                        _emit_struct(f[1], f[0], f"{dotted}.{f[0]}")
-                        continue
-                    if _is_list_field(f):
-                        lc = f[1]
-                        l_rep = 1 if lc.valid is not None else 0
-                        e_rep = 1 if lc.element_valid is not None else 0
-                        schema.append([(3, _I32, l_rep), (4, _BINARY,
-                                       f[0]), (5, _I32, 1),
-                                       (6, _I32, 3)])  # LIST
-                        schema.append([(3, _I32, 2), (4, _BINARY, "list"),
-                                       (5, _I32, 1)])
-                        schema.append(_leaf_el(lc.phys, e_rep, "element",
-                                               f"{dotted}.{f[0]}"))
-                        continue
-                    fname, fphys = f[0], f[1]
-                    f_rep = 1 if len(f) > 3 and f[3] is not None else 0
-                    schema.append(_leaf_el(fphys, f_rep, fname,
-                                           f"{dotted}.{fname}"))
-            _emit_struct(s, s.name, s.name)
-        elif isinstance(s, ListStructColumn):
-            # group(LIST) > repeated list > group element (the struct) >
-            # one leaf per field — arrow/schema.cc list-of-struct shape
-            outer_rep = 1 if s.valid is not None else 0
-            elem_rep = 1 if s.element_valid is not None else 0
-            schema.append([(3, _I32, outer_rep), (4, _BINARY, s.name),
-                           (5, _I32, 1), (6, _I32, 3)])  # ConvertedType LIST
-            schema.append([(3, _I32, 2), (4, _BINARY, "list"),
-                           (5, _I32, 1)])
-            schema.append([(3, _I32, elem_rep), (4, _BINARY, "element"),
-                           (5, _I32, len(s.fields))])    # struct group
-            for f in s.fields:
-                f_rep = 1 if len(f) > 3 and f[3] is not None else 0
-                schema.append(_leaf_el(f[1], f_rep, f[0],
-                                       f"{s.name}.{f[0]}"))
-        elif isinstance(s, MapColumn):
-            # MAP converted type: group(MAP) > repeated key_value
-            # (MAP_KEY_VALUE) > required key + value (schema.h:43-77)
-            rep = 1 if s.valid is not None else 0
-            schema.append([(3, _I32, rep), (4, _BINARY, s.name),
-                           (5, _I32, 1), (6, _I32, 1)])   # ConvertedType MAP
-            schema.append([(3, _I32, 2), (4, _BINARY, "key_value"),
-                           (5, _I32, 2), (6, _I32, 2)])   # MAP_KEY_VALUE
-            schema.append(_leaf_el(s.key_phys, 0, "key", f"{s.name}.key"))
-            val_rep = 1 if s.value_valid is not None else 0
-            schema.append(_leaf_el(s.value_phys, val_rep, "value",
-                                   f"{s.name}.value"))
         else:
-            name, phys = s[0], s[1]
             rep = 1 if len(s) > 3 and s[3] is not None else 0
-            schema.append(_leaf_el(phys, rep, name, name))
+            schema.append(_leaf_el(s[1], rep, s[0], s[0]))
     if field_ids:
         unknown = set(field_ids) - {n for _i, n in top_elements}
         if unknown:

@@ -24,8 +24,8 @@ with one boolean repeat.
 
 Arrow arrays are built via ``pa.Array.from_buffers`` (validity bitmaps
 from ``np.packbits``), so assembly is allocation + memcpy, and works for
-files written by this engine's writer (any nesting the sink emits,
-specialized specs or the general walker) AND by foreign writers
+files written by this engine's writer (any nesting its rep/def walker
+emits) AND by foreign writers
 (pyarrow) as long as they use the standard 3-level list / MAP shapes and
 the leaf types below.
 """

@@ -9,10 +9,10 @@ path_internal.cc — per-node rep/def context, one stream per primitive
 leaf; schema walk in arrow/schema.cc), re-expressed as whole-column numpy
 slot arrays instead of per-value state machines.
 
-The sink falls back to it for any column its specialized fast paths don't
-express (parquet_sink.specs_from_arrow), so these tests pin both the
-walker's level semantics (pyarrow + DuckDB read-back equality) and the
-fallback dispatch."""
+The sink hands it every column (parquet_sink.specs_from_arrow) and the
+writer's numpy spec classes build on it, so these tests pin the walker's
+level semantics (pyarrow + DuckDB read-back equality) and the sink's
+routing of every column through it."""
 
 import os
 import sys
@@ -146,8 +146,8 @@ def test_empty_and_all_null_columns(tmp_path):
 
 def test_null_list_slot_with_extent_is_skipped(tmp_path):
     """Arrow permits a null list slot whose offsets still span values;
-    parquet must NOT write those values (they're undefined). The
-    specialized sink path rejects this layout; the walker handles it."""
+    parquet must NOT write those values (they're undefined); the
+    walker skips them."""
     import pyarrow as pa
     values = pa.array([9, 1, 2, 7], pa.int32())
     offsets = pa.array([0, 1, 3, 4], pa.int32())
@@ -159,6 +159,36 @@ def test_null_list_slot_with_extent_is_skipped(tmp_path):
     from parquet_cpp_spark.sources.arrow_nested import ArrowColumn
     _, t = _write_and_read([ArrowColumn("l", arr)], 3, tmp_path)
     assert t.column("l").to_pylist() == [[9], [1, 2], None]
+
+
+def test_walker_peak_memory_bounded():
+    """The walker's numpy temporaries stay within a fixed multiple of the
+    column's value bytes on a ~1M-element list<int32> (1% empty rows):
+    child slot indices come from one in-place ramp, index arrays are
+    int32 when they fit, and dense offsets come from the few valueless
+    slots. Int64 per-element index temporaries take the peak past 10x."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    from parquet_cpp_spark.sources.arrow_nested import ArrowColumn
+    rng = np.random.default_rng(0)
+    n_rows = 10_000
+    lengths = rng.integers(1, 200, n_rows)
+    lengths[rng.random(n_rows) < 0.01] = 0
+    off = np.zeros(n_rows + 1, np.int32)
+    np.cumsum(lengths, out=off[1:])
+    vals = rng.integers(0, 1 << 20, int(off[-1])).astype(np.int32)
+    arr = pa.ListArray.from_arrays(pa.array(off), pa.array(vals))
+    ArrowColumn("t", arr)          # warm imports outside the trace
+    tracemalloc.start()
+    try:
+        col = ArrowColumn("t", arr)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert col.pcs_leaves()[0].dense.nbytes == vals.nbytes
+    assert peak <= 6 * vals.nbytes, peak / vals.nbytes
 
 
 def test_n_values_accounting():
@@ -179,13 +209,14 @@ def test_n_values_accounting():
     assert flat.pcs_n_values() == 3
 
 
-def test_sink_fallback_dispatch():
-    """specs_from_arrow keeps the specialized fast paths for the shapes
-    they cover and falls back to ArrowColumn only beyond them."""
+def test_sink_routes_every_column_through_walker(tmp_path):
+    """specs_from_arrow hands every column to ArrowColumn — flat, list,
+    struct, 3-deep list and a map of lists — so one level model writes
+    them all; the file reads back equal."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from parquet_cpp_spark.sources import parquet_sink as sink
-    from parquet_cpp_spark.sources import parquet_writer as pw
     from parquet_cpp_spark.sources.arrow_nested import ArrowColumn
     tbl = pa.table({
         "id": pa.array([1, 2], pa.int64()),
@@ -198,13 +229,13 @@ def test_sink_fallback_dispatch():
                        pa.map_(pa.int32(), pa.list_(pa.int32()))),
     })
     specs, utf8, ann, dec = sink.specs_from_arrow(tbl)
-    kinds = {n: type(s).__name__ for n, s in zip(tbl.column_names, specs)}
-    assert kinds["id"] == "tuple"
-    assert kinds["tokens"] == "ListColumn"
-    assert kinds["st"] == "StructColumn"
-    assert kinds["deep"] == "ArrowColumn"
-    assert kinds["mm"] == "ArrowColumn"
-    # a leaf type NO path supports still fails loudly
+    assert all(type(s) is ArrowColumn for s in specs)
+    assert [s.name for s in specs] == tbl.column_names
+    assert (utf8, ann, dec) == (set(), {}, {})
+    path = str(tmp_path / "r.parquet")
+    sink._write_one_file(tbl, path + ".tmp", path, None, None, None, 1)
+    assert pq.read_table(path).to_pylist() == tbl.to_pylist()
+    # a leaf type the walker does not support still fails loudly
     bad = pa.table({"x": pa.array([[1], None],
                                   pa.list_(pa.duration("s")))})
     with pytest.raises(ValueError):
@@ -317,9 +348,9 @@ def spark():
 
 
 def test_distributed_sink_deep_nesting(spark, tmp_path):
-    """End-to-end: a source parquet with walker-only columns goes through
-    write_parquet_dataset (executors run specs_from_arrow -> walker
-    fallback -> engine writer) and Spark's JVM reader reassembles it."""
+    """End-to-end: a source parquet with deeply nested columns goes
+    through write_parquet_dataset (executors run specs_from_arrow ->
+    walker -> engine writer) and Spark's JVM reader reassembles it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -594,8 +594,8 @@ def test_sink_temporal_decimal_in_nested(tmp_path, spark):
     assert rows[2].times is None
     assert _duck(path, "select meta.amt from '{p}' order by id") == \
         [(Decimal("12.34"),), (None,), (Decimal("-0.07"),)]
-    # decimal under a repeated leaf: outside the specialized fast paths,
-    # handled by the general walker fallback (arrow_nested.ArrowColumn)
+    # decimal under a repeated leaf: FLBA leaves at any depth through
+    # the walker (arrow_nested.ArrowColumn)
     from parquet_cpp_spark.sources.arrow_nested import ArrowColumn
     ld, _u, _a, _d = specs_from_arrow(pa.table({"x": pa.array(
         [[Decimal("1.00")]], pa.list_(pa.decimal128(9, 2)))}))
@@ -612,9 +612,8 @@ def test_sink_temporal_decimal_in_nested(tmp_path, spark):
 
 def test_sink_deep_nested_dataset(tmp_path, spark):
     """emit_parquet_dataset with array<array<int>> and struct-in-struct
-    columns: specs_from_arrow builds NestedListColumn / recursive
-    StructColumn specs on the executors and Spark's JVM reader scans the
-    result back identically."""
+    columns: the executors walk them with specs_from_arrow's rep/def
+    walker and Spark's JVM reader scans the result back identically."""
     from pyspark.sql import functions as F
 
     from parquet_cpp_spark.sources.parquet_sink import emit_parquet_dataset

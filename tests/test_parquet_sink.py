@@ -85,12 +85,14 @@ def test_sink_task_retry_is_idempotent(spark, tmp_path):
         os.path.basename(f) for f in m1)
 
 
-def test_specs_from_arrow_nullables_and_rejects():
-    """Arrow-schema bridge: nullable flat columns keep their masks;
-    strings come through as zero-copy views; r7 widens scope to
-    list<scalar> (OPTIONAL slots + nullable elements), structs and maps;
-    genuinely nested shapes still fail loudly."""
+def test_specs_from_arrow_nullables_and_rejects(tmp_path):
+    """Arrow-schema bridge: every column, flat or nested to any depth,
+    becomes one ``ArrowColumn``; nullable flat columns keep their masks
+    as def levels, strings come through as zero-copy views, the UTF8
+    keys are the dotted leaf paths, the file reads back equal, and an
+    unsupported leaf type fails loudly."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from parquet_cpp_spark.kernels import ba
     from parquet_cpp_spark.sources import parquet_writer as pw
@@ -106,55 +108,63 @@ def test_specs_from_arrow_nullables_and_rejects():
                        pa.struct([("a", pa.int32()), ("b", pa.string())])),
         "m": pa.array([[("k", 1)], [], None],
                       pa.map_(pa.string(), pa.int32())),
+        "nl": pa.array([[[1]], [[2, 3], []], None],
+                       pa.list_(pa.list_(pa.int32()))),
+        "sl": pa.array([{"a": [1, 2]}, {"a": None}, None],
+                       pa.struct([("a", pa.list_(pa.int32()))])),
+        "lsl": pa.array([[{"a": [1]}], [], None],
+                        pa.list_(pa.struct([("a", pa.list_(pa.int32()))]))),
     })
     specs, utf8, _ann, _dec = specs_from_arrow(tbl)
     assert utf8 == {"s", "ls", "st.b", "m.key"}
-    by_name = {getattr(s, "name", None) or s[0]: s for s in specs}
-    assert by_name["i"][3].tolist() == [True, False, True]
+    assert all(type(s) is ArrowColumn for s in specs)
+    assert [s.name for s in specs] == tbl.column_names
+    leaves = {leaf.name: leaf for s in specs for leaf in s.pcs_leaves()}
+    assert list(leaves) == ["i", "s", "l", "ls", "st.a", "st.b", "m.key",
+                            "m.value", "nl", "sl.a", "lsl.a"]
+    assert leaves["i"].deflv.tolist() == [1, 0, 1]
+    assert leaves["i"].dense.tolist() == [1, 3]
     # vectorized string path: a ByteArrayView, not a python list
-    assert isinstance(by_name["s"][2], ba.ByteArrayView)
-    assert by_name["s"][3].tolist() == [True, False, True]
-    assert isinstance(by_name["l"], pw.ListColumn)
-    assert by_name["l"].lengths.tolist() == [2, 0, 1]
-    ls = by_name["ls"]
-    assert ls.valid.tolist() == [True, False, True]
-    assert ls.element_valid.tolist() == [True, True, False]
-    st = by_name["st"]
-    assert isinstance(st, pw.StructColumn)
-    assert st.valid.tolist() == [True, False, True]
-    assert st.fields[0][3].tolist() == [True, True, False]  # a's mask
-    m = by_name["m"]
-    assert isinstance(m, pw.MapColumn)
-    assert m.lengths.tolist() == [1, 0, 0]
-    assert m.valid.tolist() == [True, True, False]
+    assert isinstance(leaves["s"].dense, ba.ByteArrayView)
+    assert leaves["s"].deflv.tolist() == [1, 0, 1]
+    shapes = {n: (lf.max_rep, lf.max_def) for n, lf in leaves.items()}
+    assert shapes == {"i": (0, 1), "s": (0, 1), "l": (1, 3), "ls": (1, 3),
+                      "st.a": (0, 2), "st.b": (0, 2), "m.key": (1, 2),
+                      "m.value": (1, 3), "nl": (2, 5), "sl.a": (1, 4),
+                      "lsl.a": (2, 6)}
+    path = str(tmp_path / "all.parquet")
+    pw.write_file(path, specs, tbl.num_rows)
+    assert pq.read_table(path).to_pylist() == tbl.to_pylist()
 
-    # list<list<scalar>> is now a NestedListColumn spec (max_rep = 2);
-    # a third list level stays out of writer scope
-    nl, _u, _a, _d = specs_from_arrow(pa.table(
-        {"x": pa.array([[[1]], [[2, 3], []]],
-                       pa.list_(pa.list_(pa.int32())))}))
-    assert isinstance(nl[0], pw.NestedListColumn)
-    assert nl[0].outer_lengths.tolist() == [1, 2]
-    assert nl[0].inner_lengths.tolist() == [1, 2, 0]
-    # a third list level falls back to the general rep/def walker
-    deep, _u, _a, _d = specs_from_arrow(pa.table(
-        {"x": pa.array([[[[1]]]],
-                       pa.list_(pa.list_(pa.list_(pa.int32()))))}))
-    assert isinstance(deep[0], ArrowColumn)
-    # struct containing a list and list<struct> are now supported specs
-    sl, _u, _a, _d = specs_from_arrow(pa.table({"x": pa.array(
-        [{"a": [1, 2]}, {"a": None}],
-        pa.struct([("a", pa.list_(pa.int32()))]))}))
-    assert isinstance(sl[0], pw.StructColumn)
-    assert isinstance(sl[0].fields[0][1], pw.ListColumn)
-    ls2, _u, _a, _d = specs_from_arrow(pa.table({"x": pa.array(
-        [[{"a": 1}], []], pa.list_(pa.struct([("a", pa.int32())])))}))
-    assert isinstance(ls2[0], pw.ListStructColumn)
-    # a list nested inside a list<struct> element falls back to the walker
-    lsl, _u, _a, _d = specs_from_arrow(pa.table({"x": pa.array(
-        [[{"a": [1]}]],
-        pa.list_(pa.struct([("a", pa.list_(pa.int32()))])))}))
-    assert isinstance(lsl[0], ArrowColumn)
+    with pytest.raises(ValueError, match="out of"):
+        specs_from_arrow(pa.table({"x": pa.array([1], pa.duration("s"))}))
+
+
+def test_manifest_n_values_counts_live_leaf_slots(tmp_path):
+    """The manifest's n_values (and the footer's pcs.n_values) count, per
+    leaf, the slots that reach the leaf: a struct's null rows and a
+    list<struct>'s null elements are not values of the fields below."""
+    import pyarrow as pa
+
+    from parquet_cpp_spark.sources import parquet_format as pf
+    from parquet_cpp_spark.sources.parquet_sink import _write_one_file
+
+    st = [None if i % 3 == 0 else {"a": i, "b": str(i)} for i in range(10)]
+    typ = pa.struct([("a", pa.int32()), ("b", pa.string())])
+    path = str(tmp_path / "st.parquet")
+    row = _write_one_file(pa.table({"st": pa.array(st, typ)}),
+                          path + ".tmp", path, None, None, None, 1)
+    assert row[2] == 12           # 2 fields x 6 live rows (4 null rows)
+    # 5 elements, 2 of them null structs; a null list and an empty list
+    ls = [[{"a": 1, "b": "x"}, None], None, [], [{"a": None, "b": "y"}],
+          [None, {"a": 4, "b": None}]]
+    path = str(tmp_path / "ls.parquet")
+    row = _write_one_file(pa.table({"ls": pa.array(ls, pa.list_(typ))}),
+                          path + ".tmp", path, None, None, None, 1)
+    assert row[2] == 6            # 2 fields x 3 non-null struct elements
+    with open(path, "rb") as fh:
+        meta = pf.read_footer(memoryview(fh.read()))
+    assert meta.key_value_metadata["pcs.n_values"] == "6"
 
 
 def test_sink_on_sf001_documents_tokens(spark, tmp_path):

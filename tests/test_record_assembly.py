@@ -4,7 +4,7 @@ read-side inverse of the write-side walker, mirroring the reference's
 Arrow read path (``arrow/reader.cc`` + ``arrow/reader_internal.cc``
 list/struct reconstruction over ``column_reader.cc`` RecordReader
 delimiting). Pinned four ways: files written by the ENGINE's writer
-(specialized specs and the general walker), by PYARROW, by DUCKDB
+(its rep/def walker), by PYARROW, by DUCKDB
 (int32/int64-backed decimals, NTZ timestamps), by SPARK's JVM writer,
 and the reference repo's own golden data files (INT96, dict encoding,
 all three decimal storages)."""
@@ -64,7 +64,7 @@ def _assert_equal(tbl, out):
 
 def test_engine_written_kitchen_sink(tmp_path):
     """Every nesting family + temporal/decimal leaves through the
-    engine's own writer (walker + specialized specs via the sink), read
+    engine's own writer (the rep/def walker via the sink), read
     back whole by the engine's own reader: no pyarrow.parquet anywhere
     in the loop."""
     from parquet_cpp_spark.sources.parquet_sink import _write_one_file
