@@ -1049,7 +1049,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ("source", "byte_array",
              [s.encode() for s in pdf["source"]], None, True),
         ], n, row_group_rows=200, page_rows=64, compression="zstd",
-            utf8_columns={"doc_id", "source"}, delta_columns={"n_tok"})
+            utf8_columns={"doc_id", "source"}, encodings={"n_tok": "delta"})
         return _digest(spark.read.parquet(out))
     q["pq_writer_tokens"] = pq_writer_tokens
 

@@ -2,10 +2,9 @@
 
 Analog of the reference's ``WriterProperties::Builder``
 (``/root/reference/src/parquet/properties.h:141-347``): per-column encoding
-overrides, dictionary on/off + page-size limit, statistics on/off,
-compression, plus the engine-specific knobs (bloom columns, deterministic
-sort key, partition sizing). A single object travels from job CLI ->
-plans -> operators.
+overrides, dictionary on/off + page-size limit, compression, plus the
+engine-specific knobs (bloom columns, deterministic sort key, partition
+sizing). A single object travels from job CLI -> plans -> operators.
 """
 
 from __future__ import annotations
@@ -31,7 +30,6 @@ class WriterProperties:
     dictionary_enabled: bool = True
     dictionary_pagesize_limit: int = DEFAULT_DICT_PAGE_LIMIT
     data_pagesize: int = DEFAULT_DATA_PAGESIZE  # page flush threshold
-    statistics_enabled: bool = True
     compression: str = "UNCOMPRESSED"
     # data page layout version: V1 compresses the assembled page; V2 keeps
     # levels outside the compressed block (properties.h:363-377)

@@ -32,8 +32,8 @@ OPTIONAL node costs one RLE run of def levels, not a schema divergence.
 
 ``ArrowColumn`` plugs into ``write_file`` through three duck-typed hooks
 (``pcs_leaves`` / ``pcs_schema`` / ``pcs_annotations``). Leaves start
-without dictionary pages; the caller (a spec's ``use_dictionary`` flags,
-or the sink's codec selector) sets each leaf's flag.
+PLAIN; the caller (a spec's ``use_dictionary`` flags, or the sink's
+codec selector) sets each leaf's ``encoding``.
 """
 
 from __future__ import annotations
@@ -42,7 +42,20 @@ import numpy as np
 
 from ..kernels import ba
 
-_SYNTH = ("list", "element", "key_value")
+
+class _Synth(str):
+    """A path part the walker adds itself (LIST ``list``/``element``, MAP
+    ``key_value``): leaf names skip it, not a user field spelled alike."""
+
+
+_LIST, _ELEMENT, _KEY_VALUE = map(_Synth, ("list", "element", "key_value"))
+
+
+def leaf_name(path) -> str:
+    """Dotted leaf name / annotation key: the path without the walker's
+    own parts (``tokens.list.element`` -> ``tokens``)."""
+    return ".".join(p for p in path if not isinstance(p, _Synth))
+
 
 _FLAT_PHYS = {"int32": "int32", "int64": "int64", "float": "float",
               "double": "double", "bool": "boolean"}
@@ -309,7 +322,7 @@ class ArrowColumn:
         opt = 1 if optional else 0
         self._schema.append(("group", opt, path[-1], 1, 3))  # LIST
         self._schema.append(("group", 2, "list", 1, None))   # repeated
-        self._walk(arr.values, path + ["list", "element"],
+        self._walk(arr.values, path + [_LIST, _ELEMENT],
                    c_slot, c_rep, c_defl, rep_level + 1,
                    def_level + opt + 1, arr.type.value_field.nullable)
 
@@ -327,10 +340,10 @@ class ArrowColumn:
                              "cannot be null")
         self._schema.append(("group", opt, path[-1], 1, 1))       # MAP
         self._schema.append(("group", 2, "key_value", 2, 2))  # MAP_KEY_VALUE
-        self._walk(arr.keys, path + ["key_value", "key"],
+        self._walk(arr.keys, path + [_KEY_VALUE, "key"],
                    c_slot, c_rep, c_defl, rep_level + 1,
                    def_level + opt + 1, False)
-        self._walk(arr.items, path + ["key_value", "value"],
+        self._walk(arr.items, path + [_KEY_VALUE, "value"],
                    c_slot, c_rep, c_defl, rep_level + 1,
                    def_level + opt + 1, arr.type.item_field.nullable)
 
@@ -340,7 +353,7 @@ class ArrowColumn:
 
         from . import parquet_writer as pw
 
-        ann_key = ".".join(p for p in path if p not in _SYNTH)
+        ann_key = leaf_name(path)
         real_mask = slot_idx >= 0
         n_slots = len(slot_idx)
         n_real = int(np.count_nonzero(real_mask))

@@ -27,10 +27,11 @@ lists / structs / maps stacked to any depth with nulls at every level,
 strings extracted zero-copy from the Arrow buffers. Leaf types it does
 not support fail loudly.
 
-Every file's encodings come from the engine's codec selector, per column
+Every file's encodings come from the engine's codec selector, per leaf
 per file (``auto_encodings``): a low-cardinality leaf gets dictionary
 pages, a token stream that DELTA_BINARY_PACKED encodes smaller gets
-delta pages and never builds a dictionary. The reference writer instead
+delta pages and never builds a dictionary, a path-like string column
+gets DELTA_BYTE_ARRAY pages. The reference writer instead
 dictionary-encodes every int32/int64/byte_array leaf
 (``properties.h:83``); the sink has no such mode. ``resume=True``
 rebuilds manifest rows for already-committed files from their footer
@@ -61,7 +62,7 @@ def specs_from_arrow(tbl):
     walker harvests these keys and ``write_file`` merges them, so the
     returned sets are a summary. Unsupported leaf types (ns/s
     timestamps, durations, extension types) raise ``ValueError``. Leaves
-    carry no dictionary choice: ``auto_encodings`` sets it."""
+    start PLAIN: ``auto_encodings`` sets their encodings."""
     from .arrow_nested import ArrowColumn
 
     specs = [ArrowColumn(name, tbl.column(name),
@@ -76,57 +77,41 @@ def specs_from_arrow(tbl):
     return specs, utf8, annotations, decimals
 
 
-def auto_encodings(specs) -> tuple:
-    """Run the engine's codec auto-selector over each walker leaf's dense
-    (null-free) value stream and map its per-chunk choice onto the
-    parquet writer's encoding surface: RLE / RLE_DICTIONARY -> the
-    leaf's dictionary flag, DELTA_BINARY_PACKED -> delta pages,
-    DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY -> the matching byte-array
-    delta pages; the one choice parquet can't express (FSST) -> PLAIN
-    (the dict fallback still guards accidental dictionary blowups);
-    float/boolean leaves keep PLAIN. Flags are set on the leaves in
-    place. Returns (specs, delta_columns, ba_delta) where ``ba_delta``
-    maps dotted leaf name -> 'delta_length' | 'delta_byte_array' — the
-    same decision the chunk format makes, one per column per file, so
-    each output file is independently optimal like each chunk is."""
+def auto_encodings(specs) -> list:
+    """Set each walker leaf's ``encoding`` from the engine's codec
+    selector run over its dense (null-free) values: int32/int64 leaves
+    from ``select_int_codec`` (RLE / RLE_DICTIONARY -> ``dict``), byte_array
+    leaves from ``select_bytes_codec(parquet_expressible=True)``, which
+    ranks only codecs parquet pages can carry; float/boolean/FLBA leaves
+    stay ``plain``. The same decision the chunk format makes, one per
+    leaf per file, so each output file is independently optimal like
+    each chunk is. Returns the specs."""
     import numpy as np
 
     from .. import chunk as chunkmod, selector
 
-    delta_cols, ba_delta = set(), {}
+    tags = {chunkmod.RLE: "dict", chunkmod.RLE_DICTIONARY: "dict",
+            chunkmod.DELTA_BINARY_PACKED: "delta",
+            chunkmod.DELTA_LENGTH_BYTE_ARRAY: "dlba",
+            chunkmod.DELTA_BYTE_ARRAY: "dba"}
     for s in specs:
         for leaf in s.pcs_leaves():
             if leaf.phys in ("int32", "int64"):
                 codec = selector.select_int_codec(np.asarray(leaf.dense),
                                                   leaf.phys)
-                if codec == chunkmod.DELTA_BINARY_PACKED:
-                    delta_cols.add(leaf.name)
-                leaf.use_dictionary = codec in (chunkmod.RLE,
-                                                chunkmod.RLE_DICTIONARY)
             elif leaf.phys == "byte_array":
                 codec = selector.select_bytes_codec(
                     leaf.dense, parquet_expressible=True)
-                if codec == chunkmod.DELTA_LENGTH_BYTE_ARRAY:
-                    ba_delta[leaf.name] = "delta_length"
-                elif codec == chunkmod.DELTA_BYTE_ARRAY:
-                    ba_delta[leaf.name] = "delta_byte_array"
-                leaf.use_dictionary = codec == chunkmod.RLE_DICTIONARY
-    return list(specs), frozenset(delta_cols), ba_delta
+            else:
+                continue
+            leaf.encoding = tags.get(codec, "plain")
+    return list(specs)
 
 
-def _encodings_tag(specs, delta_cols, ba_delta=None) -> str:
+def _encodings_tag(specs) -> str:
     """Human/manifest-readable per-leaf encoding summary."""
-    parts = []
-    ba_delta = ba_delta or {}
-    for s in specs:
-        for leaf in s.pcs_leaves():
-            name = leaf.name
-            enc = ("delta" if name in delta_cols
-                   else "dlba" if ba_delta.get(name) == "delta_length"
-                   else "dba" if ba_delta.get(name) == "delta_byte_array"
-                   else "dict" if leaf.use_dictionary else "plain")
-            parts.append(f"{name}={enc}")
-    return ",".join(parts)
+    return ",".join(f"{leaf.name}={leaf.encoding}"
+                    for s in specs for leaf in s.pcs_leaves())
 
 
 def hive_segment(col: str, value) -> str:
@@ -291,9 +276,9 @@ def _write_one_file(tbl, tmp: str, dest: str, row_group_rows, page_rows,
     import hashlib
 
     from . import parquet_writer as pw
-    specs, d_cols, ba_delta = auto_encodings(specs_from_arrow(tbl)[0])
+    specs = auto_encodings(specs_from_arrow(tbl)[0])
     n_values = sum(s.pcs_n_values() for s in specs)
-    enc_tag = _encodings_tag(specs, d_cols, ba_delta)
+    enc_tag = _encodings_tag(specs)
     # manifest fields ride in the footer's key_value_metadata so a
     # resumed job can rebuild its manifest row WITHOUT re-encoding;
     # pcs.params records the writer knobs so resume can detect a rerun
@@ -303,11 +288,7 @@ def _write_one_file(tbl, tmp: str, dest: str, row_group_rows, page_rows,
                          data_page_version, bloom_filter_columns)
     pw.write_file(tmp, specs, tbl.num_rows,
                   row_group_rows=row_group_rows, page_rows=page_rows,
-                  compression=compression, delta_columns=d_cols,
-                  delta_length_columns={n for n, k in ba_delta.items()
-                                        if k == "delta_length"},
-                  delta_byte_array_columns={n for n, k in ba_delta.items()
-                                            if k == "delta_byte_array"},
+                  compression=compression,
                   data_page_version=data_page_version,
                   bloom_filter_columns=frozenset(bloom_filter_columns),
                   field_ids=field_ids,

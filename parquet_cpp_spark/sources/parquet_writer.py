@@ -32,12 +32,19 @@ against a second, independent implementation.
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
 
 from ..kernels import ba, bytearray_codecs, delta, dictionary, plain, rle
-from .arrow_nested import _SYNTH, ArrowColumn
+from .arrow_nested import ArrowColumn, leaf_name
+from .parquet_format import (_CODECS, _PAGE_DATA, _PAGE_DATA_V2, _PAGE_DICT,
+                             ENC_DELTA_BA, ENC_DELTA_BP, ENC_DELTA_LBA,
+                             ENC_PLAIN, ENC_PLAIN_DICT, ENC_RLE)
 
 MAGIC = b"PAR1"
+CREATED_BY = "parquet_cpp_spark"
+BLOOM_FPP = 0.01   # footer bloom false-positive target
 
 # the reference's dictionary_pagesize_limit (properties.h:83): dict growth
 # past this triggers the PLAIN fallback mid-chunk
@@ -88,14 +95,9 @@ _TIME_ANNOTATIONS = {
     "timestamp_ntz_ms": (None, "int64", False),
     "timestamp_ntz_us": (None, "int64", False),
 }
-ENC_PLAIN, ENC_PLAIN_DICT, ENC_RLE, ENC_DELTA_BP = 0, 2, 3, 5
-ENC_DELTA_LBA, ENC_DELTA_BA = 6, 7  # byte_array delta encodings
-_PAGE_DATA, _PAGE_DICT, _PAGE_DATA_V2 = 0, 2, 3
-# parquet-format CompressionCodec ids (reference types.h:105-116). "lz4"
-# is the legacy Hadoop-framed codec (id 5) the reference's Lz4Codec and
-# parquet-mr implement; "lz4_raw" (id 7) is the modern unframed block.
-_CODEC_IDS = {None: 0, "snappy": 1, "gzip": 2, "brotli": 4, "lz4": 5,
-              "zstd": 6, "lz4_raw": 7}
+# compression name -> parquet-format CompressionCodec id: the inverse of
+# the reader's table
+_CODEC_IDS = {name: cid for cid, name in _CODECS.items()}
 
 
 def _uvarint(buf: bytearray, v: int) -> None:
@@ -205,10 +207,10 @@ def _stat_bytes(v, phys: str) -> bytes:
     return np.array([v]).astype(dt).tobytes()
 
 
-def _chunk_stats(dense, phys: str, null_count: int) -> "list | None":
-    """Statistics struct fields (null_count + min_value/max_value), or
-    None when min/max are undefined (empty chunk, NaN-poisoned floats —
-    the reference's NaN rule: stats with NaN extremes are not written)."""
+def _chunk_stats(dense, phys: str, null_count: int) -> list:
+    """Statistics struct fields: null_count, plus min_value/max_value
+    unless they are undefined (empty chunk, NaN-poisoned floats — the
+    reference's NaN rule: stats with NaN extremes are not written)."""
     fields = [(3, _I64, null_count)]
     n = len(dense)
     if n == 0 or _is_fixed_bytes(phys):
@@ -338,26 +340,51 @@ def _coerce_dense(dense, phys: str, name: str):
     return out
 
 
+# leaf encodings, in the words of the footer's ``pcs.encodings`` tag
+ENCODINGS = ("plain", "dict", "delta", "dlba", "dba")
+
+
+def _delta_page(values, phys: str) -> bytes:
+    # INT32 pages must keep miniblock widths <= 32 (parquet-format
+    # convention: deltas wrap mod 2^32, readers accumulate wrapping)
+    return delta.encode(np.asarray(values), wrap32=phys == "int32")
+
+
+# non-dictionary tag -> (parquet Encoding id, the phys it applies to
+# (None: all), page coder(dense values, phys) -> payload): the kernels'
+# own streams in parquet-format framing, so other readers cross-check
+# them; byte-array delta pages restart their prefix chain, so
+# page-skipping readers can start at any page.
+_PAGE_CODERS = {
+    "plain": (ENC_PLAIN, None, _plain_values),
+    "delta": (ENC_DELTA_BP, ("int32", "int64"), _delta_page),
+    "dlba": (ENC_DELTA_LBA, ("byte_array",),
+             lambda v, _p: bytearray_codecs.encode_delta_length_spec(v)),
+    "dba": (ENC_DELTA_BA, ("byte_array",),
+            lambda v, _p: bytearray_codecs.encode_delta_byte_array_spec(v)),
+}
+
+
 class _Leaf:
     """One schema LEAF in page-writable form: dense (non-null) values plus
     precomputed repetition/definition levels and the row->slot / row->dense
-    offset maps. Every supported shape — flat REQUIRED/OPTIONAL, lists
-    (OPTIONAL slots / OPTIONAL elements), struct fields, map key/value —
-    reduces to this model, which is exactly the reference
-    TypedColumnWriter's view of a leaf (``column_writer.cc``: a leaf
-    writer receives def/rep arrays plus the value stream, whatever the
-    schema tree above looks like)."""
+    offset maps, and its ``encoding`` (one of ``ENCODINGS``). Every
+    supported shape — flat REQUIRED/OPTIONAL, lists (OPTIONAL slots /
+    OPTIONAL elements), struct fields, map key/value — reduces to this
+    model, which is exactly the reference TypedColumnWriter's view of a
+    leaf (``column_writer.cc``: a leaf writer receives def/rep arrays plus
+    the value stream, whatever the schema tree above looks like)."""
 
     def __init__(self, path: list, phys: str, dense, *, n_rows: int,
-                 use_dictionary: bool = False, max_rep: int = 0,
+                 encoding: str = "plain", max_rep: int = 0,
                  max_def: int = 0, rep=None, deflv=None,
                  lvl_ofs=None, dense_ofs=None):
         self.path = list(path)
-        self.name = ".".join(p for p in self.path if p not in _SYNTH)
+        self.name = leaf_name(self.path)
         self.phys = phys
         self.dense = dense
         self.n_rows = n_rows
-        self.use_dictionary = use_dictionary
+        self.encoding = encoding
         self.max_rep = max_rep
         self.max_def = max_def
         self.rep = rep          # int8, one per level slot (None: max_rep=0)
@@ -432,17 +459,13 @@ def _dense_scalar(values, idx, phys: str, name: str):
 
 
 def _scalar_leaf(name: str, phys: str, values, valid,
-                 use_dictionary: bool) -> _Leaf:
+                 encoding: str) -> _Leaf:
     """Flat REQUIRED/OPTIONAL leaf (one level slot per row); ``valid``:
     bool mask of rows carrying a value (None = REQUIRED)."""
     _phys_id(phys)  # validates
-    if _is_fixed_bytes(phys) and use_dictionary:
-        raise ValueError(f"column {name}: dictionary encoding is out of "
-                         "scope for FLBA/INT96 (PLAIN only, like the "
-                         "reference's fixed-width pages)")
     if valid is None:
         return _Leaf([name], phys, _dense_scalar(values, None, phys, name),
-                     n_rows=len(values), use_dictionary=use_dictionary)
+                     n_rows=len(values), encoding=encoding)
     valid = np.asarray(valid, dtype=bool)
     n_rows = len(valid)
     if len(values) != n_rows:
@@ -453,7 +476,7 @@ def _scalar_leaf(name: str, phys: str, values, valid,
     dense_ofs = np.zeros(n_rows + 1, dtype=np.int64)
     np.cumsum(valid, out=dense_ofs[1:])
     return _Leaf([name], phys, dense, n_rows=n_rows,
-                 use_dictionary=use_dictionary, max_def=1,
+                 encoding=encoding, max_def=1,
                  deflv=valid.astype(np.int8), dense_ofs=dense_ofs)
 
 
@@ -465,15 +488,15 @@ def _leaves_of(spec) -> list:
         return spec.pcs_leaves()
     name, phys, values = spec[0], spec[1], spec[2]
     valid = spec[3] if len(spec) > 3 else None
-    use_dict = bool(spec[4]) if len(spec) > 4 else False
-    return [_scalar_leaf(name, phys, values, valid, use_dict)]
+    enc = "dict" if len(spec) > 4 and spec[4] else "plain"
+    return [_scalar_leaf(name, phys, values, valid, enc)]
 
 
 # -- numpy column specs -----------------------------------------------------
 # The five spec classes below take numpy lengths/masks/values, build the
 # equivalent Arrow array and hand it to the one rep/def walker
 # (``arrow_nested.ArrowColumn``): a field is nullable exactly where a mask
-# is given, and each leaf gets the dictionary flag the spec names.
+# is given, and a set dictionary flag encodes its leaf ``"dict"``.
 
 _ARROW_NUMERIC = {"int32": "int32", "int64": "int64", "float": "float32",
                   "double": "float64"}
@@ -554,7 +577,7 @@ def _struct_array(name: str, fields: list, valid):
     for f in fields:
         if len(f) == 2 and isinstance(f[1], ArrowColumn):
             child, nullable = f[1].array, f[1].nullable
-            flags += [leaf.use_dictionary for leaf in f[1].pcs_leaves()]
+            flags += [leaf.encoding == "dict" for leaf in f[1].pcs_leaves()]
         else:
             fvalid = f[3] if len(f) > 3 else None
             child = _leaf_array(f"{name}.{f[0]}", f[1], f[2], fvalid)
@@ -567,13 +590,13 @@ def _struct_array(name: str, fields: list, valid):
 
 
 class _SpecColumn(ArrowColumn):
-    """An ``ArrowColumn`` built from numpy parts, with the spec's
-    dictionary flag applied to each leaf."""
+    """An ``ArrowColumn`` built from numpy parts, each leaf whose
+    dictionary flag is set encoded ``"dict"``."""
 
     def __init__(self, name: str, array, nullable: bool, flags: list):
         super().__init__(name, array, nullable)
         for leaf, flag in zip(self._leaves, flags):
-            leaf.use_dictionary = bool(flag)
+            leaf.encoding = "dict" if flag else "plain"
 
 
 class ListColumn(_SpecColumn):
@@ -689,14 +712,26 @@ def _bit_width(max_level: int) -> int:
     return max(1, int(max_level).bit_length())
 
 
+def _check_encoding(c: _Leaf) -> None:
+    """Raise unless ``c.encoding`` is a tag this leaf's phys can take."""
+    if c.encoding not in ENCODINGS:
+        raise ValueError(f"column {c.name}: unknown encoding "
+                         f"{c.encoding!r} (one of {ENCODINGS})")
+    if c.encoding == "dict" and _is_fixed_bytes(c.phys):
+        raise ValueError(f"column {c.name}: dictionary encoding is out of "
+                         "scope for FLBA/INT96 (PLAIN only, like the "
+                         "reference's fixed-width pages)")
+    phys = c.encoding != "dict" and _PAGE_CODERS[c.encoding][1]
+    if phys and c.phys not in phys:
+        raise ValueError(f"column {c.name}: encoding {c.encoding!r} "
+                         f"applies to {'/'.join(phys)}, not {c.phys}")
+
+
 def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
                  page_rows: "int | None", codec: "str | None",
-                 write_statistics: bool, delta_encoded: bool = False,
                  data_page_version: int = 1,
-                 dict_size_limit: int = DEFAULT_DICT_SIZE_LIMIT,
-                 ba_encoding: "str | None" = None) -> list:
+                 dict_size_limit: int = DEFAULT_DICT_SIZE_LIMIT) -> list:
     """One column chunk for slot range [lo, hi) -> ColumnMetaData fields."""
-    codec_id = _CODEC_IDS[codec]
     dlo, dhi = c.dense_range(lo, hi)
     dense = _slice_dense(c.dense, c.phys, dlo, dhi)
     chunk_start = len(buf)
@@ -706,13 +741,12 @@ def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
     dict_page_offset = None
     enc = None
     split_row = hi
-    if sum((c.use_dictionary, delta_encoded, ba_encoding is not None)) > 1:
-        raise ValueError(f"column {c.name}: dictionary / delta / "
-                         "byte-array-delta encodings are mutually exclusive")
-    if ba_encoding is not None and c.phys != "byte_array":
-        raise ValueError(f"column {c.name}: DELTA_(LENGTH_)BYTE_ARRAY "
-                         f"applies to byte_array, not {c.phys}")
-    if c.use_dictionary:
+    # pages without dictionary codes go through the tag's page coder
+    # (PLAIN for a dict chunk's fallback pages)
+    page_enc, _phys, coder = _PAGE_CODERS[
+        "plain" if c.encoding == "dict" else c.encoding]
+    encodings = [page_enc, ENC_RLE]
+    if c.encoding == "dict":
         enc = dictionary.encode(dense, c.phys,
                                 dict_size_limit=dict_size_limit)
         if enc.fallback:
@@ -725,8 +759,6 @@ def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
             # degenerate: the very first row overflows the dict — pure
             # PLAIN chunk, no dict page at all
             enc = None
-            encoding = ENC_PLAIN
-            encodings = [ENC_PLAIN, ENC_RLE]
         else:
             dict_page_offset = len(buf)
             body = _compress(enc.dict_blob, codec)
@@ -736,31 +768,9 @@ def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
             buf += hdr
             buf += body
             raw_total += len(hdr) + len(enc.dict_blob)
-            encoding = ENC_PLAIN_DICT
             encodings = [ENC_PLAIN_DICT, ENC_PLAIN, ENC_RLE] \
                 if enc.fallback else [ENC_PLAIN_DICT, ENC_RLE]
             bw = enc.indices_blob[0]
-    elif delta_encoded:
-        # DELTA_BINARY_PACKED data pages — the page payload is exactly the
-        # kernel's stream (the kernel implements the parquet-format spec),
-        # so pyarrow/DuckDB decoding these pages cross-checks kernels/delta
-        # against two independent implementations
-        if c.phys not in ("int32", "int64"):
-            raise ValueError("DELTA_BINARY_PACKED applies to int32/int64")
-        encoding = ENC_DELTA_BP
-        encodings = [ENC_DELTA_BP, ENC_RLE]
-    elif ba_encoding is not None:
-        # DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY data pages in the
-        # parquet-format framing (no chunk-format length prefixes; the
-        # DELTA_BINARY_PACKED sub-streams self-delimit) — decoded by
-        # pyarrow, DuckDB, and parquet-mr, which cross-checks
-        # kernels/bytearray_codecs against three independent readers
-        encoding = ENC_DELTA_LBA if ba_encoding == "delta_length" \
-            else ENC_DELTA_BA
-        encodings = [encoding, ENC_RLE]
-    else:
-        encoding = ENC_PLAIN
-        encodings = [ENC_PLAIN, ENC_RLE]
 
     data_page_offset = len(buf)
     step = max(1, (hi - lo) if page_rows is None else page_rows)
@@ -786,27 +796,10 @@ def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
             codes = enc.codes[pdlo - dlo: pdhi - dlo]
             values_b = bytes([bw]) + rle.encode(codes, bw)
             encoding = ENC_PLAIN_DICT
-        elif enc is not None:
-            # post-fallback page: PLAIN from the (always dense) values
-            values_b = _plain_values(
-                _slice_dense(c.dense, c.phys, pdlo, pdhi), c.phys)
-            encoding = ENC_PLAIN
-        elif delta_encoded:
-            # INT32 pages must keep miniblock widths <= 32 (parquet-format
-            # convention: deltas wrap mod 2^32, readers accumulate wrapping)
-            values_b = delta.encode(
-                np.asarray(_slice_dense(c.dense, c.phys, pdlo, pdhi)),
-                wrap32=c.phys == "int32")
-        elif ba_encoding is not None:
-            # per-page independent streams (prefix chain restarts at 0),
-            # so page-skipping readers can start at any page
-            pg_view = _slice_dense(c.dense, c.phys, pdlo, pdhi)
-            values_b = bytearray_codecs.encode_delta_length_spec(pg_view) \
-                if ba_encoding == "delta_length" \
-                else bytearray_codecs.encode_delta_byte_array_spec(pg_view)
         else:
-            values_b = _plain_values(
-                _slice_dense(c.dense, c.phys, pdlo, pdhi), c.phys)
+            values_b = coder(_slice_dense(c.dense, c.phys, pdlo, pdhi),
+                             c.phys)
+            encoding = page_enc
         rep_arr, def_arr = c.page_levels(plo, phi)
         n_slots_pg = c.num_values(plo, phi)
         if data_page_version == 2:
@@ -873,34 +866,25 @@ def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
     cmd = [(1, _I32, _phys_id(c.phys)[0]),
            (2, _LIST, (_I32, encodings)),
            (3, _LIST, (_BINARY, c.path)),
-           (4, _I32, codec_id),
+           (4, _I32, _CODEC_IDS[codec]),
            (5, _I64, c.num_values(lo, hi)),
            (6, _I64, raw_total), (7, _I64, total_comp),
            (9, _I64, data_page_offset)]
     if dict_page_offset is not None:
         cmd.append((11, _I64, dict_page_offset))
-    if write_statistics:
-        # def < max_def slots: nulls at any nesting depth plus one marker
-        # per empty/null list — level slots minus dense values
-        null_count = c.num_values(lo, hi) - (dhi - dlo)
-        st = _chunk_stats(dense, c.phys, null_count)
-        if st is not None:
-            cmd.append((12, _STRUCT, st))
+    # def < max_def slots: nulls at any nesting depth plus one marker
+    # per empty/null list — level slots minus dense values
+    null_count = c.num_values(lo, hi) - (dhi - dlo)
+    cmd.append((12, _STRUCT, _chunk_stats(dense, c.phys, null_count)))
     return [chunk_start, total_comp, cmd, pages]
 
 
-def write_file(path: str, columns: list, num_rows: int,
-               created_by: str = "parquet_cpp_spark",
+def write_file(path: str, columns: list, num_rows: int, *,
                row_group_rows: "int | None" = None,
                page_rows: "int | None" = None,
                compression: "str | None" = None,
-               write_statistics: bool = True,
                utf8_columns: "frozenset[str] | set[str]" = frozenset(),
-               delta_columns: "frozenset[str] | set[str]" = frozenset(),
-               delta_length_columns: "frozenset[str] | set[str]"
-               = frozenset(),
-               delta_byte_array_columns: "frozenset[str] | set[str]"
-               = frozenset(),
+               encodings: "dict[str, str] | None" = None,
                data_page_version: int = 1,
                dict_size_limit: int = DEFAULT_DICT_SIZE_LIMIT,
                write_page_index: bool = True,
@@ -909,15 +893,8 @@ def write_file(path: str, columns: list, num_rows: int,
                key_value_metadata: "dict[str, str] | None" = None,
                bloom_filter_columns: "frozenset[str] | set[str]"
                = frozenset(),
-               bloom_fpp: float = 0.01,
                field_ids: "dict[str, int] | None" = None) -> None:
     """Write columns as a readable PAR1 file.
-
-    ``field_ids``: optional TOP-LEVEL column name -> parquet field_id
-    (SchemaElement field 9 — the id Iceberg-family table formats track
-    columns by across renames; pyarrow surfaces it as the
-    ``PARQUET:field_id`` field metadata). Emitted on the column's
-    top-level schema element only.
 
     ``columns``: flat ``(name, phys, values[, valid[, use_dictionary]])``
     tuples — ``values`` slot-aligned when ``valid`` is given (entries at
@@ -926,46 +903,38 @@ def write_file(path: str, columns: list, num_rows: int,
     and the numpy spec classes built on it), which bring their own
     leaves, schema subtree and annotation keys. ``row_group_rows``/
     ``page_rows`` split the file into multiple row groups / data pages;
-    ``compression`` is one of None/'snappy'/'gzip'/'zstd' (page-body
-    compression, V1 layout).
-    byte_array columns named in ``utf8_columns`` carry the UTF8 converted
-    type, so schema-strict readers (Spark's JVM reader) surface them as
-    strings instead of raw binary. int32/int64 columns named in
-    ``delta_columns`` write DELTA_BINARY_PACKED data pages straight from
-    ``kernels.delta``; byte_array columns named in
-    ``delta_length_columns`` / ``delta_byte_array_columns`` write
-    DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY data pages
-    (``kernels.bytearray_codecs`` in the parquet-format page framing —
-    the reference's decoders are ``encoding-internal.h:883-975``;
-    prefix-sharing DELTA_BYTE_ARRAY is the natural choice for path-like
-    string columns such as ``doc_id``). ``data_page_version=2`` writes
-    DataPageV2 (def
-    levels unprefixed and outside the compressed region).
-    FLBA columns are spelled ``phys='flba:<N>'`` (values: N-byte strings,
-    PLAIN pages, stats null_count-only — FLBA ordering is type-defined,
-    not byte-lexicographic); ``'int96'`` is the 12-byte deprecated
-    timestamp layout. ``decimal_columns`` maps an FLBA column name to
-    (precision, scale) for the DECIMAL converted type (two's-complement
-    big-endian unscaled ints — ``logical.decimal_to_flba`` produces this
-    layout). ``annotations`` maps an int column name to a temporal
-    converted type — 'date' / 'time_ms' (int32 storage), 'time_us' /
-    'timestamp_ms' / 'timestamp_us' (int64 storage) — so readers surface
-    real date/timestamp columns (``logical.py`` produces the stored ints).
-    ``write_page_index`` (default on) emits the parquet PageIndex —
-    per-page ColumnIndex (null_pages/min/max/boundary_order/null_counts)
-    and OffsetIndex (page offset/size/first_row) structures between the
-    data and the footer, linked from each ColumnChunk — so readers can
-    skip pages without touching page headers (the parquet analog of the
-    chunk format's per-page min/max, ``chunk.py`` page_index).
-    ``bloom_filter_columns`` (leaf names, dotted for nested) embeds a
-    STANDARD parquet-format bloom per column chunk — BloomFilterHeader
-    (algorithm=BLOCK, hash=XXHASH, uncompressed) + split-block bitset
-    sized by ``optimal_num_bytes(exact ndv, bloom_fpp)``, linked via
-    ColumnMetaData bloom_filter_offset/length — so a point lookup can
-    skip a whole CHUNK before touching its PageIndex
-    (``parquet_format.lookup_rows`` consults it; the bloom math is
-    ``kernels/bloom.StandardBloomFilter`` over ``kernels/xxh``'s
-    Spark-pinned XXH64).
+    ``compression`` (page bodies) is None, snappy, gzip, brotli, zstd,
+    lz4 (the legacy Hadoop-framed codec) or lz4_raw;
+    ``data_page_version=2`` writes DataPageV2 (levels unprefixed and
+    outside the compressed region).
+
+    ``encodings`` maps a leaf name (dotted for nested leaves) to one of
+    ``ENCODINGS``; other leaves keep their own (``"dict"`` where the spec
+    sets its dictionary flag, else ``"plain"``). ``"delta"`` writes
+    DELTA_BINARY_PACKED int32/int64 pages, ``"dlba"``/``"dba"``
+    DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY byte_array pages (the
+    reference's decoders are ``encoding-internal.h:883-975``). An unknown
+    leaf or tag, a tag the leaf's phys cannot take, or a tag on a
+    dictionary-flagged leaf raises ``ValueError``.
+
+    Annotations: byte_array leaves in ``utf8_columns`` carry UTF8, so
+    schema-strict readers (Spark's JVM reader) surface strings;
+    ``decimal_columns`` maps an FLBA leaf to (precision, scale) for
+    DECIMAL (two's-complement big-endian unscaled ints, the
+    ``logical.decimal_to_flba`` layout); ``annotations`` maps an int leaf
+    to a temporal type of ``_TIME_ANNOTATIONS``. FLBA columns are spelled
+    ``phys='flba:<N>'`` and ``'int96'`` is the 12-byte deprecated
+    timestamp; both write PLAIN pages and null_count-only stats (their
+    ordering is type-defined, not byte-lexicographic).
+
+    ``write_page_index`` emits the parquet PageIndex (per-page
+    ColumnIndex and OffsetIndex after the data, linked from each
+    ColumnChunk), so readers skip pages without touching page headers.
+    ``bloom_filter_columns`` (leaf names) embeds a standard split-block
+    XXH64 bloom per chunk, sized for ``BLOOM_FPP`` at the exact ndv, so a
+    point lookup (``parquet_format.lookup_rows``) can skip a whole chunk.
+    ``field_ids`` maps a TOP-LEVEL column name to its SchemaElement
+    field_id (the id Iceberg-family table formats track columns by).
     """
     if data_page_version not in (1, 2):
         raise ValueError("data_page_version must be 1 or 2")
@@ -986,25 +955,23 @@ def write_file(path: str, columns: list, num_rows: int,
             annotations.update(s_ann)
             decimal_columns.update(s_dec)
         cols.extend(_leaves_of(s))
-    for c in cols:
+    encodings = dict(encodings or {})
+    unknown = set(encodings) - {c.name for c in cols}
+    if unknown:
+        raise ValueError(f"encodings for columns not in schema: "
+                         f"{sorted(unknown)}")
+    for i, c in enumerate(cols):
         if c.n_rows != num_rows:
             raise ValueError(f"column {c.name}: {c.n_rows} slots, "
                              f"expected {num_rows}")
-
-    ba_enc = {}
-    for names, kind in ((delta_length_columns, "delta_length"),
-                        (delta_byte_array_columns, "delta_byte_array")):
-        for n in names:
-            if n in ba_enc:
-                raise ValueError(f"column {n!r} named in both "
-                                 "delta_length_columns and "
-                                 "delta_byte_array_columns")
-            ba_enc[n] = kind
-    leaf_names = {c.name for c in cols}
-    unknown = set(ba_enc) - leaf_names
-    if unknown:
-        raise ValueError(f"delta byte-array columns not in schema: "
-                         f"{sorted(unknown)} (have {sorted(leaf_names)})")
+        tag = encodings.get(c.name, c.encoding)
+        if tag != c.encoding:
+            if c.encoding != "plain":
+                raise ValueError(f"column {c.name}: encodings {tag!r} and "
+                                 f"{c.encoding!r} are mutually exclusive")
+            cols[i] = c = copy.copy(c)   # the caller's spec keeps its own
+            c.encoding = tag
+        _check_encoding(c)
 
     buf = bytearray(MAGIC)
     rg_step = max(1, num_rows if row_group_rows is None else row_group_rows)
@@ -1015,11 +982,8 @@ def write_file(path: str, columns: list, num_rows: int,
         per_rg = []
         for c in cols:
             per_rg.append(_write_chunk(buf, c, lo, hi, page_rows,
-                                       compression, write_statistics,
-                                       c.name in delta_columns,
-                                       data_page_version,
-                                       dict_size_limit,
-                                       ba_encoding=ba_enc.get(c.name)))
+                                       compression, data_page_version,
+                                       dict_size_limit))
         rg_infos.append((per_rg, hi - lo))
         rg_bounds.append((lo, hi))
 
@@ -1067,13 +1031,13 @@ def write_file(path: str, columns: list, num_rows: int,
                         else [bytes(v) for v in dense]
                     ndv = len(set(vals))
                     bf = bloom_mod.StandardBloomFilter(
-                        bloom_mod.optimal_num_bytes(max(ndv, 1), bloom_fpp))
+                        bloom_mod.optimal_num_bytes(max(ndv, 1), BLOOM_FPP))
                     bf.insert_bytes(vals)
                 else:
                     arr = np.asarray(dense)
                     ndv = len(np.unique(arr))
                     bf = bloom_mod.StandardBloomFilter(
-                        bloom_mod.optimal_num_bytes(max(ndv, 1), bloom_fpp))
+                        bloom_mod.optimal_num_bytes(max(ndv, 1), BLOOM_FPP))
                     if c.phys == "int32":
                         bf.insert_int32(arr)
                     else:
@@ -1194,7 +1158,7 @@ def write_file(path: str, columns: list, num_rows: int,
         kvs = [[(1, _BINARY, k), (2, _BINARY, v)]
                for k, v in sorted(key_value_metadata.items())]
         fmd_fields.append((5, _LIST, (_STRUCT, kvs)))
-    fmd_fields += [(6, _BINARY, created_by),
+    fmd_fields += [(6, _BINARY, CREATED_BY),
                    (7, _LIST, (_STRUCT, column_orders))]
     _struct(fmd, fmd_fields)
     buf += fmd

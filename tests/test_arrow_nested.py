@@ -242,13 +242,35 @@ def test_sink_routes_every_column_through_walker(tmp_path):
         sink.specs_from_arrow(bad)
 
 
+# parquet Encoding ids each pcs.encodings tag may put in a chunk's
+# ColumnMetaData encodings: the tag's own id first, then RLE levels (and
+# PLAIN pages after a dictionary fallback)
+_TAG_ENCODINGS = {"plain": (0, {0, 3}), "dict": (2, {2, 0, 3}),
+                  "delta": (5, {5, 3}), "dlba": (6, {6, 3}),
+                  "dba": (7, {7, 3})}
+
+
+def _footer_tags(path):
+    """(pcs.encodings as [(leaf, tag)], FileMeta) of a sink file."""
+    from parquet_cpp_spark.sources import parquet_format as pf
+    with open(path, "rb") as fh:
+        meta = pf.read_footer(memoryview(fh.read()))
+    tags = [kv.split("=") for kv in
+            meta.key_value_metadata["pcs.encodings"].split(",")]
+    return tags, meta
+
+
 def test_auto_encodings_on_walker_leaves(tmp_path):
-    """The sink runs the selector per walker leaf: a
-    low-cardinality int leaf flips to dictionary, a high-entropy one
-    stays PLAIN; the manifest tag reports the dotted leaf names."""
+    """The sink runs the selector per walker leaf: a low-cardinality int
+    leaf flips to dictionary, a high-entropy one stays PLAIN; the
+    manifest tag reports the dotted leaf names, and on every table
+    (that one and both perfbench token profiles) each leaf's tag names
+    the encodings its chunks' footer metadata lists."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from parquet_cpp_spark.sources import parquet_sink as sink
+    from parquet_cpp_spark.sources.tokens import synthesize_tokens_table
     rng = np.random.RandomState(7)
     n = 2000
     rep = rng.randint(0, 4, n)
@@ -256,19 +278,58 @@ def test_auto_encodings_on_walker_leaves(tmp_path):
     typ = pa.list_(pa.struct([("r", pa.int64()), ("u", pa.int64())]))
     data = [[{"r": int(rep[i]), "u": int(uniq[i])}] for i in range(n)]
     tbl = pa.table({"c": pa.array(data, type=typ)})
-    specs, utf8, ann, dec = sink.specs_from_arrow(tbl)
-    specs2, dcols, _ba = sink.auto_encodings(specs)
-    tag = dict(kv.split("=") for kv in
-               sink._encodings_tag(specs2, dcols).split(","))
+    specs = sink.auto_encodings(sink.specs_from_arrow(tbl)[0])
+    tag = dict(kv.split("=") for kv in sink._encodings_tag(specs).split(","))
     assert tag["c.r"] == "dict"
     assert tag["c.u"] in ("plain", "delta")
     # and the file still round-trips with the chosen encodings
-    tmp = str(tmp_path / ".t")
     dest = str(tmp_path / "f.parquet")
-    row = sink._write_one_file(tbl, tmp, dest, 500, 100, "zstd", 1)
-    import pyarrow.parquet as pq
+    row = sink._write_one_file(tbl, dest + ".tmp", dest, 500, 100, "zstd", 1)
     assert pq.read_table(dest).column("c").to_pylist() == data
     assert row[2] == 2 * n   # two leaves, one value slot per row each
+    files = [(dest, tbl)]
+    for avg_len in (256, 16):
+        tok = synthesize_tokens_table(25_000, seed=1, avg_len=avg_len)
+        path = str(tmp_path / f"tok{avg_len}.parquet")
+        sink._write_one_file(tok, path + ".tmp", path, None, 2048, "zstd", 1)
+        files.append((path, tok))
+    for path, src in files:
+        tags, meta = _footer_tags(path)
+        assert len(tags) == len(meta.leaves)
+        for rg in meta.row_groups:
+            for (name, t), chunk in zip(tags, rg):
+                first, allowed = _TAG_ENCODINGS[t]
+                assert chunk.encodings[0] == first, (path, name, t)
+                assert set(chunk.encodings) <= allowed, (path, name, t)
+        assert meta.num_rows == src.num_rows
+
+
+def test_leaf_names_keep_user_fields_named_like_list_parts(tmp_path):
+    """Only the parts the walker adds itself (LIST ``list``/``element``,
+    MAP ``key_value``) drop out of dotted leaf names: user fields named
+    ``list`` or ``element`` keep theirs, so each leaf gets its own
+    encoding and annotation key."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_cpp_spark.sources import parquet_sink as sink
+    n = 3000
+    rng = np.random.default_rng(5)
+    s = pa.StructArray.from_arrays(
+        [pa.array(rng.integers(0, 1 << 40, n), pa.int64()),
+         pa.array([f"doc/{i % 97}/{i}" for i in range(n)], pa.string())],
+        names=["list", "element"])
+    tbl = pa.table({"s": s,
+                    "element": pa.array([f"e{i % 5}" for i in range(n)])})
+    dest = str(tmp_path / "names.parquet")
+    sink._write_one_file(tbl, dest + ".tmp", dest, None, 512, None, 1)
+    assert pq.read_table(dest).equals(tbl)
+    tags, _meta = _footer_tags(dest)
+    assert [name for name, _t in tags] == ["s.list", "s.element", "element"]
+    schema = pq.ParquetFile(dest).schema
+    utf8 = {schema.column(i).path: schema.column(i).converted_type
+            for i in range(len(schema))}
+    assert utf8["s.element"] == utf8["element"] == "UTF8"
 
 
 def _random_nested(rng, depth):

@@ -512,9 +512,8 @@ def test_def_level_above_max_raises(tmp_path, encoding):
                                  encoding == "dict")],
                          valid=np.ones(n, bool))
     pw.write_file(path, [st], n,
-                  delta_columns={"st.a"} if encoding == "delta" else (),
-                  delta_byte_array_columns={"st.a"}
-                  if encoding == "dba" else ())
+                  encodings={"st.a": encoding}
+                  if encoding in ("delta", "dba") else None)
     data = bytearray(open(path, "rb").read())
     meta = pf.read_footer(memoryview(bytes(data)))
     assert meta.leaves[0].max_def == 2

@@ -33,7 +33,7 @@ def test_lookup_skips_pages(tmp_path):
     """A point lookup on a 20-page column decodes exactly ONE page when the
     key exists, ZERO when it falls outside every page's [min, max]."""
     path = str(tmp_path / "f.parquet")
-    _write_sorted(path, compression="zstd", delta_columns={"id"})
+    _write_sorted(path, compression="zstd", encodings={"id": "delta"})
     hits, dec, tot = pf.lookup_rows(path, "id", 3 * 7777)
     assert (hits, dec, tot) == ([7777], 1, 20)
     hits, dec, tot = pf.lookup_rows(path, "s", "k000123")

@@ -193,7 +193,7 @@ def test_delta_binary_packed_pages_cross_decoders(tmp_path):
         ("w64", "int64", wild64),
         ("o32", "int32", opt32, valid),
     ], n, row_group_rows=1300, page_rows=500,
-        delta_columns={"s32", "w64", "o32"})
+        encodings={"s32": "delta", "w64": "delta", "o32": "delta"})
 
     t = pq.read_table(path)
     assert t.column("s32").to_numpy().tolist() == sorted32.tolist()
@@ -218,7 +218,7 @@ def test_delta_binary_packed_pages_cross_decoders(tmp_path):
     with pytest.raises(ValueError, match="int32/int64"):
         pw.write_file(str(tmp_path / "bad.parquet"),
                       [("d", "double", np.ones(3))], 3,
-                      delta_columns={"d"})
+                      encodings={"d": "delta"})
 
 
 @pytest.mark.parametrize("codec", [None, "snappy"])
@@ -240,7 +240,7 @@ def test_data_page_v2(tmp_path, codec):
         ("s", "byte_array", strs, None, True),
         ("o", "int64", opt, valid),
     ], n, row_group_rows=1000, page_rows=300, compression=codec,
-        delta_columns={"o"}, data_page_version=2)
+        encodings={"o": "delta"}, data_page_version=2)
     t = pq.read_table(path)
     assert t.column("i").to_numpy().tolist() == ints.tolist()
     assert t.column("s").to_pylist() == strs
@@ -262,7 +262,7 @@ def test_own_reader_reads_v2_pages(tmp_path):
     path = str(tmp_path / "v2own.parquet")
     pw.write_file(path, [("o", "int64", ints, valid)], n,
                   row_group_rows=600, page_rows=250, compression="snappy",
-                  delta_columns={"o"}, data_page_version=2)
+                  encodings={"o": "delta"}, data_page_version=2)
     got = parquet_format.read_file(path)
     vals, deflev, _ = got["o"]
     assert deflev.tolist() == valid.astype(int).tolist()
@@ -316,7 +316,7 @@ def test_fuzz_writer_pyarrow_roundtrip(tmp_path_factory, spec):
     pw.write_file(
         path, [(nm, ph, v, va, ud) for nm, ph, v, va, ud, _d in cols], n,
         row_group_rows=rg, page_rows=pg, compression=codec,
-        delta_columns={nm for nm, _p, _v, _va, _ud, d in cols if d},
+        encodings={nm: "delta" for nm, _p, _v, _va, _ud, d in cols if d},
         data_page_version=2 if v2 else 1)
     t = pq.read_table(path)
     assert t.num_rows == n
@@ -353,7 +353,7 @@ def test_writer_edge_cases_zero_rows_and_all_null(tmp_path):
     pw.write_file(an, [
         ("d", "int32", np.zeros(5, np.int32), np.zeros(5, bool), True),
         ("e", "int64", np.zeros(5, np.int64), np.zeros(5, bool)),
-    ], 5, delta_columns={"e"})
+    ], 5, encodings={"e": "delta"})
     t = pq.read_table(an)
     assert t.column("d").to_pylist() == none5
     assert t.column("e").to_pylist() == none5
@@ -372,7 +372,7 @@ def test_delta_int32_coerces_wide_inputs(tmp_path):
     path = str(tmp_path / "wide32.parquet")
     pw.write_file(path, [("a", "int32", vals64),
                          ("b", "int32", [3, 1, 2, 10])],
-                  4, delta_columns={"a", "b"})
+                  4, encodings={"a": "delta", "b": "delta"})
     t = pq.read_table(path)
     assert t.column("a").to_pylist() == vals64.tolist()
     assert t.column("b").to_pylist() == [3, 1, 2, 10]
@@ -421,7 +421,7 @@ def test_list_column_reads_back_everywhere(tmp_path, wkw, enc):
     path = str(tmp_path / f"list_{enc}.parquet")
     pw.write_file(path, [("doc_id", "int64", np.arange(800, dtype=np.int64)),
                          spec], 800,
-                  delta_columns={"tokens"} if enc == "delta" else frozenset(),
+                  encodings={"tokens": "delta"} if enc == "delta" else None,
                   **wkw)
     t = pq.read_table(path)
     assert t.column("tokens").to_pylist() == rows
@@ -747,8 +747,7 @@ def test_delta_byte_array_pages_cross_decoders(tmp_path):
             ("word", "byte_array", words, valid),
         ], n, row_group_rows=1300, page_rows=500, compression=codec,
             utf8_columns={"doc_id", "word"},
-            delta_byte_array_columns={"doc_id"},
-            delta_length_columns={"word"},
+            encodings={"doc_id": "dba", "word": "dlba"},
             data_page_version=v)
 
         t = pq.read_table(path)
@@ -784,7 +783,7 @@ def test_delta_byte_array_page_skip_lookup(tmp_path):
     path = str(tmp_path / "skip.parquet")
     pw.write_file(path, [("doc_id", "byte_array", docs)], n,
                   page_rows=100, utf8_columns={"doc_id"},
-                  delta_byte_array_columns={"doc_id"})
+                  encodings={"doc_id": "dba"})
     rows, decoded, total = parquet_format.lookup_rows(
         path, "doc_id", b"doc-00001234")
     assert rows == [1234] and decoded == 1 and total == 20
@@ -794,28 +793,27 @@ def test_delta_byte_array_page_skip_lookup(tmp_path):
 
 
 def test_delta_byte_array_rejections(tmp_path):
-    """Fail-loudly surface: non-byte_array phys, unknown column, a column
-    in both delta sets, and dict+delta on the same column."""
+    """Fail-loudly surface: non-byte_array phys, unknown column, unknown
+    tag, and dict+delta on the same column."""
     n = 10
     docs = [f"d{i}".encode() for i in range(n)]
     ints = np.arange(n, dtype=np.int32)
     with pytest.raises(ValueError, match="byte_array, not int32"):
         pw.write_file(str(tmp_path / "a.parquet"),
                       [("x", "int32", ints)], n,
-                      delta_byte_array_columns={"x"})
+                      encodings={"x": "dba"})
     with pytest.raises(ValueError, match="not in schema"):
         pw.write_file(str(tmp_path / "b.parquet"),
                       [("d", "byte_array", docs)], n,
-                      delta_length_columns={"nope"})
-    with pytest.raises(ValueError, match="both"):
+                      encodings={"nope": "dlba"})
+    with pytest.raises(ValueError, match="unknown encoding"):
         pw.write_file(str(tmp_path / "c.parquet"),
                       [("d", "byte_array", docs)], n,
-                      delta_length_columns={"d"},
-                      delta_byte_array_columns={"d"})
+                      encodings={"d": "fsst"})
     with pytest.raises(ValueError, match="mutually exclusive"):
         pw.write_file(str(tmp_path / "d.parquet"),
                       [("d", "byte_array", docs, None, True)], n,
-                      delta_byte_array_columns={"d"})
+                      encodings={"d": "dba"})
 
 
 def test_delta_byte_array_spark_jvm_read_back(tmp_path):
@@ -831,8 +829,7 @@ def test_delta_byte_array_spark_jvm_read_back(tmp_path):
         ("doc_id", "byte_array", docs),
         ("word", "byte_array", words),
     ], n, page_rows=400, utf8_columns={"doc_id", "word"},
-        delta_byte_array_columns={"doc_id"},
-        delta_length_columns={"word"})
+        encodings={"doc_id": "dba", "word": "dlba"})
     spark = get_spark(master="local[2]", app_name="pcs-dba-writer",
                       shuffle_partitions=2)
     rows = spark.read.parquet(path).orderBy("doc_id").collect()

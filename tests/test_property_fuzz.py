@@ -112,10 +112,10 @@ def test_fuzz_dba_pages_pyarrow_cross_decode(tmp_path_factory, xs, kind,
     from parquet_cpp_spark.sources import parquet_writer as pw
     d = tmp_path_factory.mktemp("dbafuzz")
     path = str(d / "f.parquet")
-    kw = {"delta_length_columns": {"v"}} if kind == "delta_length" \
-        else {"delta_byte_array_columns": {"v"}}
+    enc = "dlba" if kind == "delta_length" else "dba"
     pw.write_file(path, [("v", "byte_array", list(xs))], len(xs),
-                  page_rows=37, data_page_version=dpv, **kw)
+                  page_rows=37, data_page_version=dpv,
+                  encodings={"v": enc})
     assert pq.read_table(path).column("v").to_pylist() == list(xs)
 
 
@@ -245,7 +245,7 @@ def test_fuzz_list_column_writer_roundtrip(tmp_path_factory, lengths,
     pw.write_file(path, [pw.ListColumn("t", "int32", vals, lens,
                                        use_dictionary=enc == "dict")],
                   n, page_rows=page_rows, data_page_version=ver,
-                  delta_columns={"t"} if enc == "delta" else frozenset())
+                  encodings={"t": "delta"} if enc == "delta" else None)
     ofs = np.zeros(n + 1, np.int64)
     np.cumsum(lens, out=ofs[1:])
     exp = [vals[ofs[i]:ofs[i + 1]].tolist() for i in range(n)]
