@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from parquet_cpp_spark.plans import encode_job
+from parquet_cpp_spark.properties import WriterProperties
 from parquet_cpp_spark.sources import tokens as tokens_src
 
 NUM_PARTS = 8
@@ -381,8 +382,9 @@ def _digest(df: DataFrame) -> DataFrame:
 def _roundtrip(spark: SparkSession, sf_dir: str,
                codec_overrides: dict[str, str] | None = None) -> DataFrame:
     src = tokens_src.tokens_from_documents(spark, sf_dir, _parts(sf_dir))
-    chunks = encode_job.encode_pipeline(src, NUM_PARTS,
-                                        codec_overrides=codec_overrides)
+    chunks = encode_job.encode_pipeline(
+        src, NUM_PARTS,
+        props=WriterProperties(codec_overrides=codec_overrides or {}))
     return _digest(encode_job.decode_pipeline(chunks))
 
 
@@ -394,8 +396,9 @@ def entry(spark: SparkSession) -> DataFrame:
 def _chunks(spark: SparkSession, sf_dir: str,
             codec_overrides: dict[str, str] | None = None) -> DataFrame:
     src = tokens_src.tokens_from_documents(spark, sf_dir, _parts(sf_dir))
-    return encode_job.encode_pipeline(src, NUM_PARTS,
-                                      codec_overrides=codec_overrides)
+    return encode_job.encode_pipeline(
+        src, NUM_PARTS,
+        props=WriterProperties(codec_overrides=codec_overrides or {}))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -425,8 +428,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         several pages per chunk (reference 1 MiB policy scaled to the sf
         data; column_writer.cc:645-650)."""
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
-        chunks = encode_job.encode_pipeline(src, NUM_PARTS,
-                                            page_size=64 << 10)
+        chunks = encode_job.encode_pipeline(
+            src, NUM_PARTS, props=WriterProperties(data_pagesize=64 << 10))
         return _digest(encode_job.decode_pipeline(chunks))
     q["rt_paged"] = rt_paged
 
@@ -475,8 +478,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    (F.col("value") > 0.5).alias("is_high"))
                .withColumn("part_id",
                            F.pmod(F.xxhash64("event_id"), F.lit(NUM_PARTS))))
-        chunks = encode_op.encode_df(src, NUM_PARTS, columns=cols,
-                                     sort_key="event_id")
+        chunks = encode_op.encode_df(
+            src, NUM_PARTS, columns=cols,
+            props=WriterProperties(sort_key="event_id"))
         return (decode_chunks_typed(chunks, cols)
                 .select("event_id", "ts_us", "event_type", "value",
                         "is_high"))
@@ -506,7 +510,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                            F.pmod(F.xxhash64("event_id"), F.lit(NUM_PARTS))))
         dec = decode_chunks_typed(
             encode_df_arrow(src, NUM_PARTS, columns=cols,
-                            sort_key="event_id"),
+                            props=WriterProperties(sort_key="event_id")),
             cols)
         return dec.select("event_id",
                           F.col("attrs.event_type").alias("event_type"),
@@ -545,8 +549,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
                    F.lit(NUM_PARTS)).alias("part_id"))
         dec = decode_chunks_typed(
-            encode_df_arrow(src, NUM_PARTS, columns=cols,
-                            sort_key="doc_id"),
+            encode_df_arrow(src, NUM_PARTS, columns=cols),
             cols)
         digest = F.md5(F.array_join(
             F.transform(F.map_entries("props"),
@@ -578,8 +581,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
                    F.lit(NUM_PARTS)).alias("part_id"))
         dec = decode_chunks_typed(
-            encode_df_arrow(src, NUM_PARTS, columns=cols,
-                            sort_key="doc_id"),
+            encode_df_arrow(src, NUM_PARTS, columns=cols),
             cols)
         return dec.select("doc_id", "uid32",
                           F.col("uid64").cast("string").alias("uid64"))
@@ -606,8 +608,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
                    F.lit(NUM_PARTS)).alias("part_id"))
         dec = decode_chunks_typed(
-            encode_df_arrow(src, NUM_PARTS, columns=cols,
-                            sort_key="doc_id"),
+            encode_df_arrow(src, NUM_PARTS, columns=cols),
             cols)
         return dec.select("doc_id", "u8", "u16", "enum_c", "json_c")
     q["rt_annotations"] = rt_annotations
@@ -630,8 +631,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         lambda i: F.slice("tokens", (i - 1) * 5 + 1, 5)))
         src = src.select("part_id", "doc_id", windows.alias("windows"))
         dec = decode_chunks_typed(
-            encode_df_arrow(src, NUM_PARTS, columns=cols,
-                            sort_key="doc_id"),
+            encode_df_arrow(src, NUM_PARTS, columns=cols),
             cols)
         nested_str = F.array_join(
             F.transform("windows", lambda a: F.array_join(
@@ -662,7 +662,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                            F.pmod(F.xxhash64("event_id"), F.lit(NUM_PARTS))))
         dec = decode_chunks_typed(
             encode_df_arrow(src, NUM_PARTS, columns=cols,
-                            sort_key="event_id"),
+                            props=WriterProperties(sort_key="event_id")),
             cols)
         return dec.select("event_id", "user_n", "value_n", "type_n")
     q["rt_nullable_flat"] = rt_nullable_flat
@@ -690,7 +690,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                                         "l_linenumber"),
                                              F.lit(NUM_PARTS))))
         dec = decode_chunks_typed(
-            encode_df_arrow(src, NUM_PARTS, columns=cols, sort_key=None),
+            encode_df_arrow(src, NUM_PARTS, columns=cols,
+                            props=WriterProperties(sort_key=None)),
             cols)
         return dec.select(
             "l_orderkey", "l_linenumber",
@@ -713,7 +714,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def rt_gzip(spark: SparkSession, sf: str) -> DataFrame:
         """Block-compressed chunks (GZIP over assembled sections) round-trip."""
         from parquet_cpp_spark.operators import encode as encode_op
-        from parquet_cpp_spark.properties import WriterProperties
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
         chunks = encode_op.encode_df(
             src, NUM_PARTS, props=WriterProperties(compression="GZIP"))
@@ -725,7 +725,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         SNAPPY/BROTLI/LZ4 this covers every reference codec but LZO,
         types.h:106-118)."""
         from parquet_cpp_spark.operators import encode as encode_op
-        from parquet_cpp_spark.properties import WriterProperties
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
         chunks = encode_op.encode_df(
             src, NUM_PARTS, props=WriterProperties(compression="ZSTD"))
@@ -737,7 +736,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         compressed region (reference format v2 pages / properties.h:363-377)
         — SNAPPY-compressed so the layout difference is actually exercised."""
         from parquet_cpp_spark.operators import encode as encode_op
-        from parquet_cpp_spark.properties import WriterProperties
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
         chunks = encode_op.encode_df(
             src, NUM_PARTS, props=WriterProperties(
@@ -882,8 +880,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from parquet_cpp_spark.operators import encode as encode_op
         from parquet_cpp_spark.plans import lookup
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
-        chunks = encode_op.encode_df(src, NUM_PARTS,
-                                     bloom_columns={"doc_id"})
+        chunks = encode_op.encode_df(src, NUM_PARTS)  # default doc_id bloom
         return (lookup.point_lookup(chunks, "42")
                 .select("doc_id", "n_tok", "source"))
     q["point_lookup"] = point_lookup

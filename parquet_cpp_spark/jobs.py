@@ -41,30 +41,25 @@ def cmd_encode(args) -> None:
     spark = _spark(args)
     from pyspark.sql import functions as F
     from .plans import encode_job
+    from .properties import WriterProperties
     from .sources.parquet_direct import encode_parquet_direct
     from .sources.tokens import read_tokens
 
-    overrides = dict(kv.split("=") for kv in (args.codec or []))
-    props = None
-    if (args.compression != "UNCOMPRESSED" or args.no_dictionary
-            or args.pagesize is not None or args.format_version != "V1"):
-        from .properties import DEFAULT_DATA_PAGESIZE, WriterProperties
-        props = WriterProperties(codec_overrides=overrides,
-                                 dictionary_enabled=not args.no_dictionary,
-                                 compression=args.compression,
-                                 data_pagesize=args.pagesize
-                                 or DEFAULT_DATA_PAGESIZE,
-                                 format_version=args.format_version)
+    # one configuration for both modes
+    props = WriterProperties(
+        codec_overrides=dict(kv.split("=") for kv in (args.codec or [])),
+        dictionary_enabled=not args.no_dictionary,
+        compression=args.compression,
+        data_pagesize=args.pagesize,
+        format_version=args.format_version)
     if args.resume or args.shuffle:
         df = read_tokens(spark, args.input)
         num_parts = args.parts or encode_job.plan_num_parts(df.count())
         out = encode_job.run_checkpointed(spark, df, args.out, num_parts,
-                                          codec_overrides=overrides or None)
+                                          props=props)
         print(json.dumps({"mode": "checkpointed", **out}))
     else:
-        chunks = encode_parquet_direct(spark, args.input,
-                                       codec_overrides=overrides or None,
-                                       props=props)
+        chunks = encode_parquet_direct(spark, args.input, props=props)
         chunks.write.mode("overwrite").parquet(args.out + "/chunks")
         stats = spark.read.parquet(args.out + "/chunks").agg(
             F.sum("raw_bytes").alias("raw"),
@@ -396,6 +391,8 @@ def cmd_snapshot(args) -> None:
 
 
 def main(argv=None) -> None:
+    from .chunk import DEFAULT_PAGE_SIZE
+
     ap = argparse.ArgumentParser(prog="parquet_cpp_spark.jobs")
     ap.add_argument("--master", default=None)
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -411,7 +408,7 @@ def main(argv=None) -> None:
     enc.add_argument("--no-dictionary", action="store_true",
                      help="disable dictionary encoding (reference "
                           "enable_dictionary(false))")
-    enc.add_argument("--pagesize", type=int, default=None,
+    enc.add_argument("--pagesize", type=int, default=DEFAULT_PAGE_SIZE,
                      help="page flush threshold in bytes (reference "
                           "DEFAULT_PAGE_SIZE = 1 MiB)")
     enc.add_argument("--format-version", default="V1", choices=["V1", "V2"],

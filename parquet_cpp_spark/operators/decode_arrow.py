@@ -296,7 +296,11 @@ def decode_chunks_arrow(chunks_df, part_col: str = "part_id",
                                assume_colocated, verify_checksums)
 
 
-def decode_parquet_direct(spark, chunks_path: str, slices_per_core: int = 2,
+# tasks per core of decode_parquet_direct (whole chunk files per task)
+DECODE_SLICES_PER_CORE = 2
+
+
+def decode_parquet_direct(spark, chunks_path: str,
                           verify_checksums: bool = False):
     """Scale-shaped decode of chunk files on disk: the JVM generates only
     file-path descriptors (``task_source``); each task pyarrow-reads whole
@@ -319,7 +323,7 @@ def decode_parquet_direct(spark, chunks_path: str, slices_per_core: int = 2,
     if not files:
         raise ValueError(f"no chunk files under {chunks_path}")
     cores = spark.sparkContext.defaultParallelism
-    n_parts = min(len(files), max(1, cores * slices_per_core))
+    n_parts = min(len(files), max(1, cores * DECODE_SLICES_PER_CORE))
     # whole files per task, NOT amortized like plan_slices: a decode task
     # streams a whole table back through Arrow, so straggler smoothing
     # beats dispatch cost (128 tasks beat 32 in three interleaved A/Bs:

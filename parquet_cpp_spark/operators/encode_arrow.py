@@ -17,7 +17,7 @@ Two task shapes share ``make_arrow_encode_fn``'s ``encode_part``:
 - ``encode_df_arrow``: the engine's single shuffle sends each row to the
   task whose index is ``pmod(part_col, num_parts)``, so a task holds one
   whole part (or none) when part ids are dense; it is sorted by
-  ``sort_key`` and encoded — for co-location by an explicit key or to
+  ``props.sort_key`` and encoded — for co-location by an explicit key or to
   rebalance a skewed layout (plans.encode_job handles salting there).
 """
 
@@ -30,7 +30,7 @@ import numpy as np
 from .. import chunk as chunkmod
 from .. import selector
 from ..kernels.ba import one_chunk
-from ..properties import DEFAULT_BLOOM_COLUMNS
+from ..properties import WriterProperties
 
 # One row per (partition, column) — the lineage/metrics record.
 CHUNK_SCHEMA = (
@@ -339,38 +339,25 @@ def _arrow_column_values_dense(column, phys: str):
 
 
 def make_arrow_encode_fn(columns: dict[str, str] | None = None,
-                         codec_overrides: dict[str, str] | None = None,
-                         dict_size_limit: int = 1 << 20,
-                         props: "object | None" = None,
-                         page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE,
-                         bloom_columns=None):
+                         props: WriterProperties | None = None):
     """Build the scan-local ``mapInArrow`` task; its ``encode_part``
-    attribute encodes one partition's Arrow table. ``codec_overrides`` maps
-    column name to a codec name from ``chunk.CODEC_NAMES`` (the per-column
-    encoding override of ``WriterProperties``, ``properties.h:379-404``);
-    unset columns use the auto-selector. A ``properties.WriterProperties``
-    instance supplies all knobs at once: compression, dictionary on/off,
-    overrides, dictionary page limit, page size, page version and bloom
-    columns. ``bloom_columns`` (when given) wins over ``props``; with
-    neither, the ``WriterProperties`` default applies."""
+    attribute encodes one partition's Arrow table. ``props`` (default
+    ``WriterProperties()``) sets every encode knob: per-column codec
+    overrides (unset columns use the auto-selector), dictionary on/off and
+    page limit, page size and version, compression and bloom columns."""
     import pyarrow as pa
 
-    if bloom_columns is None:
-        bloom_columns = getattr(props, "bloom_columns",
-                                DEFAULT_BLOOM_COLUMNS)
-    compression = chunkmod.UNCOMPRESSED
-    allow_dictionary = True
-    data_page_version = 1
-    if props is not None:
-        codec_overrides = codec_overrides or props.codec_overrides
-        dict_size_limit = props.dictionary_pagesize_limit
-        compression = props.compression_id
-        allow_dictionary = props.dictionary_enabled
-        page_size = getattr(props, "data_pagesize", page_size)
-        data_page_version = getattr(props, "data_page_version", 1)
+    if props is None:
+        props = WriterProperties()
     columns = columns or TOKEN_TABLE_COLUMNS
     overrides = {k: chunkmod.CODEC_IDS[v]
-                 for k, v in (codec_overrides or {}).items()}
+                 for k, v in props.codec_overrides.items()}
+    bloom_columns = props.bloom_columns
+    knobs = dict(dict_size_limit=props.dictionary_pagesize_limit,
+                 compression=props.compression_id,
+                 allow_dictionary=props.dictionary_enabled,
+                 page_size=props.data_pagesize,
+                 data_page_version=props.data_page_version)
     out_schema = pa.schema([
         ("part_id", pa.int64()), ("col", pa.string()),
         ("codec", pa.string()), ("encodings", pa.list_(pa.string())),
@@ -394,14 +381,9 @@ def make_arrow_encode_fn(columns: dict[str, str] | None = None,
             enc = selector.encode_best(
                 values, kernel_phys(phys), row_lengths=row_lengths,
                 codec_override=overrides.get(col),
-                dict_size_limit=dict_size_limit,
-                compression=compression,
-                allow_dictionary=allow_dictionary,
-                page_size=page_size,
                 elem_valid=elem_valid,
                 inner_lengths=inner_lengths,
-                valid_mask=valid_mask,
-                data_page_version=data_page_version)
+                valid_mask=valid_mask, **knobs)
             bloom_blob = None
             if col in bloom_columns and phys == "byte_array":
                 # per-chunk split-block bloom for point-lookup pruning
@@ -453,39 +435,30 @@ def make_arrow_encode_fn(columns: dict[str, str] | None = None,
 
 
 def encode_scan_local(df, columns: dict[str, str] | None = None,
-                      codec_overrides: dict[str, str] | None = None,
-                      dict_size_limit: int = 1 << 20,
-                      props: "object | None" = None):
+                      props: WriterProperties | None = None):
     """DataFrame -> chunk DataFrame with no shuffle (one chunk set per scan
     task)."""
     from ..shipping import ensure_shipped
     ensure_shipped(df.sparkSession)
-    fn = make_arrow_encode_fn(columns, codec_overrides, dict_size_limit,
-                              props)
+    fn = make_arrow_encode_fn(columns, props)
     out = df.mapInArrow(fn, schema=CHUNK_SCHEMA)
     out._pcs_colocated = True  # one part's whole chunk set per scan task
     return out
 
 
 def make_grouped_arrow_encode_fn(columns: dict[str, str] | None = None,
-                                 codec_overrides: dict[str, str] | None = None,
-                                 dict_size_limit: int = 1 << 20,
-                                 props: "object | None" = None,
-                                 page_size: int | None =
-                                 chunkmod.DEFAULT_PAGE_SIZE,
-                                 sort_key: str | None = "doc_id",
-                                 bloom_columns=None):
+                                 props: WriterProperties | None = None):
     """mapInArrow task for the explicit-partitioning pipeline: the input was
     routed by part_id, so a task holds whole partitions (one when ids are
     dense, several when sparse ids such as salted hashes share a residue);
-    each is sorted by ``sort_key`` (deterministic blobs across retries) and
-    encoded straight from Arrow buffers."""
+    each is sorted by ``props.sort_key`` (deterministic blobs across
+    retries) and encoded straight from Arrow buffers."""
     import pyarrow as pa
 
-    if props is not None:
-        sort_key = props.sort_key
-    base = make_arrow_encode_fn(columns, codec_overrides, dict_size_limit,
-                                props, page_size, bloom_columns)
+    if props is None:
+        props = WriterProperties()
+    sort_key = props.sort_key
+    base = make_arrow_encode_fn(columns, props)
 
     def task(batches):
         batch_list = list(batches)
@@ -518,12 +491,7 @@ def make_grouped_arrow_encode_fn(columns: dict[str, str] | None = None,
 
 def encode_df_arrow(df, num_parts: int, part_col: str = "part_id",
                     columns: dict[str, str] | None = None,
-                    codec_overrides: dict[str, str] | None = None,
-                    dict_size_limit: int = 1 << 20,
-                    sort_key: str | None = "doc_id",
-                    bloom_columns=None,
-                    props: "object | None" = None,
-                    page_size: int | None = chunkmod.DEFAULT_PAGE_SIZE):
+                    props: WriterProperties | None = None):
     """Arrow-native grouped encode: the engine's single shuffle sends each
     row to task ``pmod(part_col, num_parts)``, so dense ids
     (``encode_job.add_part_id``) put part ``i`` alone in task ``i``; a hash
@@ -532,9 +500,7 @@ def encode_df_arrow(df, num_parts: int, part_col: str = "part_id",
 
     from ..shipping import ensure_shipped
     ensure_shipped(df.sparkSession)
-    fn = make_grouped_arrow_encode_fn(columns, codec_overrides,
-                                      dict_size_limit, props, page_size,
-                                      sort_key, bloom_columns)
+    fn = make_grouped_arrow_encode_fn(columns, props)
     target = F.pmod(F.col(part_col), F.lit(num_parts)).cast("int")
     out = df.repartitionById(num_parts, target).mapInArrow(
         fn, schema=CHUNK_SCHEMA)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..operators import decode_arrow as decode_arrow_op
 from ..operators import encode_arrow as encode_arrow_op
+from ..properties import WriterProperties
 
 DEFAULT_TARGET_PARTITION_BYTES = 256 << 20
 
@@ -160,20 +161,16 @@ def add_salted_part_id(df: DataFrame, parts_per_source: dict[str, int],
 
 
 def encode_pipeline(df: DataFrame, num_parts: int,
-                    codec_overrides: dict[str, str] | None = None,
                     columns: dict[str, str] | None = None,
-                    dict_size_limit: int = 1 << 20,
-                    page_size: int | None = None) -> DataFrame:
-    """tokens DataFrame -> chunk DataFrame (adds part_id if missing)."""
-    from .. import chunk as chunkmod
-    if page_size is None:
-        page_size = chunkmod.DEFAULT_PAGE_SIZE
+                    props: WriterProperties | None = None) -> DataFrame:
+    """tokens DataFrame -> chunk DataFrame through the shuffled encode
+    (``encode_df_arrow``), adding a doc_id-hashed part_id if the input has
+    none. ``props`` (default ``WriterProperties()``) sets every encode
+    knob."""
     if "part_id" not in df.columns:
         df = add_part_id(df, num_parts)
     return encode_arrow_op.encode_df_arrow(df, num_parts, columns=columns,
-                                           codec_overrides=codec_overrides,
-                                           dict_size_limit=dict_size_limit,
-                                           page_size=page_size)
+                                           props=props)
 
 
 def decode_pipeline(chunks_df: DataFrame,
@@ -208,9 +205,10 @@ def manifest_from_chunks(chunks_df: DataFrame) -> DataFrame:
 
 
 def run_checkpointed(spark, df: DataFrame, out_dir: str, num_parts: int,
-                     codec_overrides: dict[str, str] | None = None,
+                     props: WriterProperties | None = None,
                      fail_after_parts: int | None = None) -> dict:
-    """Encode with checkpoint/resume.
+    """``encode_pipeline`` with checkpoint/resume: ``props`` (default
+    ``WriterProperties()``) configures the encode of every partition.
 
     Completed partitions are read from ``{out_dir}/manifest`` and skipped via
     an anti-join; chunks and manifest rows for newly processed partitions are
@@ -250,8 +248,8 @@ def run_checkpointed(spark, df: DataFrame, out_dir: str, num_parts: int,
 
     n_todo = todo_df.select("part_id").distinct().count()
     if n_todo:
-        chunks = encode_arrow_op.encode_df_arrow(
-            todo_df, num_parts, codec_overrides=codec_overrides)
+        chunks = encode_arrow_op.encode_df_arrow(todo_df, num_parts,
+                                                 props=props)
         chunks.write.mode("append").partitionBy("part_id").parquet(chunks_path)
     if n_todo or orphan_ok is not None:
         # manifest rows for every chunk-complete partition not yet recorded:

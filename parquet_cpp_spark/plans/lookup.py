@@ -313,24 +313,20 @@ def point_lookup_parquet(spark, dataset_dir: str, column: str, key):
         doc = snap.load_snapshot(dataset_dir)
         snap_renames = doc.get("renames", {})
         # kill-list consultation happens in the CURRENT-name namespace:
-        # the caller names the current column, and a delete entry's column
-        # canonicalizes via the rename map exactly as _apply_deletes does
-        # (entries committed pre-rename carry a stored name the map sends
-        # to its current name; post-rename entries already carry the
-        # current name, which by the no-reintroduction rule never collides
-        # with a renamed-away stored name). Deletes keyed on a DIFFERENT
-        # column are not applied here: this lookup answers "which physical
-        # rows carry this key", and filtering them would require reading
-        # the other delete column at each hit — read_snapshot /
+        # the caller names the current column, and the deletes group by
+        # current name exactly as the readers group them (entries
+        # committed pre-rename carry a stored name the map sends to its
+        # current name; post-rename entries already carry the current
+        # name, which by the no-reintroduction rule never collides with a
+        # renamed-away stored name). Deletes keyed on a DIFFERENT column
+        # are not applied here: this lookup answers "which physical rows
+        # carry this key", and filtering them would require reading the
+        # other delete column at each hit — read_snapshot /
         # read_parquet_dataset are the logical-row-set readers.
-        for e in doc.get("deletes", []):
-            if snap_renames.get(e["column"], e["column"]) != column:
-                continue
-            from ..sources import parquet_format as pf
-            rows, _d, _t = pf.lookup_rows(
-                os.path.join(dataset_dir, e["path"]),
-                _delete_leaf_path(os.path.join(dataset_dir, e["path"])),
-                key)
+        from ..sources import parquet_format as pf
+        for path in snap._delete_groups(dataset_dir, doc).get(column, []):
+            rows, _d, _t = pf.lookup_rows(path, _delete_leaf_path(path),
+                                          key)
             if rows:
                 return spark.createDataFrame([], schema)
         # data-file scan: a file stores the current name (appended after

@@ -1,10 +1,14 @@
-"""WriterProperties — the engine's unified writer configuration.
+"""WriterProperties — the one encode configuration.
 
 Analog of the reference's ``WriterProperties::Builder``
-(``/root/reference/src/parquet/properties.h:141-347``): per-column encoding
-overrides, dictionary on/off + page-size limit, compression, plus the
-engine-specific knobs (bloom columns, deterministic sort key, partition
-sizing). A single object travels from job CLI -> plans -> operators.
+(``src/parquet/properties.h:141-347``): per-column codec overrides,
+dictionary on/off and its page-size limit, data page size and layout
+version, compression, plus two engine knobs (bloom columns and the
+deterministic sort key of the grouped encode). Every encode entry point
+takes it as ``props`` and nothing else sets these knobs; ``props=None``
+means ``WriterProperties()``. The page-size and dictionary-limit defaults
+are the kernels' own (``chunk.DEFAULT_PAGE_SIZE``,
+``dictionary.DEFAULT_DICT_SIZE_LIMIT``).
 """
 
 from __future__ import annotations
@@ -12,10 +16,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from . import chunk as chunkmod
+from .kernels import dictionary
 
-DEFAULT_DICT_PAGE_LIMIT = 1 << 20   # properties.h:83
-DEFAULT_DATA_PAGESIZE = 1 << 20     # properties.h:81
-DEFAULT_TARGET_PARTITION_BYTES = 256 << 20
 # every encode path writes a per-chunk split-block bloom for these columns
 # (into the chunk row's ``bloom`` column, so blob bytes do not move): the
 # point lookup prunes on them before it decodes anything
@@ -28,15 +30,16 @@ class WriterProperties:
     # per-column-path encoding config (properties.h:379-404)
     codec_overrides: dict[str, str] = field(default_factory=dict)
     dictionary_enabled: bool = True
-    dictionary_pagesize_limit: int = DEFAULT_DICT_PAGE_LIMIT
-    data_pagesize: int = DEFAULT_DATA_PAGESIZE  # page flush threshold
+    dictionary_pagesize_limit: int = dictionary.DEFAULT_DICT_SIZE_LIMIT
+    data_pagesize: int = chunkmod.DEFAULT_PAGE_SIZE  # page flush threshold
     compression: str = "UNCOMPRESSED"
     # data page layout version: V1 compresses the assembled page; V2 keeps
     # levels outside the compressed block (properties.h:363-377)
     format_version: str = "V1"
     bloom_columns: frozenset[str] = DEFAULT_BLOOM_COLUMNS
+    # the grouped encode sorts each part by this column (None: arrival
+    # order) so retried tasks write the same blobs
     sort_key: str | None = "doc_id"
-    target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES
 
     def __post_init__(self):
         for col, name in self.codec_overrides.items():
@@ -47,6 +50,10 @@ class WriterProperties:
         if self.format_version not in ("V1", "V2"):
             raise ValueError(f"unknown format_version "
                              f"{self.format_version!r}")
+        if self.data_pagesize <= 0:
+            # a non-positive threshold would flush one page per row
+            raise ValueError(f"data_pagesize must be positive, got "
+                             f"{self.data_pagesize}")
         if not self.dictionary_enabled:
             # reference parity: a dictionary encoding cannot be forced while
             # dictionaries are disabled (properties.h:224-232)

@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import chunk as chunkmod
-from .kernels import ba, bitpack
+from .kernels import ba, bitpack, dictionary
 
 SAMPLE_VALUES = 65536
 
@@ -278,7 +278,7 @@ def _plain_payload_bytes(values, phys: str) -> int:
 
 def encode_best(values, phys: str, *, row_lengths=None,
                 codec_override: int | None = None,
-                dict_size_limit: int = 1 << 20,
+                dict_size_limit: int = dictionary.DEFAULT_DICT_SIZE_LIMIT,
                 compression: int = 0,
                 allow_dictionary: bool = True,
                 guard_with_plain: bool = True,

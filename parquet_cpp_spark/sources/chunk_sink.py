@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import os
 
+from ..properties import WriterProperties
+
 MANIFEST_SCHEMA = (
     "part_id bigint, col string, codec string, n_rows bigint, "
     "n_values bigint, raw_bytes bigint, enc_bytes bigint, "
@@ -30,11 +32,9 @@ MANIFEST_SCHEMA = (
 
 def encode_parquet_direct_sink(spark, path: str, out_dir: str,
                                columns: dict[str, str] | None = None,
-                               codec_overrides: dict[str, str] | None = None,
-                               dict_size_limit: int = 1 << 20,
-                               slices_per_core: int = 4,
-                               props: "object | None" = None):
-    """Encode a parquet token table and WRITE chunk files worker-side.
+                               props: WriterProperties | None = None):
+    """Encode a parquet token table and WRITE chunk files worker-side;
+    ``props`` as in ``make_arrow_encode_fn``.
 
     Returns the manifest DataFrame (MANIFEST_SCHEMA — no blob column ever
     crosses the JVM)."""
@@ -42,16 +42,15 @@ def encode_parquet_direct_sink(spark, path: str, out_dir: str,
     ensure_shipped(spark)
 
     from ..operators.encode_arrow import make_arrow_encode_fn
-    from .parquet_direct import list_row_groups, task_source
+    from .parquet_direct import SLICES_PER_CORE, list_row_groups, task_source
 
     os.makedirs(out_dir, exist_ok=True)
     splits = list_row_groups(path)
     cores = spark.sparkContext.defaultParallelism
-    n_parts = min(len(splits), max(1, cores * slices_per_core))
+    n_parts = min(len(splits), max(1, cores * SLICES_PER_CORE))
     splits_df = task_source(spark, splits, n_parts, "file string, rg int")
 
-    encode_fn = make_arrow_encode_fn(columns, codec_overrides,
-                                     dict_size_limit, props)
+    encode_fn = make_arrow_encode_fn(columns, props)
 
     def task(batches):
         import hashlib

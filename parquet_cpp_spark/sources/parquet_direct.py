@@ -22,6 +22,7 @@ import json
 import os
 
 from ..operators.encode_arrow import CHUNK_SCHEMA
+from ..properties import WriterProperties
 
 
 def list_row_groups(path: str) -> list[tuple[str, int]]:
@@ -50,8 +51,10 @@ def list_row_groups(path: str) -> list[tuple[str, int]]:
 # a slice should carry at least this many input units before extra slices
 # (beyond one per core) pay for themselves. Scale-adaptive, not a local[32]
 # constant: with many units per core (a real cluster's file counts) the cap
-# `slices_per_core` wins and keeps fine-grained balance/straggler recovery.
+# SLICES_PER_CORE wins and keeps fine-grained balance/straggler recovery.
 MIN_UNITS_PER_SLICE = 8
+# tasks per core of the encode and sink sources over row-group descriptors
+SLICES_PER_CORE = 4
 
 
 def plan_slices(n_units: int, cores: int, slices_per_core: int) -> int:
@@ -89,11 +92,9 @@ def task_source(spark, descriptors, n_parts: int, ddl: str):
 
 def encode_parquet_direct(spark, path: str,
                           columns: dict[str, str] | None = None,
-                          codec_overrides: dict[str, str] | None = None,
-                          dict_size_limit: int = 1 << 20,
-                          slices_per_core: int = 4,
-                          props: "object | None" = None):
-    """Encode a parquet token table without moving row data through the JVM.
+                          props: WriterProperties | None = None):
+    """Encode a parquet token table without moving row data through the JVM;
+    ``props`` as in ``make_arrow_encode_fn``.
 
     Returns the chunk DataFrame (``CHUNK_SCHEMA``)."""
     from ..shipping import ensure_shipped
@@ -103,11 +104,10 @@ def encode_parquet_direct(spark, path: str,
 
     splits = list_row_groups(path)
     cores = spark.sparkContext.defaultParallelism
-    n_parts = plan_slices(len(splits), cores, slices_per_core)
+    n_parts = plan_slices(len(splits), cores, SLICES_PER_CORE)
     splits_df = task_source(spark, splits, n_parts, "file string, rg int")
 
-    encode_fn = make_arrow_encode_fn(columns, codec_overrides,
-                                     dict_size_limit, props)
+    encode_fn = make_arrow_encode_fn(columns, props)
 
     def task(batches):
         import pyarrow.parquet as pq

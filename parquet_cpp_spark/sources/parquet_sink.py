@@ -431,7 +431,6 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
                           compression: "str | None" = "zstd",
                           data_page_version: int = 1,
                           resume: bool = False,
-                          slices_per_core: int = 4,
                           bloom_filter_columns: "frozenset | set"
                           = frozenset()):
     """Encode ``src_path`` (parquet file/dir) into a directory of
@@ -461,13 +460,13 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
     the sink wrote before the selector was its only mode
     (``e=default`` in ``pcs.params``)."""
     from ..shipping import ensure_shipped
-    from .parquet_direct import list_row_groups, task_source
+    from .parquet_direct import SLICES_PER_CORE, list_row_groups, task_source
     ensure_shipped(spark)
 
     os.makedirs(out_dir, exist_ok=True)
     splits = list_row_groups(src_path)
     cores = spark.sparkContext.defaultParallelism
-    n_parts = max(1, min(len(splits), cores * slices_per_core))
+    n_parts = max(1, min(len(splits), cores * SLICES_PER_CORE))
     splits_df = task_source(spark, splits, n_parts, "file string, rg int")
     bloom_cols = frozenset(bloom_filter_columns)
 

@@ -46,10 +46,6 @@ MAGIC = b"PAR1"
 CREATED_BY = "parquet_cpp_spark"
 BLOOM_FPP = 0.01   # footer bloom false-positive target
 
-# the reference's dictionary_pagesize_limit (properties.h:83): dict growth
-# past this triggers the PLAIN fallback mid-chunk
-DEFAULT_DICT_SIZE_LIMIT = dictionary.DEFAULT_DICT_SIZE_LIMIT
-
 # thrift compact element type ids (same table as parquet_format's reader)
 _TRUE, _FALSE, _BYTE, _I16, _I32, _I64, _DOUBLE, _BINARY, _LIST = range(1, 10)
 _STRUCT = 12
@@ -730,7 +726,8 @@ def _check_encoding(c: _Leaf) -> None:
 def _write_chunk(buf: bytearray, c: _Leaf, lo: int, hi: int,
                  page_rows: "int | None", codec: "str | None",
                  data_page_version: int = 1,
-                 dict_size_limit: int = DEFAULT_DICT_SIZE_LIMIT) -> list:
+                 dict_size_limit: int = dictionary.DEFAULT_DICT_SIZE_LIMIT
+                 ) -> list:
     """One column chunk for slot range [lo, hi) -> ColumnMetaData fields."""
     dlo, dhi = c.dense_range(lo, hi)
     dense = _slice_dense(c.dense, c.phys, dlo, dhi)
@@ -886,7 +883,7 @@ def write_file(path: str, columns: list, num_rows: int, *,
                utf8_columns: "frozenset[str] | set[str]" = frozenset(),
                encodings: "dict[str, str] | None" = None,
                data_page_version: int = 1,
-               dict_size_limit: int = DEFAULT_DICT_SIZE_LIMIT,
+               dict_size_limit: int = dictionary.DEFAULT_DICT_SIZE_LIMIT,
                write_page_index: bool = True,
                decimal_columns: "dict[str, tuple[int, int]] | None" = None,
                annotations: "dict[str, str] | None" = None,

@@ -1145,7 +1145,7 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         # a _snapshots/ log present reads the CURRENT version (the
         # directory may legitimately hold uncommitted or pre-compaction
         # files); pass snapshot_version=0 to force the raw directory.
-        from .snapshots import load_snapshot
+        from .snapshots import _delete_groups, load_snapshot
         snap = load_snapshot(
             src, None if snapshot_version is None else snapshot_version)
         files = sorted(_os.path.join(src, e["path"])
@@ -1159,12 +1159,7 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         # planning below runs on CURRENT names; tasks remap per file
         rename_map = dict(snap.get("renames", {}))
         if apply_deletes:
-            for e in snap.get("deletes", []):
-                # a delete's key column may itself have been renamed
-                # since its commit: join on the CURRENT name
-                col = rename_map.get(e["column"], e["column"])
-                delete_groups.setdefault(col, []).append(
-                    _os.path.join(src, e["path"]))
+            delete_groups = _delete_groups(src, snap)
     else:
         # recursive: partitioned layouts (col=value/ subdirectories,
         # parquet_sink partition_by) list their leaf files too; metadata
@@ -1402,15 +1397,10 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
                 for c, o, v in (conjuncts or []) if o in ("==", "in")]
 
     def _post(df):
-        """Equality deletes: left-anti join each delete column's key set
-        out of the scan (Catalyst/AQE picks broadcast vs shuffle from
-        the kill list's real size), then restore the caller's
-        projection."""
-        for column, paths in sorted(delete_groups.items()):
-            # positional read: single-column key files join correctly
-            # even when committed under a pre-rename column name
-            keys = spark.read.parquet(*paths).toDF(column).distinct()
-            df = df.join(keys, on=column, how="left_anti")
+        """Equality deletes (``snapshots._apply_deletes``), then restore
+        the caller's projection."""
+        from .snapshots import _apply_deletes
+        df = _apply_deletes(spark, delete_groups, df)
         if list(df.columns) != user_cols:
             df = df.select(user_cols)
         return df

@@ -249,23 +249,31 @@ def read_snapshot(spark, out_dir: str, version: "int | None" = None,
             "names per file")
     df = spark.read.parquet(*paths)
     if apply_deletes:
-        df = _apply_deletes(spark, out_dir, snap, df)
+        df = _apply_deletes(spark, _delete_groups(out_dir, snap), df)
     return df
 
 
-def _apply_deletes(spark, out_dir: str, snap: dict, df):
-    """Left-anti join the snapshot's equality-delete keys out of ``df``
-    (grouped per delete column; no-op when the snapshot has none). Key
-    files are single-column by construction; they're read positionally
-    (``toDF``) so a delete committed under a pre-rename column name
-    still joins after the data column was renamed."""
+def _delete_groups(out_dir: str, snap: dict) -> dict:
+    """The snapshot's equality deletes as {key column: key-file paths},
+    keyed by each column's CURRENT name (a delete's column may have been
+    renamed since its commit)."""
     ren = snap.get("renames", {})
     by_col: dict = {}
     for e in snap.get("deletes", []):
         col = ren.get(e["column"], e["column"])
         by_col.setdefault(col, []).append(
             os.path.join(out_dir, e["path"]))
-    for column, paths in sorted(by_col.items()):
+    return by_col
+
+
+def _apply_deletes(spark, delete_groups: dict, df):
+    """Left-anti join equality-delete keys out of ``df``, one join per
+    column of ``delete_groups`` (``_delete_groups``; no-op when empty;
+    Catalyst/AQE picks broadcast vs shuffle from the kill list's real
+    size). Key files are single-column by construction; they're read
+    positionally (``toDF``) so a delete committed under a pre-rename
+    column name still joins after the data column was renamed."""
+    for column, paths in sorted(delete_groups.items()):
         keys = spark.read.parquet(*paths).toDF(column).distinct()
         df = df.join(keys, on=column, how="left_anti")
     return df

@@ -25,7 +25,6 @@ TOKEN_SCHEMA = ("doc_id string, tokens array<int>, n_tok int, source string")
 
 def start_encode_stream(spark: SparkSession, input_dir: str, out_dir: str,
                         checkpoint_dir: str | None = None,
-                        codec_overrides: dict[str, str] | None = None,
                         trigger_available_now: bool = True,
                         max_files_per_trigger: int = 16):
     """Start (and return) the streaming query. With
@@ -41,7 +40,7 @@ def start_encode_stream(spark: SparkSession, input_dir: str, out_dir: str,
               .parquet(input_dir))
 
     def sink(batch_df, batch_id: int):
-        chunks = encode_scan_local(batch_df, codec_overrides=codec_overrides)
+        chunks = encode_scan_local(batch_df)
         chunks.persist()
         try:
             chunks.write.mode("append").parquet(chunks_path)

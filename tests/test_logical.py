@@ -12,8 +12,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_cpp_spark import chunk as chunkmod
 from parquet_cpp_spark import logical
+from parquet_cpp_spark.properties import WriterProperties
 
 RNG = np.random.default_rng(23)
+# the grouped encode in arrival order (no per-part sort)
+UNSORTED = WriterProperties(sort_key=None)
 
 
 def test_decimal_byte_width_table():
@@ -102,7 +105,7 @@ def test_logical_specs_through_operators():
             "ts": "timestamp", "d": "date32"}
     src = df.withColumn("part_id", F.pmod(F.xxhash64("id"), F.lit(4)))
     dec = decode_chunks_typed(
-        encode_df_arrow(src, 4, columns=cols, sort_key=None), cols)
+        encode_df_arrow(src, 4, columns=cols, props=UNSORTED), cols)
     got = sorted((r.id, r.price, r.ts, r.d) for r in dec.collect())
     assert got == sorted(rows)
 
@@ -154,7 +157,7 @@ def test_nullable_flat_specs_through_operators():
             "f": "timestamp?"}
     src = df.withColumn("part_id", F.pmod(F.xxhash64("id"), F.lit(4)))
     dec = decode_chunks_typed(
-        encode_df_arrow(src, 4, columns=cols, sort_key=None), cols)
+        encode_df_arrow(src, 4, columns=cols, props=UNSORTED), cols)
     got = sorted((r.id, r.a, r.b, r.c, r.d, r.e, r.f)
                  for r in dec.collect())
     assert got == sorted(rows)
@@ -162,4 +165,4 @@ def test_nullable_flat_specs_through_operators():
     cols2 = {"id": "int64", "a": "int64"}
     with pytest.raises(Exception, match="has nulls"):
         encode_df_arrow(src.select("part_id", "id", "a"), 4,
-                        columns=cols2, sort_key=None).collect()
+                        columns=cols2, props=UNSORTED).collect()

@@ -13,8 +13,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_cpp_spark import chunk as chunkmod
 from parquet_cpp_spark import levels as L
+from parquet_cpp_spark.properties import WriterProperties
 
 RNG = np.random.default_rng(13)
+# the grouped encode in arrival order (no per-part sort)
+UNSORTED = WriterProperties(sort_key=None)
 
 
 def test_nullable_levels_roundtrip():
@@ -136,7 +139,8 @@ def test_struct_column_operator_roundtrip(spark):
                  F.struct("hour", F.col("user")).alias("inner"))
         .alias("attrs")) \
         .withColumn("part_id", F.pmod(F.xxhash64("event_id"), F.lit(4)))
-    chunks = encode_df_arrow(src, 4, columns=cols, sort_key="event_id")
+    chunks = encode_df_arrow(src, 4, columns=cols,
+                             props=WriterProperties(sort_key="event_id"))
     # flattened leaves carry dotted paths, one chunk column per leaf
     leaf_names = {r.col for r in chunks.select("col").distinct().collect()}
     assert leaf_names == {"event_id", "attrs.event_type", "attrs.value",
@@ -165,7 +169,7 @@ def test_nested_list_operator_roundtrip(spark):
         rows, "doc_id string, windows array<array<int>>")
     cols = {"doc_id": "byte_array", "windows": "list<list<int32>>"}
     src = df.withColumn("part_id", F.pmod(F.xxhash64("doc_id"), F.lit(4)))
-    chunks = encode_df_arrow(src, 4, columns=cols, sort_key="doc_id")
+    chunks = encode_df_arrow(src, 4, columns=cols)
     dec = decode_chunks_typed(chunks, cols)
     got = sorted((r.doc_id, [list(w) for w in r.windows])
                  for r in dec.collect())
@@ -187,7 +191,7 @@ def test_struct_with_nullable_leaves_roundtrip(spark):
     cols = {"id": "int64", "s": "struct<x:int64?,y:byte_array?>"}
     src = df.withColumn("part_id", F.pmod(F.xxhash64("id"), F.lit(4)))
     dec = decode_chunks_typed(
-        encode_df_arrow(src, 4, columns=cols, sort_key=None), cols)
+        encode_df_arrow(src, 4, columns=cols, props=UNSORTED), cols)
     got = sorted((r.id, (r.s.x, r.s.y)) for r in dec.collect())
     assert got == sorted(rows)
 

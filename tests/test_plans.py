@@ -85,32 +85,58 @@ def test_point_lookup_prunes_on_driver(spark, tmp_path):
 
 
 def test_encode_paths_write_doc_id_bloom(spark, tmp_path):
-    """Every encode path takes its bloom columns from WriterProperties
-    (default {"doc_id"}): the direct, scan-local and grouped paths write a
-    doc_id bloom holding every doc_id of the part, and honour
-    ``props.bloom_columns`` -- the direct and scan-local paths used to
-    drop it and write NULL blooms."""
+    """Every encode path takes its whole configuration from one
+    WriterProperties: the direct, scan-local, grouped, pipeline,
+    checkpointed and chunk-sink paths write a doc_id bloom holding every
+    doc_id of the part by default, honour ``props.bloom_columns`` (the
+    direct and scan-local paths used to drop it and write NULL blooms),
+    and honour a non-default compression, page layout, codec override and
+    sort key."""
+    import itertools
+
     from parquet_cpp_spark import chunk as chunkmod
     from parquet_cpp_spark.kernels.bloom import BlockSplitBloomFilter
     from parquet_cpp_spark.operators.encode_arrow import (encode_df_arrow,
                                                           encode_scan_local)
-    from parquet_cpp_spark.plans.encode_job import add_part_id
+    from parquet_cpp_spark.plans import encode_job
     from parquet_cpp_spark.properties import WriterProperties
     from parquet_cpp_spark.sources import tokens as T
+    from parquet_cpp_spark.sources.chunk_sink import \
+        encode_parquet_direct_sink
     from parquet_cpp_spark.sources.parquet_direct import encode_parquet_direct
 
     src = T.tokens_from_documents(spark, SF_DIR, 4) \
         .select("doc_id", "tokens", "n_tok", "source")
     path = str(tmp_path / "tokens.parquet")
     src.coalesce(2).write.parquet(path)
-    keyed = add_part_id(src, 4)
+    keyed = encode_job.add_part_id(src, 4)
     ids = {r.doc_id.encode() for r in src.select("doc_id").collect()}
     on = WriterProperties(bloom_columns=frozenset({"doc_id"}))
     off = WriterProperties(bloom_columns=frozenset())
-    for name, make in [
-            ("direct", lambda p: encode_parquet_direct(spark, path, props=p)),
-            ("scan_local", lambda p: encode_scan_local(src, props=p)),
-            ("grouped", lambda p: encode_df_arrow(keyed, 4, props=p))]:
+    custom = WriterProperties(compression="GZIP", format_version="V2",
+                              data_pagesize=4096, sort_key="n_tok",
+                              codec_overrides={"tokens": "PLAIN"})
+    fresh = (str(tmp_path / f"out{i}") for i in itertools.count())
+
+    def checkpointed(p):
+        out = encode_job.run_checkpointed(spark, keyed, next(fresh), 4,
+                                          props=p)
+        return spark.read.parquet(out["chunks_path"])
+
+    def sink(p):
+        out = next(fresh)
+        encode_parquet_direct_sink(spark, path, out, props=p).collect()
+        return spark.read.parquet(out)
+
+    for name, make, grouped in [
+            ("direct", lambda p: encode_parquet_direct(spark, path, props=p),
+             False),
+            ("scan_local", lambda p: encode_scan_local(src, props=p), False),
+            ("grouped", lambda p: encode_df_arrow(keyed, 4, props=p), True),
+            ("pipeline", lambda p: encode_job.encode_pipeline(
+                src, 4, props=p), True),
+            ("checkpointed", checkpointed, True),
+            ("sink", sink, False)]:
         for props in (None, on):
             rows = make(props).select("col", "bloom", "blob").collect()
             blooms = [r.bloom for r in rows if r.col == "doc_id"]
@@ -126,6 +152,22 @@ def test_encode_paths_write_doc_id_bloom(spark, tmp_path):
             assert found == ids, name
         rows = make(off).select("bloom").collect()
         assert all(r.bloom is None for r in rows), name
+
+        rows = make(custom).select("col", "codec", "blob").collect()
+        assert rows and all(r.blob[7] == chunkmod.GZIP for r in rows), name
+        tok = [r for r in rows if r.col == "tokens"]
+        assert tok and {r.codec for r in tok} == {"PLAIN"}, name
+        for r in tok:
+            mv = memoryview(r.blob)
+            assert mv[4] == chunkmod.VERSION_PAGED, name
+            *_, n_pages, pos, _dict = chunkmod._parse_paged_header(mv)
+            flags = [pg[3] for pg in chunkmod._iter_pages(mv, n_pages, pos)]
+            assert len(flags) > 1 and set(flags) == {1}, name  # V2 pages
+        if grouped:
+            for r in rows:
+                if r.col == "n_tok":
+                    n_tok = chunkmod.decode_chunk(r.blob).values
+                    assert (n_tok[1:] >= n_tok[:-1]).all(), name
 
 
 def test_similarity_broadcasts_probes(spark):
@@ -361,8 +403,7 @@ def test_selective_decode_bloom_layer(spark):
 
     src = T_.tokens_from_documents(spark, SF_DIR, 4)
     src = encode_job.add_part_id(src, 4)
-    chunks = encode_arrow.encode_df_arrow(
-        src, 4, bloom_columns={"doc_id"}).cache()
+    chunks = encode_arrow.encode_df_arrow(src, 4).cache()
     try:
         n_parts = chunks.select("part_id").distinct().count()
         present = src.select("doc_id").first().doc_id

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from parquet_cpp_spark.operators import encode as encode_op
 from parquet_cpp_spark.plans import encode_job
+from parquet_cpp_spark.properties import WriterProperties
 from parquet_cpp_spark.sources import tokens as tokens_src
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -46,8 +47,8 @@ def test_roundtrip_auto(spark):
                                    "RLE_DICTIONARY"])
 def test_roundtrip_forced_token_codec(spark, codec):
     src = tokens_src.tokens_from_documents(spark, SF_DIR, num_parts=4)
-    chunks = encode_job.encode_pipeline(src, 4,
-                                        codec_overrides={"tokens": codec})
+    chunks = encode_job.encode_pipeline(
+        src, 4, props=WriterProperties(codec_overrides={"tokens": codec}))
     got = {r.col: r.codec for r in
            chunks.select("col", "codec").distinct().collect()}
     assert got["tokens"] == codec
@@ -58,7 +59,8 @@ def test_roundtrip_forced_token_codec(spark, codec):
 def test_roundtrip_fsst_strings(spark):
     src = tokens_src.tokens_from_documents(spark, SF_DIR, num_parts=4)
     chunks = encode_job.encode_pipeline(
-        src, 4, codec_overrides={"doc_id": "FSST", "source": "FSST"})
+        src, 4, props=WriterProperties(
+            codec_overrides={"doc_id": "FSST", "source": "FSST"}))
     decoded = encode_job.decode_pipeline(chunks)
     assert _collect_sorted(decoded) == _collect_sorted(src)
 
@@ -129,6 +131,31 @@ def test_manifest_resume(spark, tmp_path):
     assert m_resumed == m_clean
 
 
+def test_jobs_encode_shuffle_honours_writer_flags(spark, tmp_path):
+    """``jobs encode --shuffle`` and ``--resume`` build the same
+    WriterProperties as the direct mode: every chunk blob carries the
+    GZIP compression byte, forced codecs apply and no dictionary is
+    chosen. Both modes used to take only ``--codec`` and silently wrote
+    uncompressed chunks."""
+    from parquet_cpp_spark import chunk as chunkmod
+    from parquet_cpp_spark import jobs
+
+    inp = str(tmp_path / "tokens.parquet")
+    tokens_src.tokens_from_documents(spark, SF_DIR, num_parts=2) \
+        .select("doc_id", "tokens", "n_tok", "source").write.parquet(inp)
+    for mode in ("--shuffle", "--resume"):
+        out = str(tmp_path / mode.strip("-"))
+        jobs.main(["encode", "--input", inp, "--out", out, mode,
+                   "--parts", "2", "--compression", "GZIP",
+                   "--no-dictionary", "--codec", "tokens=PLAIN"])
+        rows = spark.read.parquet(out + "/chunks") \
+            .select("col", "codec", "blob").collect()
+        assert rows, mode
+        assert {r.blob[7] for r in rows} == {chunkmod.GZIP}, mode
+        assert {r.codec for r in rows if r.col == "tokens"} == {"PLAIN"}
+        assert "RLE_DICTIONARY" not in {r.codec for r in rows}, mode
+
+
 def test_salted_partitioning_spreads_hot_source(spark):
     src = tokens_src.tokens_from_documents(spark, SF_DIR, num_parts=4)
     salted = encode_job.add_salted_part_id(
@@ -164,8 +191,9 @@ def test_dict_fallback_through_pipeline(spark):
     still round-trips."""
     src = tokens_src.tokens_from_documents(spark, SF_DIR, num_parts=2)
     chunks = encode_job.encode_pipeline(
-        src, 2, codec_overrides={"tokens": "RLE_DICTIONARY"},
-        dict_size_limit=64).cache()
+        src, 2, props=WriterProperties(
+            codec_overrides={"tokens": "RLE_DICTIONARY"},
+            dictionary_pagesize_limit=64)).cache()
     try:
         encs = {tuple(r.encodings) for r in
                 chunks.filter(F.col("col") == "tokens").collect()}

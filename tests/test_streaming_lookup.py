@@ -55,7 +55,7 @@ def test_streaming_encode_matches_batch(spark, tmp_path):
 
 def test_point_lookup_prunes_and_finds(spark):
     src = tokens_src.tokens_from_documents(spark, SF_DIR, 8)
-    chunks = encode_op.encode_df(src, 8, bloom_columns={"doc_id"}).cache()
+    chunks = encode_op.encode_df(src, 8).cache()
     try:
         surviving = lookup.prune_partitions(chunks, "doc_id", "42")
         n_total = chunks.select("part_id").distinct().count()

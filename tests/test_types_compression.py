@@ -211,6 +211,10 @@ def test_writer_properties_drive_operators():
         WriterProperties(codec_overrides={"x": "NOPE"})
     with pytest.raises(ValueError):
         WriterProperties(compression="XZ")
+    for bad in (0, -1):
+        with pytest.raises(ValueError,
+                           match="data_pagesize must be positive"):
+            WriterProperties(data_pagesize=bad)
 
 
 def test_dictionary_disabled_property():
