@@ -161,7 +161,8 @@ def cmd_verify_parquet(args) -> None:
     spark = _spark(args)
     from pyspark.sql import functions as F
 
-    from .sources.record_assembly import read_parquet_dataset
+    from .sources.record_assembly import predicate_column, \
+        read_parquet_dataset
 
     def digest(df):
         h = F.xxhash64(*sorted(df.columns)).cast("decimal(38,0)")
@@ -185,18 +186,8 @@ def cmd_verify_parquet(args) -> None:
     else:
         jvm = spark.read.parquet(args.dir)
     if pred:
-        for col, op, val in pred:
-            c = F.col(col)      # dotted paths = struct access, like
-            if op == "is_null":  # the engine side
-                jvm = jvm.filter(c.isNull())
-            elif op == "not_null":
-                jvm = jvm.filter(c.isNotNull())
-            elif op == "in":
-                jvm = jvm.filter(c.isin(*list(val)))
-            else:
-                jvm = jvm.filter({"==": c.__eq__, "!=": c.__ne__,
-                                  "<": c.__lt__, "<=": c.__le__,
-                                  ">": c.__gt__, ">=": c.__ge__}[op](val))
+        # dotted paths = struct access, like the engine side
+        jvm = jvm.filter(predicate_column(pred))
     eng_h, eng_n = digest(eng)
     jvm_h, jvm_n = digest(jvm)
     ok = (eng_h, eng_n) == (jvm_h, jvm_n)

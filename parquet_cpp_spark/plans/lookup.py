@@ -81,10 +81,6 @@ def _find_rows(blob, key: bytes):
     return [int(i) for i in eq.to_pylist()]
 
 
-_SEL_OPS = ("==", "!=", "<", "<=", ">", ">=", "in",
-            "is_null", "not_null")
-
-
 def prune_parts_predicate(chunks_df: DataFrame, predicate) -> DataFrame:
     """part_ids that may satisfy a conjunction of ``(column, op, value)``
     terms (ops ``== != < <= > >= in is_null not_null``), pruning on the
@@ -100,6 +96,8 @@ def prune_parts_predicate(chunks_df: DataFrame, predicate) -> DataFrame:
     comparison term (null-rejecting semantics). The manifest-level
     analog of the reference's stats-based filtering
     (statistics.h:34-82)."""
+    from ..sources.record_assembly import _PRED_OPS
+
     # bounded collect: one row per distinct column name in the chunk
     # metadata — a typo'd predicate column must fail loudly, not
     # intersect the part set down to silent emptiness
@@ -116,9 +114,9 @@ def prune_parts_predicate(chunks_df: DataFrame, predicate) -> DataFrame:
                              f"metadata rows (have {sorted(known)})")
         if op == "=":
             op = "=="
-        if op not in _SEL_OPS:
+        if op not in _PRED_OPS:
             raise ValueError(f"unsupported predicate op {op!r} "
-                             f"(one of {_SEL_OPS})")
+                             f"(one of {_PRED_OPS})")
         if op in ("is_null", "not_null"):
             keep = (F.col("null_count") > 0) if op == "is_null" \
                 else (F.col("null_count") < F.col("n_rows"))
@@ -191,26 +189,12 @@ def selective_decode(chunks_df: DataFrame, predicate,
     chunk-format twin of ``record_assembly.read_parquet_dataset
     (predicate=...)``; at 100 TB a selective predicate over a
     range-clustered layout decodes only the matching slice."""
+    from ..sources.record_assembly import predicate_column
     from .encode_job import decode_pipeline
     parts = prune_parts_predicate(chunks_df, predicate)
     pruned = chunks_df.join(F.broadcast(parts), "part_id", "semi")
     out = decode_pipeline(pruned, verify_checksums=verify_checksums)
-    cond = None
-    for col, op, v in predicate:
-        c = F.col(col)
-        if op == "is_null":
-            term = c.isNull()
-        elif op == "not_null":
-            term = c.isNotNull()
-        elif op in ("in",):
-            term = c.isin(*list(v))
-        else:
-            term = {"==": c == F.lit(v), "=": c == F.lit(v),
-                    "!=": c != F.lit(v),
-                    "<": c < F.lit(v), "<=": c <= F.lit(v),
-                    ">": c > F.lit(v), ">=": c >= F.lit(v)}[op]
-        cond = term if cond is None else cond & term
-    return out.filter(cond)
+    return out.filter(predicate_column(predicate))
 
 
 def point_lookup(chunks_df: DataFrame, doc_id: str) -> DataFrame:
@@ -292,25 +276,26 @@ def point_lookup_parquet(spark, dataset_dir: str, column: str, key):
     page-level skip WITHIN each surviving file — reference
     TypedColumnReader::Skip (column_reader.h:268-281) on the interchange
     format."""
-    import glob
     import os
 
     from ..shipping import ensure_shipped
     from ..sources.parquet_direct import task_source
+    from ..sources.record_assembly import _list_dataset
     ensure_shipped(spark)
 
     schema = ("file string, row_index bigint, pages_decoded int, "
               "pages_total int")
     if not os.path.isdir(dataset_dir):
         raise FileNotFoundError(f"not a dataset dir: {dataset_dir}")
-    if os.path.isdir(os.path.join(dataset_dir, "_snapshots")):
+    files, doc = _list_dataset(dataset_dir)
+    lookup_names = [column]
+    if doc is not None:
         # snapshot-logged dataset: look up against the committed cut —
         # uncommitted/pre-compaction files are invisible, and a key on
         # the kill list resolves to NO rows (merge-on-read applies to
         # point lookups too; one stats/bloom-pruned pass over the tiny
         # key files decides membership before any data file is touched)
         from ..sources import snapshots as snap
-        doc = snap.load_snapshot(dataset_dir)
         snap_renames = doc.get("renames", {})
         # kill-list consultation happens in the CURRENT-name namespace:
         # the caller names the current column, and the deletes group by
@@ -333,21 +318,8 @@ def point_lookup_parquet(spark, dataset_dir: str, column: str, key):
         # the rename) or ANY stored chain member mapping to it — resolve
         # per file by trying each candidate, like record_assembly's
         # per-file remap
-        lookup_names = [column] + sorted(
+        lookup_names += sorted(
             k for k, v in snap_renames.items() if v == column)
-        files = sorted(os.path.join(dataset_dir, e["path"])
-                       for e in doc["files"])
-    else:
-        lookup_names = [column]
-        # recursive: partitioned layouts (col=value/ subdirectories) keep
-        # their files below the root; dotfiles are in-flight temps and
-        # _/.-prefixed dirs are metadata, not data
-        files = sorted(
-            f for f in glob.glob(
-                os.path.join(dataset_dir, "**", "*.parquet"),
-                recursive=True)
-            if not any(seg.startswith((".", "_")) for seg in
-                       os.path.relpath(f, dataset_dir).split(os.sep)))
     if not files:
         # dir exists but holds no committed files (sink not yet run, or
         # only .inprogress temps): an empty result, not a crash

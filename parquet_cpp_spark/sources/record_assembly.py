@@ -784,49 +784,58 @@ def _normalize_predicate(predicate, leaves_by_name):
     return conjuncts
 
 
-def _rg_may_match(chunks_by_path, leaves_by_name, conjuncts) -> bool:
-    """False only when chunk Statistics PROVE no row of the row group can
-    satisfy the conjunction. Comparison predicates are null-rejecting
-    (SQL/Arrow semantics), so an all-null chunk disproves any of them;
-    missing or untyped bounds (FLBA/INT96, NaN-poisoned floats) keep the
-    group. This is the scan-side analog of the reference's stats-based
-    filtering (statistics.cc comparators + the UNSIGNED sort-order
-    rule)."""
-    for col, op, v in conjuncts:
-        chunk = chunks_by_path.get(col)
-        if chunk is None or chunk.stats is None:
-            continue
-        mn_b, mx_b, nulls = chunk.stats
+def predicate_column(predicate):
+    """The Catalyst form of a conjunction of ``(column, op, value)``
+    terms (ops ``_PRED_OPS``, ``=`` meaning ``==``): one ``Column`` for
+    ``DataFrame.filter``; dotted columns are struct-field access, as in
+    the engine scan."""
+    from pyspark.sql import functions as F
+
+    cond = None
+    for col, op, v in predicate:
+        c = F.col(col)
         if op == "is_null":
-            if nulls == 0:                   # provably no null anywhere
-                return False
-            continue
-        if op == "not_null":
-            if nulls is not None and nulls == chunk.num_values:
-                return False                  # provably all null
-            continue
-        if nulls is not None and nulls == chunk.num_values:
-            return False                      # all-null chunk vs a
-        mn = fmt.stat_typed(mn_b, leaves_by_name[col])  # null-rejecting
-        mx = fmt.stat_typed(mx_b, leaves_by_name[col])  # comparison
-        if mn is None or mx is None or mn != mn or mx != mx:
-            continue     # absent or NaN-poisoned bounds: keep the group
-        if _bounds_disprove(op, v, mn, mx):
-            return False
-    return True
+            term = c.isNull()
+        elif op == "not_null":
+            term = c.isNotNull()
+        elif op == "in":
+            term = c.isin(*list(v))
+        else:
+            term = {"==": c.__eq__, "=": c.__eq__, "!=": c.__ne__,
+                    "<": c.__lt__, "<=": c.__le__,
+                    ">": c.__gt__, ">=": c.__ge__}[op](v)
+        cond = term if cond is None else cond & term
+    return cond
 
 
-def _bounds_disprove(op, v, mn, mx) -> bool:
-    """True when [mn, mx] bounds PROVE a comparison can match no value —
-    the one decision table shared by chunk-Statistics row-group pruning
-    and snapshot-entry file pruning."""
-    return ((op == "==" and (v < mn or v > mx))
-            or (op == "in" and all(x < mn or x > mx for x in v))
-            or (op == "!=" and mn == mx == v)
-            or (op == "<" and not mn < v)
-            or (op == "<=" and not mn <= v)
-            or (op == ">" and not mx > v)
-            or (op == ">=" and not mx >= v))
+def _may_match(op, v, nulls, count, lo, hi) -> bool:
+    """False only when one column's summary PROVES no row can satisfy
+    ``col op v`` — the one plan-time pruning rule behind the partition,
+    snapshot-entry and footer-chunk layers (the reference's
+    statistics.cc comparators). ``nulls``/``count`` are the null and
+    value counts, ``[lo, hi]`` the value bounds; unknown parts are None.
+    ``is_null`` prunes only on ``nulls == 0`` and ``not_null`` only on
+    ``nulls == count``. Comparisons are null-rejecting (SQL/Arrow
+    semantics), so an all-null column disproves every one of them;
+    absent, NaN-poisoned or type-incomparable bounds keep the rows."""
+    if op == "is_null":
+        return nulls != 0
+    if op == "not_null":
+        return nulls is None or nulls != count
+    if nulls is not None and nulls == count:
+        return False
+    if lo is None or hi is None or lo != lo or hi != hi:
+        return True
+    try:
+        return not ((op == "==" and (v < lo or v > hi))
+                    or (op == "in" and all(x < lo or x > hi for x in v))
+                    or (op == "!=" and lo == hi == v)
+                    or (op == "<" and not lo < v)
+                    or (op == "<=" and not lo <= v)
+                    or (op == ">" and not hi > v)
+                    or (op == ">=" and not hi >= v))
+    except TypeError:
+        return True
 
 
 def _snapshot_stats_may_match(st: "dict | None", conjuncts) -> bool:
@@ -834,43 +843,19 @@ def _snapshot_stats_may_match(st: "dict | None", conjuncts) -> bool:
     (``parquet_sink.file_stats_json``) PROVE no row of the file can
     satisfy the conjunction — Iceberg-manifest-style pruning from the
     committed listing alone, zero file I/O. byte_array bounds live as
-    utf-8 text in the snapshot; predicate values were normalized to
-    bytes, so they decode back for comparison (UTF-8 byte order equals
-    code-point order). Type-incomparable or absent entries keep the
-    file — the footer-stats layer below re-proves with full fidelity."""
+    utf-8 text in the snapshot and are encoded back to bytes, the form
+    predicate values were normalized to (UTF-8 byte order equals
+    code-point order)."""
     if not st:
         return True
     for col, op, v in conjuncts:
         ent = st.get(col)
         if not isinstance(ent, dict):
             continue
-        nulls, n = ent.get("nulls"), ent.get("n")
-        if op == "is_null":
-            if nulls == 0:
-                return False
-            continue
-        if op == "not_null":
-            if nulls is not None and nulls == n:
-                return False
-            continue
-        if nulls is not None and nulls == n:
-            return False        # all-null (or empty) file vs a
-        mn, mx = ent.get("min"), ent.get("max")   # null-rejecting op
-        if mn is None or mx is None:
-            continue
-        vv = v
-        if isinstance(mn, str):
-            try:
-                vv = tuple(x.decode() if isinstance(x, bytes) else x
-                           for x in v) if op == "in" else \
-                    (v.decode() if isinstance(v, bytes) else v)
-            except UnicodeDecodeError:
-                continue        # non-utf8 key can't be proven absent here
-        try:
-            if _bounds_disprove(op, vv, mn, mx):
-                return False
-        except TypeError:
-            continue            # incomparable types: not decisive
+        lo, hi = (b.encode() if isinstance(b, str) else b
+                  for b in (ent.get("min"), ent.get("max")))
+        if not _may_match(op, v, ent.get("nulls"), ent.get("n"), lo, hi):
+            return False
     return True
 
 
@@ -951,62 +936,38 @@ def _rg_prunes(path: str, rg: int, eq_terms,
         m.close()
 
 
+def _segment_value(pv: str, v):
+    """A ``col=value`` path segment in the domain of predicate value
+    ``v``: UTF-8 bytes against bytes/str, else the number it parses as
+    (``int``, then ``float``); None when it parses as neither."""
+    if isinstance(v, (bytes, str)):
+        return pv.encode() if isinstance(v, bytes) else pv
+    for parse in (int, float):
+        try:
+            return parse(pv)
+        except ValueError:
+            pass
+    return None
+
+
 def _partition_may_match(vals: dict, conjuncts) -> bool:
     """False only when a file's ``col=value`` path segments PROVE no row
     can satisfy the conjunction — the plan-time partition pruning layer
     that drops whole files before any footer I/O. The layout contract
     (``parquet_sink.hive_segment``) is that a segment states its column's
-    value for EVERY row of the file, so equality against the segment is
-    decisive. Segment values are strings: string predicates compare
-    directly (lexicographic ranges are exact string semantics); numeric
-    predicates compare after parsing the segment as a number, and an
-    unparsable segment conservatively keeps the file. Null-test
-    predicates never prune here (a foreign directory could break the
-    no-null-partition-values convention; the stats layer below proves
-    those instead)."""
+    value for EVERY row of the file, so it is both bounds of that
+    column; an unparsable numeric segment keeps the file. The null count
+    is unknown, so null tests never prune here (a foreign directory
+    could break the no-null-partition-values convention; the stats
+    layer below proves those instead)."""
     for col, op, v in conjuncts:
         pv = vals.get(col)
-        if pv is None or op in ("is_null", "not_null"):
+        if pv is None:
             continue
-        cands = v if op == "in" else (v,)
-        typed = []
-        for c in cands:
-            if isinstance(c, bytes):
-                typed.append((pv, c.decode()))
-            elif isinstance(c, str):
-                typed.append((pv, c))
-            else:
-                try:  # numeric predicate vs string segment: parse
-                    typed.append((int(pv) if isinstance(c, int)
-                                  and not isinstance(c, bool)
-                                  else float(pv), c))
-                except ValueError:
-                    typed.append(None)   # unparsable: not decisive
-        if any(t is None for t in typed):
-            continue
-        if op in ("==", "in"):
-            if not any(pvt == c for pvt, c in typed):
-                return False
-        elif ((op == "!=" and typed[0][0] == typed[0][1])
-                or (op == "<" and not typed[0][0] < typed[0][1])
-                or (op == "<=" and not typed[0][0] <= typed[0][1])
-                or (op == ">" and not typed[0][0] > typed[0][1])
-                or (op == ">=" and not typed[0][0] >= typed[0][1])):
+        seg = _segment_value(pv, v[0] if op == "in" else v)
+        if not _may_match(op, v, None, None, seg, seg):
             return False
     return True
-
-
-def _probe_schema(files, columns):
-    """Arrow schema for a possibly-evolving dataset when no plan exists
-    (the everything-pruned early return): the first file carrying every
-    requested column wins, probing a bounded prefix."""
-    err = None
-    for f in files[:64]:
-        try:
-            return file_schema(f, columns=columns)
-        except ValueError as e:
-            err = e
-    raise err if err is not None else ValueError("no files to probe")
 
 
 def _ren_leaf(name: str, renames: "dict | None") -> str:
@@ -1019,16 +980,29 @@ def _ren_leaf(name: str, renames: "dict | None") -> str:
     return cur + sep + rest
 
 
-def _plan_file(f: str, conjuncts, renames: "dict | None" = None):
+def _chunk_may_match(chunk, leaf, op, v) -> bool:
+    """One conjunct against one column chunk's footer Statistics
+    (UNSIGNED-aware through ``stat_typed``); a column the row group
+    lacks, or a chunk without Statistics, keeps the group."""
+    if chunk is None or chunk.stats is None:
+        return True
+    lo, hi, nulls = chunk.stats
+    return _may_match(op, v, nulls, chunk.num_values,
+                      fmt.stat_typed(lo, leaf), fmt.stat_typed(hi, leaf))
+
+
+def _plan_file(f: str, conjuncts, renames: "dict | None" = None,
+               fm=None):
     """Footer-only plan for ONE file: (path, n_rg, kept rg indices,
-    schema signature, stored->current rename pairs this file needs).
-    Runs on the driver for small directories and inside executor tasks
-    for large ones — identical logic either way. ``renames`` is the
-    snapshot's rename map: leaf names and chunk paths are presented
-    under their CURRENT names so all downstream planning (union,
-    evolution, stats pruning) is rename-blind; a file carrying BOTH a
-    stored name and its current name is ambiguous and fails loudly."""
-    fm = footer_meta(f)
+    schema signature, stored->current rename pairs this file needs,
+    raw schema elements). ``fm`` is the file's footer
+    when the caller already parsed it. ``renames`` is the snapshot's
+    rename map: leaf names and chunk paths are presented under their
+    CURRENT names so all downstream planning (union, evolution, stats
+    pruning) is rename-blind; a file carrying BOTH a stored name and
+    its current name is ambiguous and fails loudly."""
+    if fm is None:
+        fm = footer_meta(f)
     roots = {lf.name.partition(".")[0] for lf in fm.leaves}
     ren_pairs = tuple(sorted(
         (k, v) for k, v in (renames or {}).items() if k in roots))
@@ -1041,17 +1015,47 @@ def _plan_file(f: str, conjuncts, renames: "dict | None" = None):
                     lf.max_rep) for lf in fm.leaves)
     leaves_by_name = {_ren_leaf(lf.name, renames): lf
                       for lf in fm.leaves}
-    kept = [rg for rg in range(len(fm.row_groups))
-            if conjuncts is None or _rg_may_match(
-                {_ren_leaf(c.path, renames): c
-                 for c in fm.row_groups[rg]},
-                leaves_by_name, conjuncts)]
-    return f, len(fm.row_groups), kept, leaves, ren_pairs
+    kept = []
+    for rg, chunks in enumerate(fm.row_groups):
+        by_name = {_ren_leaf(c.path, renames): c for c in chunks}
+        if conjuncts is None or all(
+                _chunk_may_match(by_name.get(col), leaves_by_name.get(col),
+                                 op, v) for col, op, v in conjuncts):
+            kept.append(rg)
+    return f, len(fm.row_groups), kept, leaves, ren_pairs, fm.schema_raw
+
+
+def _list_dataset(src: str, snapshot_version: "int | None" = None):
+    """A dataset directory's data files and the snapshot they come from:
+    ``(sorted paths, snapshot doc or None)``. With a ``_snapshots/`` log
+    (``sources/snapshots.py``) the committed listing IS the file set —
+    read isolation from in-flight writers, time travel, no directory
+    glob over 10^6 files: ``None`` reads the CURRENT version (the
+    directory may legitimately hold uncommitted or pre-compaction
+    files), ``N`` time-travels to version N, ``0`` ignores the log.
+    Without a log, a recursive ``**/*.parquet`` glob (partitioned
+    ``col=value/`` layouts list their leaf files) that skips every
+    ``_``/``.``-prefixed segment: metadata directories (``_snapshots/``,
+    ``_deletes/``, ``_manifest/``) and in-flight temps are not data."""
+    import glob
+    import os
+
+    if snapshot_version not in (None, 0) or (
+            snapshot_version is None
+            and os.path.isdir(os.path.join(src, "_snapshots"))):
+        from .snapshots import load_snapshot
+        snap = load_snapshot(src, snapshot_version)
+        return sorted(os.path.join(src, e["path"])
+                      for e in snap["files"]), snap
+    return sorted(
+        f for f in glob.glob(os.path.join(src, "**", "*.parquet"),
+                             recursive=True)
+        if not any(seg.startswith((".", "_")) for seg in
+                   os.path.relpath(f, src).split(os.sep))), None
 
 
 def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
                          plan_out: "dict | None" = None,
-                         distributed_plan: "bool | None" = None,
                          snapshot_version: "int | None" = None,
                          apply_deletes: bool = True):
     """Distributed ENGINE-NATIVE scan of a parquet dataset directory:
@@ -1061,17 +1065,18 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
     ``parquet_sink.write_parquet_dataset`` (executors write engine
     parquet, executors read it back).
 
-    Scale shape: the split unit is the ROW GROUP, like the JVM reader —
-    the driver plans splits from footer-only metadata (``footer_meta``,
-    no data I/O), hands (path, rg) pairs to ``task_source`` with an
-    explicit slice count (JVM-only, no shuffle stage), and each task mmaps
-    its file and faults in only its own chunks' byte ranges. Only split
-    tuples cross the JVM going out; Arrow record batches come back
-    through the mapInArrow channel. ``columns`` prunes untouched column
-    chunks at the byte level (never decompressed). Mirrors the
-    reference's multi-threaded column-parallel reads
-    (``file_reader.cc:63-135``, ``arrow/reader.cc`` FileReader) with
-    Spark tasks as the thread pool.
+    Scale shape: the split unit is the ROW GROUP, like the JVM reader.
+    The driver plans every scan the same way, with no Spark job: list
+    the files (``_list_dataset``), prune them, read each surviving
+    footer once (``footer_meta``, no data I/O), build one schema, then
+    hand (path, rg) splits to ``task_source`` with an explicit slice
+    count (JVM-only, no shuffle stage); each task mmaps its file and
+    faults in only its own chunks' byte ranges. Only split tuples cross
+    the JVM going out; Arrow record batches come back through the
+    mapInArrow channel. ``columns`` prunes untouched column chunks at
+    the byte level (never decompressed). Mirrors the reference's
+    multi-threaded column-parallel reads (``file_reader.cc:63-135``,
+    ``arrow/reader.cc`` FileReader) with Spark tasks as the thread pool.
 
     ``predicate`` pushes a conjunction of ``(column, op, value)`` terms
     (ops ``== != < <= > >= in is_null not_null``; columns are flat or
@@ -1084,22 +1089,18 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
     ``_snapshots/`` log, the column bounds committed with each entry
     (``parquet_sink.file_stats_json``, Iceberg-manifest-style) drop
     files from the listing alone; (1) plan-time row-group pruning on
-    footer chunk Statistics —
-    pruned groups never become tasks; (2) task-time bloom-filter skip
-    for ``==``/``in`` terms on bloom-carrying chunks — the split is
-    dropped before any data page I/O; (3) an exact vectorized
-    residual filter on the assembled Arrow batches (null-rejecting, SQL
-    semantics), so the result is precise regardless of how coarse the
-    stats are. ``plan_out`` (a dict, optional) receives the audit
-    counters ``rg_total``/``rg_kept``/``files_total``/``files_kept``/
-    ``plan_mode`` — the test surface proving pruning actually pruned.
-
-    ``distributed_plan`` (default: auto at >64 files) fans the footer
-    reads themselves out to executors — each task parses its files'
-    footers and applies the stats pruning, returning only small
-    (path, n_rg, kept, signature) tuples — so planning a 10^5-file
-    directory costs no driver I/O (the analog of Spark's own
-    distributed parquet footer reading in ParquetFileFormat).
+    footer chunk Statistics — pruned groups never become tasks. The
+    three plan-time layers share one rule (``_may_match``). (2)
+    task-time bloom-filter skip for ``==``/``in`` terms on
+    bloom-carrying chunks — the split is dropped before any data page
+    I/O; (3) an exact vectorized residual filter on the assembled Arrow
+    batches (null-rejecting, SQL semantics), so the result is precise
+    regardless of how coarse the stats are. ``plan_out`` (a dict,
+    optional) receives the audit counters ``rg_total``/``rg_kept``/
+    ``files_total``/``files_kept``/``files_partition_pruned``/
+    ``files_snapshot_pruned``/``plan_mode`` (``"driver"``, or
+    ``"plan_pruned"`` when layers (0)/(0b) left no file) — the test
+    surface proving pruning actually pruned.
 
     ADD-COLUMN SCHEMA EVOLUTION (Iceberg add-column semantics by
     column name): files written before a column existed read back with
@@ -1124,32 +1125,23 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
     delete column; the key column rides the task output even when the
     projection excludes it and is dropped after the join.
     ``apply_deletes=False`` scans the raw data files."""
-    import glob as _glob
+    import json
     import os as _os
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     from ..shipping import ensure_shipped
     from .parquet_direct import task_source
     ensure_shipped(spark)
 
-    use_snapshot = (
-        snapshot_version not in (None, 0)
-        or (snapshot_version is None
-            and _os.path.isdir(_os.path.join(src, "_snapshots"))))
+    files, snap = _list_dataset(src, snapshot_version)
+    if not files:
+        raise ValueError(f"no parquet files under {src!r}")
     stats_by_path: dict = {}
     delete_groups: dict = {}   # delete column -> its key-file paths
     rename_map: dict = {}      # stored column name -> current name
-    if use_snapshot:
-        # snapshot-aware planning: the version's listing IS the file
-        # set — read isolation from in-flight writers, time travel, and
-        # no directory glob over 10^6 files. snapshot_version=None with
-        # a _snapshots/ log present reads the CURRENT version (the
-        # directory may legitimately hold uncommitted or pre-compaction
-        # files); pass snapshot_version=0 to force the raw directory.
-        from .snapshots import _delete_groups, load_snapshot
-        snap = load_snapshot(
-            src, None if snapshot_version is None else snapshot_version)
-        files = sorted(_os.path.join(src, e["path"])
-                       for e in snap["files"])
+    if snap is not None:
         # Iceberg-manifest-style bounds: committed with each entry by
         # the sink, they let predicates drop files from the LISTING
         # alone — before partition parsing, before any footer I/O
@@ -1159,25 +1151,14 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         # planning below runs on CURRENT names; tasks remap per file
         rename_map = dict(snap.get("renames", {}))
         if apply_deletes:
+            from .snapshots import _delete_groups
             delete_groups = _delete_groups(src, snap)
-    else:
-        # recursive: partitioned layouts (col=value/ subdirectories,
-        # parquet_sink partition_by) list their leaf files too; metadata
-        # directories (_snapshots/, _deletes/, _manifest/) hold parquet
-        # that is NOT table data — any _/.-prefixed segment is skipped
-        files = sorted(
-            f for f in _glob.glob(_os.path.join(src, "**", "*.parquet"),
-                                  recursive=True)
-            if not any(seg.startswith((".", "_")) for seg in
-                       _os.path.relpath(f, src).split(_os.sep)))
-    if not files:
-        raise ValueError(f"no parquet files under {src!r}")
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     conjuncts = None
     read_cols = list(columns) if columns is not None else None
     files_listed = len(files)
     all_files = files          # pre-pruning listing (rebound, not mutated)
+    metas: dict = {}           # footers already parsed, by path
     if predicate:
         # schema evolution means files[0] may predate a predicate column:
         # probe footers (bounded) until every referenced column resolves
@@ -1185,7 +1166,8 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         want = {t[0] for t in predicate if isinstance(t, (tuple, list))
                 and len(t) == 3}
         for f in files[:64]:
-            for lf in footer_meta(f).leaves:
+            metas[f] = footer_meta(f)
+            for lf in metas[f].leaves:
                 leaves_by_name.setdefault(_ren_leaf(lf.name, rename_map),
                                           lf)
             if want <= set(leaves_by_name):
@@ -1225,49 +1207,18 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         read_cols += [c for c in sorted(delete_groups)
                       if c not in read_cols]
 
-    # footer planning: below the threshold the driver reads footers
-    # itself; above it (100-TB directories are 10^4-10^6 files) the
-    # footer reads FAN OUT to executors — each task parses its files'
-    # footers, applies the stats pruning, and returns only (path, n_rg,
-    # kept rgs, schema signature) tuples, so planning I/O scales with
-    # the cluster while the driver collects O(files) metadata rows
-    if distributed_plan is None:
-        distributed_plan = len(files) > 64
-    if not files:       # every file plan-pruned: empty df, right schema
-        if plan_out is not None:
-            plan_out.update(
-                rg_total=0, rg_kept=0,
-                files_total=files_listed, files_kept=0,
-                files_partition_pruned=(files_listed
-                                        - files_snapshot_pruned),
-                files_snapshot_pruned=files_snapshot_pruned,
-                plan_mode="plan_pruned")
-        if rename_map:
-            # a renamed dataset stores pre-rename names: probe the full
-            # schema, present it under current names, then project
-            import pyarrow as pa
-            base = _probe_schema(all_files, None)
-            by_cur = {rename_map.get(f.name, f.name):
-                      f.with_name(rename_map.get(f.name, f.name))
-                      for f in base}
-            want = columns if columns is not None else list(by_cur)
-            absent = [c for c in want if c not in by_cur]
-            if absent:
-                raise ValueError(f"columns not in file: {absent} "
-                                 f"(have {sorted(by_cur)})")
-            empty_schema = pa.schema([by_cur[c] for c in want])
-        else:
-            empty_schema = _probe_schema(all_files, columns)
-        return spark.createDataFrame([], from_arrow_schema(empty_schema))
-    if distributed_plan:
-        sc = spark.sparkContext
-        n_slices = min(len(files), max(1, sc.defaultParallelism * 2))
-        plans = sc.parallelize(files, n_slices).map(
-            lambda f, _c=conjuncts, _r=rename_map:
-            _plan_file(f, _c, _r)).collect()
-        plans.sort()                       # deterministic split order
+    # footer planning, on the driver: one footer parse per surviving
+    # file, folded into the union as it is read. When the layers above
+    # left no file, a prefix of the listing is planned with every row
+    # group dropped, only so the one union below gives the empty frame
+    # the dataset's schema
+    if files:
+        plans = (_plan_file(f, conjuncts, rename_map, metas.get(f))
+                 for f in files)
     else:
-        plans = [_plan_file(f, conjuncts, rename_map) for f in files]
+        plans = ((f, 0, [], *rest) for f, _n, _k, *rest in (
+            _plan_file(f, None, rename_map, metas.get(f))
+            for f in all_files[:64]))
 
     # per-COLUMN schema union (add-column evolution): a column's leaf
     # signature must be identical across every file that HAS it (type
@@ -1277,11 +1228,11 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
     rg_total = 0
     col_sigs: dict = {}      # top-level column -> leaf signature tuple
     col_order: list = []     # first-appearance order across sorted files
-    col_rep: dict = {}       # column -> (file carrying it, stored name)
+    col_rep: dict = {}       # column -> (file, stored name, raw schema)
     file_cols: dict = {}     # file -> frozenset of its top-level columns
     file_kept: dict = {}
     file_ren: dict = {}      # file -> its (stored, current) rename pairs
-    for f, n_rg, kept, leaves, ren_pairs in plans:
+    for f, n_rg, kept, leaves, ren_pairs, schema_raw in plans:
         rev = {v: k for k, v in ren_pairs}
         by_root: dict = {}
         for lf in leaves:
@@ -1291,7 +1242,7 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
             if c not in col_sigs:
                 col_sigs[c] = sig
                 col_order.append(c)
-                col_rep[c] = (f, rev.get(c, c))
+                col_rep[c] = (f, rev.get(c, c), schema_raw)
             elif col_sigs[c] != sig:  # incompatible same-name column:
                 raise ValueError(      # fail at plan, not in an executor
                     f"schema mismatch in {src!r}: column {c!r} is "
@@ -1308,13 +1259,16 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         rg_total += n_rg
         file_kept[f] = (n_rg, kept)
 
-    def _rep_field(c):
-        """Arrow field for one union column from its representative
-        file, presented under the CURRENT name (the file may store it
-        under a pre-rename name)."""
-        f, stored = col_rep[c]
-        fld = file_schema(f, columns=[stored]).field(0)
-        return fld.with_name(c) if stored != c else fld
+    def _union_field(c):
+        """Arrow field for one union column, from the footer of the
+        first file carrying it, under its CURRENT name (the file may
+        store a pre-rename name); nullable when some file predates it."""
+        _f, stored, schema_raw = col_rep[c]
+        node = next(t for t in _schema_tree(schema_raw) if t.name == stored)
+        fld = _node_arrow_field(node).with_name(c)
+        if any(c not in fc for fc in file_cols.values()):
+            fld = fld.with_nullable(True)
+        return fld
 
     if columns is not None:
         absent = [c for c in columns if c not in col_sigs]
@@ -1323,19 +1277,6 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
                              f"(no file of {src!r} has them; "
                              f"have {col_order})")
     union_cols = list(columns) if columns is not None else col_order
-    evolved = any(fc != frozenset(col_order)
-                  for fc in file_cols.values())
-    if evolved or any(file_ren.values()):
-        import pyarrow as pa
-        fields = []
-        for c in union_cols:
-            fld = _rep_field(c)
-            if any(c not in fc for fc in file_cols.values()):
-                fld = fld.with_nullable(True)   # some file lacks it
-            fields.append(fld)
-        aschema = pa.schema(fields)
-    else:
-        aschema = file_schema(plans[0][0], columns=columns)
     # equality deletes join on their key column: it must exist in the
     # data (our sink keeps delete keys as real data columns), be read by
     # every task, and ride the task output even when the caller's
@@ -1344,13 +1285,8 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         if c not in col_sigs:
             raise ValueError(f"snapshot delete column {c!r} is not a "
                              f"column of any data file in {src!r}")
-    del_extra = [c for c in sorted(delete_groups)
-                 if c not in {fld.name for fld in aschema}]
-    for c in del_extra:
-        fld = _rep_field(c)
-        if any(c not in fc for fc in file_cols.values()):
-            fld = fld.with_nullable(True)
-        aschema = aschema.append(fld)
+    del_extra = [c for c in sorted(delete_groups) if c not in union_cols]
+    aschema = pa.schema([_union_field(c) for c in union_cols + del_extra])
     sschema = from_arrow_schema(aschema)
     union_types = {fld.name: fld.type for fld in aschema}
     need = (read_cols if read_cols is not None else list(union_cols)) \
@@ -1359,21 +1295,14 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         # predicate roots outside the projection still need a union type
         # for the evolution null-fill in the task
         if c not in union_types and c in col_rep:
-            union_types[c] = _rep_field(c).type
+            union_types[c] = _union_field(c).type
 
     splits = []
     kept_files: set = set()
-    # the miss/ren split fields are ','/':'-delimited: a column name
-    # containing the delimiters would corrupt them — fail at plan time
-    bad = [c for c in set(need) | set(rename_map) | set(rename_map.values())
-           if "," in c or ":" in c]
-    if bad:
-        raise ValueError(f"column names {bad!r} contain ',' or ':' — "
-                         "unsupported in evolved/renamed scans")
-    for f, n_rg, _kept0, _leaves, _rp in plans:
-        n_rg, kept = file_kept[f]
-        miss = ",".join(c for c in need if c not in file_cols[f])
-        ren = ",".join(f"{k}:{v}" for k, v in file_ren[f])
+    for f, (n_rg, kept) in file_kept.items():
+        # JSON, so column names may hold any character
+        miss = json.dumps([c for c in need if c not in file_cols[f]])
+        ren = json.dumps(dict(file_ren[f]))
         for rg in kept:
             splits.append((f, rg, n_rg, miss, ren))
             kept_files.add(f)
@@ -1385,8 +1314,7 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
                         files_partition_pruned=(files_listed - len(files)
                                                 - files_snapshot_pruned),
                         files_snapshot_pruned=files_snapshot_pruned,
-                        plan_mode=("distributed" if distributed_plan
-                                   else "driver"))
+                        plan_mode="driver" if files else "plan_pruned")
     cols = list(columns) if columns is not None else None
     # the TASK emits every aschema field (incl. delete-key extras); the
     # caller's projection is re-applied after the anti-join
@@ -1413,6 +1341,8 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
                             "n_rg int, miss string, ren string")
 
     def task(batches):
+        import json
+
         import pyarrow as pa
         import pyarrow.compute as pc
         meta_cache: dict = {}   # one footer parse per file per task
@@ -1426,9 +1356,8 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
                                               rens):
                 if eq_terms and _rg_prunes(p, rg, eq_terms, meta_cache):
                     continue
-                missing = miss.split(",") if miss else []
-                fwd = dict(pair.split(":") for pair in ren.split(",")) \
-                    if ren else {}             # stored -> current
+                missing = json.loads(miss)
+                fwd = json.loads(ren)          # stored -> current
                 rev = {v: k for k, v in fwd.items()}
                 cols_here = read_cols if not missing else (
                     None if read_cols is None
@@ -1461,22 +1390,22 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
                             # struct yields a null child, which the
                             # null-rejecting comparisons then drop
                             arr = pc.struct_field(arr, fname)
-
-                        def _key(x):
-                            return x.decode() if isinstance(x, bytes) \
-                                and pa.types.is_string(arr.type) else x
+                        if pa.types.is_string(arr.type):
+                            # compare in the bytes domain the predicate
+                            # was normalized to (any key, UTF-8 or not)
+                            arr = arr.cast(pa.binary())
                         if o == "is_null":
                             m = pc.is_null(arr)
                         elif o == "not_null":
                             m = pc.is_valid(arr)
                         elif o == "in":
                             m = pc.is_in(arr, value_set=pa.array(
-                                [_key(x) for x in v], type=arr.type))
+                                list(v), type=arr.type))
                         else:
                             m = {"==": pc.equal, "!=": pc.not_equal,
                                  "<": pc.less, "<=": pc.less_equal,
                                  ">": pc.greater,
-                                 ">=": pc.greater_equal}[o](arr, _key(v))
+                                 ">=": pc.greater_equal}[o](arr, v)
                         mask = m if mask is None else pc.and_(mask, m)
                     tbl = tbl.filter(mask)
                 tbl = tbl.select(final_cols)   # caller's column order

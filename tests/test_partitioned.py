@@ -380,3 +380,34 @@ def test_unparsable_numeric_segment_keeps_file(tmp_path):
     assert not _partition_may_match({"s": "web"}, [("s", "!=", b"web")])
     # null tests never prune on the partition layer
     assert _partition_may_match({"s": "web"}, [("s", "is_null", None)])
+    # non-UTF-8 keys compare as bytes against the segment's UTF-8 bytes
+    assert not _partition_may_match({"s": "s0"}, [("s", "==", b"\xff")])
+    assert _partition_may_match({"s": "s0"},
+                                [("s", "in", (b"s0", b"\xff"))])
+
+
+def test_non_utf8_key_against_partitions(spark, tmp_path):
+    """A bytes key that is not UTF-8 plans and filters in the bytes
+    domain: it matches no partition (0 rows) and, inside an ``in`` list,
+    leaves the other keys' partitions intact — equal to the JVM filter
+    on the same bytes."""
+    from pyspark.sql import functions as F
+
+    from parquet_cpp_spark.sources.parquet_sink import emit_parquet_dataset
+    from parquet_cpp_spark.sources.record_assembly import \
+        read_parquet_dataset
+
+    out = str(tmp_path / "ds")
+    df = spark.range(40).selectExpr(
+        "cast(id as string) doc_id", "concat('s', id % 2) src")
+    emit_parquet_dataset(df.repartition(2, "src"), out,
+                         partition_by=["src"]).collect()
+    jvm = spark.read.parquet(out)
+    for term, n in [(("src", "==", b"\xff"), 0),
+                    (("src", "in", (b"s0", b"\xff")), 20)]:
+        res = read_parquet_dataset(spark, out, predicate=[term])
+        keys = term[2] if term[1] == "in" else (term[2],)
+        exp = jvm.filter(F.col("src").cast("binary").isin(*keys))
+        assert sorted(r.doc_id for r in res.collect()) == \
+            sorted(r.doc_id for r in exp.collect())
+        assert res.count() == n

@@ -409,40 +409,40 @@ def test_jobs_parse_where():
         _parse_where(["n_tok ~ 4"])
 
 
-def test_distributed_footer_planning(tmp_path, spark):
-    """Distributed plan mode (footer reads fanned out to executors) must
-    produce byte-identical results and identical pruning counters to the
-    driver-side plan — the 10^5-file directory shape where driver footer
-    I/O would be the planning bottleneck."""
-    from pyspark.sql import functions as F
+def test_footer_planning_runs_no_job(tmp_path, spark):
+    """Every scan plans on the driver, however many files it lists: 66
+    pyarrow-written footers are read and stats-pruned without one Spark
+    job before an action, and the pruned scan equals the JVM reader
+    under the same filter."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from parquet_cpp_spark.sources.parquet_sink import emit_parquet_dataset
     from parquet_cpp_spark.sources.record_assembly import \
         read_parquet_dataset
 
-    out = str(tmp_path / "out")
-    (spark.range(400)
-     .withColumn("doc_id", F.col("id").cast("string"))
-     .withColumn("tokens",
-                 F.sequence(F.lit(0), (F.col("id") % 5).cast("int")))
-     .withColumn("n_tok", (F.col("id") % 100).cast("int"))
-     .withColumn("source", F.concat(F.lit("s"), F.col("id") % 3))
-     .drop("id").repartitionByRange(4, "n_tok").sortWithinPartitions("n_tok")
-     ).transform(lambda df: emit_parquet_dataset(df, out)).collect()
-
-    pred = [("n_tok", "<", 25)]
-    pa_, pb = {}, {}
-    a = read_parquet_dataset(spark, out, predicate=pred, plan_out=pa_,
-                             distributed_plan=False)
-    b = read_parquet_dataset(spark, out, predicate=pred, plan_out=pb,
-                             distributed_plan=True)
-    assert pa_["plan_mode"] == "driver" and pb["plan_mode"] == "distributed"
-    assert (pa_["rg_total"], pa_["rg_kept"]) == (pb["rg_total"],
-                                                 pb["rg_kept"])
-    assert pa_["rg_kept"] < pa_["rg_total"]   # pruning engaged
-    ra = sorted(r.doc_id for r in a.select("doc_id").collect())
-    rb = sorted(r.doc_id for r in b.select("doc_id").collect())
-    assert ra == rb and len(ra) == 100
+    out = tmp_path / "out"
+    out.mkdir()
+    for i in range(66):
+        pq.write_table(pa.table({
+            "doc_id": [f"d{i}-{j}" for j in range(3)],
+            "n_tok": pa.array([i, i + 1, i + 2], pa.int32())}),
+            str(out / f"part-{i:03d}.parquet"))
+    sc = spark.sparkContext
+    group = "pcs-footer-planning"
+    plan = {}
+    sc.setJobGroup(group, group)
+    try:
+        df = read_parquet_dataset(spark, str(out),
+                                  predicate=[("n_tok", "<", 10)],
+                                  plan_out=plan)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert plan["plan_mode"] == "driver" and plan["rg_total"] == 66
+    assert plan["rg_kept"] < plan["rg_total"]   # pruning engaged
+    exp = spark.read.parquet(str(out)).filter("n_tok < 10")
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == sorted(tuple(r) for r in exp.collect()) and len(got) == 27
 
 
 def test_predicate_null_ops(tmp_path, spark):

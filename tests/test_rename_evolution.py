@@ -212,3 +212,43 @@ def test_vacuum_orphan_grace(spark, dataset, tmp_path):
     res = snap.vacuum(dataset, keep_versions=1, orphan_grace_seconds=0)
     assert "inflight-0000.parquet" in res["removed_files"]
     assert not os.path.exists(orphan)
+
+
+def test_delimiter_column_names_in_evolved_and_renamed_scans(spark,
+                                                              tmp_path):
+    """Column names holding ',' or ':' scan like any other name on an
+    evolved dataset (a later file adds one) and after a rename to such
+    a name — equal to the JVM reader's mergeSchema read of the files."""
+    from parquet_cpp_spark.sources import snapshots as snap
+    from parquet_cpp_spark.sources.parquet_sink import emit_parquet_dataset
+    from parquet_cpp_spark.sources.record_assembly import \
+        read_parquet_dataset
+
+    out = str(tmp_path / "ds")
+    v1 = spark.range(0, 10).selectExpr("cast(id as string) doc_id",
+                                       "cast(id as int) `a:b`")
+    v2 = spark.range(10, 20).selectExpr("cast(id as string) doc_id",
+                                        "cast(id as int) `a:b`",
+                                        "cast(id % 3 as string) `x,y`")
+    rows = []
+    for i, df in enumerate((v1, v2)):
+        rows += emit_parquet_dataset(df.coalesce(1), out,
+                                     name_prefix=f"v{i}-").collect()
+    jvm = spark.read.option("mergeSchema", "true").parquet(out)
+
+    def same(eng, exp):
+        exp = exp.select(eng.columns)
+        assert sorted(map(tuple, eng.collect())) == \
+            sorted(map(tuple, exp.collect()))
+
+    eng = read_parquet_dataset(spark, out)
+    assert sorted(eng.columns) == ["a:b", "doc_id", "x,y"]
+    same(eng, jvm)
+    same(read_parquet_dataset(spark, out, columns=["doc_id"],
+                              predicate=[("x,y", "is_null", None)]),
+         jvm.filter("`x,y` is null").select("doc_id"))
+    snap.commit_snapshot(out, rows)
+    snap.rename_column(out, "a:b", "p:q,r")
+    eng = read_parquet_dataset(spark, out)
+    assert "p:q,r" in eng.columns and eng.count() == 20
+    same(eng, jvm.withColumnRenamed("a:b", "p:q,r"))

@@ -2,8 +2,10 @@
 
 Builds a 600-file engine dataset (2M rows / 512M tokens, range-clustered
 on n_tok) with a snapshot, then measures:
-  - plan time for a selective predicate: distributed FOOTER planning vs
-    SNAPSHOT-STATS planning (zero file I/O);
+  - plan time for a selective predicate: FOOTER planning (the driver
+    reads every listed footer) vs SNAPSHOT-STATS planning (zero file
+    I/O). Scan planning is driver-only: no Spark job runs before an
+    action;
   - full-scan wall with and without a 1%-of-keys equality-delete kill
     list (the merge-on-read anti-join cost).
 Writes the two sections into BENCH_local.json (keys ``plan_pruning`` and
