@@ -460,7 +460,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         boolean / double / string columns derived from the events table
         encode through the same pipeline and decode via the generic typed
         operator — the engine is not token-table-specific."""
-        from parquet_cpp_spark.operators import encode as encode_op
+        from parquet_cpp_spark.operators.encode_arrow import encode_df_arrow
         from parquet_cpp_spark.operators.decode_arrow import \
             decode_chunks_typed
         cols = {"event_id": "int64", "ts_us": "int64",
@@ -478,7 +478,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                    (F.col("value") > 0.5).alias("is_high"))
                .withColumn("part_id",
                            F.pmod(F.xxhash64("event_id"), F.lit(NUM_PARTS))))
-        chunks = encode_op.encode_df(
+        chunks = encode_df_arrow(
             src, NUM_PARTS, columns=cols,
             props=WriterProperties(sort_key="event_id"))
         return (decode_chunks_typed(chunks, cols)
@@ -713,9 +713,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def rt_gzip(spark: SparkSession, sf: str) -> DataFrame:
         """Block-compressed chunks (GZIP over assembled sections) round-trip."""
-        from parquet_cpp_spark.operators import encode as encode_op
+        from parquet_cpp_spark.operators.encode_arrow import encode_df_arrow
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
-        chunks = encode_op.encode_df(
+        chunks = encode_df_arrow(
             src, NUM_PARTS, props=WriterProperties(compression="GZIP"))
         return _digest(encode_job.decode_pipeline(chunks))
     q["rt_gzip"] = rt_gzip
@@ -724,9 +724,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """ZSTD-compressed round-trip (pyarrow's bundled codec — with
         SNAPPY/BROTLI/LZ4 this covers every reference codec but LZO,
         types.h:106-118)."""
-        from parquet_cpp_spark.operators import encode as encode_op
+        from parquet_cpp_spark.operators.encode_arrow import encode_df_arrow
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
-        chunks = encode_op.encode_df(
+        chunks = encode_df_arrow(
             src, NUM_PARTS, props=WriterProperties(compression="ZSTD"))
         return _digest(encode_job.decode_pipeline(chunks))
     q["rt_zstd"] = rt_zstd
@@ -735,9 +735,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """DataPageV2 round-trip: rep/def levels stay OUTSIDE the
         compressed region (reference format v2 pages / properties.h:363-377)
         — SNAPPY-compressed so the layout difference is actually exercised."""
-        from parquet_cpp_spark.operators import encode as encode_op
+        from parquet_cpp_spark.operators.encode_arrow import encode_df_arrow
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
-        chunks = encode_op.encode_df(
+        chunks = encode_df_arrow(
             src, NUM_PARTS, props=WriterProperties(
                 compression="SNAPPY", format_version="V2"))
         return _digest(encode_job.decode_pipeline(chunks))
@@ -877,10 +877,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- point lookup via stats+bloom chunk pruning ---
     def point_lookup(spark: SparkSession, sf: str) -> DataFrame:
-        from parquet_cpp_spark.operators import encode as encode_op
+        from parquet_cpp_spark.operators.encode_arrow import encode_df_arrow
         from parquet_cpp_spark.plans import lookup
         src = tokens_src.tokens_from_documents(spark, sf, _parts(sf))
-        chunks = encode_op.encode_df(src, NUM_PARTS)  # default doc_id bloom
+        chunks = encode_df_arrow(src, NUM_PARTS)  # default doc_id bloom
         return (lookup.point_lookup(chunks, "42")
                 .select("doc_id", "n_tok", "source"))
     q["point_lookup"] = point_lookup

@@ -132,10 +132,10 @@ def cmd_parquet(path: str, scan: bool) -> None:
             print(f"  {ch.path}: {ch.phys} codec={ch.codec} "
                   f"n={ch.num_values} data@{ch.data_page_offset}"
                   f"{dict_s} bytes={ch.total_compressed_size}")
+            leaf = next(lf for lf in meta.leaves if lf.name == ch.path)
             if ch.stats is not None:
                 # parquet-tools chunk-statistics dump analog: the bounds
                 # the scan's plan-time row-group pruning runs on
-                leaf = next(lf for lf in meta.leaves if lf.name == ch.path)
                 mn = pf.stat_typed(ch.stats[0], leaf)
                 mx = pf.stat_typed(ch.stats[1], leaf)
                 print(f"    stats: min={mn!r} max={mx!r} "
@@ -169,8 +169,8 @@ def cmd_parquet(path: str, scan: bool) -> None:
                     print(f"      page {pi}: @{off} {sz}B row{first_row}+ "
                           f"NULL-PAGE")
                 else:
-                    mn = pf._stat_to_typed(idx.mins[pi], ch.phys)
-                    mx = pf._stat_to_typed(idx.maxs[pi], ch.phys)
+                    mn = pf.stat_typed(idx.mins[pi], leaf)
+                    mx = pf.stat_typed(idx.maxs[pi], leaf)
                     nc = idx.null_counts[pi] if idx.null_counts else 0
                     print(f"      page {pi}: @{off} {sz}B row{first_row}+ "
                           f"min={mn!r} max={mx!r} nulls={nc}")

@@ -271,6 +271,9 @@ def decode(buf, n_values: int, bit_width: int, pos: int = 0,
                         raise IndexError   # a cut run value
                     val = from_bytes(mv[pos: pos + vbytes], "little")
                     pos += vbytes
+                if val >> bit_width:
+                    raise ValueError(f"corrupt RLE stream: run value {val} "
+                                     f"wider than bit width {bit_width}")
                 take = cnt if cnt <= n_values - idx else n_values - idx
                 seg_kind.append(0)
                 seg_take.append(take)
@@ -435,7 +438,12 @@ def bit1_zero_positions(buf, n_values: int, pos: int, end: int) -> np.ndarray:
     take = np.minimum(np.where(s_lit, s_cnt * 8, s_cnt), n_values - dst0)
 
     parts: list[np.ndarray] = []
-    rle_zero = (~s_lit) & (b[starts + s_hdrlen] == 0)
+    run_val = b[starts + s_hdrlen]
+    wide = (~s_lit) & (run_val > 1)
+    if wide.any():
+        raise ValueError(f"corrupt RLE stream: run value "
+                         f"{run_val[wide][0]} wider than bit width 1")
+    rle_zero = (~s_lit) & (run_val == 0)
     if rle_zero.any():
         z_dst = dst0[rle_zero]
         z_take = take[rle_zero]

@@ -1,18 +1,18 @@
-"""Point lookup with chunk pruning: min/max stats + bloom filters.
+"""Point lookup and selective decode with chunk pruning: min/max stats +
+bloom filters.
 
 The reference emits filter-support metadata (min/max statistics
 ``statistics.h:34-82``, split-block blooms ``bloom_filter.h:119-240``) so
 scanners can skip chunks; Catalyst does the same with parquet footers. Here
-the chunk DataFrame *is* the metadata table, and pruning runs on the driver:
-a lookup collects the tiny ``(part_id, bloom)`` projection of the key
-column's chunk rows whose ``[min_val, max_val]`` holds the key (a JVM-only
-read that never touches ``blob``), checks those blooms in-process
-(``may_contain``), and launches ONE Python job over the surviving parts
-only -- a literal-``False`` filter, zero tasks, when none survive. Every
-encode path writes a doc_id bloom by default
-(``properties.DEFAULT_BLOOM_COLUMNS``). Within a surviving part, per-page
-min/max skip doc_id pages and only the hit rows' pages of the other columns
-are decoded (``_find_rows``, ``chunk.decode_chunk_rows``).
+the chunk DataFrame *is* the metadata table, and ``prune_parts`` prunes on
+the driver from one JVM-only collect of its stats and blooms, through the
+engine scan's one pruning rule (``record_assembly._may_match``); the lookup
+or decode then runs ONE Python job over the surviving parts only -- a
+literal-``False`` filter, zero tasks, when none survive. Every encode path
+writes a doc_id bloom by default (``properties.DEFAULT_BLOOM_COLUMNS``).
+Within a surviving part, per-page min/max skip doc_id pages and only the
+hit rows' pages of the other columns are decoded (``_find_rows``,
+``chunk.decode_chunk_rows``).
 """
 
 from __future__ import annotations
@@ -23,9 +23,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 def may_contain(rows, keys) -> list[int]:
     """part_ids of ``(part_id, bloom)`` rows whose split-block bloom may
     hold at least one of ``keys`` (bytes); a row without a bloom cannot be
-    pruned and is kept. The one bloom check behind ``point_lookup`` and
-    ``prune_parts_predicate``; a corrupt bloom raises ``ValueError`` naming
-    its part."""
+    pruned and is kept. The one bloom check behind ``prune_parts``; a
+    corrupt bloom raises ``ValueError`` naming its part."""
     from ..kernels.bloom import BlockSplitBloomFilter, murmur3_64_view
 
     hashes = murmur3_64_view(list(keys))
@@ -43,15 +42,76 @@ def _part_filter(parts: list[int]) -> Column:
     return F.col("part_id").isin(parts) if parts else F.lit(False)
 
 
-def prune_partitions(chunks_df: DataFrame, column: str, key: str) \
-        -> list[int]:
-    """part_ids whose ``column`` chunk may contain ``key``: the Catalyst
-    stats filter picks the candidate rows, the driver checks their blooms."""
-    rows = (chunks_df.filter(F.col("col") == column)
-            .filter(F.col("min_val").isNull()
-                    | ((F.col("min_val") <= key) & (F.col("max_val") >= key)))
-            .select("part_id", "bloom").collect())
-    return sorted(may_contain(rows, [key.encode("utf-8")]))
+def _stat_value(s: "str | None", v):
+    """A ``min_val``/``max_val`` string in the domain of predicate value
+    ``v`` (``compute_stats`` spells booleans ``"True"``/``"False"``);
+    None, which keeps the part, when absent or unparsable."""
+    from ..sources.record_assembly import _segment_value
+    if s is None or isinstance(v, bool):
+        return {"True": True, "False": False}.get(s)
+    return _segment_value(s, v)
+
+
+def prune_parts(chunks_df: DataFrame, predicate) -> list[int]:
+    """Sorted part_ids that may satisfy a conjunction of ``(column, op,
+    value)`` terms (ops ``record_assembly._PRED_OPS``, ``=`` meaning
+    ``==``), from ONE collect of the chunk rows' own stats columns for the
+    predicate's columns -- no blob is touched. Each term is decided by
+    ``record_assembly._may_match``, the rule behind every engine-scan
+    prune, over the stat strings read in the value's domain
+    (``_stat_value``): a part with NULL stats is kept, an all-null part
+    (``null_count == n_rows``) is pruned for every comparison. String
+    ``==``/``in`` terms then consult the stats survivors' blooms
+    (``may_contain``). A part lacking a chunk row for a term's column is
+    pruned. The manifest-level analog of the reference's stats-based
+    filtering (``statistics.h:34-82``)."""
+    from ..sources.record_assembly import _PRED_OPS, _may_match
+
+    terms = []
+    for term in predicate:
+        try:
+            col, op, v = term
+        except (TypeError, ValueError):
+            raise ValueError(f"predicate term {term!r} is not "
+                             "(column, op, value)")
+        op = "==" if op == "=" else op
+        if op not in _PRED_OPS:
+            raise ValueError(f"unsupported predicate op {op!r} "
+                             f"(one of {_PRED_OPS})")
+        if op == "in":
+            if not isinstance(v, (list, tuple, set, frozenset)) or not v:
+                raise ValueError(f"'in' predicate on {col!r} needs a "
+                                 "non-empty list/tuple/set of values")
+            v = tuple(v)
+        terms.append((col, op, v))
+    if not terms:
+        raise ValueError("empty predicate")
+    fields = ["part_id", "col", "min_val", "max_val", "null_count",
+              "n_rows"] + (["bloom"] if "bloom" in chunks_df.columns else [])
+    cols = sorted({col for col, _op, _v in terms})
+    by_col: dict = {}
+    for r in chunks_df.filter(F.col("col").isin(cols)).select(*fields) \
+            .collect():
+        by_col.setdefault(r.col, []).append(r)
+    parts = None
+    for col, op, v in terms:
+        if col not in by_col:
+            # a typo'd column must fail loudly, not prune everything
+            raise ValueError(f"predicate column {col!r} has no chunk "
+                             "metadata rows")
+        vals = v if op == "in" else (v,)
+        probe = vals[0]
+        kept = [r for r in by_col[col] if _may_match(
+            op, v, r.null_count, r.n_rows, _stat_value(r.min_val, probe),
+            _stat_value(r.max_val, probe))]
+        if op in ("==", "in") and "bloom" in fields \
+                and all(isinstance(x, (str, bytes)) for x in vals):
+            keys = [x.encode() if isinstance(x, str) else x for x in vals]
+            ids = may_contain([(r.part_id, r.bloom) for r in kept], keys)
+        else:
+            ids = [r.part_id for r in kept]
+        parts = set(ids) if parts is None else parts & set(ids)
+    return sorted(parts)
 
 
 def _find_rows(blob, key: bytes):
@@ -62,6 +122,7 @@ def _find_rows(blob, key: bytes):
 
     from .. import chunk as chunkmod
     from ..kernels import ba
+    from ..sources.record_assembly import _may_match
 
     mv = memoryview(blob)
     if mv.format != "B":
@@ -69,7 +130,7 @@ def _find_rows(blob, key: bytes):
     hits: list[int] = []
     if mv[4] == chunkmod.VERSION_PAGED:
         for p in chunkmod.page_index(mv):
-            if p["min"] is not None and not (p["min"] <= key <= p["max"]):
+            if not _may_match("==", key, None, None, p["min"], p["max"]):
                 continue
             dec = chunkmod.decode_chunk_rows(mv, p["row_start"],
                                              p["row_end"])
@@ -81,134 +142,40 @@ def _find_rows(blob, key: bytes):
     return [int(i) for i in eq.to_pylist()]
 
 
-def prune_parts_predicate(chunks_df: DataFrame, predicate) -> DataFrame:
-    """part_ids that may satisfy a conjunction of ``(column, op, value)``
-    terms (ops ``== != < <= > >= in is_null not_null``), pruning on the
-    chunk DataFrame's OWN stats columns (min_val/max_val/null_count)
-    with plain Catalyst filters over the tiny metadata projection — no
-    blob is touched — plus a bloom layer for string ``==``/``in`` terms
-    on bloom-carrying chunks: the stats survivors' blooms are collected
-    and checked on the driver by ``may_contain``, as ``point_lookup`` does.
-    Numeric values compare via a double cast of the canonical stat
-    strings; string values compare lexicographically (matching
-    compute_stats). A chunk with NULL stats is kept (can't prune);
-    an all-null chunk (null_count == n_rows) is pruned for every
-    comparison term (null-rejecting semantics). The manifest-level
-    analog of the reference's stats-based filtering
-    (statistics.h:34-82)."""
-    from ..sources.record_assembly import _PRED_OPS
-
-    # bounded collect: one row per distinct column name in the chunk
-    # metadata — a typo'd predicate column must fail loudly, not
-    # intersect the part set down to silent emptiness
-    known = {r.col for r in chunks_df.select("col").distinct().collect()}
-    parts = None
-    for term in predicate:
-        try:
-            col, op, v = term
-        except (TypeError, ValueError):
-            raise ValueError(f"predicate term {term!r} is not "
-                             "(column, op, value)")
-        if col not in known:
-            raise ValueError(f"predicate column {col!r} has no chunk "
-                             f"metadata rows (have {sorted(known)})")
-        if op == "=":
-            op = "=="
-        if op not in _PRED_OPS:
-            raise ValueError(f"unsupported predicate op {op!r} "
-                             f"(one of {_PRED_OPS})")
-        if op in ("is_null", "not_null"):
-            keep = (F.col("null_count") > 0) if op == "is_null" \
-                else (F.col("null_count") < F.col("n_rows"))
-            kept = (chunks_df.filter(F.col("col") == col).filter(keep)
-                    .select("part_id"))
-            parts = kept if parts is None else parts.join(kept, "part_id")
-            continue
-        vals = list(v) if op == "in" else [v]
-        if op == "in" and not vals:
-            raise ValueError(f"'in' predicate on {col!r} needs a "
-                             "non-empty collection")
-        numeric = isinstance(vals[0], (int, float)) \
-            and not isinstance(vals[0], bool)
-
-        def rng(mn, mx, lit):
-            return {"==": (lit >= mn) & (lit <= mx),
-                    "!=": ~((mn == mx) & (mn == lit)),
-                    "<": mn < lit, "<=": mn <= lit,
-                    ">": mx > lit, ">=": mx >= lit,
-                    "in": (lit >= mn) & (lit <= mx)}[op]
-
-        def any_rng(mn, mx, lits):
-            cond = rng(mn, mx, lits[0])
-            for lit in lits[1:]:
-                cond = cond | rng(mn, mx, lit)
-            return cond
-
-        if numeric:
-            mn_d = F.col("min_val").cast("double")
-            mx_d = F.col("max_val").cast("double")
-            in_range = any_rng(mn_d, mx_d, [F.lit(float(x)) for x in vals])
-            if all(isinstance(x, int) for x in vals):
-                # double rounds past 2^53 and can wrongly prune strict
-                # bounds on wide int64 stats; OR in an exact decimal
-                # compare (null on float-formatted stats -> no effect)
-                mn_i = F.col("min_val").cast("decimal(38,0)")
-                mx_i = F.col("max_val").cast("decimal(38,0)")
-                exact = any_rng(mn_i, mx_i,
-                                [F.lit(x).cast("decimal(38,0)")
-                                 for x in vals])
-                in_range = in_range | F.coalesce(exact, F.lit(False))
-        else:
-            in_range = any_rng(F.col("min_val"), F.col("max_val"),
-                               [F.lit(str(x)) for x in vals])
-        keep = (F.col("null_count") < F.col("n_rows")) \
-            & (F.col("min_val").isNull() | in_range)
-        kept = chunks_df.filter(F.col("col") == col).filter(keep)
-        if op in ("==", "in") and not numeric \
-                and "bloom" in chunks_df.columns:
-            # bloom layer for string equality: keep only partitions
-            # whose chunk bloom may contain SOME candidate (no bloom ->
-            # cannot prune); the same driver-side check point_lookup uses
-            keys = [x.encode() if isinstance(x, str) else bytes(x)
-                    for x in vals]
-            rows = kept.select("part_id", "bloom").collect()
-            kept = kept.filter(_part_filter(may_contain(rows, keys)))
-        kept = kept.select("part_id")
-        parts = kept if parts is None else parts.join(kept, "part_id")
-    if parts is None:
-        raise ValueError("empty predicate")
-    return parts.distinct()
-
-
 def selective_decode(chunks_df: DataFrame, predicate,
                      verify_checksums: bool = False) -> DataFrame:
     """Predicate-pushdown decode of a chunk dataset: partitions whose
-    chunk stats disprove the conjunction are NEVER decoded
-    (prune_parts_predicate, broadcast semi join — no shuffle), and the
-    survivors get an exact Catalyst residual filter after decode. The
-    chunk-format twin of ``record_assembly.read_parquet_dataset
-    (predicate=...)``; at 100 TB a selective predicate over a
-    range-clustered layout decodes only the matching slice."""
+    chunk stats or blooms disprove the conjunction are NEVER decoded
+    (``prune_parts`` on the driver, then a ``part_id`` filter -- one
+    metadata collect, no join or shuffle), and the survivors get an exact
+    Catalyst residual filter after decode. The chunk-format twin of
+    ``record_assembly.read_parquet_dataset(predicate=...)``; at 100 TB a
+    selective predicate over a range-clustered layout decodes only the
+    matching slice."""
     from ..sources.record_assembly import predicate_column
     from .encode_job import decode_pipeline
-    parts = prune_parts_predicate(chunks_df, predicate)
-    pruned = chunks_df.join(F.broadcast(parts), "part_id", "semi")
-    out = decode_pipeline(pruned, verify_checksums=verify_checksums)
+    parts = prune_parts(chunks_df, predicate)
+    out = decode_pipeline(chunks_df.filter(_part_filter(parts)),
+                          verify_checksums=verify_checksums)
     return out.filter(predicate_column(predicate))
 
 
 def point_lookup(chunks_df: DataFrame, doc_id: str) -> DataFrame:
     """Return the rows matching ``doc_id``, decoding as little as possible:
-    the driver prunes parts on stats + bloom (``prune_partitions``), one
-    ``mapInArrow`` job reads only the survivors' chunk rows; within a part,
-    per-page min/max prune the doc_id pages and only the hit rows' pages of
-    the other columns are decoded (decode_chunk_rows)."""
+    the driver prunes parts on stats + bloom (``prune_parts``, one
+    collect), one ``mapInArrow`` job reads only the survivors' chunk rows;
+    within a part, per-page min/max prune the doc_id pages and only the hit
+    rows' pages of the other columns are decoded (decode_chunk_rows). The
+    collect carries every part's doc_id bloom, not only the range
+    survivors': the same volume whenever doc ids are hash-partitioned
+    (perfbench's and SCALE.md's layout), where every part's range spans
+    the key."""
     from ..operators.decode_arrow import DECODED_SCHEMA
     from ..shipping import ensure_shipped
     ensure_shipped(chunks_df.sparkSession)
 
-    parts = prune_partitions(chunks_df, "doc_id", doc_id)
-    pruned = chunks_df.filter(_part_filter(parts))
+    pruned = chunks_df.filter(_part_filter(
+        prune_parts(chunks_df, [("doc_id", "==", doc_id)])))
     key = doc_id.encode("utf-8")
 
     def task(batches):

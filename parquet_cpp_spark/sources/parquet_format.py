@@ -84,6 +84,8 @@ class _Compact:
             return float(v)
         if ctype == _CT_BINARY:
             n = self.uvarint()
+            if self.pos + n > len(self.mv):
+                raise IndexError   # a cut binary field
             v = bytes(self.mv[self.pos: self.pos + n])
             self.pos += n
             return v
@@ -100,11 +102,19 @@ class _Compact:
                 return out
             return [self._value(etype) for _ in range(size)]
         if ctype == _CT_STRUCT:
-            return self.struct()
+            return self._struct()
         raise ValueError(f"unsupported thrift compact type {ctype}")
 
     def struct(self) -> dict:
-        """One struct -> {field_id: value}; nested structs are dicts."""
+        """One struct -> {field_id: value}; nested structs are dicts. A
+        read past the end of the buffer raises ValueError."""
+        try:
+            return self._struct()
+        except IndexError:
+            raise ValueError("corrupt thrift struct: read past the end of "
+                             f"the {len(self.mv)}-byte buffer") from None
+
+    def _struct(self) -> dict:
         out: dict = {}
         fid = 0
         while True:
@@ -346,28 +356,52 @@ def _concat(parts: list):
     return np.concatenate(parts)
 
 
+def _page_header(mv: memoryview, pos: int, leaf: LeafColumn) -> tuple:
+    """The page header at byte ``pos`` -> (header struct, compressed body,
+    byte offset after the body). A header that does not parse, lacks its
+    type or sizes (fields 1-3) or declares a body past the buffer raises
+    ValueError naming the column and the page's byte offset; read its
+    other required fields through ``_field``."""
+    rd = _Compact(mv, pos)
+    try:
+        ph = rd.struct()
+    except ValueError as exc:
+        raise ValueError(f"column {leaf.name!r}, page at byte {pos}: "
+                         f"{exc}") from None
+    _field(ph, 1, leaf, pos)
+    _field(ph, 2, leaf, pos)
+    size = _field(ph, 3, leaf, pos)
+    if not 0 <= size <= len(mv) - rd.pos:
+        raise ValueError(f"column {leaf.name!r}, page at byte {pos}: "
+                         f"{size}-byte body, {len(mv) - rd.pos} bytes left")
+    return ph, mv[rd.pos: rd.pos + size], rd.pos + size
+
+
+def _field(st, fid: int, leaf: LeafColumn, pos: int):
+    """Required field ``fid`` of a page-header struct, or a ValueError
+    naming the column and the page's byte offset."""
+    if not isinstance(st, dict) or fid not in st:
+        raise ValueError(f"column {leaf.name!r}, page at byte {pos}: "
+                         f"page header lacks required field {fid}")
+    return st[fid]
+
+
 def _decode_data_page_at(mv: memoryview, pos: int, leaf: LeafColumn,
                          chunk: ColumnChunkMeta, dictionary) -> tuple:
     """Decode ONE data page whose header starts at ``pos`` ->
     (dense values, def levels | None, rep levels | None, n_slots,
     next_pos). The unit the OffsetIndex points at — page-skipping readers
     call this per surviving PageLocation."""
-    rd = _Compact(mv, pos)
-    ph = rd.struct()
-    body_start = rd.pos
-    comp_size = ph[3]
-    raw_size = ph[2]
-    body = mv[body_start: body_start + comp_size]
-    next_pos = body_start + comp_size
-    page_type = ph[1]
+    ph, body, next_pos = _page_header(mv, pos, leaf)
+    page_type, raw_size = ph[1], ph[2]
     deflev = replev = None
     if page_type == _PAGE_DATA_V2:
         # V2: levels sit UNPREFIXED (rep first, then def) before the
         # (separately) compressed value region — mirror of
         # parquet_writer's V2 emission
-        dp = ph[8]
-        n_slots = dp[1]
-        encoding = dp[4]
+        dp = _field(ph, 8, leaf, pos)
+        n_slots = _field(dp, 1, leaf, pos)
+        encoding = _field(dp, 4, leaf, pos)
         def_len = dp.get(5, 0)
         rep_len = dp.get(6, 0)
         if leaf.max_rep:
@@ -395,9 +429,9 @@ def _decode_data_page_at(mv: memoryview, pos: int, leaf: LeafColumn,
     elif page_type != _PAGE_DATA:
         raise ValueError(f"unsupported page type {page_type}")
     else:
-        dp = ph[5]
-        n_slots = dp[1]
-        encoding = dp[2]
+        dp = _field(ph, 5, leaf, pos)
+        n_slots = _field(dp, 1, leaf, pos)
+        encoding = _field(dp, 2, leaf, pos)
         body = _decompress_page(body, chunk.codec, raw_size)
         p = 0
         if leaf.max_rep:
@@ -461,13 +495,12 @@ def _read_dictionary_page(mv: memoryview, leaf: LeafColumn,
     pos = chunk.dictionary_page_offset
     if pos is None or pos <= 0 or pos > chunk.data_page_offset:
         return None
-    rd = _Compact(mv, pos)
-    ph = rd.struct()
+    ph, body, _end = _page_header(mv, pos, leaf)
     if ph[1] != _PAGE_DICT:
         return None
-    body = mv[rd.pos: rd.pos + ph[3]]
-    body = _decompress_page(body, chunk.codec, ph[2])
-    return _decode_plain(body, ph[7][1], leaf.phys)
+    return _decode_plain(_decompress_page(body, chunk.codec, ph[2]),
+                         _field(_field(ph, 7, leaf, pos), 1, leaf, pos),
+                         leaf.phys)
 
 
 def read_column(mv: memoryview, leaf: LeafColumn,
@@ -487,16 +520,14 @@ def read_column(mv: memoryview, leaf: LeafColumn,
     rep_parts: list[np.ndarray] = []
     values_seen = 0
     while pos < end and values_seen < chunk.num_values:
-        rd = _Compact(mv, pos)
-        ph = rd.struct()
+        ph, body, end_of_page = _page_header(mv, pos, leaf)
         if ph[1] == _PAGE_DICT:
             # dict pages can sit at data_page_offset in some writers'
             # files — skip/ingest them wherever they appear
-            body = mv[rd.pos: rd.pos + ph[3]]
             dictionary = _decode_plain(
                 _decompress_page(body, chunk.codec, ph[2]),
-                ph[7][1], leaf.phys)
-            pos = rd.pos + ph[3]
+                _field(_field(ph, 7, leaf, pos), 1, leaf, pos), leaf.phys)
+            pos = end_of_page
             continue
         vals, deflev, replev, n_slots, pos = _decode_data_page_at(
             mv, pos, leaf, chunk, dictionary)
@@ -613,8 +644,10 @@ def _bloom_may_contain(bf, phys: str, key) -> bool:
     return bool(bf.check_int64(np.array([key], np.int64))[0])
 
 
-def _candidate_pages(idx: PageIndex, phys: str, key) -> list[int]:
-    """Page indices whose [min, max] may contain ``key``.
+def _candidate_pages(idx: PageIndex, leaf: LeafColumn, key) -> list[int]:
+    """Page indices whose [min, max] may contain ``key``, the bounds read
+    in the leaf's sort order by ``stat_typed`` (UINT annotations compare
+    unsigned).
 
     boundary_order == ASCENDING (the writer detects and records it on
     sorted columns) turns the scan into a BINARY SEARCH over the page
@@ -627,40 +660,24 @@ def _candidate_pages(idx: PageIndex, phys: str, key) -> list[int]:
     n = len(idx.locations)
     if idx.mins is None:
         return list(range(n))
-    if phys == "int96" or phys.startswith("flba"):
+    real = [i for i in range(n) if not idx.null_pages[i]]
+    if leaf.phys == "int96" or leaf.phys.startswith("flba"):
         # e.g. a pyarrow-written decimal column index: byte-comparing its
         # bounds against the key would prune WRONGLY; decode all pages
-        return [i for i in range(n) if not idx.null_pages[i]]
+        return real
     import bisect
 
-    real = [i for i in range(n) if not idx.null_pages[i]]
+    mins = [stat_typed(idx.mins[i], leaf) for i in real]
+    maxs = [stat_typed(idx.maxs[i], leaf) for i in real]
     if idx.boundary_order in (1, 2) and len(real) > 4:
-        mins = [_stat_to_typed(idx.mins[i], phys) for i in real]
-        maxs = [_stat_to_typed(idx.maxs[i], phys) for i in real]
         if idx.boundary_order == 2:      # DESCENDING: flip to ascending
             real, mins, maxs = real[::-1], mins[::-1], maxs[::-1]
         # pages with max < key end before lo; pages with min > key start
         # at hi — candidates are the (usually 0- or 1-wide) slice between
         lo = bisect.bisect_left(maxs, key)
         hi = bisect.bisect_right(mins, key)
-        return [real[i] for i in range(lo, hi)]
-    out = []
-    for i in real:
-        mn = _stat_to_typed(idx.mins[i], phys)
-        mx = _stat_to_typed(idx.maxs[i], phys)
-        if mn <= key <= mx:
-            out.append(i)
-    return out
-
-
-def _stat_to_typed(b: bytes, phys: str):
-    if phys == "byte_array" or phys == "int96" or phys.startswith("flba"):
-        return b   # raw bytes; FLBA/INT96 byte order is NOT value order
-    if phys == "boolean":
-        return bool(b[0])
-    dt = {"int32": "<i4", "int64": "<i8",
-          "float": "<f4", "double": "<f8"}[phys]
-    return np.frombuffer(b, dt, count=1)[0]
+        return real[lo:hi]
+    return [i for i, mn, mx in zip(real, mins, maxs) if mn <= key <= mx]
 
 
 # ConvertedType ids whose int32/int64 storage compares UNSIGNED
@@ -759,7 +776,7 @@ def _lookup_rows(mv: memoryview, column: str, key) -> tuple:
                 else chunk.num_values
             continue
         dictionary = _read_dictionary_page(mv, leaf, chunk)
-        candidates = _candidate_pages(idx, leaf.phys,
+        candidates = _candidate_pages(idx, leaf,
                                       key_b if key_b is not None else key)
         for pi in candidates:
             off, _sz, first_row = idx.locations[pi]
@@ -771,8 +788,10 @@ def _lookup_rows(mv: memoryview, column: str, key) -> tuple:
                            if isinstance(vals, ba.ByteArrayView) else vals)
                            if v == key]
             else:
-                matches = np.flatnonzero(
-                    np.asarray(vals) == key).tolist()
+                arr = np.asarray(vals)
+                if leaf.converted_type in _UNSIGNED_CONV:
+                    arr = arr.view(arr.dtype.str.replace("i", "u"))
+                matches = np.flatnonzero(arr == key).tolist()
             if deflev is not None and matches:
                 # dense index -> slot index (nulls/markers occupy slots)
                 slot_of = np.flatnonzero(np.asarray(deflev) == leaf.max_def)

@@ -552,3 +552,102 @@ def test_byte_array_dictionary_section_overrun():
     blob[at: at + 4] = (len(vals[39]) + 1).to_bytes(4, "little")
     with pytest.raises(ValueError, match="run past"):
         chunkmod.decode_chunk(bytes(blob))
+
+
+def test_rle_run_value_wider_than_bit_width():
+    """An RLE run stores its value in whole bytes, so a run can carry a
+    value its bit width cannot: the run [16, 5] (eight 5s) read at width
+    1 used to decode as eight 1s through ``decode_bit1`` and as no zeros
+    through ``bit1_zero_positions``, and ``rle.decode`` returned 5s at
+    widths 1 and 2. Every parser rejects it; a fitting run still
+    decodes."""
+    from parquet_cpp_spark.kernels import rle
+
+    run = bytes([16, 5])
+    for parse in (lambda: rle.decode(run, 8, 1),
+                  lambda: rle.decode(run, 8, 2),
+                  lambda: rle.bit1_zero_positions(run, 8, 0, 2),
+                  lambda: rle.decode_bit1(run, 8, 0, 2)):
+        with pytest.raises(ValueError, match="run value 5 wider than bit"):
+            parse()
+    assert rle.decode(bytes([16, 3]), 8, 2)[0].tolist() == [3] * 8
+    assert rle.decode_bit1(bytes([16, 1]), 8, 0, 2).tolist() == [1] * 8
+
+
+def _optional_int32_file(path, n=50):
+    """An engine-written one-page file of one optional int32 leaf
+    (max_def 1, V1 page, uncompressed): the path's bytes, the page's
+    byte offset and the leaf."""
+    from parquet_cpp_spark.sources import parquet_format as pf
+    from parquet_cpp_spark.sources import parquet_writer as pw
+
+    pw.write_file(path, [("v", "int32", np.arange(n, dtype=np.int32),
+                          np.ones(n, bool))], n)
+    data = bytearray(open(path, "rb").read())
+    meta = pf.read_footer(memoryview(bytes(data)))
+    assert meta.leaves[0].max_def == 1
+    return data, meta.row_groups[0][0].data_page_offset, meta.leaves[0]
+
+
+def test_def_run_value_above_bit_width_rejected(tmp_path):
+    """A max_def 1 leaf whose def-level run value byte reads 5: pyarrow
+    rejects the file as malformed levels, and the engine's assembly
+    raises ValueError instead of decoding every row as present."""
+    import pyarrow.parquet as pq
+
+    from parquet_cpp_spark.sources import parquet_format as pf
+    from parquet_cpp_spark.sources.record_assembly import assemble_file
+
+    path = str(tmp_path / "o.parquet")
+    data, off, _leaf = _optional_int32_file(path)
+    rd = pf._Compact(memoryview(bytes(data)), off)
+    rd.struct()
+    # uncompressed V1 body: u32 len, then one RLE run (header 50 << 1,
+    # value byte 1) of def levels
+    body = rd.pos
+    assert bytes(data[body: body + 6]) == bytes([2, 0, 0, 0, 100, 1])
+    data[body + 5] = 5
+    with open(path, "wb") as fh:
+        fh.write(data)
+    with pytest.raises(Exception, match="Malformed levels"):
+        pq.read_table(path)
+    with pytest.raises(ValueError, match="run value 5 wider than bit"):
+        assemble_file(path)
+
+
+def test_corrupt_page_header_raises_value_error(tmp_path):
+    """A thrift read past the buffer raises ValueError (it raised
+    IndexError), every cut of a real page header names the column and
+    the page's byte offset, and a header without its data-page struct
+    (field 5, renamed here to the unused field 6) raises ValueError
+    naming them instead of KeyError."""
+    from parquet_cpp_spark.sources import parquet_format as pf
+    from parquet_cpp_spark.sources.record_assembly import assemble_file
+
+    with pytest.raises(ValueError, match="read past the end"):
+        pf._Compact(memoryview(bytes([0x15]))).struct()
+    path = str(tmp_path / "o.parquet")
+    data, off, leaf = _optional_int32_file(path)
+    rd = pf._Compact(memoryview(bytes(data)), off)
+    rd.struct()
+    header = bytes(data[off: rd.pos])
+    for k in range(len(header)):
+        with pytest.raises(ValueError, match=r"column 'v', page at byte 0"):
+            pf._page_header(memoryview(header[:k]), 0, leaf)
+    # walk the header's fields to field 5's field-header byte
+    rd = pf._Compact(memoryview(bytes(data)), off)
+    fid = 0
+    while True:
+        at = rd.pos
+        head = data[at]
+        rd.pos += 1
+        fid += head >> 4
+        if fid == 5:
+            break
+        rd._value(head & 0x0F)
+    data[at] = head + 0x10                      # field 5 -> field 6
+    with open(path, "wb") as fh:
+        fh.write(data)
+    with pytest.raises(ValueError, match=rf"column 'v', page at byte {off}: "
+                       "page header lacks required field 5"):
+        assemble_file(path)

@@ -17,7 +17,6 @@ ENCODE_ENTRY_POINTS = [
     ("operators.encode_arrow", "encode_scan_local"),
     ("operators.encode_arrow", "make_grouped_arrow_encode_fn"),
     ("operators.encode_arrow", "encode_df_arrow"),
-    ("operators.encode", "encode_df"),
     ("sources.parquet_direct", "encode_parquet_direct"),
     ("sources.chunk_sink", "encode_parquet_direct_sink"),
     ("plans.encode_job", "encode_pipeline"),

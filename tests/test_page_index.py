@@ -59,8 +59,9 @@ def test_index_structure_and_boundary_order(tmp_path):
     assert [loc[2] for loc in idx.locations] == \
         [i * 500 for i in range(8)]           # 4000 rows / 500-row pages
     assert idx.boundary_order == 1            # ASCENDING
-    assert pf._stat_to_typed(idx.mins[0], "int64") == 0
-    assert pf._stat_to_typed(idx.maxs[-1], "int64") == 3 * 3999
+    leaf = meta.leaves[0]
+    assert pf.stat_typed(idx.mins[0], leaf) == 0
+    assert pf.stat_typed(idx.maxs[-1], leaf) == 3 * 3999
 
     rng = np.random.default_rng(7)
     vals = rng.permutation(2000).astype(np.int32)
@@ -109,6 +110,25 @@ def test_parser_reads_pyarrow_written_index(tmp_path):
     assert hits == [2222] and dec == 1 and tot >= 6
 
 
+def test_lookup_unsigned_column_uses_unsigned_order(tmp_path):
+    """A UINT32 column's page bounds and values compare unsigned: 3e9 is
+    stored as a negative int32, so a signed read of the bounds pruned the
+    only page and a signed compare of the values missed 3e9 itself. Both
+    keys find pyarrow's 250 rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    vals = np.array([1, 3_000_000_000, 7, 2_000_000_000] * 250, np.uint32)
+    path = str(tmp_path / "u.parquet")
+    pq.write_table(pa.table({"u": vals}), path, write_page_index=True)
+    col = pq.read_table(path).column("u")
+    for key in (7, 3_000_000_000):
+        want = pc.indices_nonzero(pc.equal(col, key)).to_pylist()
+        hits, dec, tot = pf.lookup_rows(path, "u", key)
+        assert len(want) == 250 and hits == want and dec == tot == 1, key
+
+
 def test_pyarrow_reads_engine_index_files(tmp_path):
     """Files carrying the engine's PageIndex stay readable by pyarrow and
     DuckDB (the index region sits between data and footer; ColumnChunk
@@ -148,6 +168,7 @@ def test_candidate_pages_binary_search_matches_linear(tmp_path):
         mv = memoryview(f.read())
     meta = pf.read_footer(mv)
     idx = pf.read_page_index(mv, meta.row_groups[0][0])
+    leaf = meta.leaves[0]
     assert idx.boundary_order == 1
 
     def linear(key):
@@ -155,18 +176,18 @@ def test_candidate_pages_binary_search_matches_linear(tmp_path):
         for i in range(len(idx.locations)):
             if idx.null_pages[i]:
                 continue
-            mn = pf._stat_to_typed(idx.mins[i], "int64")
-            mx = pf._stat_to_typed(idx.maxs[i], "int64")
+            mn = pf.stat_typed(idx.mins[i], leaf)
+            mx = pf.stat_typed(idx.maxs[i], leaf)
             if mn <= key <= mx:
                 out.append(i)
         return out
 
     for key in (-5, 0, 1, 3 * 499, 3 * 500, 3 * 1250, 3 * 3999,
                 3 * 3999 + 1, 10**9):
-        assert pf._candidate_pages(idx, "int64", key) == linear(key), key
+        assert pf._candidate_pages(idx, leaf, key) == linear(key), key
 
     # a point key on a sorted column always hits <= 1 page per row group
-    assert len(pf._candidate_pages(idx, "int64", 3 * 1250)) == 1
+    assert len(pf._candidate_pages(idx, leaf, 3 * 1250)) == 1
 
 
 def test_lookup_rows_list_leaf_contains_token(tmp_path):

@@ -59,15 +59,15 @@ def test_point_lookup_prunes_on_driver(spark, tmp_path):
     surviving parts through a part_id filter, with no Python pruning stage
     and no exchange; when no part survives, the filter is a literal False
     and the single mapInArrow runs over an empty relation (zero tasks)."""
-    from parquet_cpp_spark.operators import encode as encode_op
+    from parquet_cpp_spark.operators.encode_arrow import encode_df_arrow
     from parquet_cpp_spark.plans import lookup
     from parquet_cpp_spark.sources import tokens as T
     src = T.tokens_from_documents(spark, SF_DIR, 8)
     path = str(tmp_path / "chunks")
-    encode_op.encode_df(src, 8).write.parquet(path)   # default doc_id bloom
+    encode_df_arrow(src, 8).write.parquet(path)   # default doc_id bloom
     chunks = spark.read.parquet(path)
     key = src.select("doc_id").first().doc_id
-    parts = lookup.prune_partitions(chunks, "doc_id", key)
+    parts = lookup.prune_parts(chunks, [("doc_id", "==", key)])
     n_parts = chunks.select("part_id").distinct().count()
     assert 1 <= len(parts) < n_parts
     hit = lookup.point_lookup(chunks, key)
@@ -351,8 +351,8 @@ def test_decontaminate_shuffle_path_identical_and_no_broadcast(spark):
 
 def test_selective_decode_prunes_parts(spark):
     """Chunk-format predicate pushdown: partitions whose chunk stats
-    disprove the conjunction are never decoded (prune_parts_predicate
-    over the metadata projection; broadcast semi join), and the residual
+    disprove the conjunction are never decoded (prune_parts over the
+    metadata projection, then a part_id filter), and the residual
     Catalyst filter makes the result exact — identical to filtering the
     full decode."""
     from parquet_cpp_spark.plans import encode_job, lookup
@@ -367,7 +367,7 @@ def test_selective_decode_prunes_parts(spark):
     try:
         n_parts = chunks.select("part_id").distinct().count()
         pred = [("n_tok", "<", 30), ("source", "!=", "src3")]
-        kept = lookup.prune_parts_predicate(chunks, pred).count()
+        kept = len(lookup.prune_parts(chunks, pred))
         assert 0 < kept < n_parts          # stats actually pruned
         got = sorted(r.doc_id for r in
                      lookup.selective_decode(chunks, pred)
@@ -377,8 +377,7 @@ def test_selective_decode_prunes_parts(spark):
         want = sorted(r.doc_id for r in want_df.select("doc_id").collect())
         assert got == want and got
         # in-op + impossible conjunct
-        assert lookup.prune_parts_predicate(
-            chunks, [("n_tok", ">", 10 ** 6)]).count() == 0
+        assert lookup.prune_parts(chunks, [("n_tok", ">", 10 ** 6)]) == []
         got_in = lookup.selective_decode(
             chunks, [("source", "in", ["src1", "src5"]),
                      ("n_tok", ">=", 90)]).count()
@@ -387,7 +386,7 @@ def test_selective_decode_prunes_parts(spark):
             & (F.col("n_tok") >= 90)).count()
         assert got_in == want_in
         with pytest.raises(ValueError, match="unsupported predicate op"):
-            lookup.prune_parts_predicate(chunks, [("n_tok", "~", 1)])
+            lookup.prune_parts(chunks, [("n_tok", "~", 1)])
     finally:
         chunks.unpersist()
 
@@ -409,11 +408,11 @@ def test_selective_decode_bloom_layer(spark):
         present = src.select("doc_id").first().doc_id
         # absent key lexicographically inside the stats range
         absent = present + "zz"
-        kept = lookup.prune_parts_predicate(
-            chunks, [("doc_id", "==", absent)]).count()
+        kept = len(lookup.prune_parts(chunks,
+                                      [("doc_id", "==", absent)]))
         assert kept == 0                      # bloom pruned everything
-        kept_p = lookup.prune_parts_predicate(
-            chunks, [("doc_id", "==", present)]).count()
+        kept_p = len(lookup.prune_parts(chunks,
+                                        [("doc_id", "==", present)]))
         assert 1 <= kept_p < n_parts
         rows = lookup.selective_decode(
             chunks, [("doc_id", "==", present)]).collect()
@@ -436,18 +435,175 @@ def test_prune_parts_predicate_edges(spark):
         "part_id long, col string, min_val string, max_val string, "
         "null_count long, n_rows long, bloom binary")
     with pytest.raises(ValueError, match="no chunk metadata"):
-        lookup.prune_parts_predicate(meta, [("nope", "==", 1)])
+        lookup.prune_parts(meta, [("nope", "==", 1)])
     # x < 2^53+1 is satisfiable in part 0 (x == 2^53); double rounding
     # would collapse both sides and prune it
-    kept = {r.part_id for r in lookup.prune_parts_predicate(
-        meta, [("x", "<", big + 1)]).collect()}
+    kept = set(lookup.prune_parts(meta, [("x", "<", big + 1)]))
     assert kept == {0, 1}
-    kept = {r.part_id for r in lookup.prune_parts_predicate(
-        meta, [("x", ">", big)]).collect()}
+    kept = set(lookup.prune_parts(meta, [("x", ">", big)]))
     assert kept == set()                          # exactly nothing above
-    kept = {r.part_id for r in lookup.prune_parts_predicate(
-        meta, [("x", "==", big)]).collect()}
+    kept = set(lookup.prune_parts(meta, [("x", "==", big)]))
     assert kept == {0}
+
+
+def _old_translator_keeps(op, vals, row):
+    """The chunk-stats rule ``plans/lookup`` applied through Catalyst
+    before ``prune_parts``, as a Python model: null tests on
+    ``null_count``; comparisons drop all-null parts, keep NULL stats,
+    and compare numbers as doubles, OR-ing an exact compare when every
+    value is an int and the stats parse as ints; anything else compares
+    the stat strings (booleans as "True"/"False"). Its bloom layer is
+    applied by the caller."""
+    _pid, _col, mn, mx, nulls, n_rows, _bloom = row
+    if op == "is_null":
+        return nulls > 0
+    if op == "not_null":
+        return nulls < n_rows
+    if nulls >= n_rows:
+        return False
+    if mn is None:
+        return True
+
+    def rng(lo, hi, x):
+        return {"==": lo <= x <= hi, "in": lo <= x <= hi,
+                "!=": not (lo == hi == x), "<": lo < x, "<=": lo <= x,
+                ">": hi > x, ">=": hi >= x}[op]
+
+    if isinstance(vals[0], (int, float)) and not isinstance(vals[0], bool):
+        if any(rng(float(mn), float(mx), float(x)) for x in vals):
+            return True
+        if all(isinstance(x, int) for x in vals):
+            try:
+                lo, hi = int(mn), int(mx)
+            except ValueError:
+                return False
+            return any(rng(lo, hi, x) for x in vals)
+        return False
+    return any(rng(mn, mx, str(x)) for x in vals)
+
+
+def test_prune_parts_differential(spark):
+    """Seeded differential test of ``prune_parts`` over generated chunk
+    metadata: ints around +-2^53, floats, digit-like and non-ASCII
+    strings with blooms, booleans, parts with NULL stats and all-null
+    parts, under every ``_PRED_OPS`` op. ``prune_parts`` never drops a
+    part holding a matching value, and it prunes every part the old
+    Catalyst translator pruned unless that part holds a match (the
+    double compare can round a bound across the value)."""
+    import numpy as np
+    import pandas as pd
+
+    from parquet_cpp_spark import chunk as chunkmod
+    from parquet_cpp_spark.kernels import bloom as bloom_mod
+    from parquet_cpp_spark.plans import lookup
+    from parquet_cpp_spark.sources.record_assembly import _PRED_OPS
+
+    rng = np.random.default_rng(16)
+    n_parts = 120
+    big = 2 ** 53
+    centers = {"i": [big, -big, 0, 1000],
+               "f": [0.0, 1.5, -2.25, 1e20, float(big)],
+               "s": ["10", "9", "doc-0", "doc-9", "é", "zz"],
+               "b": [False, True]}
+
+    def draw(col):
+        c = centers[col][rng.integers(len(centers[col]))]
+        if col == "i":
+            return c + int(rng.integers(-3, 4))
+        if col == "f":
+            return c + float(rng.choice([-1.0, -0.5, 0.0, 0.25, 2.0]))
+        if col == "s":
+            return c + str(rng.choice(["", "0", "1", "a", "~"]))
+        return bool(rng.integers(2)) if rng.random() < 0.3 else c
+
+    phys = {"i": "int64", "f": "double", "s": "byte_array",
+            "b": "boolean"}
+    held: dict = {}                 # (part, col) -> values (None = null)
+    rows = []
+    for pid in range(n_parts):
+        for col in "ifsb":
+            n_null = int(rng.integers(0, 3))
+            n_val = 0 if rng.random() < 0.1 else int(rng.integers(1, 5))
+            vals = [draw(col) for _ in range(n_val)]
+            held[pid, col] = vals + [None] * n_null
+            if col == "s":
+                arr = [v.encode() for v in vals]
+            else:
+                arr = np.array(vals, dtype={"i": np.int64, "f": np.float64,
+                                            "b": bool}[col])
+            st = chunkmod.compute_stats(arr, phys[col])
+            mn, mx = st.min_val, st.max_val
+            if rng.random() < 0.1:
+                mn = mx = None                    # stats not written
+            bloom = None
+            if col == "s" and vals:
+                bf = bloom_mod.BlockSplitBloomFilter(
+                    bloom_mod.optimal_num_bytes(len(vals), 0.01))
+                bf.insert_bytes(arr)
+                bloom = bf.serialize()
+            rows.append((pid, col, mn, mx, n_null, n_val + n_null, bloom))
+    # from pandas: a LocalRelation, so each prune_parts collect runs no job
+    meta = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["part_id", "col", "min_val", "max_val",
+                                    "null_count", "n_rows", "bloom"]),
+        "part_id long, col string, min_val string, max_val string, "
+        "null_count long, n_rows long, bloom binary")
+
+    def holds(pid, col, op, vals):
+        xs = held[pid, col]
+        if op == "is_null":
+            return None in xs
+        if op == "not_null":
+            return any(x is not None for x in xs)
+        cmp = {"==": lambda x, v: x == v, "in": lambda x, v: x == v,
+               "!=": lambda x, v: x != v, "<": lambda x, v: x < v,
+               "<=": lambda x, v: x <= v, ">": lambda x, v: x > v,
+               ">=": lambda x, v: x >= v}[op]
+        return any(x is not None and cmp(x, v) for x in xs for v in vals)
+
+    by_col = {}
+    for r in rows:
+        by_col.setdefault(r[1], []).append(r)
+    n_terms = n_old_pruned = 0
+    for col in "ifsb":
+        pool = [x for p in range(n_parts) for x in held[p, col]
+                if x is not None]
+        for op in _PRED_OPS:
+            for _ in range(1 if op in ("is_null", "not_null") else 2):
+                vals = [pool[rng.integers(len(pool))]
+                        if rng.random() < 0.6 else draw(col)
+                        for _ in range(int(rng.integers(1, 4))
+                                       if op == "in" else 1)]
+                if col == "i" and rng.random() < 0.3:
+                    vals = [float(v) for v in vals]   # float vs int stats
+                if col == "f" and rng.random() < 0.3:
+                    vals = [int(v) for v in vals]     # int vs float stats
+                v = None if op in ("is_null", "not_null") else \
+                    (tuple(vals) if op == "in" else vals[0])
+                got = set(lookup.prune_parts(meta, [(col, op, v)]))
+                truth = {p for p in range(n_parts)
+                         if holds(p, col, op, vals)}
+                assert truth <= got, (col, op, v, truth - got)
+                old = [r for r in by_col[col]
+                       if _old_translator_keeps(op, vals, r)]
+                if col == "s" and op in ("==", "in"):
+                    old_kept = set(lookup.may_contain(
+                        [(r[0], r[6]) for r in old],
+                        [x.encode() for x in vals]))
+                else:
+                    old_kept = {r[0] for r in old}
+                old_pruned = set(range(n_parts)) - old_kept - truth
+                assert not (got & old_pruned), (col, op, v,
+                                                got & old_pruned)
+                n_terms += 1
+                n_old_pruned += len(old_pruned)
+    assert n_terms == 4 * (7 * 2 + 2)
+    assert n_old_pruned > n_terms * n_parts // 4      # the terms do prune
+    # a conjunction keeps the intersection of its terms' parts
+    a, b = ("i", ">=", big - 1), ("b", "==", True)
+    assert lookup.prune_parts(meta, [a, b]) == sorted(
+        set(lookup.prune_parts(meta, [a]))
+        & set(lookup.prune_parts(meta, [b])))
 
 
 def test_duplicated_token_spans_one_shuffle_and_winnow_guarantee(spark):

@@ -14,7 +14,6 @@ pyspark = pytest.importorskip("pyspark")
 
 from pyspark.sql import functions as F
 
-from parquet_cpp_spark.operators import encode as encode_op
 from parquet_cpp_spark.plans import encode_job
 from parquet_cpp_spark.properties import WriterProperties
 from parquet_cpp_spark.sources import tokens as tokens_src

@@ -9,7 +9,7 @@ pyspark = pytest.importorskip("pyspark")
 
 from pyspark.sql import functions as F
 
-from parquet_cpp_spark.operators import encode as encode_op
+from parquet_cpp_spark.operators.encode_arrow import encode_df_arrow
 from parquet_cpp_spark.operators.decode_arrow import decode_chunks_arrow
 from parquet_cpp_spark.plans import lookup
 from parquet_cpp_spark.sources import tokens as tokens_src
@@ -55,9 +55,9 @@ def test_streaming_encode_matches_batch(spark, tmp_path):
 
 def test_point_lookup_prunes_and_finds(spark):
     src = tokens_src.tokens_from_documents(spark, SF_DIR, 8)
-    chunks = encode_op.encode_df(src, 8).cache()
+    chunks = encode_df_arrow(src, 8).cache()
     try:
-        surviving = lookup.prune_partitions(chunks, "doc_id", "42")
+        surviving = lookup.prune_parts(chunks, [("doc_id", "==", "42")])
         n_total = chunks.select("part_id").distinct().count()
         n_kept = len(surviving)
         assert 1 <= n_kept < n_total  # pruning actually prunes
