@@ -135,6 +135,12 @@ def _reconstruct_prefix_chain(prefix_lens: np.ndarray,
     n = len(prefix_lens)
     suf_lens = suffixes.lengths
     out_lens = prefix_lens + suf_lens
+    # a prefix can only share bytes the previous value has (none for the
+    # first); checked before the output is allocated from the lengths
+    if n and (prefix_lens[0] != 0
+              or bool((prefix_lens[1:] > out_lens[:-1]).any())):
+        raise ValueError("DELTA_BYTE_ARRAY: prefix length too large for "
+                         "the previous value (corrupt page)")
     out_offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(out_lens, out=out_offsets[1:])
     out = np.empty(int(out_offsets[-1]), dtype=np.uint8)

@@ -250,8 +250,24 @@ def _train_sample(view: ba.ByteArrayView) -> list[bytes]:
 
 def encode(values) -> bytes:
     view = ba.as_view(values)
+    symbols = train(_train_sample(view)) if len(view) else []
+    enc_lens, payload = encode_with_table(view, symbols)
+    table = bytearray([len(symbols)])
+    for sym in symbols:
+        table.append(len(sym))
+        table += sym
+    lens_blob = delta.encode(enc_lens)
+    return (bytes(table) + len(view).to_bytes(4, "little")
+            + len(lens_blob).to_bytes(4, "little") + lens_blob
+            + payload)
+
+
+def encode_with_table(values, symbols: list[bytes]) -> tuple:
+    """(encoded byte length per string, concatenated codes) of ``values``
+    under a given table: the greedy longest-match coding ``encode``
+    stores, which depends only on each string's bytes and the table."""
+    view = ba.as_view(values)
     n = len(view)
-    symbols = train(_train_sample(view)) if n else []
     lookup = _lookup_arrays(symbols)
 
     data, offs, lens = view.data, view.offsets, view.lengths
@@ -333,23 +349,16 @@ def encode(values) -> bytes:
     else:
         enc_lens = np.zeros(n, dtype=np.int64)
         payload = b""
-
-    table = bytearray([len(symbols)])
-    for sym in symbols:
-        table.append(len(sym))
-        table += sym
-    lens_blob = delta.encode(enc_lens)
-    return (bytes(table)
-            + n.to_bytes(4, "little")
-            + len(lens_blob).to_bytes(4, "little") + lens_blob
-            + payload)
+    return enc_lens, payload
 
 
 def _corrupt(what: str) -> ValueError:
     return ValueError(f"corrupt FSST stream: {what}")
 
 
-def decode_view(buf, pos: int = 0) -> tuple[ba.ByteArrayView, int]:
+def code_view(buf, pos: int = 0) -> tuple:
+    """(symbol table, each string's stored codes as a view, position past
+    the stream) of the FSST stream at ``pos``, with nothing decoded."""
     # every count the header declares is checked against the bytes that
     # remain before anything is allocated from it
     mv = memoryview(buf) if not isinstance(buf, memoryview) else buf
@@ -389,7 +398,15 @@ def decode_view(buf, pos: int = 0) -> tuple[ba.ByteArrayView, int]:
         raise _corrupt(f"{total_enc} encoded bytes declared, "
                        f"{end - pos} left")
     enc = np.frombuffer(mv, dtype=np.uint8, count=total_enc, offset=pos)
-    end_pos = pos + total_enc
+    eoffs = np.zeros(n_strings + 1, dtype=np.int64)
+    np.cumsum(enc_lens, out=eoffs[1:])
+    return symbols, ba.ByteArrayView(enc, eoffs), pos + total_enc
+
+
+def decode_view(buf, pos: int = 0) -> tuple[ba.ByteArrayView, int]:
+    symbols, codes, end_pos = code_view(buf, pos)
+    enc, eoffs, enc_lens = codes.data, codes.offsets, codes.lengths
+    n_symbols, n_strings, total_enc = len(symbols), len(codes), len(enc)
 
     # symbol store: concatenated bytes + per-code (offset, length)
     s_len = np.zeros(256, dtype=np.int64)
@@ -403,8 +420,6 @@ def decode_view(buf, pos: int = 0) -> tuple[ba.ByteArrayView, int]:
         parts.append(np.frombuffer(sym, dtype=np.uint8))
     sym_data = np.concatenate(parts) if parts else np.array([], dtype=np.uint8)
 
-    eoffs = np.zeros(n_strings + 1, dtype=np.int64)
-    np.cumsum(enc_lens, out=eoffs[1:])
     cur = eoffs[:-1].copy()
     active = np.flatnonzero(enc_lens > 0)
     tok_sid, tok_code, tok_esc, tok_lit, tok_round = [], [], [], [], []

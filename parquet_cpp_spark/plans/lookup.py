@@ -5,14 +5,14 @@ The reference emits filter-support metadata (min/max statistics
 ``statistics.h:34-82``, split-block blooms ``bloom_filter.h:119-240``) so
 scanners can skip chunks; Catalyst does the same with parquet footers. Here
 the chunk DataFrame *is* the metadata table, and ``prune_parts`` prunes on
-the driver from one JVM-only collect of its stats and blooms, through the
-engine scan's one pruning rule (``record_assembly._may_match``); the lookup
-or decode then runs ONE Python job over the surviving parts only -- a
-literal-``False`` filter, zero tasks, when none survive. Every encode path
-writes a doc_id bloom by default (``properties.DEFAULT_BLOOM_COLUMNS``).
-Within a surviving part, per-page min/max skip doc_id pages and only the
-hit rows' pages of the other columns are decoded (``_find_rows``,
-``chunk.decode_chunk_rows``).
+the driver through the engine scan's one pruning rule
+(``record_assembly._may_match``) and the blooms, from one pyarrow read of
+a bare local parquet relation's stats (no Spark job) or one collect of
+any other DataFrame's. The lookup or decode then runs ONE Python job over
+the surviving parts only (a lookup over local files: one task per part),
+zero tasks when none survive. Every encode path writes a doc_id bloom
+(``properties.DEFAULT_BLOOM_COLUMNS``); within a part, doc_ids match
+without a decode where they can and only hit rows' pages decode.
 """
 
 from __future__ import annotations
@@ -52,19 +52,26 @@ def _stat_value(s: "str | None", v):
     return _segment_value(s, v)
 
 
-def prune_parts(chunks_df: DataFrame, predicate) -> list[int]:
-    """Sorted part_ids that may satisfy a conjunction of ``(column, op,
-    value)`` terms (ops ``record_assembly._PRED_OPS``, ``=`` meaning
-    ``==``), from ONE collect of the chunk rows' own stats columns for the
-    predicate's columns -- no blob is touched. Each term is decided by
-    ``record_assembly._may_match``, the rule behind every engine-scan
-    prune, over the stat strings read in the value's domain
-    (``_stat_value``): a part with NULL stats is kept, an all-null part
-    (``null_count == n_rows``) is pruned for every comparison. String
-    ``==``/``in`` terms then consult the stats survivors' blooms
-    (``may_contain``). A part lacking a chunk row for a term's column is
-    pruned. The manifest-level analog of the reference's stats-based
-    filtering (``statistics.h:34-82``)."""
+def _local_chunk_files(chunks_df: DataFrame) -> "list[str] | None":
+    """Paths of the ``file:`` URIs behind a bare parquet relation of chunk
+    rows (``spark.read.parquet(dir)``: not cached, filtered, projected or
+    hive-partitioned); None for any other DataFrame."""
+    from urllib.parse import unquote, urlparse
+    plan = chunks_df._jdf.queryExecution().withCachedData()
+    rel = plan.relation() \
+        if plan.getClass().getSimpleName() == "LogicalRelation" else None
+    if rel is None or rel.getClass().getSimpleName() != "HadoopFsRelation" \
+            or rel.fileFormat().shortName() != "parquet" \
+            or not rel.partitionSchema().isEmpty() \
+            or not {"part_id", "col", "blob"} <= set(chunks_df.columns):
+        return None
+    uris = chunks_df.inputFiles()
+    return [unquote(urlparse(u).path) for u in uris] \
+        if uris and all(u.startswith("file:") for u in uris) else None
+
+
+def _prune(chunks_df: DataFrame, predicate) -> tuple:
+    """(``prune_parts``' answer, its stat dicts, with local ``__filename``)."""
     from ..sources.record_assembly import _PRED_OPS, _may_match
 
     terms = []
@@ -89,10 +96,18 @@ def prune_parts(chunks_df: DataFrame, predicate) -> list[int]:
     fields = ["part_id", "col", "min_val", "max_val", "null_count",
               "n_rows"] + (["bloom"] if "bloom" in chunks_df.columns else [])
     cols = sorted({col for col, _op, _v in terms})
+    files = _local_chunk_files(chunks_df)
+    if files is None:
+        rows = [r.asDict() for r in chunks_df.filter(F.col("col").isin(cols))
+                .select(*fields).collect()]
+    else:
+        import pyarrow.dataset as ds
+        rows = ds.dataset(files, format="parquet").to_table(
+            columns=["__filename"] + fields,
+            filter=ds.field("col").isin(cols)).to_pylist()
     by_col: dict = {}
-    for r in chunks_df.filter(F.col("col").isin(cols)).select(*fields) \
-            .collect():
-        by_col.setdefault(r.col, []).append(r)
+    for r in rows:
+        by_col.setdefault(r["col"], []).append(r)
     parts = None
     for col, op, v in terms:
         if col not in by_col:
@@ -102,26 +117,49 @@ def prune_parts(chunks_df: DataFrame, predicate) -> list[int]:
         vals = v if op == "in" else (v,)
         probe = vals[0]
         kept = [r for r in by_col[col] if _may_match(
-            op, v, r.null_count, r.n_rows, _stat_value(r.min_val, probe),
-            _stat_value(r.max_val, probe))]
+            op, v, r["null_count"], r["n_rows"],
+            _stat_value(r["min_val"], probe),
+            _stat_value(r["max_val"], probe))]
         if op in ("==", "in") and "bloom" in fields \
                 and all(isinstance(x, (str, bytes)) for x in vals):
             keys = [x.encode() if isinstance(x, str) else x for x in vals]
-            ids = may_contain([(r.part_id, r.bloom) for r in kept], keys)
+            ids = may_contain([(r["part_id"], r["bloom"]) for r in kept],
+                              keys)
         else:
-            ids = [r.part_id for r in kept]
+            ids = [r["part_id"] for r in kept]
         parts = set(ids) if parts is None else parts & set(ids)
-    return sorted(parts)
+    return sorted(parts), rows
+
+
+def prune_parts(chunks_df: DataFrame, predicate) -> list[int]:
+    """Sorted part_ids that may satisfy a conjunction of ``(column, op,
+    value)`` terms (ops ``record_assembly._PRED_OPS``, ``=`` meaning
+    ``==``), from the chunk rows' own stats columns for the predicate's
+    columns -- no blob is touched: one pyarrow read of a bare local
+    parquet relation's files (``_local_chunk_files``), else one collect
+    (``inputFiles()`` outside ``file:`` included). Each term is decided by
+    ``record_assembly._may_match``, the rule behind every engine-scan
+    prune, over the stat strings read in the value's domain
+    (``_stat_value``): a part with NULL stats is kept, an all-null part
+    (``null_count == n_rows``) is pruned for every comparison. String
+    ``==``/``in`` terms then consult the stats survivors' blooms
+    (``may_contain``). A part lacking a chunk row for a term's column is
+    pruned. The manifest-level analog of the reference's stats-based
+    filtering (``statistics.h:34-82``)."""
+    return _prune(chunks_df, predicate)[0]
 
 
 def _find_rows(blob, key: bytes):
     """Row indices whose doc_id == key, decoding only the pages whose
-    [min, max] may contain it — the Skip/partial-read analog
-    (/root/reference/src/parquet/column_reader.h:268-281)."""
+    [min, max] may contain it (the Skip analog, column_reader.h:268-281).
+    A one-page FSST chunk is not decoded: the key, coded with the blob's
+    table, is compared with each string's stored codes. Greedy coding
+    depends only on the string and the table, so this is exact for every
+    blob ``fsst.encode`` writes, not for a hand-made non-greedy stream."""
     import pyarrow.compute as pc
 
     from .. import chunk as chunkmod
-    from ..kernels import ba
+    from ..kernels import ba, fsst
     from ..sources.record_assembly import _may_match
 
     mv = memoryview(blob)
@@ -137,8 +175,18 @@ def _find_rows(blob, key: bytes):
             eq = pc.indices_nonzero(pc.equal(ba.to_arrow(dec.values), key))
             hits.extend(p["row_start"] + int(i) for i in eq.to_pylist())
         return hits
-    dec = chunkmod.decode_chunk(mv)
-    eq = pc.indices_nonzero(pc.equal(ba.to_arrow(dec.values), key))
+    if mv[4] == chunkmod.VERSION and mv[5] == chunkmod.FSST and mv[8] == 0:
+        body = mv[chunkmod._HEADER_LEN:]
+        if mv[7] != chunkmod.UNCOMPRESSED:
+            body = memoryview(chunkmod._decompress(bytes(body), mv[7]))
+        symbols, values, _end = fsst.code_view(body, 4)
+        n_values = int.from_bytes(mv[13:17], "little")
+        if len(values) != n_values:
+            raise chunkmod._count_error(n_values, len(values))
+        key = fsst.encode_with_table([key], symbols)[1]   # its codes
+    else:
+        values = chunkmod.decode_chunk(mv).values
+    eq = pc.indices_nonzero(pc.equal(ba.to_arrow(values), key))
     return [int(i) for i in eq.to_pylist()]
 
 
@@ -162,25 +210,35 @@ def selective_decode(chunks_df: DataFrame, predicate,
 
 def point_lookup(chunks_df: DataFrame, doc_id: str) -> DataFrame:
     """Return the rows matching ``doc_id``, decoding as little as possible:
-    the driver prunes parts on stats + bloom (``prune_parts``, one
-    collect), one ``mapInArrow`` job reads only the survivors' chunk rows;
-    within a part, per-page min/max prune the doc_id pages and only the hit
-    rows' pages of the other columns are decoded (decode_chunk_rows). The
-    collect carries every part's doc_id bloom, not only the range
-    survivors': the same volume whenever doc ids are hash-partitioned
-    (perfbench's and SCALE.md's layout), where every part's range spans
-    the key."""
+    the driver prunes parts on stats + bloom (``_prune``). Over a bare
+    local parquet relation one ``task_source`` row and task per surviving
+    ``(file, part_id)`` reads that part's chunk rows itself: no Spark job
+    runs before the action. Any other DataFrame (cached, filtered,
+    unioned, ``inputFiles()`` outside ``file:``, ...) maps over
+    ``chunks_df.filter(part_id IN survivors)``; a miss over a literal
+    False, zero tasks. Within a part ``_find_rows`` matches the doc_id
+    chunk and only the hit rows' pages of the other columns are decoded.
+    The stats read carries every part's bloom: hash-partitioned doc ids
+    (perfbench's, SCALE.md's) put the key in every part's range anyway."""
     from ..operators.decode_arrow import DECODED_SCHEMA
     from ..shipping import ensure_shipped
+    from ..sources.parquet_direct import task_source
     ensure_shipped(chunks_df.sparkSession)
 
-    pruned = chunks_df.filter(_part_filter(
-        prune_parts(chunks_df, [("doc_id", "==", doc_id)])))
+    parts, stats = _prune(chunks_df, [("doc_id", "==", doc_id)])
+    source = chunks_df.filter(_part_filter(parts))
+    if parts and "__filename" in stats[0]:
+        descs = sorted({(r["__filename"], r["part_id"]) for r in stats
+                        if r["part_id"] in parts})
+        source = task_source(chunks_df.sparkSession, descs, len(descs),
+                             "file string, part_id bigint")
     key = doc_id.encode("utf-8")
 
     def task(batches):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
         from .. import chunk as chunkmod
         from ..kernels import ba
@@ -189,6 +247,13 @@ def point_lookup(chunks_df: DataFrame, doc_id: str) -> DataFrame:
         if not batch_list:
             return
         tbl = pa.Table.from_batches(batch_list)
+        if "blob" not in tbl.column_names:   # (file, part_id) rows
+            tables = []
+            for f, p in zip(*tbl.to_pydict().values()):
+                with pq.ParquetFile(f) as pf:
+                    t = pf.read(columns=["part_id", "col", "blob"])
+                tables.append(t.filter(pc.equal(t.column("part_id"), p)))
+            tbl = pa.concat_tables(tables)
         pids = tbl.column("part_id").to_numpy(zero_copy_only=False)
         cols = tbl.column("col").to_pylist()
         blob_col = ba.one_chunk(tbl.column("blob"))
@@ -217,7 +282,7 @@ def point_lookup(chunks_df: DataFrame, doc_id: str) -> DataFrame:
                 pa.array(sources, type=pa.string()),
             ], names=["part_id", "doc_id", "tokens", "n_tok", "source"])
 
-    return pruned.mapInArrow(task, DECODED_SCHEMA)
+    return source.mapInArrow(task, DECODED_SCHEMA)
 
 
 def _delete_leaf_path(path: str) -> str:

@@ -393,99 +393,108 @@ def _decode_data_page_at(mv: memoryview, pos: int, leaf: LeafColumn,
     next_pos). The unit the OffsetIndex points at — page-skipping readers
     call this per surviving PageLocation."""
     ph, body, next_pos = _page_header(mv, pos, leaf)
-    page_type, raw_size = ph[1], ph[2]
-    deflev = replev = None
-    if page_type == _PAGE_DATA_V2:
-        # V2: levels sit UNPREFIXED (rep first, then def) before the
-        # (separately) compressed value region — mirror of
-        # parquet_writer's V2 emission
-        dp = _field(ph, 8, leaf, pos)
-        n_slots = _field(dp, 1, leaf, pos)
-        encoding = _field(dp, 4, leaf, pos)
-        def_len = dp.get(5, 0)
-        rep_len = dp.get(6, 0)
-        if leaf.max_rep:
-            bwr = max(1, int(leaf.max_rep).bit_length())
-            if bwr == 1:
-                replev = rle.decode_bit1(body, n_slots, 0, rep_len,
-                                         out_dtype=np.int8)
-            else:
-                replev, _ = rle.decode(body, n_slots, bwr, 0,
-                                       out_dtype=np.int8)
-        if leaf.max_def:
-            bw = max(1, int(leaf.max_def).bit_length())
-            if bw == 1:
-                deflev = rle.decode_bit1(body, n_slots, rep_len,
-                                         rep_len + def_len,
-                                         out_dtype=np.int8)
-            else:
-                deflev, _ = rle.decode(body, n_slots, bw, rep_len,
-                                       out_dtype=np.int8)
-        vcodec = chunk.codec if dp.get(7, True) else 0
-        lvl_len = rep_len + def_len
-        body = _decompress_page(body[lvl_len:], vcodec,
-                                raw_size - lvl_len)
-        p = 0
-    elif page_type != _PAGE_DATA:
-        raise ValueError(f"unsupported page type {page_type}")
-    else:
-        dp = _field(ph, 5, leaf, pos)
-        n_slots = _field(dp, 1, leaf, pos)
-        encoding = _field(dp, 2, leaf, pos)
-        body = _decompress_page(body, chunk.codec, raw_size)
-        p = 0
-        if leaf.max_rep:
-            bwr = max(1, int(leaf.max_rep).bit_length())
-            replev, p = rle.decode_length_prefixed(body, n_slots, bwr, p,
-                                                   out_dtype=np.int8)
-        if leaf.max_def:
-            bw = max(1, int(leaf.max_def).bit_length())
-            deflev, p = rle.decode_length_prefixed(body, n_slots, bw, p,
-                                                   out_dtype=np.int8)
-    for what, lev, top in (("repetition", replev, leaf.max_rep),
-                           ("definition", deflev, leaf.max_def)):
-        # a width that can express nothing above max_level bounds the
-        # levels itself; otherwise one max pass per page, before a
-        # level past the max can shrink the value count
-        if lev is not None and top < (1 << int(top).bit_length()) - 1 \
-                and len(lev) and int(lev.max()) > top:
-            raise ValueError(f"column {leaf.name!r}, page at byte {pos}: "
-                             f"{what} level {int(lev.max())} above the "
-                             f"maximum {top}")
-    n_present = n_slots if deflev is None \
-        else int((deflev == leaf.max_def).sum())
-    if encoding == ENC_PLAIN:
-        vals = _decode_plain(body, n_present, leaf.phys, p)
-    elif encoding == ENC_DELTA_BP:
-        if leaf.phys not in ("int32", "int64"):
-            raise ValueError("DELTA_BINARY_PACKED on non-int column")
-        from ..kernels import delta as delta_k
-        dt = np.int32 if leaf.phys == "int32" else np.int64
-        vals, _pos = delta_k.decode(body, p, out_dtype=dt)
-        if len(vals) != n_present:
-            raise ValueError("delta page value count mismatch")
-    elif encoding in (ENC_DELTA_LBA, ENC_DELTA_BA):
-        if leaf.phys != "byte_array":
-            raise ValueError("DELTA_(LENGTH_)BYTE_ARRAY on non-byte_array "
-                             "column")
-        from ..kernels import bytearray_codecs as bac
-        dec = bac.decode_delta_length_spec if encoding == ENC_DELTA_LBA \
-            else bac.decode_delta_byte_array_spec
-        vals, _pos = dec(body, p)
-        if len(vals) != n_present:
-            raise ValueError("delta byte-array page value count mismatch")
-    elif encoding in (ENC_PLAIN_DICT, ENC_RLE_DICT):
-        if dictionary is None:
-            raise ValueError("dictionary-encoded page with no dict page")
-        idx_bw = body[p]
-        codes, _ = rle.decode(body, n_present, idx_bw, p + 1)
-        codes = np.asarray(codes, dtype=np.int64)
-        if len(dictionary) and int(codes.max(initial=0)) >= len(dictionary):
-            raise ValueError("dictionary index out of range "
-                             "(corrupt dictionary page?)")
-        vals = _take(dictionary, codes)
-    else:
-        raise ValueError(f"unsupported data encoding {encoding}")
+    # a kernel's error names the column and page like the checks here
+    where = f"column {leaf.name!r}, page at byte {pos}: "
+    try:
+        page_type, raw_size = ph[1], ph[2]
+        deflev = replev = None
+        if page_type == _PAGE_DATA_V2:
+            # V2: levels sit UNPREFIXED (rep first, then def) before the
+            # (separately) compressed value region — mirror of
+            # parquet_writer's V2 emission
+            dp = _field(ph, 8, leaf, pos)
+            n_slots = _field(dp, 1, leaf, pos)
+            encoding = _field(dp, 4, leaf, pos)
+            def_len = dp.get(5, 0)
+            rep_len = dp.get(6, 0)
+            if leaf.max_rep:
+                bwr = max(1, int(leaf.max_rep).bit_length())
+                if bwr == 1:
+                    replev = rle.decode_bit1(body, n_slots, 0, rep_len,
+                                             out_dtype=np.int8)
+                else:
+                    replev, _ = rle.decode(body, n_slots, bwr, 0,
+                                           out_dtype=np.int8)
+            if leaf.max_def:
+                bw = max(1, int(leaf.max_def).bit_length())
+                if bw == 1:
+                    deflev = rle.decode_bit1(body, n_slots, rep_len,
+                                             rep_len + def_len,
+                                             out_dtype=np.int8)
+                else:
+                    deflev, _ = rle.decode(body, n_slots, bw, rep_len,
+                                           out_dtype=np.int8)
+            vcodec = chunk.codec if dp.get(7, True) else 0
+            lvl_len = rep_len + def_len
+            body = _decompress_page(body[lvl_len:], vcodec,
+                                    raw_size - lvl_len)
+            p = 0
+        elif page_type != _PAGE_DATA:
+            raise ValueError(f"unsupported page type {page_type}")
+        else:
+            dp = _field(ph, 5, leaf, pos)
+            n_slots = _field(dp, 1, leaf, pos)
+            encoding = _field(dp, 2, leaf, pos)
+            body = _decompress_page(body, chunk.codec, raw_size)
+            p = 0
+            if leaf.max_rep:
+                bwr = max(1, int(leaf.max_rep).bit_length())
+                replev, p = rle.decode_length_prefixed(
+                    body, n_slots, bwr, p, out_dtype=np.int8)
+            if leaf.max_def:
+                bw = max(1, int(leaf.max_def).bit_length())
+                deflev, p = rle.decode_length_prefixed(
+                    body, n_slots, bw, p, out_dtype=np.int8)
+        for what, lev, top in (("repetition", replev, leaf.max_rep),
+                               ("definition", deflev, leaf.max_def)):
+            # a width that can express nothing above max_level bounds the
+            # levels itself; otherwise one max pass per page, before a
+            # level past the max can shrink the value count
+            if lev is not None and top < (1 << int(top).bit_length()) - 1 \
+                    and len(lev) and int(lev.max()) > top:
+                raise ValueError(f"{where}{what} level {int(lev.max())} "
+                                 f"above the maximum {top}")
+        n_present = n_slots if deflev is None \
+            else int((deflev == leaf.max_def).sum())
+        if encoding == ENC_PLAIN:
+            vals = _decode_plain(body, n_present, leaf.phys, p)
+        elif encoding == ENC_DELTA_BP:
+            if leaf.phys not in ("int32", "int64"):
+                raise ValueError("DELTA_BINARY_PACKED on non-int column")
+            from ..kernels import delta as delta_k
+            dt = np.int32 if leaf.phys == "int32" else np.int64
+            vals, _pos = delta_k.decode(body, p, out_dtype=dt)
+            if len(vals) != n_present:
+                raise ValueError("delta page value count mismatch")
+        elif encoding in (ENC_DELTA_LBA, ENC_DELTA_BA):
+            if leaf.phys != "byte_array":
+                raise ValueError("DELTA_(LENGTH_)BYTE_ARRAY on "
+                                 "non-byte_array column")
+            from ..kernels import bytearray_codecs as bac
+            dec = bac.decode_delta_length_spec \
+                if encoding == ENC_DELTA_LBA \
+                else bac.decode_delta_byte_array_spec
+            vals, _pos = dec(body, p)
+            if len(vals) != n_present:
+                raise ValueError("delta byte-array page value count "
+                                 "mismatch")
+        elif encoding in (ENC_PLAIN_DICT, ENC_RLE_DICT):
+            if dictionary is None:
+                raise ValueError("dictionary-encoded page with no dict page")
+            idx_bw = body[p]
+            codes, _ = rle.decode(body, n_present, idx_bw, p + 1)
+            codes = np.asarray(codes, dtype=np.int64)
+            if len(dictionary) \
+                    and int(codes.max(initial=0)) >= len(dictionary):
+                raise ValueError("dictionary index out of range "
+                                 "(corrupt dictionary page?)")
+            vals = _take(dictionary, codes)
+        else:
+            raise ValueError(f"unsupported data encoding {encoding}")
+    except ValueError as exc:
+        if str(exc).startswith(where):
+            raise
+        raise ValueError(f"{where}{exc}") from exc
     return vals, deflev, replev, n_slots, next_pos
 
 
@@ -639,9 +648,14 @@ def _bloom_may_contain(bf, phys: str, key) -> bool:
         return True
     if phys == "byte_array":
         return bool(bf.check_bytes([key])[0])
+    # hash the key's physical bit pattern: a UINT32/UINT64 key past the
+    # signed range wraps the way its stored int32/int64 does
     if phys == "int32":
-        return bool(bf.check_int32(np.array([key], np.int32))[0])
-    return bool(bf.check_int64(np.array([key], np.int64))[0])
+        return bool(bf.check_int32(np.array([key], np.int64)
+                                   .astype(np.int32))[0])
+    k = np.array([key], np.uint64).view(np.int64) if key >= 1 << 63 \
+        else np.array([key], np.int64)
+    return bool(bf.check_int64(k)[0])
 
 
 def _candidate_pages(idx: PageIndex, leaf: LeafColumn, key) -> list[int]:

@@ -592,10 +592,13 @@ def _optional_int32_file(path, n=50):
 def test_def_run_value_above_bit_width_rejected(tmp_path):
     """A max_def 1 leaf whose def-level run value byte reads 5: pyarrow
     rejects the file as malformed levels, and the engine's assembly
-    raises ValueError instead of decoding every row as present."""
+    raises ValueError instead of decoding every row as present, naming
+    the column and the page's byte offset like the page layer's own
+    checks (a nested leaf by its dotted name)."""
     import pyarrow.parquet as pq
 
     from parquet_cpp_spark.sources import parquet_format as pf
+    from parquet_cpp_spark.sources import parquet_writer as pw
     from parquet_cpp_spark.sources.record_assembly import assemble_file
 
     path = str(tmp_path / "o.parquet")
@@ -611,7 +614,27 @@ def test_def_run_value_above_bit_width_rejected(tmp_path):
         fh.write(data)
     with pytest.raises(Exception, match="Malformed levels"):
         pq.read_table(path)
-    with pytest.raises(ValueError, match="run value 5 wider than bit"):
+    with pytest.raises(ValueError, match=rf"column 'v', page at byte {off}: "
+                       "corrupt RLE stream: run value 5 wider than bit"):
+        assemble_file(path)
+    # the same run under a 2-bit def width (max_def 2) names the nested
+    # leaf and its page
+    path = str(tmp_path / "s.parquet")
+    st = pw.StructColumn("st", [("a", "int32", np.arange(50, dtype=np.int32),
+                                 np.ones(50, bool))],
+                         valid=np.ones(50, bool))
+    pw.write_file(path, [st], 50)
+    data = bytearray(open(path, "rb").read())
+    off = pf.read_footer(memoryview(bytes(data))).row_groups[0][0] \
+        .data_page_offset
+    rd = pf._Compact(memoryview(bytes(data)), off)
+    rd.struct()
+    assert bytes(data[rd.pos: rd.pos + 6]) == bytes([2, 0, 0, 0, 100, 2])
+    data[rd.pos + 5] = 5
+    with open(path, "wb") as fh:
+        fh.write(data)
+    with pytest.raises(ValueError, match=rf"column 'st.a', page at byte "
+                       rf"{off}: corrupt RLE stream: run value 5 wider"):
         assemble_file(path)
 
 
@@ -651,3 +674,78 @@ def test_corrupt_page_header_raises_value_error(tmp_path):
     with pytest.raises(ValueError, match=rf"column 'v', page at byte {off}: "
                        "page header lacks required field 5"):
         assemble_file(path)
+
+
+def test_delta_byte_array_prefix_too_large(tmp_path):
+    """A DELTA_BYTE_ARRAY prefix can only reuse bytes the previous value
+    has: a first prefix above 0, or a prefix longer than the previous
+    value, raises ValueError before the output is allocated (it used to
+    decode, reading another value's bytes). Checked on bare streams and
+    on an engine-written DBA page patched by hand, which pyarrow rejects
+    too and the engine's assembly names by column and page."""
+    import pyarrow.parquet as pq
+
+    from parquet_cpp_spark.kernels import bytearray_codecs as bac
+    from parquet_cpp_spark.kernels import delta
+    from parquet_cpp_spark.sources import parquet_writer as pw
+    from parquet_cpp_spark.sources.record_assembly import assemble_file
+
+    def stream(prefix_lens, suffixes):
+        return delta.encode(np.array(prefix_lens, np.int64)) \
+            + bac.encode_delta_length_spec(suffixes)
+
+    for prefix_lens, suffixes in (([1, 0], [b"x", b"y"]),
+                                  ([0, 5], [b"abc", b"d"]),
+                                  ([0, 3, 5], [b"abc", b"d", b"e"])):
+        with pytest.raises(ValueError, match="DELTA_BYTE_ARRAY: prefix "
+                           "length too large"):
+            bac.decode_delta_byte_array_spec(stream(prefix_lens, suffixes))
+    ok, _ = bac.decode_delta_byte_array_spec(stream([0, 3, 4],
+                                                    [b"abc", b"d", b"e"]))
+    assert ba.to_list(ok) == [b"abc", b"abcd", b"abcde"]
+
+    path = str(tmp_path / "dba.parquet")
+    vals = [b"abc", b"abd"]
+    pw.write_file(path, [("s", "byte_array", ba.from_list(vals))], 2,
+                  encodings={"s": "dba"})
+    good = bac.encode_delta_byte_array_spec(vals)
+    bad = stream([0, 5], [b"abc", b"d"])      # same length as good
+    data = open(path, "rb").read()
+    assert len(bad) == len(good) and data.count(good) == 1
+    with open(path, "wb") as fh:
+        fh.write(data.replace(good, bad))
+    with pytest.raises(Exception, match="prefix length too large"):
+        pq.read_table(path)
+    with pytest.raises(ValueError, match=r"column 's', page at byte \d+: "
+                       "DELTA_BYTE_ARRAY: prefix length too large"):
+        assemble_file(path)
+
+
+def test_fsst_code_match_contract():
+    """``plans.lookup._find_rows`` matches a one-page FSST chunk in the
+    code domain, which is exact for every blob ``fsst.encode`` writes: a
+    hand-made stream whose table holds the symbol "ab" but which codes
+    the string "ab" as two escapes decodes to "ab", and the code-domain
+    match does not find it, while the encoder's blob of the same values
+    does."""
+    from parquet_cpp_spark.kernels import delta, fsst
+    from parquet_cpp_spark.plans.lookup import _find_rows
+
+    vals = [b"ab", b"zz"]
+    codes = [bytes([fsst.ESCAPE, ord("a"), fsst.ESCAPE, ord("b")]),
+             bytes([fsst.ESCAPE, ord("z"), fsst.ESCAPE, ord("z")])]
+    lens = delta.encode(np.array([len(c) for c in codes], np.int64))
+    stream = (bytes([1, 2]) + b"ab" + len(vals).to_bytes(4, "little")
+              + len(lens).to_bytes(4, "little") + lens + b"".join(codes))
+    header = (chunkmod.MAGIC
+              + bytes([chunkmod.VERSION, chunkmod.FSST,
+                       chunkmod.PHYS_IDS["byte_array"],
+                       chunkmod.UNCOMPRESSED, 0])
+              + len(vals).to_bytes(4, "little") * 2 + bytes(4))
+    blob = header + len(stream).to_bytes(4, "little") + stream
+    assert ba.to_list(chunkmod.decode_chunk(blob).values) == vals
+    assert _find_rows(blob, b"ab") == []
+    assert _find_rows(blob, b"zz") == [1]
+    enc = chunkmod.encode_chunk(vals, "byte_array", chunkmod.FSST,
+                                page_size=None).blob
+    assert _find_rows(enc, b"ab") == [0] and _find_rows(enc, b"zz") == [1]

@@ -129,6 +129,52 @@ def test_lookup_unsigned_column_uses_unsigned_order(tmp_path):
         assert len(want) == 250 and hits == want and dec == tot == 1, key
 
 
+@pytest.mark.parametrize("phys,conv,dtype,key", [
+    ("int32", 13, np.uint32, 3_000_000_000),
+    ("int64", 14, np.uint64, 2 ** 63 + 5)])
+def test_lookup_unsigned_bloom_key(tmp_path, phys, conv, dtype, key):
+    """A bloom-carrying UINT32/UINT64 column hashes a key past the signed
+    range by its stored bit pattern: the key finds pyarrow's rows with
+    NumPy's out-of-bound conversion warning turned into an error (the
+    bloom check built the key with ``np.array([key], np.int32)``), and an
+    absent key inside the page bounds is skipped by the bloom. The
+    engine writer has no unsigned annotation, so the file is written
+    over the bit patterns and its footer's SchemaElement gains the UINT
+    converted type by hand; every value is past the signed range, where
+    the writer's signed bounds order as the unsigned ones."""
+    import warnings
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    vals = np.array([key, key - 4, key + 1, key - 5] * 250, dtype)
+    path = str(tmp_path / "u.parquet")
+    pw.write_file(path, [("u", phys, vals.view(phys))], len(vals),
+                  bloom_filter_columns={"u"})
+    data = open(path, "rb").read()
+    flen = int.from_bytes(data[-8:-4], "little")
+    footer = data[-8 - flen:-8]
+    # name field (delta 1, binary) then STOP -> add field 6 (delta 2,
+    # i32) = zigzag(conv) before the STOP
+    name_end = b"\x18\x01u\x00"
+    assert footer.count(name_end) == 1
+    footer = footer.replace(name_end, name_end[:-1]
+                            + bytes([0x25, 2 * conv, 0]))
+    with open(path, "wb") as fh:
+        fh.write(data[:-8 - flen] + footer
+                 + len(footer).to_bytes(4, "little") + b"PAR1")
+    col = pq.read_table(path).column("u")
+    assert col.type == pa.from_numpy_dtype(dtype)
+    want = pc.indices_nonzero(pc.equal(col, pa.scalar(key, col.type))) \
+        .to_pylist()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        hits, dec, tot = pf.lookup_rows(path, "u", key)
+        assert len(want) == 250 and hits == want and dec == tot == 1
+        assert pf.lookup_rows(path, "u", key - 2) == ([], 0, 1)
+
+
 def test_pyarrow_reads_engine_index_files(tmp_path):
     """Files carrying the engine's PageIndex stay readable by pyarrow and
     DuckDB (the index region sits between data and footer; ColumnChunk

@@ -169,6 +169,39 @@ def test_point_lookup_page_pruning():
     assert rows == [31337]
 
 
+@pytest.mark.parametrize("compression", ["UNCOMPRESSED", "GZIP", "ZSTD"])
+def test_find_rows_fsst_code_match_differential(monkeypatch, compression):
+    """A one-page FSST doc_id chunk is matched in its code domain, with
+    no decode: for every stored key, prefixes of stored keys and absent
+    keys, ``_find_rows`` returns the rows a full decode finds, over
+    doc_ids with non-ASCII bytes, the escape byte 0xFF, duplicates and
+    empty strings, uncompressed and block-compressed."""
+    from parquet_cpp_spark.kernels import fsst
+    from parquet_cpp_spark.plans.lookup import _find_rows
+
+    vals = [f"corpus/shard{i % 7:03d}/doc-{i:09d}".encode()
+            for i in range(600)]
+    vals += [f"é/ü-文档-{i}".encode() for i in range(50)]
+    vals += [bytes([255, 255, i]) + b"\xff" for i in range(40)]
+    vals += [b""] * 5 + vals[:20]
+    vals = [vals[i] for i in RNG.permutation(len(vals))]
+    blob = chunkmod.encode_chunk(
+        vals, "byte_array", chunkmod.FSST, page_size=None,
+        compression=getattr(chunkmod, compression)).blob
+    assert (blob[4], blob[5]) == (chunkmod.VERSION, chunkmod.FSST)
+    decoded = ba.to_list(chunkmod.decode_chunk(blob).values)
+    assert decoded == vals
+
+    def no_decode(*_a, **_k):
+        raise AssertionError("FSST decode in a code-domain match")
+    monkeypatch.setattr(fsst, "decode_view", no_decode)
+    keys = set(vals) | {v[:k] for v in vals[::25] for k in range(len(v))}
+    keys |= {b"absent", b"\xff", "é".encode(), b"corpus/shard000/doc-"}
+    for key in sorted(keys):
+        want = [i for i, v in enumerate(decoded) if v == key]
+        assert _find_rows(blob, key) == want, key
+
+
 def test_paged_dict_fallback_on_list_column_with_partial_reads():
     """The hardest interaction: list column + chunk-global dictionary +
     mid-stream fallback + small pages + partial reads across the

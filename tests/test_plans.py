@@ -54,11 +54,28 @@ def test_chunk_metadata_query_prunes_blob(spark, tmp_path):
     assert meta.count() > 0
 
 
+def _jobs_in_group(spark, group, action):
+    """(the action's result, [(job id, tasks)] of the jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return out, [(j, sum(tracker.getStageInfo(s).numTasks
+                         for s in tracker.getJobInfo(j).stageIds))
+                 for j in tracker.getJobIdsForGroup(group)]
+
+
 def test_point_lookup_prunes_on_driver(spark, tmp_path):
-    """Stats + bloom pruning runs on the driver: the lookup plan reads the
-    surviving parts through a part_id filter, with no Python pruning stage
-    and no exchange; when no part survives, the filter is a literal False
-    and the single mapInArrow runs over an empty relation (zero tasks)."""
+    """Over a bare local parquet relation, stats + bloom pruning runs on
+    the driver with no Spark job: a hit plans one MapInArrow over a
+    ``Generate <- Range`` source of one row per surviving part, with no
+    file scan, Python pruning stage or exchange, and its collect is one
+    job of one task per surviving part; when no part survives, the
+    source is a literal False filter and the single mapInArrow runs over
+    an empty relation (zero tasks)."""
     from parquet_cpp_spark.operators.encode_arrow import encode_df_arrow
     from parquet_cpp_spark.plans import lookup
     from parquet_cpp_spark.sources import tokens as T
@@ -70,18 +87,31 @@ def test_point_lookup_prunes_on_driver(spark, tmp_path):
     parts = lookup.prune_parts(chunks, [("doc_id", "==", key)])
     n_parts = chunks.select("part_id").distinct().count()
     assert 1 <= len(parts) < n_parts
-    hit = lookup.point_lookup(chunks, key)
+    hit, jobs = _jobs_in_group(spark, "pcs-lookup-build",
+                               lambda: lookup.point_lookup(chunks, key))
+    assert jobs == []
     plan = _plan(hit)
     assert plan.count("MapInArrow") == 1, plan
-    assert "Filter" in plan and all(str(p) in plan for p in parts), plan
-    for stage in ("EvalPython", "Exchange", "Broadcast"):
+    assert "Generate inline" in plan and "Range (0, " in plan, plan
+    assert all(f",{p}]" in plan for p in parts), plan
+    for stage in ("FileScan", "EvalPython", "Exchange", "Broadcast"):
         assert stage not in plan, plan
-    assert [r.doc_id for r in hit.collect()] == [key]
+    assert hit._jdf.queryExecution().toRdd().getNumPartitions() \
+        == len(parts)
+    rows, jobs = _jobs_in_group(spark, "pcs-lookup-hit", hit.collect)
+    assert [r.doc_id for r in rows] == [key]
+    assert len(jobs) == 1 and jobs[0][1] == len(parts), jobs
     miss = lookup.point_lookup(chunks, key + "zz")
     plan = _plan(miss)
     assert "LocalTableScan <empty>" in plan, plan
     assert miss._jdf.queryExecution().toRdd().getNumPartitions() == 0
     assert miss.count() == 0
+    # a filtered relation is no bare relation: it takes the DataFrame
+    # path, whose filter hides the hit part's rows
+    hit_part = rows[0].part_id
+    other = chunks.filter(F.col("part_id") != hit_part)
+    assert lookup._local_chunk_files(other) is None
+    assert lookup.point_lookup(other, key).collect() == []
 
 
 def test_encode_paths_write_doc_id_bloom(spark, tmp_path):
@@ -482,24 +512,21 @@ def _old_translator_keeps(op, vals, row):
     return any(rng(mn, mx, str(x)) for x in vals)
 
 
-def test_prune_parts_differential(spark):
-    """Seeded differential test of ``prune_parts`` over generated chunk
-    metadata: ints around +-2^53, floats, digit-like and non-ASCII
-    strings with blooms, booleans, parts with NULL stats and all-null
-    parts, under every ``_PRED_OPS`` op. ``prune_parts`` never drops a
-    part holding a matching value, and it prunes every part the old
-    Catalyst translator pruned unless that part holds a match (the
-    double compare can round a bound across the value)."""
+_META_PARTS = 120
+
+
+def _chunk_meta(rng):
+    """Generated chunk metadata rows ``(part_id, col, min_val, max_val,
+    null_count, n_rows, bloom)`` over ``_META_PARTS`` parts and columns
+    i (int64), f (double), s (strings with blooms) and b (booleans), with
+    NULL stats and all-null parts; returns (rows, {(part, col): values,
+    None for a null}, a value drawer for a column)."""
     import numpy as np
-    import pandas as pd
 
     from parquet_cpp_spark import chunk as chunkmod
     from parquet_cpp_spark.kernels import bloom as bloom_mod
-    from parquet_cpp_spark.plans import lookup
-    from parquet_cpp_spark.sources.record_assembly import _PRED_OPS
 
-    rng = np.random.default_rng(16)
-    n_parts = 120
+    n_parts = _META_PARTS
     big = 2 ** 53
     centers = {"i": [big, -big, 0, 1000],
                "f": [0.0, 1.5, -2.25, 1e20, float(big)],
@@ -542,6 +569,26 @@ def test_prune_parts_differential(spark):
                 bf.insert_bytes(arr)
                 bloom = bf.serialize()
             rows.append((pid, col, mn, mx, n_null, n_val + n_null, bloom))
+    return rows, held, draw
+
+
+def test_prune_parts_differential(spark):
+    """Seeded differential test of ``prune_parts`` over generated chunk
+    metadata: ints around +-2^53, floats, digit-like and non-ASCII
+    strings with blooms, booleans, parts with NULL stats and all-null
+    parts, under every ``_PRED_OPS`` op. ``prune_parts`` never drops a
+    part holding a matching value, and it prunes every part the old
+    Catalyst translator pruned unless that part holds a match (the
+    double compare can round a bound across the value)."""
+    import numpy as np
+    import pandas as pd
+
+    from parquet_cpp_spark.plans import lookup
+    from parquet_cpp_spark.sources.record_assembly import _PRED_OPS
+
+    rng = np.random.default_rng(16)
+    n_parts = _META_PARTS
+    rows, held, draw = _chunk_meta(rng)
     # from pandas: a LocalRelation, so each prune_parts collect runs no job
     meta = spark.createDataFrame(
         pd.DataFrame(rows, columns=["part_id", "col", "min_val", "max_val",
@@ -600,10 +647,75 @@ def test_prune_parts_differential(spark):
     assert n_terms == 4 * (7 * 2 + 2)
     assert n_old_pruned > n_terms * n_parts // 4      # the terms do prune
     # a conjunction keeps the intersection of its terms' parts
-    a, b = ("i", ">=", big - 1), ("b", "==", True)
+    a, b = ("i", ">=", 2 ** 53 - 1), ("b", "==", True)
     assert lookup.prune_parts(meta, [a, b]) == sorted(
         set(lookup.prune_parts(meta, [a]))
         & set(lookup.prune_parts(meta, [b])))
+
+
+def test_prune_parts_file_backed_equals_cached(spark, tmp_path):
+    """``prune_parts`` reads a bare local parquet relation's stats with
+    one pyarrow read and runs no Spark job; any other DataFrame pays a
+    collect. Over generated chunk metadata (``_chunk_meta``) written as
+    four parquet files, the file-backed relation and the same rows cached
+    in memory give the same parts for terms of every ``_PRED_OPS`` op on
+    every column, and for a conjunction."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_cpp_spark.plans import lookup
+    from parquet_cpp_spark.sources.record_assembly import _PRED_OPS
+
+    rng = np.random.default_rng(17)
+    rows, held, draw = _chunk_meta(rng)
+    names = ["part_id", "col", "min_val", "max_val", "null_count",
+             "n_rows", "bloom"]
+    tbl = pa.table({n: list(c) for n, c in zip(names, zip(*rows))}
+                   | {"blob": [b""] * len(rows)},
+                   schema=pa.schema([
+                       ("part_id", pa.int64()), ("col", pa.string()),
+                       ("min_val", pa.string()), ("max_val", pa.string()),
+                       ("null_count", pa.int64()), ("n_rows", pa.int64()),
+                       ("bloom", pa.binary()), ("blob", pa.binary())]))
+    path = tmp_path / "meta"
+    path.mkdir()
+    step = -(-len(rows) // 4)
+    for i in range(4):
+        pq.write_table(tbl.slice(i * step, step),
+                       str(path / f"part-{i}.parquet"))
+    files = spark.read.parquet(str(path))
+    cached = spark.createDataFrame(
+        pd.DataFrame(rows, columns=names),
+        "part_id long, col string, min_val string, max_val string, "
+        "null_count long, n_rows long, bloom binary").cache()
+    assert len(lookup._local_chunk_files(files)) == 4
+    assert lookup._local_chunk_files(cached) is None
+    terms = []
+    for col in "ifsb":
+        pool = [x for p in range(_META_PARTS) for x in held[p, col]
+                if x is not None]
+        for op in _PRED_OPS:
+            for _ in range(1 if op in ("is_null", "not_null") else 3):
+                vals = [pool[rng.integers(len(pool))]
+                        if rng.random() < 0.6 else draw(col)
+                        for _ in range(int(rng.integers(1, 4))
+                                       if op == "in" else 1)]
+                v = None if op in ("is_null", "not_null") else \
+                    (tuple(vals) if op == "in" else vals[0])
+                terms.append([(col, op, v)])
+    terms.append([("i", ">=", 2 ** 53 - 1), ("s", "in", ("9a", "zz~"))])
+    try:
+        want = [lookup.prune_parts(cached, t) for t in terms]
+        got, jobs = _jobs_in_group(
+            spark, "pcs-prune-files",
+            lambda: [lookup.prune_parts(files, t) for t in terms])
+    finally:
+        cached.unpersist()
+    assert jobs == []
+    assert got == want
+    assert sum(map(len, got)) < len(terms) * _META_PARTS * 3 // 4
 
 
 def test_duplicated_token_spans_one_shuffle_and_winnow_guarantee(spark):

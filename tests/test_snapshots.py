@@ -31,6 +31,27 @@ def _write_file(out_dir: str, name: str, lo: int, hi: int) -> tuple:
                                 None, None, None, 1)
 
 
+def test_read_snapshot_routes_plain_datasets_to_jvm_reader(spark, tmp_path):
+    """``read_snapshot`` reads a committed dataset without renames with
+    Spark's JVM parquet reader over exactly the snapshot's files: the plan
+    is a ``FileScan parquet`` with no Python ``MapInArrow``. A renamed
+    dataset, whose files mix stored names, still refuses the JVM reader
+    and names the engine scan."""
+    out = str(tmp_path / "ds")
+    os.makedirs(out)
+    snap.commit_snapshot(out, [_write_file(out, "a.parquet", 0, 40),
+                               _write_file(out, "b.parquet", 40, 50)])
+    df = snap.read_snapshot(spark, out)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan and "MapInArrow" not in plan, plan
+    assert sorted(os.path.basename(f) for f in df.inputFiles()) == \
+        ["a.parquet", "b.parquet"]
+    snap.rename_column(out, "id", "key")
+    with pytest.raises(ValueError, match="read it with "
+                       "record_assembly.read_parquet_dataset"):
+        snap.read_snapshot(spark, out)
+
+
 def test_commit_read_isolation_and_diff(spark, tmp_path):
     out = str(tmp_path / "ds")
     os.makedirs(out)

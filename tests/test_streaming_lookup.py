@@ -65,6 +65,13 @@ def test_point_lookup_prunes_and_finds(spark):
         assert len(rows) == 1 and rows[0].doc_id == "42"
         # absent key: bloom + stats should prune everything or find nothing
         assert lookup.point_lookup(chunks, "no-such-doc").count() == 0
+        # a cached DataFrame is no bare file relation: the lookup maps
+        # over its cached rows through the part_id filter
+        assert lookup._local_chunk_files(chunks) is None
+        plan = lookup.point_lookup(chunks, "42")._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert "InMemoryTableScan" in plan and "part_id" in plan, plan
+        assert "Filter" in plan and "Generate" not in plan, plan
     finally:
         chunks.unpersist()
 
